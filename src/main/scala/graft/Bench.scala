@@ -368,15 +368,14 @@ object Bench {
 
   /** Distributed-CC evidence at real size. q69 (timed in the main query
     * loop) exercises the DEFAULT path on its 2.5 M-edge id-local graph:
-    * since the local-contraction pre-pass landed that is contraction +
-    * micro resolve, zero propagation rounds. This entry pins the OTHER
-    * at-scale path: node ids are scrambled, so range partitioning sees
-    * no id locality, the contraction stall guard fires, and the
+    * contraction + micro resolve, zero star rounds. This entry pins the
+    * OTHER at-scale path: node ids are scrambled, so the one-job stall
+    * probe predicts no id locality, contraction is skipped, and the
     * alternating-star engine resolves the full 2.5 M-edge list in
     * O(log d) rounds (6 observed for the 63-hop chains). The timing
-    * honestly includes the stalled contraction attempt — that IS the
-    * cost of this path. Row count (not labels) is asserted trivially by count();
-    * label correctness for both paths is the driver-oracled q69/q68. */
+    * includes the probe job — that IS the cost of this path. Row count
+    * (not labels) is asserted trivially by count(); label correctness
+    * for both paths is the oracle-checked q69/q77. */
   private def ccLoopFlagship(spark: SparkSession, sfDir: String,
       timed: String => (=> Unit) => (String, Double),
       medianSink: scala.collection.mutable.ArrayBuffer[(String, (Double, Double, Double))])

@@ -826,9 +826,9 @@ object SparkEntry {
         threshold = 0.8) }),
     // duplicate-GROUP resolution: the LSH pairs are only pairwise hits;
     // transitive duplicates (A~B, B~C with no A~C pair) must collapse to
-    // one group before "keep one copy". Connected components by min-label
-    // propagation — per round one shuffle join + one map-side-combined
-    // groupBy, O(diameter) rounds (dup graphs are near-star-shaped).
+    // one group before "keep one copy". Connected components — a pair
+    // list this small resolves on the single-task union-find (micro)
+    // path; larger graphs contract first or run alternating star rounds.
     // Oracle: DuckDB recursive-CTE transitive closure over the SAME
     // (oracle-recomputed) pair set.
     "q56_dedup_groups" -> ((s, dir) => { prep(s, dir)
@@ -850,28 +850,33 @@ object SparkEntry {
     // pairwise, diameter 11) against the recursive-CTE transitive-
     // closure oracle — resolved by the default (micro-graph union-find)
     // path here; q68 runs the IDENTICAL graph through the distributed
-    // propagation loop so both execution paths sit under the oracle.
+    // star engine so both execution paths sit under the oracle.
     "q57_dedup_chain" -> ((s, dir) => { prep(s, dir)
       Dedup.connectedComponents(chainPairs(s, dir))
         .select(col("id").as("doc_id"), col("group_id")) }),
-    // the DISTRIBUTED min-label propagation loop (pointer jumping, one
-    // lazy-checkpoint job per round) — the path that runs at 100 TB —
-    // force-pinned via microGraphMaxEdges = 0 on the same deep chain,
-    // same oracle. ~12 rounds of genuine iteration under the driver's
-    // hash check, not just in unit tests.
+    // the DISTRIBUTED path on the same deep chain, same oracle:
+    // microGraphMaxEdges = 0 disables both micro gates, so the
+    // contraction pre-pass runs and its forest (above the zeroed
+    // post-contraction gate) resolves through alternating star rounds
+    // — genuine iteration under the oracle's hash check, not just in
+    // unit tests. The require() pins the engine like q77's.
     "q68_dedup_chain_loop" -> ((s, dir) => { prep(s, dir)
-      Dedup.connectedComponents(chainPairs(s, dir), microGraphMaxEdges = 0L)
-        .select(col("id").as("doc_id"), col("group_id")) }),
-    // the distributed CC loop at REAL size, UN-pinned: a synthetic graph
+      val cc = Dedup.connectedComponents(chainPairs(s, dir),
+        microGraphMaxEdges = 0L)
+      require(Dedup.lastEngine == "star",
+        s"q68 pins the alternating-star engine, got '${Dedup.lastEngine}'")
+      cc.select(col("id").as("doc_id"), col("group_id")) }),
+    // distributed CC at REAL size, UN-pinned: a synthetic graph
     // derived from events — every event e owns a 64-node block
     // [64e, 64e+63]; blocks with e % 10 == 0 are stars (the shallow
-    // near-star dedup shape), the rest 63-hop chains (diameter 63, deep
-    // enough that the O(log d) pointer-jumping regime is what converges
-    // it). At sf0.01 that is 630 000 pairs = 1.26 M symmetric edges —
-    // above microGraphMaxEdges, so the loop is chosen by the planner
-    // gate itself, not forced; at sf0.1 the e < 20000 cap holds it at
-    // 2.5 M symmetric edges so the bench entry stays a bounded, honest
-    // loop measurement rather than an unbounded-with-sf one. Components
+    // near-star dedup shape), the rest 63-hop chains (diameter 63).
+    // At sf0.01 that is 630 000 pairs = 1.26 M symmetric edges —
+    // above microGraphMaxEdges, so the distributed path is chosen by
+    // the planner gate itself, not forced: the graph is id-local, so the
+    // contraction pre-pass collapses it and the forest resolves on the
+    // micro path. At sf0.1 the e < 20000 cap holds it at 2.5 M
+    // symmetric edges so the bench entry stays a bounded measurement
+    // rather than an unbounded-with-sf one. Components
     // are arithmetically known (one per event), so the oracle is
     // closed-form block arithmetic instead of a recursive CTE over
     // millions of rows; the per-group rollup (count + sum + max over
@@ -2128,8 +2133,8 @@ object SparkEntry {
 
   /** Transitive closure of the >=0.8 Jaccard pairs as a DuckDB recursive
     * CTE: min reachable id over the symmetric edge list = the connected
-    * component / duplicate-group id the Spark side computes by min-label
-    * propagation. */
+    * component / duplicate-group id the Spark side computes with
+    * `Dedup.connectedComponents`. */
   private val dupGroupsOracle: String =
     "WITH RECURSIVE " + corpusNearBody + jaccardPairsCtes +
     """,
@@ -2309,8 +2314,8 @@ object SparkEntry {
 
   /** q57 oracle: transitive closure of the SAME 12-node document path
     * graph the Spark side chains, again as a DuckDB recursive CTE. All
-    * 12 nodes collapse to the lowest doc_id — the value under test is
-    * the ~12 propagation rounds needed to get there. */
+    * 12 nodes collapse to the lowest doc_id — through the micro path
+    * (q57) and through the contraction pass plus star rounds (q68). */
   private val dupChainOracle: String =
     """WITH RECURSIVE ch AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 12),
       |pp AS (SELECT id1, id2 FROM (

@@ -901,43 +901,28 @@ object Dedup {
    * rounds — identical labels, one job instead of one per round, and
    * none of the per-round generated-plan compilation. Duplicate-pair
    * graphs at any scale have TINY edge lists relative to the corpus
-   * (pairs, not documents), so this path covers most real invocations;
-   * the distributed loop below is the genuinely-huge-graph path.
+   * (pairs, not documents), so this path covers most real invocations.
    *
-   * Algorithm (distributed path): iterative min-label propagation. Each
-   * round every node
-   * takes the min of its own label and its neighbors' labels — one
-   * shuffle join plus one partially-aggregated groupBy — and the loop
-   * stops when no label changed. Duplicate graphs are near-star-shaped
-   * (exact-dup cliques, near-dup chains a hop or two long), so 2–4
-   * cheap rounds in practice; a graph still changing after round 3 is
-   * deeper than that shape, and the loop then adds a pointer-jumping
-   * shortcut (`lbl ← lbl(lbl)`, one extra labels self-join per round)
-   * that roughly doubles the propagated distance per round — O(log
-   * diameter) rounds on chains instead of O(diameter). Lineage is cut
-   * with `localCheckpoint` every round so the plan does not grow with
-   * the iteration count (the classic iterative-DataFrame trap).
+   * Above the gate there are two distributed paths, chosen from the
+   * input itself: a local-contraction pre-pass ([[spanningForest]])
+   * whose forest — small on the id-local graphs dedup produces —
+   * resolves on the micro path (contract→micro), and the
+   * alternating-star engine ([[starLoop]]) for everything else: a
+   * contracted forest still too large for one task, or a graph with no
+   * id locality (predicted by a one-job stall probe, or detected by the
+   * contraction stall guard). Star rounds converge in O(log²) rounds
+   * worst case on ANY id layout. Lineage is cut with a lazy
+   * checkpoint every round so the plan does not grow with the
+   * iteration count (the classic iterative-DataFrame trap).
    *
    * Shuffle hygiene (100 TB): the symmetric edge list is repartitioned by
-   * the probe key `src` BEFORE its one-time lineage cut — `localCheckpoint`
-   * preserves `outputPartitioning`, so every round's `edges ⋈ labels` join
-   * reuses that layout and only the (smaller, shrinking) labels side
-   * shuffles. Round 0 skips the join entirely (initial labels are the
-   * identity, so it would only rename columns). Change detection costs no
-   * extra join: each node's previous label rides through the round's
-   * aggregation as `min(prev)` (the labels side contributes its old
-   * label, messages contribute NULL), and the checkpoint is LAZY — the
-   * change-detection count is the round's single distributed job,
-   * persisting the checkpoint blocks as a side effect. The previous
-   * round's checkpoint is unpersisted as soon as it is superseded, so
-   * storage stays at one labels snapshot regardless of round count.
+   * `src` BEFORE its one-time lineage cut — `localCheckpoint` preserves
+   * `outputPartitioning`, so the star engine's canonical (hi, lo)
+   * orientation rides that layout with no exchange of its own.
    *
-   * If the label graph has not converged after `maxIterations` rounds the
-   * labels are WRONG (some component carries several group ids), so this
-   * throws rather than returning a silently-truncated result. Convergence
-   * detection needs one quiescent round, so `maxIterations` must be at
-   * least the graph diameter + 1 (a graph that settles exactly on its
-   * last allowed round still throws).
+   * If the star rounds have not converged after `maxIterations` rounds
+   * the labels are WRONG (some component carries several group ids), so
+   * this throws rather than returning a silently-truncated result.
    *
    * Each superseded round checkpoint is unpersisted immediately; Spark
    * logs one WARN per round ("lineage has been truncated and cannot be
@@ -956,28 +941,14 @@ object Dedup {
       key: String): DataFrame =
     org.apache.spark.sql.GraftSqlShim.checkpointHashPartitioned(df, key)
 
-  /** Round index from which [[connectedComponents]] adds the
-    * pointer-jumping shortcut: graphs that survive this many neighbor-min
-    * rounds are deeper than the near-star dedup shape and benefit from
-    * O(log d) acceleration. */
-  private val ShortcutAfter = 3
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Dedup")
 
   /** Rounds the last [[connectedComponents]] call on this JVM ran: 0 for
-    * the micro-graph (union-find) path, else the distributed round count
-    * including the final quiescent round. Observability hook for specs
-    * and perf notes (the O(log d) claim is asserted against it); racy
-    * under concurrent calls, so nothing but diagnostics may read it. */
+    * the union-find paths, else the star round count. Observability
+    * hook for specs and perf notes (the O(log d) claim is asserted
+    * against it); racy under concurrent calls, so nothing but
+    * diagnostics may read it. */
   @volatile private[graft] var lastIterations: Int = -1
-
-  /** Per-round (edgeRows, wallSec) of the last [[starLoop]] run on this
-    * JVM — the r10 verdict flagged a 2.5× wall spread on the 2.5 M-edge
-    * scrambled bench with no per-round evidence to attribute it, so the
-    * loop now stamps each round. Diagnostics only, like
-    * [[lastIterations]]. */
-  @volatile private[graft] var lastStarRounds: Vector[(Long, Double)] =
-    Vector.empty
 
   /** Bounded-scratch batch count of the last [[containmentDupPairs]]
     * over-gate verify on this JVM (1 = single wave; only set when the
@@ -989,7 +960,7 @@ object Dedup {
   /** Default [[connectedComponents]] `microGraphMaxEdges`: a 1 M-edge
     * graph is ~2 M union-find operations and ≤ ~200 MB of boxed hash map
     * on ONE task (2 M entries × ~96 B) — well inside any executor and
-    * still far cheaper than a single distributed label-propagation round
+    * still far cheaper than a single distributed star round
     * (shuffle + join + agg + codegen compile of several round plans). */
   private val MicroGraphMaxEdgesDefault = 1000000L
 
@@ -1194,10 +1165,10 @@ object Dedup {
 
   /** Symmetrize a `(src, dst)` pair list in ONE pass (explode, not a
     * union — a union would evaluate the whole upstream candidate
-    * pipeline twice). Duplicate edges are NOT removed: min-aggregation
-    * is idempotent to them, so a `distinct()` here would spend a full
-    * extra shuffle to save only duplicated message volume (dedup pair
-    * lists are already distinct). */
+    * pipeline twice). Duplicate edges are NOT removed: union-find is
+    * idempotent to them and the star engine's canonical orientation
+    * drops them, so a `distinct()` here would spend a full extra
+    * shuffle for nothing (dedup pair lists are already distinct). */
   private def symmetrize(e: DataFrame): DataFrame =
     e.select(explode(array(
         struct(col("src"), col("dst")),
@@ -1208,8 +1179,7 @@ object Dedup {
     * this fraction of the input edge count for the contracted graph to
     * be used — otherwise the graph has no id locality, the pass bought
     * nothing, and the alternating-star engine ([[starLoop]]) runs on
-    * the original edges (NOT min-label propagation, whose pointer
-    * jumps need an id gradient to deliver O(log d) rounds). */
+    * the original edges. */
   private val ContractionStallFraction = 0.7
 
   /** Rows the predictive stall probe reads (one prefix partition of
@@ -1264,8 +1234,8 @@ object Dedup {
   @volatile private[graft] var lastForestEdges: Long = -1L
 
   /** Which engine resolved the last [[connectedComponents]] call:
-    * "micro", "contract-micro", "star", or "propagation". Diagnostics
-    * only, like [[lastIterations]]. */
+    * "micro", "contract-micro" or "star". Diagnostics only, like
+    * [[lastIterations]]. */
   @volatile private[graft] var lastEngine: String = ""
 
   /** @param microGraphMaxEdges symmetric-edge-count threshold at or below
@@ -1276,17 +1246,15 @@ object Dedup {
     *   required) symmetrize checkpoint, so the gate costs nothing. Set to
     *   0 to force the distributed path. Above the threshold a
     *   local-contraction pre-pass ([[spanningForest]]) runs first: a
-    *   small forest resolves on the micro path, a large one feeds the
-    *   propagation loop (which therefore never sees the original
-    *   edges), and a stalled contraction (non-id-local graph) routes
-    *   to the alternating-star engine ([[starLoop]]) instead. */
+    *   small forest resolves on the micro path, and a large one feeds
+    *   the alternating-star engine ([[starLoop]]), as does a stalled
+    *   contraction (non-id-local graph) — the latter on the original
+    *   edges. */
   def connectedComponents(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", maxIterations: Int = 50,
       microGraphMaxEdges: Long = MicroGraphMaxEdgesDefault): DataFrame = {
     require(maxIterations > 0,
-      s"maxIterations must be positive (got $maxIterations); convergence " +
-        "detection needs one quiescent round, so use at least graph " +
-        "diameter + 1")
+      s"maxIterations must be positive (got $maxIterations)")
     val e = pairs.select(col(id1).as("src"), col(id2).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
     // symmetrized edges land directly in the partitioned checkpoint: one
@@ -1325,12 +1293,7 @@ object Dedup {
     val (forest, forestCount) = spanningForest(edges)
     lastForestEdges = forestCount
     if (forestCount >= edgeCount * ContractionStallFraction) {
-      // no id locality — the pass bought nothing. Min-label propagation
-      // is the WRONG loop here: its pointer-jumping speedup needs ids
-      // that form a gradient along the graph (the id-local case); on
-      // arbitrary ids the min only creeps outward a couple of hops per
-      // round, O(diameter) rounds. Alternating star contraction
-      // converges on ANY id assignment in ~log rounds.
+      // no id locality — the pass bought nothing
       log.info(s"connectedComponents: contraction stalled " +
         s"($edgeCount edges -> $forestCount forest rows), " +
         "running alternating star rounds on the original edges")
@@ -1348,24 +1311,24 @@ object Dedup {
         s"$forestCount forest rows, resolved on the micro path")
       return labels.select(col("id"), col("lbl").as("group_id"))
     }
-    // still huge after contraction: propagate over the (smaller)
+    // still huge after contraction: star rounds over the (smaller)
     // contracted graph — its node set is exactly the original node set,
     // so the loop's labels are directly the final labels
     log.info(s"connectedComponents: contracted $edgeCount edges to " +
-      s"$forestCount forest rows, running propagation on the forest")
+      s"$forestCount forest rows, running alternating star rounds on " +
+      "the forest")
     val (fEdges, fCount) = org.apache.spark.sql.GraftSqlShim
       .checkpointHashPartitionedCounted(symmetrize(forest), "src")
     org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(forest)
-    lastEngine = "propagation"
-    propagationLoop(fEdges, fCount, maxIterations)
+    lastEngine = "star"
+    starLoop(fEdges, fCount, maxIterations)
   }
 
   /** Alternating large-star/small-star contraction over a checkpointed
-    * SYMMETRIC edge list — the fallback engine for graphs with no id
-    * locality, where the contraction pre-pass stalls AND min-label
-    * propagation degrades to O(diameter) rounds (its pointer jumps only
-    * compress label chains the min has already reached; on arbitrary ids
-    * the frontier moves a couple of graph hops per round). The star
+    * SYMMETRIC edge list — the distributed engine of
+    * [[connectedComponents]], run on the original edges of a graph with
+    * no id locality (where the contraction pre-pass stalls) or on a
+    * contracted forest still too large for the micro path. The star
     * operations restructure the EDGE SET itself instead of propagating
     * labels, so convergence is O(log²) rounds worst case — and a handful
     * in practice — independent of how ids are laid out (public
@@ -1386,11 +1349,10 @@ object Dedup {
     * early).
     *
     * At scale each half is one edge-sized groupBy + join (the edge list
-    * only shrinks: `distinct` bounds it by the input), versus the
-    * propagation loop's cheaper labels-only shuffles — which is why this
-    * engine is reserved for the no-locality regime instead of replacing
-    * the loop outright. Ids of any orderable type work; comparisons and
-    * `min` are Spark SQL semantics (strings collate like SQL `min`).
+    * only shrinks: `distinct` bounds it by the input), which is why the
+    * contraction pre-pass gets the first try on id-local graphs. Ids of
+    * any orderable type work; comparisons and `min` are Spark SQL
+    * semantics (strings collate like SQL `min`).
     * Unpersists `edges` when done. */
   private[graft] def starLoop(edges: DataFrame, edgeCount: Long,
       maxIterations: Int): DataFrame = {
@@ -1441,13 +1403,8 @@ object Dedup {
     // 32 near-empty tasks is pure scheduler overhead (the q70 63 k-edge
     // entry ran ~1.7x slower that way). ~100 k canonical rows per
     // partition, capped at the session conf for big graphs.
-    val nStar = {
-      val conf = edges.sparkSession.conf
-        .get(StarPartitionsConf, "0").toInt
-      if (conf > 0) math.min(confParts, conf)
-      else math.max(1, math.min(confParts,
-        (edgeCount / 200000L).toInt + 1))
-    }
+    val nStar = math.max(1, math.min(confParts,
+      (edgeCount / 200000L).toInt + 1))
     // node count is bounded by the symmetric edge count; ~300 k nodes
     // of (id, min) rows is the ~10 MB broadcast-threshold ballpark
     val bigGraph = edgeCount >= 600000L
@@ -1461,8 +1418,7 @@ object Dedup {
     // walls IDENTICAL (10.5-11.7 s off vs 10.3-11.5 s on), because at
     // this scale the 20 MB hash exchanges are not where round wall
     // goes — the per-round broadcast rebuild costs what the exchanges
-    // saved. Round wall is stage-barrier + window-sort bound; see the
-    // StarFloor probe.)
+    // saved. Round wall is stage-barrier + window-sort bound.)
     // AQE pinned OFF for the big-graph loop (saved + restored below):
     // inside these rounds AQE has nothing left to decide — every
     // exchange is an explicit-N repartition (exempt from coalescing)
@@ -1493,34 +1449,8 @@ object Dedup {
     val partsSaved = spark.conf.get(partsKey)
     val pinParts = bigGraph && nStar < confParts
     if (pinParts) spark.conf.set(partsKey, nStar.toString)
-    // relabel-key variant (r16 verdict #2, the one untried structural
-    // lever — MEASURED WORSE in r17, default stays "hi"): key the
-    // round's relabel exchange by LO (the new parent) instead of HI.
-    // hash(lo) still satisfies the dedup's ClusteredDistribution(hi,
-    // lo), and the NEXT round's large-star join probes on c.lo — so
-    // with the checkpoint recording hash(lo) that join runs
-    // exchange-free on BOTH sides (mn rides p's hash(hi) record). The
-    // cost moves to the p-aggregate, which under a hash(lo) layout
-    // pays its own hash(hi) exchange of partially aggregated (hi, min,
-    // cnt) rows. Net per-round serial barrier count is UNCHANGED (the
-    // exchange moved, not vanished), the moved exchange's rows are
-    // 24 B vs the join re-key's 16 B, and the partial aggregation
-    // cannot collapse them (a hi's rows co-locate only with its
-    // parents' hash — post-dedup most his carry one row anyway).
-    // Order-swapped settled A/B on the 1.26 M-edge cc_star graph
-    // (CcBench, r17): warm lo 12.2-15.4 s vs warm hi 10.8-12.4 s —
-    // a 15-25% regression, consistent with that analysis. The knob
-    // stays for measurement reproducibility; DedupGroupsSpec pins the
-    // variant's label-correctness and layout contracts. big-graph
-    // only: the p record's width contract (exchange lands at the
-    // pinned nStar width, AQE off) only holds there, and small graphs
-    // resolve off the micro/contraction paths anyway.
-    val relabelByLo = bigGraph &&
-      spark.conf.get(StarRelabelKeyConf, "hi") == "lo"
-    val relKey = if (relabelByLo) "lo" else "hi"
     var it = 0
     var converged = false
-    var roundStats = Vector.empty[(Long, Double)]
     // carried (hi, min(lo), deg) aggregate: the convergence-stats job of
     // round k computes EXACTLY round k+1's closed-neighborhood min, so
     // it is checkpointed (node-sized rows) and reused instead of paying
@@ -1582,8 +1512,8 @@ object Dedup {
           .select(when(col("lo") === col("m2"), col("hi"))
             .otherwise(col("lo")).as("hi"), // lo > m2 / hi > m2
             col("m2").as("lo"))
-          .repartition(nStar, col(relKey))
-          .dropDuplicates("hi", "lo"), relKey, nStar)
+          .repartition(nStar, col("hi"))
+          .dropDuplicates("hi", "lo"), "hi", nStar)
       // first job of the round: materializes the edge checkpoint AND the
       // p-aggregate checkpoint (reused as next round's min — see prevP),
       // and computes the multi-parent violation count plus the round's
@@ -1593,11 +1523,7 @@ object Dedup {
       // its output provably carries the same layout — RECORD it
       // (assume variant, validated under graft.debug.assertLayout in
       // DedupGroupsSpec) so the next round's join probes `mn` without
-      // re-exchanging the node-sized frame every round. Under the
-      // relabel-by-lo variant the aggregate instead pays its own
-      // exchange — which lands at hash(hi, nStar) too (width pinned,
-      // AQE off in the big-graph regime the variant is restricted to),
-      // so the same record stays valid.
+      // re-exchanging the node-sized frame every round.
       val p = shim.lazyCheckpointAssumeHashPartitioned(next.groupBy("hi")
         .agg(min("lo").as("p"), count(lit(1)).as("deg")), "hi", nStar)
       // single convergence job per round: the multi-parent/edge-count
@@ -1629,7 +1555,6 @@ object Dedup {
       c = next
       it += 1
       val wallSec = (System.nanoTime() - roundT0) / 1e9
-      roundStats :+= (edgeRows, wallSec)
       log.info(f"connectedComponents: star round $it edges=$edgeRows " +
         f"multiParent=$multiParent converged=$converged wall=$wallSec%.2f s")
     }
@@ -1637,7 +1562,6 @@ object Dedup {
       if (bigGraph) spark.conf.set(aqeKey, aqeSaved)
       if (pinParts) spark.conf.set(partsKey, partsSaved)
     }
-    lastStarRounds = roundStats
     shim.unpersistCheckpoint(edges)
     if (prevP != null) shim.unpersistCheckpoint(prevP)
     lastIterations = it
@@ -1660,101 +1584,6 @@ object Dedup {
       c.select(col("hi").as("id"), col("lo").as("group_id"))
         .unionByName(
           c.select(col("lo").as("id"), col("lo").as("group_id")).distinct())
-  }
-
-  /** Iterative min-label propagation over a checkpointed symmetric edge
-    * list (see the algorithm notes above [[connectedComponents]]).
-    * Unpersists `edges` when done. private[graft] so specs can pin the
-    * pointer-jump round count directly: through the public API the
-    * contraction pre-pass collapses chain graphs before this loop ever
-    * sees them, so an end-to-end round-count assertion would not detect
-    * a broken jump. */
-  private[graft] def propagationLoop(edges: DataFrame, edgeCount: Long,
-      maxIterations: Int): DataFrame = {
-    val lblType = edges.schema("src").dataType
-    var labels: DataFrame = null
-    var prevCkpt: DataFrame = null
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIterations) {
-      // round 0 is join-free: initial labels are the identity, so the
-      // edges ⋈ labels join would only rename columns — derive both the
-      // "own" rows (every node appears as src in the symmetric edge
-      // list; duplicates collapse in the min-aggregation) and the
-      // messages straight from the edge scan
-      val (own, msgs) = if (it == 0) (
-        edges.select(col("src").as("id"), col("src").as("lbl"),
-          col("src").as("prev")),
-        edges.select(col("dst").as("id"), col("src").as("lbl"),
-          lit(null).cast(lblType).as("prev")))
-      else (
-        // each node's previous label rides through the aggregation as
-        // min(prev): the labels side contributes its old label, messages
-        // contribute NULL (min ignores nulls)
-        labels.select(col("id"), col("lbl"), col("lbl").as("prev")),
-        edges.join(labels, edges("src") === labels("id"))
-          .select(col("dst").as("id"), col("lbl"),
-            lit(null).cast(lblType).as("prev")))
-      val agg = own.union(msgs)
-        .groupBy("id").agg(min("lbl").as("lbl"), min("prev").as("prev"))
-      // rounds past ShortcutAfter add a pointer-jumping step, applied
-      // TWICE: lbl ← lbl(lbl(lbl)). Neighbor-min alone moves the min one
-      // hop per round (O(diameter) rounds — linear on chain-shaped
-      // graphs); each jump roughly doubles the propagated distance, so
-      // the double jump ~quadruples it per round (still O(log d) rounds,
-      // about half as many as a single jump — and the second join reuses
-      // the same checkpointed labels map, so it costs one more
-      // labels-sized join per round, much less than the full
-      // message-aggregation round it replaces). The joins are valid
-      // unconditionally because a label is always some node's id — and
-      // remains one after each jump — so every lbl has a labels row.
-      // Jumping is deferred past the first rounds because near-star dup
-      // graphs converge in 2–3 rounds anyway and the joins would only
-      // add per-round cost (at scale: extra labels-sized shuffles).
-      // both round checkpoints are the STATS-TRUNCATING lazy variant:
-      // Dataset.localCheckpoint(false) captures originStats, and with a
-      // join-bearing plan checkpointed every round those size estimates
-      // compound geometrically until planning wedges in BigInteger
-      // multiplication (see GraftSqlShim.lazyCheckpointNoStats)
-      var roundMid: DataFrame = null
-      val next = org.apache.spark.sql.GraftSqlShim.lazyCheckpointNoStats(
-        if (it < ShortcutAfter) agg else {
-        val m = org.apache.spark.sql.GraftSqlShim.lazyCheckpointNoStats(agg)
-        roundMid = m
-        val mm = m.select(col("id").as("lid"), col("lbl").as("llbl"))
-        val j1 = m.join(mm, m("lbl") === mm("lid"))
-          .select(m("id"), col("llbl").as("lbl"), col("prev"))
-        j1.join(mm, j1("lbl") === mm("lid"))
-          .select(j1("id"), col("llbl").as("lbl"), j1("prev"))
-      })
-      // LAZY checkpoints: this change-detection count is the single
-      // distributed job of the round — it computes the aggregation (and
-      // shortcut join), persists the checkpoint blocks as a side effect,
-      // and scans them for "any label strictly below its previous value"
-      // (a complete change detector, since labels only ever decrease)
-      changed = next.where(col("lbl") < col("prev")).count()
-      log.info(s"connectedComponents: round $it changed=$changed " +
-        s"($edgeCount edges)")
-      if (prevCkpt != null) {
-        org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(prevCkpt)
-      }
-      if (roundMid != null) {
-        org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(roundMid)
-      }
-      prevCkpt = next
-      labels = next.select("id", "lbl")
-      it += 1
-    }
-    org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(edges)
-    lastIterations = it
-    if (changed > 0) {
-      org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(prevCkpt)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge after $maxIterations rounds " +
-          s"($changed labels still decreasing) — the duplicate graph's " +
-          "diameter exceeds maxIterations; raise maxIterations")
-    }
-    labels.select(col("id"), col("lbl").as("group_id"))
   }
 
   /** Per-group rollup of [[connectedComponents]]: group id (= canonical
@@ -2229,22 +2058,6 @@ object Dedup {
       }
     }
   }
-
-  /** Explicit round-partition width for [[starLoop]] (0 = derive from
-    * the edge volume: ~200 k canonical rows per partition, capped at
-    * the session shuffle width). The heuristic was tuned on SMALL
-    * graphs (32 near-empty tasks cost q70 ~1.7×); at the 1.26 M-edge
-    * bench point it picks 7 of 32 cores — this knob exists so the
-    * width can be measured per shape (see CcBench). */
-  val StarPartitionsConf = "spark.graft.dedup.starPartitions"
-
-  /** Which column keys [[starLoop]]'s per-round relabel exchange:
-    * "hi" (default — the dedup/min-agg ride it exchange-free, the
-    * next round's join re-keys) or "lo" (the next round's join rides
-    * it exchange-free, the p-aggregate re-keys its partial rows).
-    * Same results either way — an A/B knob for the round-shape
-    * measurement (see the relabelByLo note in starLoop). */
-  val StarRelabelKeyConf = "spark.graft.dedup.starRelabelKey"
 
   /** Scratch budget (bytes) for [[containmentDupPairs]]'s over-gate
     * bounded-scratch batching: the estimated one-wave shuffle volume

@@ -4,8 +4,9 @@ import graft.operators.Dedup
 
 import org.apache.spark.sql.functions._
 
-/** Connected-components duplicate-group resolution: min-label
-  * propagation over a pair graph. */
+/** Connected-components duplicate-group resolution over a pair graph:
+  * the single-task union-find (micro) path, the contraction pre-pass
+  * feeding it (contract→micro), and the alternating-star engine. */
 class DedupGroupsSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -15,8 +16,10 @@ class DedupGroupsSpec extends SparkTestBase {
     Dedup.connectedComponents(pairs.toDF("id1", "id2"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  /** Distributed label-propagation path, forced by disabling the
-    * micro-graph gate (microGraphMaxEdges = 0). */
+  /** Distributed path, forced by disabling both micro-graph gates
+    * (microGraphMaxEdges = 0): the contraction pre-pass runs and its
+    * forest — or, on a stalled contraction, the original edges —
+    * resolves through alternating star rounds. */
   private def ccLoop(pairs: Seq[(Long, Long)]): Map[Long, Long] =
     Dedup.connectedComponents(pairs.toDF("id1", "id2"),
         microGraphMaxEdges = 0L)
@@ -59,41 +62,27 @@ class DedupGroupsSpec extends SparkTestBase {
     assert(labels == (100L to 125L).map(_ -> 100L).toMap)
   }
 
-  test("diameter-100 chain converges within default maxIterations " +
-       "(pointer-jumping shortcut)") {
-    // end-to-end: the public API resolves the chain correctly (the
-    // contraction pre-pass collapses it first, so this does NOT pin the
-    // propagation loop's round count — the direct assertion follows)
+  test("diameter-100 chain converges within default maxIterations") {
+    // end-to-end on the forced distributed path: the contraction
+    // pre-pass collapses the chain, star rounds resolve the forest
     val chain = (1000L to 1099L).map(i => (i, i + 1))
     val labels = ccLoop(chain)
     assert(labels == (1000L to 1100L).map(_ -> 1000L).toMap)
-
-    // O(log d) evidence on the RAW loop (bypassing contraction, which
-    // would shrink the chain to a ~4-star forest and let even a broken
-    // jump converge): 3 plain rounds reach distance 3, then the double
-    // pointer jump multiplies reach ~4x per round (3 -> 15 -> 63 -> 255
-    // covers d=100 by round 6), plus one quiescent round — a single-hop
-    // loop would need ~101 rounds, single-jump ~10
-    val sym = chain.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val (edges, cnt) = org.apache.spark.sql.GraftSqlShim
-      .checkpointHashPartitionedCounted(sym.toDF("src", "dst"), "src")
-    val direct = Dedup.propagationLoop(edges, cnt, maxIterations = 50)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(direct == (1000L to 1100L).map(_ -> 1000L).toMap)
-    assert(Dedup.lastIterations >= 4 && Dedup.lastIterations <= 9,
-      s"diameter-100 chain took ${Dedup.lastIterations} rounds")
   }
 
   test("non-convergence throws instead of returning truncated labels") {
-    // microGraphMaxEdges = 0 forces the iterative path: union-find has
-    // no iteration count and always converges
-    val chain = (0L to 9L).map(i => (i, i + 1))
+    // a scrambled 41-node chain routes to star rounds (the union-find
+    // paths have no round budget to exhaust); one round cannot flatten
+    // it, so the engine must throw, not return partial labels
+    val chain = (0 until 40).map(i => (mix(i.toLong), mix(i.toLong + 1)))
     val ex = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain.toDF("id1", "id2"),
-          maxIterations = 3, microGraphMaxEdges = 0L)
+          maxIterations = 1, microGraphMaxEdges = 10L)
         .collect()
     }
     assert(ex.getMessage.contains("did not converge"))
+    assert(Dedup.lastEngine == "star",
+      s"expected star engine, got ${Dedup.lastEngine}")
   }
 
   test("checkpointed edge list keeps its src partitioning (no re-shuffle)") {
@@ -160,7 +149,7 @@ class DedupGroupsSpec extends SparkTestBase {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = parent.keys.map(k => k -> find(k)).toMap
-    // both paths — single-task union-find and distributed propagation —
+    // both paths — single-task union-find and the distributed path —
     // must agree with the naive oracle
     assert(cc(pairs) == expected)
     assert(ccLoop(pairs) == expected)
@@ -194,7 +183,7 @@ class DedupGroupsSpec extends SparkTestBase {
     // 7840 symmetric edges > microGraphMaxEdges=1500, so the distributed
     // phases engage; the contraction forest (~one row per node, ~4000)
     // clears the stall guard AND the post-contraction micro threshold
-    // (4x1500), so zero propagation rounds run
+    // (4x1500), so zero star rounds run
     val labels = Dedup.connectedComponents(
         localChains.toDF("id1", "id2"), microGraphMaxEdges = 1500L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -209,14 +198,16 @@ class DedupGroupsSpec extends SparkTestBase {
 
   test("contracted graph above the micro threshold still loops correctly") {
     // microGraphMaxEdges=0 disables the micro path entirely (both gates):
-    // the loop runs over the contracted forest and must agree
+    // star rounds run over the contracted forest and must agree
     val labels = Dedup.connectedComponents(
         localChains.toDF("id1", "id2"), microGraphMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for (k <- 0L until 80L; i <- 0L to 49L)
       yield (k * 1000 + i) -> (k * 1000)).toMap
     assert(labels == expected)
-    assert(Dedup.lastIterations > 0, "propagation loop did not run")
+    assert(Dedup.lastEngine == "star",
+      s"expected star engine, got ${Dedup.lastEngine}")
+    assert(Dedup.lastIterations > 0, "star rounds did not run")
     assert(Dedup.lastForestEdges > 0, "contraction pass did not run")
   }
 
@@ -304,9 +295,8 @@ class DedupGroupsSpec extends SparkTestBase {
   }
 
   /** Bijective id scramble (odd-multiplier mix, driver-side Scala so
-    * wraparound is fine): destroys the id gradient along the graph, the
-    * regime where min-label propagation degrades to O(diameter) and the
-    * star engine must take over. */
+    * wraparound is fine): destroys the id locality along the graph, so
+    * the contraction pre-pass stalls and the star engine takes over. */
   private def mix(i: Long): Long = {
     val x = i * 0x9E3779B97F4A7C15L
     x ^ (x >>> 31)
@@ -315,8 +305,8 @@ class DedupGroupsSpec extends SparkTestBase {
   test("scrambled deep chains route to star rounds and converge in O(log d)") {
     // 8 chains of 50 nodes with scrambled ids: no locality, so the
     // contraction pre-pass stalls and the star engine runs. Star rounds
-    // must converge in far fewer than the ~diameter rounds min-label
-    // propagation would need on these ids.
+    // must converge in far fewer than the ~diameter rounds a neighbor-min
+    // loop would need on these ids.
     val pairs = for (k <- 0L until 8L; i <- 0L until 49L)
       yield (mix(k * 50 + i), mix(k * 50 + i + 1))
     val labels = Dedup.connectedComponents(
@@ -429,16 +419,13 @@ class DedupGroupsSpec extends SparkTestBase {
     } finally spark.conf.unset("graft.debug.assertLayout")
   }
 
-  test("relabel-by-lo variant: identical labels, layout assumes hold") {
-    // the r17 round-shape A/B knob: keying the relabel exchange by LO
-    // must be result-identical to the default (hash(lo) satisfies the
-    // dedup clustering; the next round's join rides the recorded
-    // layout; the p-aggregate pays its own pinned-width exchange whose
-    // hash(hi, nStar) record the debug checker validates here). Graph
-    // must cross the big-graph gate (the variant is restricted to it):
-    // 60 k scrambled 7-node chains = 720 k symmetric edges, depth 6 so
-    // several rounds run under the variant, not just the first.
-    spark.conf.set(Dedup.StarRelabelKeyConf, "lo")
+  test("big-graph star rounds: correct labels, layout assumes hold") {
+    // the big-graph regime (AQE pinned off, shuffle width pinned to the
+    // round's nStar) under the sampled layout checker: every recorded
+    // hash(hi, nStar) checkpoint layout must hold at that width. Graph
+    // must cross the big-graph gate: 60 k scrambled 7-node chains =
+    // 720 k symmetric edges, depth 6 so several rounds run, not just
+    // the first.
     spark.conf.set("graft.debug.assertLayout", "true")
     try {
       val L = 7
@@ -461,10 +448,7 @@ class DedupGroupsSpec extends SparkTestBase {
         s"expected star engine, got ${Dedup.lastEngine}")
       assert(bad == 0L, s"$bad nodes labeled off the chain minimum")
       assert(labels.count() == 420000L)
-    } finally {
-      spark.conf.unset(Dedup.StarRelabelKeyConf)
-      spark.conf.unset("graft.debug.assertLayout")
-    }
+    } finally spark.conf.unset("graft.debug.assertLayout")
   }
 
   test("star engine matches brute force on a random scrambled graph") {
