@@ -265,8 +265,9 @@ object Bench {
     a.count(); b.count()
     val cond = a("contig") === b("contig") &&
       a("pos_start") <= b("pos_end") && a("pos_end") >= b("pos_start")
-    // identical workload shifted beyond Int32 (epoch-micro-style Longs):
-    // tracks the Int64 index's overhead vs the narrow path head-to-head
+    // identical workload shifted beyond Int32 (epoch-micro-style Longs)
+    // over LongType columns: the same Long index as the Int entries, timed
+    // on values the Int32 range cannot hold (what q49 and q78 rely on)
     def widen(df: org.apache.spark.sql.DataFrame) = df.select(
       col("contig"),
       (col("pos_start").cast("long") + 3000000000L).as("pos_start"),

@@ -52,13 +52,6 @@ object GraftSession {
   /** Bin width (coordinate units) for the binned rewrite; ~10× the typical
     * interval span is a good setting (1e6 for genome coordinates). */
   val BinSize = "spark.graft.intervalJoin.binSize"
-  /** "auto" (default) | "int32" | "int64" — coordinate width of the
-    * interval index. int32 mirrors the reference exactly (bounds
-    * check-narrowed, overflow fails the query — interval_join.rs:1661-1672);
-    * int64 indexes native Long coordinates (epoch micros/nanos, byte
-    * offsets) the reference cannot join at all; auto picks int64 iff a
-    * recognized bound operand is LongType, else the memory-lean int32. */
-  val CoordWidth = "spark.graft.intervalJoin.coordWidth"
   /** Hard cap (bytes) on one interval-join build side; 0 = uncapped. The
     * executor-side build additionally reserves from the task memory pool
     * (see [[graft.plans.BuildMemoryAccountant]]) — this cap exists for the

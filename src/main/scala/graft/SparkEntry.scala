@@ -174,7 +174,7 @@ object SparkEntry {
         |       AND a.pos_start <= b.pos_end AND a.pos_end >= b.pos_start)) AS n_anti""".stripMargin),
     // temporal bounds: RAW timestamp columns as interval bounds — the
     // recognizer normalizes TimestampType to epoch micros (UnixMicros),
-    // so this plans onto the Int64 indexed join with no manual epoch
+    // so this plans onto the Long-backed indexed join with no manual epoch
     // conversion. CAST(ts AS TIMESTAMP) is a no-op in Spark and the
     // ns→us truncation in DuckDB, keeping both engines at micro
     // resolution. Beyond the reference (Int32-only coordinates).
@@ -404,7 +404,6 @@ object SparkEntry {
     // user vouching for its coordinate scale (Long-bound joins skip
     // rebinning otherwise)
     spark.conf.unset(GraftSession.BinSize)
-    spark.conf.unset(GraftSession.CoordWidth)
     spark.conf.unset(GraftSession.MaxBuildBytes)
     // the SPARK confs query entries are allowed to pin (q105 lowers
     // both to demonstrate runtime bloom-filter injection at test-data
@@ -733,8 +732,8 @@ object SparkEntry {
     // 64-bit coordinates (epoch micros ~1.7e15): time-window overlap
     // self-join per user. The reference fails ANY bound beyond Int32 via
     // its checked narrowing (reference: interval_join.rs:1661-1672,
-    // pinned :1927-1968); coordWidth=auto runs this on the Int64
-    // superintervals index instead — a capability, not just parity.
+    // pinned :1927-1968); graft's Long-backed superintervals index answers
+    // it — a capability, not just parity.
     "q49_interval_long" -> run(longWindowSparkSql),
     "q51_interval_ts" -> run(sharedSql("q51_interval_ts")),
     "q52_interval_fraction" -> run(sharedSql("q52_interval_fraction")),
@@ -971,7 +970,7 @@ object SparkEntry {
       val joined = a.join(b, col("u") === col("u2") &&
         col("a_s") <= col("b_e") && col("a_e") >= col("b_s"))
       val plan = joined.queryExecution.executedPlan.toString
-      require(plan.contains("IntervalJoin") && plan.contains("coord=int64"),
+      require(plan.contains("IntervalJoin"),
         s"q78 pins the indexed interval join on NTZ bounds; got:\n$plan")
       joined.groupBy(col("u")).agg(count(lit(1)).as("n_overlaps")) }),
     // the streaming family under the driver's batch oracle: a REAL

@@ -20,7 +20,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
  * }}}
  *
  * Times are any integral, TIMESTAMP or DATE columns (temporal bounds
- * normalize to epoch micros/days; wide domains run on the Int64 index).
+ * normalize to epoch micros/days; every time indexes as a Long).
  * The FIRST side-crossing inequality in the condition defines the time
  * axis and direction; any further conjuncts are residual filters applied
  * to the picked pair — a failing residual NULL-pads like a miss. That is

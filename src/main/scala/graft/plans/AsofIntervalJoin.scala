@@ -44,7 +44,6 @@ object AsofCondition extends PredicateHelper {
       probeTime: Expression,
       forward: Boolean,
       strict: Boolean,
-      hasLongBounds: Boolean,
       /** Leftover conjuncts, evaluated on the picked (build, probe) pair;
         * a failing residual NULL-pads like a miss. This is pandas
         * merge_asof's `tolerance` (e.g. `b.t >= p.t - 3600L`): for a
@@ -60,7 +59,7 @@ object AsofCondition extends PredicateHelper {
 
   /** Same temporal normalization as [[IntervalCondition]]: timestamps to
     * epoch micros (NTZ via the timezone-free [[NtzMicros]]), dates to
-    * epoch days — as-of on raw TIMESTAMP columns runs on the Int64 index
+    * epoch days — as-of on raw TIMESTAMP columns runs on the Long index
     * (strict = 1-micro/1-day shift, exact). */
   private def norm(e: Expression): Expression = e.dataType match {
     case TimestampType => UnixMicros(e)
@@ -148,10 +147,8 @@ object AsofCondition extends PredicateHelper {
 
     time match {
       case Some((bt, pt, fwd, strict)) if ok =>
-        val wide = Seq(bt, pt).exists(e => e.dataType == LongType ||
-          e.dataType == TimestampType || e.dataType == TimestampNTZType)
         Some(Extracted(leftKeys, rightKeys, norm(bt), norm(pt), fwd, strict,
-          wide, residual.reduceOption(And)))
+          residual.reduceOption(And)))
       case _ => None
     }
   }

@@ -63,56 +63,10 @@ case class AutoBinIntervalJoin(session: SparkSession) extends Rule[LogicalPlan] 
       case j @ Join(l, r, Inner, Some(cond), _) =>
         IntervalCondition.extract(cond, l, r) match {
           case Some(ic) if !alreadyBinned(ic) && shouldBin(mode, l, ic) &&
-              (mode == "force" ||
-                (longSafe(ic, l, r) &&
-                  (!ic.hasLongBounds || binSizeExplicit))) =>
+              (mode == "force" || !ic.hasLongBounds || binSizeExplicit) =>
             rewrite(j, l, r, cond, ic, binSize)
           case _ => j
         }
-    }
-  }
-
-  /** In auto mode, a rewrite must never turn a query that would succeed
-    * (stock BNLJ fallback) into one that fails: when the user pins
-    * `coordWidth=int32`, a Long-bound join is only rebinned if column
-    * stats prove every bound attribute fits Int32. Under the default
-    * auto/int64 width the exec indexes Long natively — always safe. */
-  private def longSafe(ic: IntervalCondition, l: LogicalPlan,
-      r: LogicalPlan): Boolean = {
-    val width = confStr(graft.GraftSession.CoordWidth, "auto").toLowerCase
-    if (width != "int32" && width != "int") true
-    else if (!ic.hasLongBounds) true
-    else Seq((l, ic.leftStart), (l, ic.leftEnd),
-             (r, ic.rightStart), (r, ic.rightEnd))
-      .forall { case (side, e) => int32Proven(side, e) }
-  }
-
-  /** True when stats pin `e` (an attribute, possibly under the strict-op
-    * `- 1` rewrite) inside the Int32 range. A shifted attribute needs
-    * min − 1 in range too: stats proving min = Int.MinValue do NOT prove
-    * `attr - 1` fits. */
-  private def int32Proven(side: LogicalPlan, e: Expression): Boolean = {
-    val attrAndShift = e match {
-      case a: Attribute => Some((a, 0L))
-      case Subtract(Cast(a: Attribute, LongType, _, _), Literal(1L, LongType), _) =>
-        Some((a, 1L))
-      case _ => None
-    }
-    def asLong(v: Any): Option[Long] = v match {
-      case b: Byte => Some(b.toLong)
-      case s: Short => Some(s.toLong)
-      case i: Int => Some(i.toLong)
-      case l: Long => Some(l)
-      case _ => None
-    }
-    attrAndShift.exists { case (a, shift) =>
-      side.stats.attributeStats.get(a).exists { cs =>
-        (cs.min.flatMap(asLong), cs.max.flatMap(asLong)) match {
-          case (Some(mn), Some(mx)) =>
-            mn - shift >= Int.MinValue && mx <= Int.MaxValue
-          case _ => false
-        }
-      }
     }
   }
 

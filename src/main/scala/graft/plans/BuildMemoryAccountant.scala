@@ -76,10 +76,9 @@ object BuildMemoryAccountant {
     override def spill(size: Long, trigger: MemoryConsumer): Long = 0L
   }
 
-  /** Rough per-indexed-interval cost: 3 stored ints + equal-sized index
-    * arrays + growth slack. */
-  val IntervalOverhead: Int = 32
-  /** Int64-coordinate variant: two Long bounds instead of Int. */
+  /** Rough per-indexed-interval cost: two Long bounds + an Int position,
+    * accumulated and then copied into equal-sized index arrays, plus
+    * growth slack. */
   val LongIntervalOverhead: Int = 48
   /** Per stored row: array slot + UnsafeRow object header. */
   val RowOverhead: Int = 32

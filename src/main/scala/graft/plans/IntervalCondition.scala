@@ -28,18 +28,13 @@ case class IntervalCondition(
     rightEnd: Expression,
     residual: Option[Expression],
     /** True when either recognized range predicate compared a LongType
-      * operand — the signal `coordWidth=auto` uses to pick the Int64
-      * index. Computed from the ORIGINAL operand types, before the
-      * strict-op `minusOne` rewrite widens everything to Long (bin-size
-      * heuristics key off this, and the shift does not change coordinate
+      * or timestamp operand — a coordinate domain that may be far wider
+      * than genome positions. [[AutoBinIntervalJoin]] reads it: the
+      * default binSize is calibrated to Int coordinates. Computed from the
+      * ORIGINAL operand types, before the strict-op `minusOne` rewrite
+      * widens everything to Long (the shift does not change coordinate
       * MAGNITUDE). */
-    hasLongBounds: Boolean = false,
-    /** True when a strict op was rewritten via the ±1 shift. The shift
-      * can push a valid narrow bound out of the Int32 domain
-      * (Int.MinValue − 1), so `coordWidth=auto` must widen these joins
-      * even when every ORIGINAL operand is narrow — otherwise the int32
-      * path's checked narrowing fails the query on valid data. */
-    strictShifted: Boolean = false)
+    hasLongBounds: Boolean = false)
 
 /** Exact epoch-micros reinterpretation of a TIMESTAMP_NTZ operand. NTZ's
   * physical representation IS a Long of microseconds since the epoch of
@@ -93,7 +88,7 @@ object IntervalCondition extends PredicateHelper {
 
   /** `e - 1`, widened to Long first so a bound at the narrow type's min
     * value cannot wrap (non-ANSI) or throw (ANSI). The join kernel casts
-    * every bound to Long before the checked Int narrowing anyway. */
+    * every bound to Long anyway. */
   private def minusOne(e: Expression): Expression =
     Subtract(Cast(e, LongType), Literal(1L))
 
@@ -112,8 +107,7 @@ object IntervalCondition extends PredicateHelper {
     //   dir = LE: l <= r (after strictness shift)    [l = a start, r = a end]
     //   dir = GE: l >= r (after strictness shift)    [l = an end, r = a start]
     sealed trait Dir; case object LE extends Dir; case object GE extends Dir
-    case class Range(l: Expression, r: Expression, dir: Dir, wide: Boolean,
-      shifted: Boolean = false)
+    case class Range(l: Expression, r: Expression, dir: Dir, wide: Boolean)
 
     def isWide(a: Expression, b: Expression): Boolean =
       Seq(a, b).exists(e => e.dataType == LongType ||
@@ -135,23 +129,19 @@ object IntervalCondition extends PredicateHelper {
       // strict ops: x < y  ⇒  x <= y-1 ;  x > y  ⇒  x-1 >= y
       case LessThan(a, b) if fromLeft(a) && fromRight(b) &&
           integral(a) && integral(b) =>
-        Some(Range(norm(a), minusOne(norm(b)), LE, isWide(a, b),
-          shifted = true))
+        Some(Range(norm(a), minusOne(norm(b)), LE, isWide(a, b)))
       // `rs < le` ⇔ `le > rs` ⇔ `le - 1 >= rs` (shift the LEFT operand;
       // reference intervals.rs:99-129 applies minus_one to the gt side)
       case LessThan(a, b) if fromRight(a) && fromLeft(b) &&
           integral(a) && integral(b) =>
-        Some(Range(minusOne(norm(b)), norm(a), GE, isWide(a, b),
-          shifted = true))
+        Some(Range(minusOne(norm(b)), norm(a), GE, isWide(a, b)))
       case GreaterThan(a, b) if fromLeft(a) && fromRight(b) &&
           integral(a) && integral(b) =>
-        Some(Range(minusOne(norm(a)), norm(b), GE, isWide(a, b),
-          shifted = true))
+        Some(Range(minusOne(norm(a)), norm(b), GE, isWide(a, b)))
       // `re > ls` ⇔ `ls < re` ⇔ `ls <= re - 1` (shift the RIGHT operand)
       case GreaterThan(a, b) if fromRight(a) && fromLeft(b) &&
           integral(a) && integral(b) =>
-        Some(Range(norm(b), minusOne(norm(a)), LE, isWide(a, b),
-          shifted = true))
+        Some(Range(norm(b), minusOne(norm(a)), LE, isWide(a, b)))
       case _ => None
     }
 
@@ -182,8 +172,7 @@ object IntervalCondition extends PredicateHelper {
         leftStart = le.l, leftEnd = ge.l,
         rightStart = ge.r, rightEnd = le.r,
         residual = residual.reduceOption(And),
-        hasLongBounds = le.wide || ge.wide,
-        strictShifted = le.shifted || ge.shifted))
+        hasLongBounds = le.wide || ge.wide))
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.rangejoin.{AnyIntervalIndex, IntervalIndex, LongIntervalIndex, LongSuperIntervalsIndex, SuperIntervalsIndex}
+import graft.rangejoin.{LongIntervalIndex, LongSuperIntervalsIndex}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
@@ -65,13 +65,10 @@ case object NearestJoin extends IntervalJoinType
   * time is the greatest <= the probe time (backward; `forward` mirrors,
   * `strict` excludes equality), NULL-padded when none qualifies. Times are
   * indexed as degenerate [t, t] intervals, so the whole build/probe
-  * machinery (both distribution modes, Int32/Int64 widths) is reused. */
+  * machinery (both distribution modes) is reused. */
 case class AsofJoin(forward: Boolean, strict: Boolean)
   extends IntervalJoinType
 
-/** Per-key interval indexes + the build rows they point into. The index
-  * width (Int32 vs Int64 coordinates) is uniform across keys — decided
-  * once per join from `coordWidth` + the bound types. */
 /** Primitive growable long/int vectors for the build accumulators:
   * `ArrayBuffer[Long]` boxes every element (~64 B of transient
   * java.lang.Long + ref slot per appended bound), so a large build's
@@ -89,12 +86,6 @@ private[plans] final class LongVec(initial: Int = 16) {
   def length: Int = n
   def apply(i: Int): Long = arr(i)
   def toArray: Array[Long] = java.util.Arrays.copyOf(arr, n)
-  def toIntArrayChecked(check: Long => Int): Array[Int] = {
-    val out = new Array[Int](n)
-    var i = 0
-    while (i < n) { out(i) = check(arr(i)); i += 1 }
-    out
-  }
 }
 
 private[plans] final class IntVec(initial: Int = 16) {
@@ -127,7 +118,7 @@ private[plans] final class BoundsEval(start: Expression, end: Expression,
 }
 
 private[graft] class IntervalBuildSide(
-    val keyed: java.util.HashMap[UnsafeRow, AnyIntervalIndex],
+    val keyed: java.util.HashMap[UnsafeRow, LongIntervalIndex],
     val rows: Array[InternalRow]) extends Serializable
 
 /**
@@ -151,22 +142,11 @@ private[graft] class IntervalJoinRunner(
     // the joinType->schema mapping lives in exactly one place
     outputAttrs: Seq[Attribute],
     algorithm: String,
-    wide: Boolean,
     maxBuildBytes: Long,
     numOutputRows: SQLMetric,
     probeRows: SQLMetric,
     buildMemUsed: SQLMetric,
     probeTime: SQLMetric) extends Serializable {
-
-  /** Checked narrowing matching the reference's failure-on-overflow Int32
-    * coercion (interval_join.rs:1661-1672, pinned at :1927-1968). */
-  private def toIntChecked(v: Long): Int = {
-    if (v < Int.MinValue || v > Int.MaxValue) {
-      throw new ArithmeticException(
-        s"[GRAFT_INTERVAL_JOIN] Can't cast value $v to type Int")
-    }
-    v.toInt
-  }
 
   def buildSide(rows: Iterator[InternalRow]): IntervalBuildSide = {
     val keyProj = UnsafeProjection.create(leftKeys, leftOutput)
@@ -199,12 +179,7 @@ private[graft] class IntervalJoinRunner(
         stored += copied
         mem.add(copied.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
         if (indexable) {
-          mem.add(if (wide) BuildMemoryAccountant.LongIntervalOverhead
-                  else BuildMemoryAccountant.IntervalOverhead)
-          // Int32 mode narrows HERE, failing on overflow exactly like the
-          // reference's CastExpr (interval_join.rs:1661-1672); Int64 mode
-          // stores the Long verbatim.
-          if (!wide) { toIntChecked(bounds.s); toIntChecked(bounds.e) }
+          mem.add(BuildMemoryAccountant.LongIntervalOverhead)
           val key = keyProj(row)
           var acc = groups.get(key)
           if (acc == null) { acc = new Acc; groups.put(key.copy(), acc) }
@@ -218,17 +193,11 @@ private[graft] class IntervalJoinRunner(
       case NearestJoin | _: AsofJoin => "superintervals"
       case _ => algorithm
     }
-    val keyed = new java.util.HashMap[UnsafeRow, AnyIntervalIndex](
+    val keyed = new java.util.HashMap[UnsafeRow, LongIntervalIndex](
       math.max(16, groups.size() * 2))
     groups.forEach { (k, acc) =>
-      val idx: AnyIntervalIndex =
-        if (wide)
-          LongIntervalIndex.build(alg, acc.starts.toArray, acc.ends.toArray,
-            acc.positions.toArray)
-        else
-          IntervalIndex.build(alg, acc.starts.toIntArrayChecked(_.toInt),
-            acc.ends.toIntArrayChecked(_.toInt), acc.positions.toArray)
-      keyed.put(k, idx)
+      keyed.put(k, LongIntervalIndex.build(alg, acc.starts.toArray,
+        acc.ends.toArray, acc.positions.toArray))
     }
     buildMemUsed += mem.used
     new IntervalBuildSide(keyed, stored.toArray)
@@ -286,16 +255,6 @@ private[graft] class IntervalJoinRunner(
 
     val hasKeys = rightKeys.nonEmpty
 
-    // Width-dispatched probe: the match is decided by the index's concrete
-    // class, which is uniform across the whole join (one JIT-monomorphic
-    // call site per probe row). Int32 narrows the probe bounds with the
-    // reference's overflow check; Int64 probes verbatim.
-    def queryIdx(idx: AnyIntervalIndex, s: Long, e: Long)(f: Int => Unit): Unit =
-      idx match {
-        case li: LongIntervalIndex => li.query(s, e)(f)
-        case ii: IntervalIndex => ii.query(toIntChecked(s), toIntChecked(e))(f)
-      }
-
     // shared probe: fill matchBuf with positions whose pair passes the
     // residual; returns match count (0 for NULL bounds/keys)
     var sharedBuf = new Array[Int](64)
@@ -305,7 +264,7 @@ private[graft] class IntervalJoinRunner(
       val idx = if (hasKeys && key.anyNull) null else build.keyed.get(key)
       if (idx == null) return 0
       var n = 0
-      queryIdx(idx, bounds.s, bounds.e) { pos =>
+      idx.query(bounds.s, bounds.e) { pos =>
         if (n == sharedBuf.length)
           sharedBuf = java.util.Arrays.copyOf(sharedBuf, n * 2)
         sharedBuf(n) = pos
@@ -347,7 +306,7 @@ private[graft] class IntervalJoinRunner(
             if (idx == null) Iterator.empty
             else {
               matchLen = 0
-              queryIdx(idx, bounds.s, bounds.e)(add)
+              idx.query(bounds.s, bounds.e)(add)
               // buffer is reused across probe rows — safe because flatMap
               // drains each returned iterator before pulling the next row
               val n = matchLen
@@ -466,9 +425,7 @@ private[graft] class IntervalJoinRunner(
                        else build.keyed.get(key)
                      }
           val pos = idx0 match {
-            case si: SuperIntervalsIndex =>
-              si.nearest(toIntChecked(bounds.s), toIntChecked(bounds.e))
-            case li: LongSuperIntervalsIndex => li.nearest(bounds.s, bounds.e)
+            case si: LongSuperIntervalsIndex => si.nearest(bounds.s, bounds.e)
             case _ => -1
           }
           rows += 1
@@ -491,20 +448,14 @@ private[graft] class IntervalJoinRunner(
             case _ if strict && !forward && bounds.s == Long.MinValue => -1
             case idx =>
               // strict shifts the cutoff one tick (times are integral);
-              // shifts past the Int/Long domain mean "no candidate" on the
-              // shrinking side (handled above, pre-wrap) — clamp, never
-              // throw (no reference parity to keep: asof is new here)
+              // a shift past the Long domain means "no candidate" on the
+              // shrinking side (handled above, pre-wrap)
               val t = if (!strict) bounds.s
                       else if (forward) bounds.s + 1
                       else bounds.s - 1
               idx match {
-                case si: SuperIntervalsIndex =>
-                  if (t < Int.MinValue) { if (forward) si.asofForward(Int.MinValue) else -1 }
-                  else if (t > Int.MaxValue) { if (forward) -1 else si.asofBackward(Int.MaxValue) }
-                  else if (forward) si.asofForward(t.toInt)
-                  else si.asofBackward(t.toInt)
-                case li: LongSuperIntervalsIndex =>
-                  if (forward) li.asofForward(t) else li.asofBackward(t)
+                case si: LongSuperIntervalsIndex =>
+                  if (forward) si.asofForward(t) else si.asofBackward(t)
                 case _ => -1
               }
           }
@@ -551,7 +502,6 @@ case class IntervalJoinExec(
     joinType: IntervalJoinType,
     mode: IntervalJoinMode,
     algorithm: String,
-    wide: Boolean = false,
     markAttr: Option[Attribute] = None) extends BinaryExecNode with CodegenSupport {
 
   // FULL OUTER needs exclusive per-task ownership of the build partition
@@ -640,17 +590,14 @@ case class IntervalJoinExec(
       .map { case (a, b) => s"($a, $b)" }.mkString(", ")
     val filter = s"$leftStart <= $rightEnd AND $leftEnd >= $rightStart" +
       residual.map(r => s" AND $r").getOrElse("")
-    // int64 annotated only when active: the default line stays verbatim
-    // reference-shaped (integration_test.rs:108-112)
-    val width = if (wide) ", coord=int64" else ""
     s"IntervalJoinExec: mode=$modeStr, join_type=$jt, on=[$on], " +
-      s"filter=$filter, alg=$algorithm$width"
+      s"filter=$filter, alg=$algorithm"
   }
 
   private def runner: IntervalJoinRunner = new IntervalJoinRunner(
     left.output, right.output, leftKeys, rightKeys,
     leftStart, leftEnd, rightStart, rightEnd,
-    residual, joinType, markAttr, output, algorithm, wide,
+    residual, joinType, markAttr, output, algorithm,
     conf.getConfString(graft.GraftSession.MaxBuildBytes, "0").toLong,
     longMetric("numOutputRows"),
     longMetric("probeRows"), longMetric("buildMemUsed"),
@@ -765,10 +712,8 @@ case class IntervalJoinExec(
       leftRowTerm: String, matchTail: String): String = {
     val a = algorithm.toLowerCase
     val superFamily = a == "superintervals" || a == "coitrees" || a == "default"
-    if (wide && superFamily) {
-      // Int64 path: identical walk over long[] bound arrays — no
-      // narrowing, no overflow guard (the probe bounds are already Long)
-      val siCls = classOf[graft.rangejoin.LongSuperIntervalsIndex].getName
+    if (superFamily) {
+      val siCls = classOf[LongSuperIntervalsIndex].getName
       val si = ctx.freshName("si")
       val sArr = ctx.freshName("siStarts")
       val eArr = ctx.freshName("siEnds")
@@ -802,51 +747,11 @@ case class IntervalJoinExec(
          |  }
          |}
        """.stripMargin
-    } else if (superFamily) {
-      val siCls = classOf[graft.rangejoin.SuperIntervalsIndex].getName
-      val si = ctx.freshName("si")
-      val sArr = ctx.freshName("siStarts")
-      val eArr = ctx.freshName("siEnds")
-      val pArr = ctx.freshName("siPos")
-      val bArr = ctx.freshName("siBranch")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val mid = ctx.freshName("mid")
-      val ii = ctx.freshName("ii")
-      s"""
-         |$siCls $si = ($siCls) $idxTerm;
-         |int[] $sArr = $si.starts();
-         |int[] $eArr = $si.ends();
-         |int[] $pArr = $si.positions();
-         |int[] $bArr = $si.branch();
-         |int $lo = 0;
-         |int $hi = $sArr.length;
-         |while ($lo < $hi) {
-         |  int $mid = ($lo + $hi) >>> 1;
-         |  if ($sArr[$mid] <= (int) $eL) $lo = $mid + 1; else $hi = $mid;
-         |}
-         |int $ii = $lo - 1;
-         |while ($ii >= 0) {
-         |  if ($eArr[$ii] >= (int) $sL) {
-         |    InternalRow $leftRowTerm = $rowsTerm[$pArr[$ii]];
-         |    $ii--; // decrement BEFORE the fused tail: a parent-emitted
-         |           // continue must not be able to skip the loop update
-         |    $matchTail
-         |  } else {
-         |    $ii = $bArr[$ii];
-         |  }
-         |}
-       """.stripMargin
     } else {
       val nTerm = ctx.freshName("nMatches")
       val iTerm = ctx.freshName("im")
-      val call =
-        if (wide) {
-          val liCls = classOf[graft.rangejoin.LongIntervalIndex].getName
-          s"(($liCls) $idxTerm).queryInto($sL, $eL, $bufTerm)"
-        } else s"$idxTerm.queryInto((int) $sL, (int) $eL, $bufTerm)"
       s"""
-         |int $nTerm = $call;
+         |int $nTerm = $idxTerm.queryInto($sL, $eL, $bufTerm);
          |for (int $iTerm = 0; $iTerm < $nTerm; $iTerm++) {
          |  InternalRow $leftRowTerm = $rowsTerm[$bufTerm.get($iTerm)];
          |  $matchTail
@@ -903,15 +808,12 @@ case class IntervalJoinExec(
     val t0 = ctx.freshName("buildT0")
     val sL = ctx.freshName("sLong")
     val eL = ctx.freshName("eLong")
-    val idxCls =
-      if (wide) classOf[graft.rangejoin.AnyIntervalIndex].getName
-      else classOf[graft.rangejoin.IntervalIndex].getName
+    val idxCls = classOf[LongIntervalIndex].getName
     val keyNullCheck =
       if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
     val matchTail = consumeMatch(ctx, leftVars, rightVars, numOutput)
     val matchLoop = genMatchLoop(ctx, idxTerm, rowsTerm, bufTerm, sL, eL,
       leftRowTerm, matchTail)
-    val guard = if (wide) "" else intRangeGuard(sL, eL)
 
     s"""
        |if ($buildTerm == null) {
@@ -933,7 +835,6 @@ case class IntervalJoinExec(
        |    if ($idxTerm != null) {
        |      long $sL = ${sEv.value};
        |      long $eL = ${eEv.value};
-       |      $guard
        |      $matchLoop
        |    }
        |  }
@@ -941,19 +842,6 @@ case class IntervalJoinExec(
        |}
      """.stripMargin
   }
-
-  /** Int32 mode's checked narrowing of the probe bounds (reference
-    * overflow pinning, interval_join.rs:1927-1968); absent in int64 mode. */
-  private def intRangeGuard(sL: String, eL: String): String =
-    s"""
-       |if ($sL < Integer.MIN_VALUE || $sL > Integer.MAX_VALUE ||
-       |    $eL < Integer.MIN_VALUE || $eL > Integer.MAX_VALUE) {
-       |  throw new ArithmeticException(
-       |    "[GRAFT_INTERVAL_JOIN] Can't cast value " +
-       |    ($sL < Integer.MIN_VALUE || $sL > Integer.MAX_VALUE ? $sL : $eL) +
-       |    " to type Int");
-       |}
-     """.stripMargin
 
   // one probe row fans out to many output rows — downstream buffering
   // operators must copy
@@ -997,15 +885,12 @@ case class IntervalJoinExec(
     val idxTerm = ctx.freshName("intervalIdx")
     val sL = ctx.freshName("sLong")
     val eL = ctx.freshName("eLong")
-    val idxCls =
-      if (wide) classOf[graft.rangejoin.AnyIntervalIndex].getName
-      else classOf[graft.rangejoin.IntervalIndex].getName
+    val idxCls = classOf[LongIntervalIndex].getName
     val keyNullCheck =
       if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
     val matchTail = consumeMatch(ctx, leftVars, input, numOutput)
     val matchLoop = genMatchLoop(ctx, idxTerm, rowsTerm, bufTerm, sL, eL,
       leftRowTerm, matchTail)
-    val guard = if (wide) "" else intRangeGuard(sL, eL)
 
     s"""
        |$probeRows.add(1);
@@ -1017,7 +902,6 @@ case class IntervalJoinExec(
        |  if ($idxTerm != null) {
        |    long $sL = ${sEv.value};
        |    long $eL = ${eEv.value};
-       |    $guard
        |    $matchLoop
        |  }
        |}

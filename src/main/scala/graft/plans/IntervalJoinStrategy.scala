@@ -33,24 +33,6 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
   private def enabled: Boolean =
     conf(graft.GraftSession.PreferIntervalJoin, "true").toBoolean
 
-  /** Coordinate width for this join: int32 (reference parity, default for
-    * narrow bounds) vs int64 (native Long coordinates). `auto` widens iff
-    * a recognized bound operand is LongType — the exact case where the
-    * reference's checked Int32 narrowing would fail the query. */
-  private def coordWideFor(hasLongBounds: Boolean): Boolean =
-    conf(graft.GraftSession.CoordWidth, "auto").toLowerCase match {
-      case "int64" | "long" => true
-      case "int32" | "int" => false
-      case _ => hasLongBounds
-    }
-
-  private def coordWide(ic: IntervalCondition): Boolean =
-    // strict-shifted bounds widen too: the ±1 shift can push a valid
-    // narrow bound to Int.MinValue − 1, which the int32 path's checked
-    // narrowing would fail on VALID data (explicit coordWidth=int32
-    // keeps reference-parity overflow behavior)
-    coordWideFor(ic.hasLongBounds || ic.strictShifted)
-
   /** Shared mode selection for probe-side variants (build side given). */
   private def pickMode(build: LogicalPlan, hasKeys: Boolean)
       : Option[IntervalJoinMode] = {
@@ -108,13 +90,12 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             planLater(l), planLater(r),
             ic.leftKeys, ic.rightKeys,
             ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-            None, NearestJoin, mode, "superintervals",
-            wide = coordWide(ic)) :: Nil
+            None, NearestJoin, mode, "superintervals") :: Nil
         case _ => Nil // unreachable — NearestJoin.apply validates eagerly
       }
     // explicit as-of join node (graft.operators.AsofJoin API): times are
     // indexed as degenerate [t, t] intervals, so it reuses the whole
-    // build/probe machinery incl. both distribution modes and widths
+    // build/probe machinery incl. both distribution modes
     case AsofIntervalJoin(l, r, cond) =>
       AsofCondition.extract(cond, l, r) match {
         case Some(x) =>
@@ -133,8 +114,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             x.leftKeys, x.rightKeys,
             x.buildTime, x.buildTime, x.probeTime, x.probeTime,
             x.residual, AsofJoin(x.forward, x.strict), mode,
-            "superintervals",
-            wide = coordWideFor(x.hasLongBounds)) :: Nil
+            "superintervals") :: Nil
         case _ => Nil // unreachable — AsofJoin.apply validates eagerly
       }
     // probe-side variants — all beyond the reference's Inner-only support.
@@ -146,8 +126,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             IntervalJoinExec(planLater(l), planLater(r),
               ic.leftKeys, ic.rightKeys,
               ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-              ic.residual, RightOuterJoin, m, "superintervals",
-              wide = coordWide(ic)) :: Nil
+              ic.residual, RightOuterJoin, m, "superintervals") :: Nil
           }.getOrElse(Nil)
         case None => Nil
       }
@@ -159,8 +138,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             val swapped = IntervalJoinExec(planLater(r), planLater(l),
               ic.rightKeys, ic.leftKeys,
               ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, RightOuterJoin, m, "superintervals",
-              wide = coordWide(ic))
+              ic.residual, RightOuterJoin, m, "superintervals")
             ProjectExec(
               (l.output ++ r.output.map(_.withNullability(true)))
                 .map(a => a: org.apache.spark.sql.catalyst.expressions.NamedExpression),
@@ -180,7 +158,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             ic.leftKeys, ic.rightKeys,
             ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
             ic.residual, FullOuterJoin, PartitionedMode,
-            "superintervals", wide = coordWide(ic)) :: Nil
+            "superintervals") :: Nil
         case _ => Nil
       }
     // LeftSemi/LeftAnti: preserved side = probe, filtering side = build.
@@ -191,8 +169,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             IntervalJoinExec(planLater(r), planLater(l),
               ic.rightKeys, ic.leftKeys,
               ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, SemiJoin, m, "superintervals",
-              wide = coordWide(ic)) :: Nil
+              ic.residual, SemiJoin, m, "superintervals") :: Nil
           }.getOrElse(Nil)
         case None => Nil
       }
@@ -207,7 +184,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
               ic.rightKeys, ic.leftKeys,
               ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
               ic.residual, MarkJoin, m, "superintervals",
-              wide = coordWide(ic), markAttr = Some(exists)) :: Nil
+              markAttr = Some(exists)) :: Nil
           }.getOrElse(Nil)
         case None => Nil
       }
@@ -218,8 +195,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
             IntervalJoinExec(planLater(r), planLater(l),
               ic.rightKeys, ic.leftKeys,
               ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, AntiJoin, m, "superintervals",
-              wide = coordWide(ic)) :: Nil
+              ic.residual, AntiJoin, m, "superintervals") :: Nil
           }.getOrElse(Nil)
         case None => Nil
       }
@@ -295,10 +271,8 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
                   ic.leftKeys, ic.rightKeys,
                   ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
                   ic.residual, joinType, m,
-                  // every algorithm slot has Int32 AND Int64 variants;
                   // nearest semantics ride the superintervals structure
-                  if (nearest) "superintervals" else algorithm,
-                  wide = coordWide(ic)) :: Nil
+                  if (nearest) "superintervals" else algorithm) :: Nil
             }
           }
         case None => Nil

@@ -3,51 +3,31 @@ package graft.rangejoin
 import scala.collection.mutable.ArrayBuffer
 
 /**
- * Read-only index over a set of closed (end-inclusive) integer intervals,
- * each carrying an opaque `position` (row offset into the build side).
+ * Read-only index over a set of closed (end-inclusive) intervals with Long
+ * bounds, each carrying an opaque `position` (row offset into the build
+ * side).
  *
  * This is the Spark-side analogue of the reference's pluggable
  * `IntervalJoinAlgorithm` (reference:
  * sequila/sequila-core/src/physical_planner/joins/interval_join.rs:720-1021).
  * All implementations are plain primitive-array structures: cheap to
  * serialize into a broadcast variable, no boxing in the hot probe loop.
+ *
+ * There is one coordinate width. Every bound is a Long, whatever its SQL
+ * type: Int genome positions, epoch micros/nanos and byte offsets all
+ * index the same way. The reference instead narrows every bound to Int32
+ * and fails on overflow (reference: interval_join.rs:1661-1672, pinned
+ * :1927-1968), so 64-bit coordinate domains are unusable there.
  */
-/** Common supertype of the Int32 and Int64 coordinate indexes — what an
-  * interval-join build side stores per key. Probe code dispatches on the
-  * concrete width (decided once per join, never per row). */
-sealed trait AnyIntervalIndex extends Serializable {
+sealed trait LongIntervalIndex extends Serializable {
   def size: Int
-}
 
-/** Int64-coordinate index surface — every algorithm slot has a Long twin
-  * so `spark.graft.intervalJoin.algorithm` stays a real A/B knob on wide
-  * (epoch micro/nano) domains too, not a silent superintervals alias. */
-sealed trait LongIntervalIndex extends AnyIntervalIndex {
   /** Invoke `f(position)` for every stored interval overlapping [s, e]
     * (closed/closed). */
   def query(s: Long, e: Long)(f: Int => Unit): Unit
 
-  def count(s: Long, e: Long): Long = {
-    var n = 0L
-    query(s, e)(_ => n += 1)
-    n
-  }
-
-  /** Codegen-friendly probe (generated Java can't pass closures). */
-  def queryInto(s: Long, e: Long, buf: IntMatchBuffer): Int = {
-    buf.reset()
-    query(s, e)(buf.addF)
-    buf.size
-  }
-}
-
-sealed trait IntervalIndex extends AnyIntervalIndex {
-  /** Invoke `f(position)` for every stored interval overlapping [s, e]
-    * (closed/closed). */
-  def query(s: Int, e: Int)(f: Int => Unit): Unit
-
   /** Count stored intervals overlapping [s, e]. */
-  def count(s: Int, e: Int): Long = {
+  def count(s: Long, e: Long): Long = {
     var n = 0L
     query(s, e)(_ => n += 1)
     n
@@ -55,13 +35,11 @@ sealed trait IntervalIndex extends AnyIntervalIndex {
 
   /** Codegen-friendly probe: fill `buf` with the matching positions and
     * return the match count (generated Java can't pass closures). */
-  def queryInto(s: Int, e: Int, buf: IntMatchBuffer): Int = {
+  def queryInto(s: Long, e: Long, buf: IntMatchBuffer): Int = {
     buf.reset()
     query(s, e)(buf.addF)
     buf.size
   }
-
-  def size: Int
 }
 
 /** Reusable growable primitive int buffer for codegen'd probe loops. */
@@ -79,49 +57,12 @@ final class IntMatchBuffer {
 }
 
 object IntervalIndex {
-  /** Build the index named by `algorithm` (conf
-    * `spark.graft.intervalJoin.algorithm`). Mirrors `Algorithm::from_str`
-    * (reference: sequila/sequila-core/src/session_context.rs:85-104). */
+  /** Build the index named by `algorithm` over Int bounds, widened to Long
+    * (see [[LongIntervalIndex.build]]). */
   def build(algorithm: String, starts: Array[Int], ends: Array[Int],
-            positions: Array[Int]): IntervalIndex =
-    algorithm.toLowerCase match {
-      // the superintervals design serves the Coitrees (default) slot — a
-      // sorted array with branch skips has the same cache-linear profile
-      // the vEB-layout COITree targets (SURVEY §2 #6 allows this)
-      case "superintervals" | "coitrees" | "default" =>
-        SuperIntervalsIndex.build(starts, ends, positions)
-      case "ailist" =>
-        AIListIndex.build(starts, ends, positions)
-      // real augmented interval tree (reference's IntervalTree /
-      // ArrayIntervalTree slots, rust-bio style — interval_join.rs:816-841)
-      case "intervaltree" | "arrayintervaltree" =>
-        AugmentedTreeIndex.build(starts, ends, positions)
-      // real Lapper (reference's Lapper slot, interval_join.rs:842-857)
-      case "lapper" | "nclist" =>
-        LapperIndex.build(starts, ends, positions)
-      case "naive" | "linear" =>
-        new NaiveIntervalIndex(starts, ends, positions)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unknown interval-join algorithm: $other (expected " +
-            "superintervals | ailist | intervaltree | lapper | naive)")
-    }
-}
-
-/** O(n) scan — correctness oracle for the real indexes and fallback for
-  * tiny build sides. */
-final class NaiveIntervalIndex(
-    starts: Array[Int], ends: Array[Int], positions: Array[Int])
-  extends IntervalIndex {
-  override def query(s: Int, e: Int)(f: Int => Unit): Unit = {
-    var i = 0
-    val n = starts.length
-    while (i < n) {
-      if (starts(i) <= e && ends(i) >= s) f(positions(i))
-      i += 1
-    }
-  }
-  override def size: Int = starts.length
+            positions: Array[Int]): LongIntervalIndex =
+    LongIntervalIndex.build(algorithm, starts.map(_.toLong),
+      ends.map(_.toLong), positions)
 }
 
 /**
@@ -134,17 +75,17 @@ final class NaiveIntervalIndex(
  * one. Query = binary-search the last start <= probe end, then walk left,
  * jumping via `branch` on the first miss.
  *
- * Pure `Array[Int]`s: serializable, cache-friendly, JIT-vectorizable.
+ * Pure primitive arrays: serializable, cache-friendly, JIT-vectorizable.
  */
-final class SuperIntervalsIndex private (
-    val starts: Array[Int], val ends: Array[Int],
+final class LongSuperIntervalsIndex private (
+    val starts: Array[Long], val ends: Array[Long],
     val positions: Array[Int], val branch: Array[Int])
-  extends IntervalIndex {
+  extends LongIntervalIndex {
 
   override def size: Int = starts.length
 
   /** Largest index i with starts(i) <= v, or -1. */
-  private def upperBound(v: Int): Int = {
+  private def upperBound(v: Long): Int = {
     var lo = 0
     var hi = starts.length // exclusive
     while (lo < hi) {
@@ -154,7 +95,7 @@ final class SuperIntervalsIndex private (
     lo - 1
   }
 
-  override def query(s: Int, e: Int)(f: Int => Unit): Unit = {
+  override def query(s: Long, e: Long)(f: Int => Unit): Unit = {
     var i = upperBound(e)
     while (i >= 0) {
       if (ends(i) >= s) {
@@ -176,11 +117,11 @@ final class SuperIntervalsIndex private (
     * Returns -1 when the index is empty.
     * (Deterministic variant of the reference's CoitreesNearest,
     * interval_join.rs:909-956, which returns an arbitrary first overlap.) */
-  def nearest(s: Int, e: Int): Int = {
+  def nearest(s: Long, e: Long): Int = {
     if (starts.length == 0) return -1
     var best = -1
-    var bestStart = Int.MaxValue
-    var bestEnd = Int.MaxValue
+    var bestStart = Long.MaxValue
+    var bestEnd = Long.MaxValue
     // Overlap pass with tie-break on (start, end): walk the query traversal
     // but keep the argmin instead of emitting.
     var i = upperBound(e)
@@ -195,15 +136,22 @@ final class SuperIntervalsIndex private (
     }
     if (best >= 0) return positions(best)
 
-    // No overlap: candidates are the interval with max end among starts <= s
-    // (gap = s - end) and the first start > e (gap = start - e).
+    // No overlap: nearest by gap — max end among starts <= s (gap s-end)
+    // vs first start > e (gap start-e). Subtractions saturate: operands
+    // in opposite halves of the Long domain would otherwise wrap and pick
+    // the FARTHER interval.
+    def satSub(a: Long, b: Long): Long = {
+      val d = a - b
+      if (((a ^ b) & (a ^ d)) < 0) { if (a >= 0) Long.MaxValue else Long.MinValue }
+      else d
+    }
     var bestDist = Long.MaxValue
     var bestIdx = -1
     val leftIdx = upperBound(s)
     if (leftIdx >= 0) {
       // prefixMaxEnd gives the closest end from the left side
       val j = prefixMaxEndIdx(leftIdx)
-      val d = s.toLong - ends(j).toLong
+      val d = satSub(s, ends(j))
       bestDist = d; bestIdx = j
     }
     var rightIdx = upperBound(e) + 1 // first start > e
@@ -212,8 +160,12 @@ final class SuperIntervalsIndex private (
       // (start, end), i.e. the last of the equal-start run
       while (rightIdx + 1 < starts.length &&
              starts(rightIdx + 1) == starts(rightIdx)) rightIdx += 1
-      val d = starts(rightIdx).toLong - e.toLong
-      if (d < bestDist || (d == bestDist && bestIdx >= 0 &&
+      val d = satSub(starts(rightIdx), e)
+      // bestIdx < 0: no left candidate exists — the right candidate must
+      // win even when its saturated gap equals the Long.MaxValue
+      // sentinel bestDist starts at (otherwise a key WITH build rows
+      // would NULL-pad at the domain edge)
+      if (bestIdx < 0 || d < bestDist || (d == bestDist &&
           (starts(rightIdx) < starts(bestIdx) ||
            (starts(rightIdx) == starts(bestIdx) &&
             ends(rightIdx) < ends(bestIdx))))) {
@@ -242,7 +194,7 @@ final class SuperIntervalsIndex private (
 
   /** ASOF backward: the interval with the greatest start <= s (equal
     * starts: the sort's first = greatest end), or -1. One binary search. */
-  def asofBackward(s: Int): Int = {
+  def asofBackward(s: Long): Int = {
     var i = upperBound(s)
     if (i < 0) return -1
     while (i > 0 && starts(i - 1) == starts(i)) i -= 1
@@ -251,7 +203,7 @@ final class SuperIntervalsIndex private (
 
   /** ASOF forward: the interval with the smallest start >= s (equal
     * starts: greatest end), or -1. */
-  def asofForward(s: Int): Int = {
+  def asofForward(s: Long): Int = {
     var lo = 0
     var hi = starts.length
     while (lo < hi) {
@@ -262,36 +214,20 @@ final class SuperIntervalsIndex private (
   }
 }
 
-object SuperIntervalsIndex {
-  def build(starts0: Array[Int], ends0: Array[Int],
-            positions0: Array[Int]): SuperIntervalsIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) > ends0(b)
-    }
-    val starts = new Array[Int](n)
-    val ends = new Array[Int](n)
-    val positions = new Array[Int](n)
+/** O(n) scan — the `naive` algorithm slot and the correctness oracle for
+  * the real indexes. */
+final class LongNaiveIndex(
+    starts: Array[Long], ends: Array[Long], positions: Array[Int])
+  extends LongIntervalIndex {
+  override def query(s: Long, e: Long)(f: Int => Unit): Unit = {
     var i = 0
+    val n = starts.length
     while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
+      if (starts(i) <= e && ends(i) >= s) f(positions(i))
       i += 1
     }
-    // branch(i) = nearest j < i with ends(j) >= ends(i), else -1
-    val branch = new Array[Int](n)
-    val stack = new ArrayBuffer[Int](16)
-    i = 0
-    while (i < n) {
-      while (stack.nonEmpty && ends(stack(stack.length - 1)) < ends(i))
-        stack.remove(stack.length - 1)
-      branch(i) = if (stack.isEmpty) -1 else stack(stack.length - 1)
-      stack += i
-      i += 1
-    }
-    new SuperIntervalsIndex(starts, ends, positions, branch)
   }
+  override def size: Int = starts.length
 }
 
 /**
@@ -302,14 +238,14 @@ object SuperIntervalsIndex {
  * Covers the reference's `IntervalTree`/`ArrayIntervalTree` algorithm slots
  * (reference: interval_join.rs:816-841) with an array-friendly design.
  */
-final class AIListIndex private (
-    compStarts: Array[Array[Int]], compEnds: Array[Array[Int]],
-    compMaxEnds: Array[Array[Int]], compPositions: Array[Array[Int]])
-  extends IntervalIndex {
+final class LongAIListIndex private[rangejoin] (
+    compStarts: Array[Array[Long]], compEnds: Array[Array[Long]],
+    compMaxEnds: Array[Array[Long]], compPositions: Array[Array[Int]])
+  extends LongIntervalIndex {
 
   override val size: Int = compStarts.iterator.map(_.length).sum
 
-  override def query(s: Int, e: Int)(f: Int => Unit): Unit = {
+  override def query(s: Long, e: Long)(f: Int => Unit): Unit = {
     var c = 0
     while (c < compStarts.length) {
       val starts = compStarts(c); val ends = compEnds(c)
@@ -340,294 +276,10 @@ final class AIListIndex private (
  * predictable, excellent when interval lengths are fairly uniform;
  * degrades when one giant interval inflates maxLen — which is exactly the
  * profile difference that makes it worth A/B-testing against the others.
+ * `unbounded` marks an interval whose length exceeds Long.MaxValue
+ * (full-domain sentinel) — no finite cutoff can exclude anything, so
+ * probes scan from the front.
  */
-final class LapperIndex private (
-    starts: Array[Int], ends: Array[Int], positions: Array[Int],
-    maxLen: Long) extends IntervalIndex {
-
-  override def size: Int = starts.length
-
-  override def query(s: Int, e: Int)(f: Int => Unit): Unit = {
-    val n = starts.length
-    // first i with starts(i) >= s - maxLen (Long math: no underflow)
-    val cutoff = s.toLong - maxLen
-    var lo = 0
-    var hi = n
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (starts(mid).toLong < cutoff) lo = mid + 1 else hi = mid
-    }
-    while (lo < n && starts(lo) <= e) {
-      if (ends(lo) >= s) f(positions(lo))
-      lo += 1
-    }
-  }
-}
-
-object LapperIndex {
-  def build(starts0: Array[Int], ends0: Array[Int],
-            positions0: Array[Int]): LapperIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) < ends0(b)
-    }
-    val starts = new Array[Int](n)
-    val ends = new Array[Int](n)
-    val positions = new Array[Int](n)
-    var maxLen = 0L
-    var i = 0
-    while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
-      // inverted intervals (end < start) contribute no positive length but
-      // must still be reachable: length floor 0 keeps cutoff <= start
-      maxLen = math.max(maxLen, ends(i).toLong - starts(i).toLong)
-      i += 1
-    }
-    new LapperIndex(starts, ends, positions, math.max(maxLen, 0L))
-  }
-}
-
-/**
- * Augmented interval tree over a sorted array (the classic CLRS structure,
- * array-backed like rust-bio's ArrayBackedIntervalTree — the reference's
- * IntervalTree / ArrayIntervalTree slots, reference:
- * interval_join.rs:816-841): an implicit balanced BST where node = middle
- * of its range and every node stores its subtree's max end, letting a
- * probe prune whole subtrees whose max end < s. No pointers — three
- * primitive arrays plus the augmentation, broadcast-friendly.
- */
-final class AugmentedTreeIndex private (
-    starts: Array[Int], ends: Array[Int], positions: Array[Int],
-    subtreeMax: Array[Int]) extends IntervalIndex {
-
-  override def size: Int = starts.length
-
-  override def query(s: Int, e: Int)(f: Int => Unit): Unit =
-    visit(0, starts.length, s, e, f)
-
-  /** In-order traversal of the implicit tree on [lo, hi), pruning on the
-    * subtree max-end (left of a start > e nothing can start <= e; below a
-    * subtreeMax < s nothing can end >= s). Depth is log2(n). */
-  private def visit(lo: Int, hi: Int, s: Int, e: Int, f: Int => Unit): Unit = {
-    if (lo >= hi) return
-    val mid = (lo + hi) >>> 1
-    if (subtreeMax(mid) < s) return
-    visit(lo, mid, s, e, f)
-    if (starts(mid) <= e) {
-      if (ends(mid) >= s) f(positions(mid))
-      visit(mid + 1, hi, s, e, f)
-    }
-  }
-}
-
-object AugmentedTreeIndex {
-  def build(starts0: Array[Int], ends0: Array[Int],
-            positions0: Array[Int]): AugmentedTreeIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) < ends0(b)
-    }
-    val starts = new Array[Int](n)
-    val ends = new Array[Int](n)
-    val positions = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
-      i += 1
-    }
-    val subtreeMax = new Array[Int](math.max(n, 1))
-    def fill(lo: Int, hi: Int): Int = {
-      if (lo >= hi) return Int.MinValue
-      val mid = (lo + hi) >>> 1
-      val m = math.max(ends(mid), math.max(fill(lo, mid), fill(mid + 1, hi)))
-      subtreeMax(mid) = m
-      m
-    }
-    fill(0, n)
-    new AugmentedTreeIndex(starts, ends, positions, subtreeMax)
-  }
-}
-
-/**
- * Int64-coordinate superintervals index — same sorted-array + branch-skip
- * design as [[SuperIntervalsIndex]], with `Array[Long]` bounds. Backs the
- * wide (`coordWidth=int64` / auto-detected Long bounds) interval join: the
- * reference narrows every bound to Int32 and fails on overflow
- * (reference: interval_join.rs:1661-1672, pinned :1927-1968), which makes
- * 64-bit coordinate domains — epoch micros/nanos, byte offsets — unusable.
- * This index completes that capability; Int32 stays the default for
- * narrow domains (half the memory per interval, reference parity).
- */
-final class LongSuperIntervalsIndex private (
-    val starts: Array[Long], val ends: Array[Long],
-    val positions: Array[Int], val branch: Array[Int])
-  extends LongIntervalIndex {
-
-  override def size: Int = starts.length
-
-  /** Largest index i with starts(i) <= v, or -1. */
-  private def upperBound(v: Long): Int = {
-    var lo = 0
-    var hi = starts.length // exclusive
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (starts(mid) <= v) lo = mid + 1 else hi = mid
-    }
-    lo - 1
-  }
-
-  override def query(s: Long, e: Long)(f: Int => Unit): Unit = {
-    var i = upperBound(e)
-    while (i >= 0) {
-      if (ends(i) >= s) {
-        f(positions(i))
-        i -= 1
-      } else {
-        i = branch(i)
-      }
-    }
-  }
-
-  /** Nearest-mode support — Long twin of
-    * [[SuperIntervalsIndex.nearest]] (same deterministic semantics). */
-  def nearest(s: Long, e: Long): Int = {
-    if (starts.length == 0) return -1
-    var best = -1
-    var bestStart = Long.MaxValue
-    var bestEnd = Long.MaxValue
-    var i = upperBound(e)
-    while (i >= 0) {
-      if (ends(i) >= s) {
-        if (starts(i) < bestStart ||
-            (starts(i) == bestStart && ends(i) < bestEnd)) {
-          best = i; bestStart = starts(i); bestEnd = ends(i)
-        }
-        i -= 1
-      } else i = branch(i)
-    }
-    if (best >= 0) return positions(best)
-
-    // No overlap: nearest by gap — max end among starts <= s (gap s-end)
-    // vs first start > e (gap start-e). Subtractions saturate: operands
-    // in opposite halves of the Long domain would otherwise wrap and pick
-    // the FARTHER interval (the Int twin avoids this by widening to Long;
-    // at Long width saturation is the equivalent guard).
-    def satSub(a: Long, b: Long): Long = {
-      val d = a - b
-      if (((a ^ b) & (a ^ d)) < 0) { if (a >= 0) Long.MaxValue else Long.MinValue }
-      else d
-    }
-    var bestDist = Long.MaxValue
-    var bestIdx = -1
-    val leftIdx = upperBound(s)
-    if (leftIdx >= 0) {
-      val j = prefixMaxEndIdx(leftIdx)
-      val d = satSub(s, ends(j))
-      bestDist = d; bestIdx = j
-    }
-    var rightIdx = upperBound(e) + 1 // first start > e
-    if (rightIdx < starts.length) {
-      while (rightIdx + 1 < starts.length &&
-             starts(rightIdx + 1) == starts(rightIdx)) rightIdx += 1
-      val d = satSub(starts(rightIdx), e)
-      // bestIdx < 0: no left candidate exists — the right candidate must
-      // win even when its saturated gap equals the Long.MaxValue
-      // sentinel bestDist starts at (otherwise a key WITH build rows
-      // would NULL-pad at the domain edge)
-      if (bestIdx < 0 || d < bestDist || (d == bestDist &&
-          (starts(rightIdx) < starts(bestIdx) ||
-           (starts(rightIdx) == starts(bestIdx) &&
-            ends(rightIdx) < ends(bestIdx))))) {
-        bestDist = d; bestIdx = rightIdx
-      }
-    }
-    if (bestIdx < 0) -1 else positions(bestIdx)
-  }
-
-  @transient private lazy val prefixMaxEndIdxArr: Array[Int] = {
-    val n = starts.length
-    val arr = new Array[Int](n)
-    var bi = 0
-    var i = 0
-    while (i < n) {
-      if (ends(i) > ends(bi)) bi = i
-      arr(i) = bi
-      i += 1
-    }
-    arr
-  }
-  private def prefixMaxEndIdx(i: Int): Int = prefixMaxEndIdxArr(i)
-
-  /** ASOF backward — Long twin of [[SuperIntervalsIndex.asofBackward]]. */
-  def asofBackward(s: Long): Int = {
-    var i = upperBound(s)
-    if (i < 0) return -1
-    while (i > 0 && starts(i - 1) == starts(i)) i -= 1
-    positions(i)
-  }
-
-  /** ASOF forward — Long twin of [[SuperIntervalsIndex.asofForward]]. */
-  def asofForward(s: Long): Int = {
-    var lo = 0
-    var hi = starts.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (starts(mid) < s) lo = mid + 1 else hi = mid
-    }
-    if (lo >= starts.length) -1 else positions(lo)
-  }
-}
-
-/** O(n) Long scan — correctness oracle for the Long indexes. */
-final class LongNaiveIndex(
-    starts: Array[Long], ends: Array[Long], positions: Array[Int])
-  extends LongIntervalIndex {
-  override def query(s: Long, e: Long)(f: Int => Unit): Unit = {
-    var i = 0
-    val n = starts.length
-    while (i < n) {
-      if (starts(i) <= e && ends(i) >= s) f(positions(i))
-      i += 1
-    }
-  }
-  override def size: Int = starts.length
-}
-
-/** Long twin of [[AIListIndex]] (same decomposition heuristics). */
-final class LongAIListIndex private[rangejoin] (
-    compStarts: Array[Array[Long]], compEnds: Array[Array[Long]],
-    compMaxEnds: Array[Array[Long]], compPositions: Array[Array[Int]])
-  extends LongIntervalIndex {
-
-  override val size: Int = compStarts.iterator.map(_.length).sum
-
-  override def query(s: Long, e: Long)(f: Int => Unit): Unit = {
-    var c = 0
-    while (c < compStarts.length) {
-      val starts = compStarts(c); val ends = compEnds(c)
-      val maxEnds = compMaxEnds(c); val positions = compPositions(c)
-      var lo = 0; var hi = starts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (starts(mid) <= e) lo = mid + 1 else hi = mid
-      }
-      var i = lo - 1
-      while (i >= 0 && maxEnds(i) >= s) {
-        if (ends(i) >= s) f(positions(i))
-        i -= 1
-      }
-      c += 1
-    }
-  }
-}
-
-/** Long twin of [[LapperIndex]]. `unbounded` marks an interval whose
-  * length exceeds Long.MaxValue (full-domain sentinel) — no finite
-  * cutoff can exclude anything, so probes scan from the front. */
 final class LongLapperIndex private[rangejoin] (
     starts: Array[Long], ends: Array[Long], positions: Array[Int],
     maxLen: Long, unbounded: Boolean) extends LongIntervalIndex {
@@ -654,7 +306,15 @@ final class LongLapperIndex private[rangejoin] (
   }
 }
 
-/** Long twin of [[AugmentedTreeIndex]]. */
+/**
+ * Augmented interval tree over a sorted array (the classic CLRS structure,
+ * array-backed like rust-bio's ArrayBackedIntervalTree — the reference's
+ * IntervalTree / ArrayIntervalTree slots, reference:
+ * interval_join.rs:816-841): an implicit balanced BST where node = middle
+ * of its range and every node stores its subtree's max end, letting a
+ * probe prune whole subtrees whose max end < s. No pointers — three
+ * primitive arrays plus the augmentation, broadcast-friendly.
+ */
 final class LongAugmentedTreeIndex private[rangejoin] (
     starts: Array[Long], ends: Array[Long], positions: Array[Int],
     subtreeMax: Array[Long]) extends LongIntervalIndex {
@@ -664,6 +324,9 @@ final class LongAugmentedTreeIndex private[rangejoin] (
   override def query(s: Long, e: Long)(f: Int => Unit): Unit =
     visit(0, starts.length, s, e, f)
 
+  /** In-order traversal of the implicit tree on [lo, hi), pruning on the
+    * subtree max-end (left of a start > e nothing can start <= e; below a
+    * subtreeMax < s nothing can end >= s). Depth is log2(n). */
   private def visit(lo: Int, hi: Int, s: Long, e: Long,
       f: Int => Unit): Unit = {
     if (lo >= hi) return
@@ -678,17 +341,24 @@ final class LongAugmentedTreeIndex private[rangejoin] (
 }
 
 object LongIntervalIndex {
-  /** Long-width algorithm dispatch — same names as
-    * [[IntervalIndex.build]]. */
+  /** Build the index named by `algorithm` (conf
+    * `spark.graft.intervalJoin.algorithm`). Mirrors `Algorithm::from_str`
+    * (reference: sequila/sequila-core/src/session_context.rs:85-104). */
   def build(algorithm: String, starts: Array[Long], ends: Array[Long],
             positions: Array[Int]): LongIntervalIndex =
     algorithm.toLowerCase match {
+      // the superintervals design serves the Coitrees (default) slot — a
+      // sorted array with branch skips has the same cache-linear profile
+      // the vEB-layout COITree targets (SURVEY §2 #6 allows this)
       case "superintervals" | "coitrees" | "default" =>
         LongSuperIntervalsIndex.build(starts, ends, positions)
       case "ailist" =>
         buildAIList(starts, ends, positions)
+      // real augmented interval tree (reference's IntervalTree /
+      // ArrayIntervalTree slots, rust-bio style — interval_join.rs:816-841)
       case "intervaltree" | "arrayintervaltree" =>
         buildTree(starts, ends, positions)
+      // real Lapper (reference's Lapper slot, interval_join.rs:842-857)
       case "lapper" | "nclist" =>
         buildLapper(starts, ends, positions)
       case "naive" | "linear" =>
@@ -774,6 +444,8 @@ object LongIntervalIndex {
     val compP = ArrayBuffer[Array[Int]]()
     var iter = 0
     while (curS.nonEmpty && iter < MaxComps - 1 && curS.length > MinCompLen) {
+      // extract intervals covered by >= CovCutoff of the next few — they
+      // destroy the early-stop property; move them to their own component
       val keepIdx = ArrayBuffer[Int]()
       val moveIdx = ArrayBuffer[Int]()
       val m = curS.length
@@ -845,70 +517,5 @@ object LongSuperIntervalsIndex {
       i += 1
     }
     new LongSuperIntervalsIndex(starts, ends, positions, branch)
-  }
-}
-
-object AIListIndex {
-  private val MaxComps = 8
-  private val MinCompLen = 64
-  private val CovCutoff = 10
-
-  def build(starts0: Array[Int], ends0: Array[Int],
-            positions0: Array[Int]): AIListIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) > ends0(b)
-    }
-    var curS = order.map(starts0)
-    var curE = order.map(ends0)
-    var curP = order.map(positions0)
-
-    val compS = ArrayBuffer[Array[Int]]()
-    val compE = ArrayBuffer[Array[Int]]()
-    val compP = ArrayBuffer[Array[Int]]()
-    var iter = 0
-    while (curS.nonEmpty && iter < MaxComps - 1 && curS.length > MinCompLen) {
-      // extract intervals covered by >= CovCutoff of the next few — they
-      // destroy the early-stop property; move them to their own component
-      val keepIdx = ArrayBuffer[Int]()
-      val moveIdx = ArrayBuffer[Int]()
-      val m = curS.length
-      var i = 0
-      while (i < m) {
-        var cov = 0
-        var j = i + 1
-        val lim = math.min(m, i + 1 + 2 * CovCutoff)
-        while (j < lim && cov < CovCutoff) {
-          if (curE(j) <= curE(i)) cov += 1
-          j += 1
-        }
-        if (cov >= CovCutoff) moveIdx += i else keepIdx += i
-        i += 1
-      }
-      if (moveIdx.isEmpty || keepIdx.isEmpty) {
-        compS += curS; compE += curE; compP += curP
-        curS = Array.empty; curE = Array.empty; curP = Array.empty
-      } else {
-        compS += keepIdx.map(curS).toArray
-        compE += keepIdx.map(curE).toArray
-        compP += keepIdx.map(curP).toArray
-        curS = moveIdx.map(curS).toArray
-        curE = moveIdx.map(curE).toArray
-        curP = moveIdx.map(curP).toArray
-      }
-      iter += 1
-    }
-    if (curS.nonEmpty) { compS += curS; compE += curE; compP += curP }
-
-    val maxEnds = compE.map { ends =>
-      val me = new Array[Int](ends.length)
-      var mx = Int.MinValue
-      var i = 0
-      while (i < ends.length) { mx = math.max(mx, ends(i)); me(i) = mx; i += 1 }
-      me
-    }
-    new AIListIndex(compS.toArray, compE.toArray, maxEnds.toArray,
-      compP.toArray)
   }
 }

@@ -88,7 +88,6 @@ class AsofJoinSpec extends SparkTestBase with BeforeAndAfterEach {
         val plan = planOf(df)
         assert(plan.contains("IntervalJoinExec"), plan)
         assert(plan.contains("join_type=Asof"), plan)
-        if (base > 0) assert(plan.contains("coord=int64"), plan)
         assert(df.collect().map(_.toSeq).toSet == oracle(b, p, forward, strict),
           s"base=$base")
         b.unpersist(); p.unpersist()

@@ -108,15 +108,12 @@ class IntervalConditionSpec extends AnyFunSuite {
     assert(ic.leftKeys == Seq(lContig) && ic.rightKeys == Seq(rContig))
   }
 
-  // -- rejection ----------------------------------------------------------
-  test("strictShifted set exactly when a strict op was rewritten") {
-    val strict = extract((ls < re) && (le >= rs)).get
-    assert(strict.strictShifted)
-    assert(!strict.hasLongBounds) // shift does not change magnitude signal
-    val inclusive = extract((ls <= re) && (le >= rs)).get
-    assert(!inclusive.strictShifted)
+  test("hasLongBounds: the strict-op shift to Long does not set it") {
+    // auto-bin keys its binSize guard off the ORIGINAL operand types
+    assert(!extract((ls < re) && (le >= rs)).get.hasLongBounds)
   }
 
+  // -- rejection ----------------------------------------------------------
   test("only one range predicate → not recognized") {
     assert(extract(LessThanOrEqual(ls, re)).isEmpty)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.rangejoin.{IntervalIndex, SuperIntervalsIndex}
+import graft.rangejoin.{IntervalIndex, LongIntervalIndex, LongSuperIntervalsIndex}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,13 +20,14 @@ class IntervalIndexSpec extends AnyFunSuite {
       (s, s + rnd.nextInt(121))
     }
 
-  private def results(idx: IntervalIndex, s: Int, e: Int): Seq[Int] = {
+  private def results(idx: LongIntervalIndex, s: Long, e: Long): Seq[Int] = {
     val buf = ArrayBuffer[Int]()
     idx.query(s, e)(buf += _)
     buf.sorted.toSeq
   }
 
-  private def build(name: String, iv: Array[(Int, Int)]): IntervalIndex =
+  /** Int intervals through the widening overload. */
+  private def build(name: String, iv: Array[(Int, Int)]): LongIntervalIndex =
     IntervalIndex.build(name, iv.map(_._1), iv.map(_._2),
       Array.range(0, iv.length))
 
@@ -60,7 +61,6 @@ class IntervalIndexSpec extends AnyFunSuite {
 
   for (alg <- Seq("superintervals", "ailist", "lapper", "intervaltree")) {
     test(s"Long $alg ≡ linear scan at epoch-micro magnitudes (beyond Int32)") {
-      import graft.rangejoin.LongIntervalIndex
       val rnd = new Random(7)
       val base = 1704067200000000L // well beyond Int32
       for (trial <- 0 until 100) {
@@ -86,7 +86,6 @@ class IntervalIndexSpec extends AnyFunSuite {
   }
 
   test("Long lapper survives a full-domain sentinel interval (no maxLen wrap)") {
-    import graft.rangejoin.LongIntervalIndex
     val starts = Array(Long.MinValue, 100L, 5000L)
     val ends = Array(Long.MaxValue, 200L, 6000L)
     val idx = LongIntervalIndex.build("lapper", starts, ends, Array(0, 1, 2))
@@ -96,7 +95,6 @@ class IntervalIndexSpec extends AnyFunSuite {
   }
 
   test("Long nearest with operands in opposite halves (no gap wrap)") {
-    import graft.rangejoin.LongSuperIntervalsIndex
     val s = 3L * (1L << 61) // 1.5 * 2^62
     val farNeg = -(1L << 62)
     val starts = Array(farNeg, s + 5)
@@ -109,7 +107,6 @@ class IntervalIndexSpec extends AnyFunSuite {
 
   test("Long nearest: saturated gap at the domain edge still returns " +
       "the only candidate") {
-    import graft.rangejoin.LongSuperIntervalsIndex
     // single build interval at Long.MaxValue, probe at Long.MinValue:
     // there is NO left candidate and the right candidate's saturated gap
     // equals the Long.MaxValue sentinel bestDist starts at — it must
@@ -120,7 +117,6 @@ class IntervalIndexSpec extends AnyFunSuite {
   }
 
   test("Long index nearest ≡ linear argmin at epoch-micro magnitudes") {
-    import graft.rangejoin.LongSuperIntervalsIndex
     val rnd = new Random(9)
     val base = 1704067200000000L
     for (trial <- 0 until 100) {
@@ -155,7 +151,7 @@ class IntervalIndexSpec extends AnyFunSuite {
     val rnd = new Random(9)
     for (trial <- 0 until 300) {
       val iv = randomIntervals(rnd, 1 + rnd.nextInt(120))
-      val idx = build("superintervals", iv).asInstanceOf[SuperIntervalsIndex]
+      val idx = build("superintervals", iv).asInstanceOf[LongSuperIntervalsIndex]
       for (_ <- 0 until 10) {
         val s = rnd.nextInt(1300) - 100
         val e = s + rnd.nextInt(151)
@@ -189,7 +185,7 @@ class IntervalIndexSpec extends AnyFunSuite {
   test("empty index") {
     val idx = build("superintervals", Array.empty)
     assert(results(idx, 0, 100).isEmpty)
-    assert(idx.asInstanceOf[SuperIntervalsIndex].nearest(0, 100) == -1)
+    assert(idx.asInstanceOf[LongSuperIntervalsIndex].nearest(0, 100) == -1)
   }
 
   test("unknown algorithm rejected") {

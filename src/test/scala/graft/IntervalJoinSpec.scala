@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterEach
  * integration suite (reference: sequila-core/tests/integration_test.rs) to
  * the FIXTURES.md tables: reads × targets golden results, the 12-row
  * boundary micro-fixture (inclusive=10 / strict=6 matches), nearest join
- * with NULL padding, NULL equi-keys, overflow pinning, plan-shape
+ * with NULL padding, NULL equi-keys, Int32 domain edges, plan-shape
  * assertions, and equivalence with the stock Spark join.
  */
 class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
@@ -173,27 +173,9 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     assert(df.count() == stockResult(a, b, withKey = true).size)
   }
 
-  test("interval bound overflowing Int32 fails (reference overflow pinning)") {
-    val a = Seq(("chr1", 5L, 2147483648L)).toDF("contig", "pos_start", "pos_end")
-    val b = Seq(("chr1", 8L, 20L)).toDF("contig", "pos_start", "pos_end")
-    // reference parity is opt-in: coordWidth=int32 reproduces the checked
-    // Int32 narrowing failure (interval_join.rs:1927-1968). collect(), not
-    // count() — the count pushdown is width-agnostic and never narrows.
-    spark.conf.set(GraftSession.CoordWidth, "int32")
-    try {
-      val df = overlapJoin(a, b)
-      assertUsesIntervalJoin(df)
-      val ex = intercept[Exception] { df.collect() }
-      def msgs(t: Throwable): Seq[String] =
-        if (t == null) Nil else t.getMessage +: msgs(t.getCause)
-      assert(msgs(ex).exists(m => m != null && m.contains("2147483648")),
-        s"expected overflow message, got: ${msgs(ex)}")
-    } finally spark.conf.unset(GraftSession.CoordWidth)
-  }
-
   test("Long bounds beyond Int32 join correctly under default auto width") {
-    // the same query the reference FAILS (test_wrong_datatype) — the auto
-    // coordWidth picks the Int64 index and answers it
+    // the same query the reference FAILS (test_wrong_datatype) — the
+    // Long-backed index answers it
     val a = Seq(("chr1", 5L, 2147483648L), ("chr1", 3_000_000_000L, 4_000_000_000L))
       .toDF("contig", "pos_start", "pos_end")
     val b = Seq(("chr1", 8L, 20L), ("chr1", 3_500_000_000L, 3_600_000_000L),
@@ -201,7 +183,6 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       .toDF("contig", "pos_start", "pos_end")
     val df = overlapJoin(a, b)
     assertUsesIntervalJoin(df)
-    assert(planOf(df).contains("coord=int64"), planOf(df))
     assert(df.collect().map(_.toSeq).toSet ==
       stockResult(a, b, withKey = true))
   }
@@ -209,17 +190,45 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
   test("strict op at Int.MinValue: the -1 shift must not fail the query") {
     // a.pos_start < b.pos_end with b.pos_end = Int.MinValue shifts the
     // bound to Int.MinValue - 1 — out of the Int32 domain even though
-    // every DATA value is a valid Int. auto coordWidth must widen
-    // (strictShifted) and the row simply matches nothing.
+    // every DATA value is a valid Int. The Long index holds it and the row
+    // simply matches nothing.
     val a = Seq(("c", 5, 10)).toDF("contig", "pos_start", "pos_end")
     val b = Seq(("c", Int.MinValue, Int.MinValue), ("c", 3, 8))
       .toDF("contig", "pos_start", "pos_end")
     val df = a.join(b, a("contig") === b("contig") &&
       a("pos_start") < b("pos_end") && a("pos_end") > b("pos_start"))
     assertUsesIntervalJoin(df)
-    assert(planOf(df).contains("coord=int64"), planOf(df))
     // only the (3, 8) row qualifies: 5 < 8 && 10 > 3
     assert(df.count() == 1)
+  }
+
+  test("Int32 domain edges ≡ stock in both modes, codegen strict") {
+    // Int bounds at Int.MinValue / Int.MaxValue and one full-domain
+    // interval: the generated long[] walk must compare them exactly,
+    // inclusive and strict (the strict shift leaves the Int32 domain)
+    val edges = Seq(
+      ("chr1", Int.MinValue, Int.MinValue), ("chr1", Int.MinValue, 150),
+      ("chr1", 600, Int.MaxValue), ("chr1", Int.MaxValue, Int.MaxValue),
+      ("chr1", Int.MinValue, Int.MaxValue), ("chr2", Int.MinValue, Int.MaxValue)
+    ).toDF("contig", "pos_start", "pos_end")
+    val a = targets.union(edges)
+    val b = reads.union(edges)
+    for (mode <- Seq("broadcast", "partitioned");
+         noFallback <- Seq(false, true); strict <- Seq(false, true)) {
+      spark.conf.set(GraftSession.IntervalJoinForceMode, mode)
+      // a codegen bug must fail loudly, not silently fall back
+      if (noFallback) spark.conf.set("spark.sql.codegen.fallback", "false")
+      try {
+        val df = overlapJoin(a, b, strict = strict)
+        assert(df.collect().map(_.toSeq).toSet ==
+          stockResult(a, b, withKey = true, strict = strict),
+          s"mode=$mode noFallback=$noFallback strict=$strict")
+        // read after execution: the AQE plan is final by then
+        val plan = planOf(df)
+        assert("""\*\(\d+\) IntervalJoinExec""".r.findFirstIn(plan).isDefined,
+          s"expected IntervalJoinExec inside WholeStageCodegen:\n$plan")
+      } finally spark.conf.unset("spark.sql.codegen.fallback")
+    }
   }
 
   test("algorithm=nearest fails loudly instead of silently running overlap") {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 
 /**
- * Int64-coordinate interval joins (`coordWidth` auto/int64): domains the
+ * Interval joins on Long coordinates beyond Int32: domains the
  * reference cannot join at all — its checked Int32 narrowing fails any
  * bound beyond ±2^31 (reference: interval_join.rs:1661-1672, pinned
  * :1927-1968). Every test compares against the stock Spark join on the
@@ -20,7 +20,6 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
     spark.conf.set(GraftSession.IntervalJoinForceMode, "")
-    spark.conf.unset(GraftSession.CoordWidth)
   }
 
   // epoch-micro-ish base: 2024-01-01T00:00:00Z in micros
@@ -68,12 +67,11 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       val df = joined(a, b)
       val plan = planOf(df)
       assert(plan.contains("IntervalJoinExec"), plan)
-      assert(plan.contains("coord=int64"), plan)
       assert(df.collect().map(_.toSeq).toSet == stockSet(joined(a, b)))
     } finally spark.conf.unset("spark.sql.codegen.fallback")
     // strict predicates go through the minusOne rewrite at Long width
     val ds = joined(a, b, strict = true)
-    assert(planOf(ds).contains("coord=int64"), planOf(ds))
+    assert(planOf(ds).contains("IntervalJoinExec"), planOf(ds))
     assert(ds.collect().map(_.toSeq).toSet ==
       stockSet(joined(a, b, strict = true)))
     a.unpersist(); b.unpersist()
@@ -88,7 +86,6 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       val df = joined(a, b)
       assert(df.collect().map(_.toSeq).toSet == stockSet(joined(a, b)))
       val plan = planOf(df)
-      assert(plan.contains("coord=int64"), plan)
       assert("""\*\(\d+\) IntervalJoinExec""".r.findFirstIn(plan).isDefined,
         s"expected IntervalJoinExec inside WholeStageCodegen:\n$plan")
       a.unpersist(); b.unpersist()
@@ -149,7 +146,6 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       ).toDF("key", "win_start", "win_end")
       val df = joined(a, b)
       assert(planOf(df).contains("join_type=Nearest"), planOf(df))
-      assert(planOf(df).contains("coord=int64"), planOf(df))
       val rows = df.collect().map(_.toSeq)
       assert(rows.length == 3)
       assert(rows.contains(Seq("u0", Base, Base + 10L,
@@ -170,20 +166,6 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       stockSet(joined(a, b, withKey = false)))
   }
 
-  test("forced int32 on narrow Long values still works (stats unproven, exec narrows)") {
-    // Long columns whose VALUES fit Int32: int32 mode narrows checked and
-    // succeeds — parity with the reference's mixed-width test tables
-    spark.conf.set(GraftSession.CoordWidth, "int32")
-    try {
-      val a = Seq(("k", 100L, 200L), ("k", 150L, 300L)).toDF("key", "win_start", "win_end")
-      val b = Seq(("k", 180L, 190L)).toDF("key", "win_start", "win_end")
-      val df = joined(a, b)
-      assert(planOf(df).contains("IntervalJoinExec"), planOf(df))
-      assert(!planOf(df).contains("coord=int64"), planOf(df))
-      assert(df.count() == 2)
-    } finally spark.conf.unset(GraftSession.CoordWidth)
-  }
-
   test("every algorithm slot is real at int64 (pinned, plan-shown, ≡ stock)") {
     val a = windows(200, 20).cache(); val b = windows(200, 21).cache()
     a.count(); b.count()
@@ -193,7 +175,6 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       val df = joined(a, b)
       val plan = planOf(df)
       assert(plan.contains(s"alg=$alg"), plan)
-      assert(plan.contains("coord=int64"), plan)
       assert(df.collect().map(_.toSeq).toSet == exp, s"alg=$alg")
     }
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
@@ -208,7 +189,7 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       val b = windows(200 + rnd.nextInt(100), 13).cache()
       a.count(); b.count()
       val df = joined(a, b)
-      assert(planOf(df).contains("coord=int64"), planOf(df))
+      assert(planOf(df).contains("IntervalJoinExec"), planOf(df))
       assert(df.collect().map(_.toSeq).toSet == stockSet(joined(a, b)),
         s"mode=$mode")
       a.unpersist(); b.unpersist()
