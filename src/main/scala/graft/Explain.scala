@@ -10,8 +10,8 @@ object Explain {
     // scale knobs — exactly the conf-gated variants this tool exists
     // to dump — so the overrides are installed in SparkEntry's
     // post-reset hook (re-applied after every reset), not set once
-    // here (r18 ADVICE: the one-shot set dumped the UNCAPPED plan
-    // under a cap-gated header). The rest of the args are query names.
+    // here, where the reset would wipe them. The rest of the args are
+    // query names.
     val (confArgs, nameArgs) = args.drop(1).toSeq.partition(_.startsWith("set:"))
     val confs = confArgs.map { a =>
       val kv = a.stripPrefix("set:").split("=", 2)

@@ -415,10 +415,9 @@ object SparkEntry {
       "10GB")
     spark.conf.set(
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-    // scale-run knobs; unset so a raised gate / armed cap never leaks
-    // between entries
+    // scale-run knob; unset so a raised gate never leaks between
+    // entries
     spark.conf.unset(Dedup.ContainmentBroadcastMaxBytesConf)
-    spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
     // debug-tool hook (graft.Explain `set:k=v` args): overrides applied
     // LAST so they survive the resets above — previously Explain set
     // them once before the query loop and this reset silently wiped

@@ -1690,153 +1690,6 @@ object Dedup {
     val cands = probes.join(invKept, Seq("h"))
       .where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
-    // conf-gated per-contained-doc candidate cap (r18; see
-    // [[ContainmentMaxCandidatesConf]]): collapse the raw candidate
-    // stream to distinct pairs carrying their shared-probe-hash count
-    // (the same (id_a, id_b)-keyed exchange the uncapped distinct
-    // pays) and keep each id_a's top-N by (count desc, id_b asc). The
-    // result is already distinct. Applied identically on BOTH verify
-    // tiers so results never depend on the internal tier choice.
-    val capN = docs.sparkSession.conf
-      .get(ContainmentMaxCandidatesConf, "0").toInt
-    def capPairs(pairs: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("id_a")
-        .orderBy(col("__nsh").desc, col("id_b").asc)
-      val agg = pairs.groupBy("id_a", "id_b")
-        .agg(count(lit(1)).as("__nsh"))
-        .select("id_a", "id_b", "__nsh")
-      // cap 1 — the survival setting ("one true container suffices for
-      // the loser decision") — is a plain DECLARATIVE argmin: min of
-      // struct(-count, id_b) under Spark's lexicographic struct order
-      // picks exactly the row row_number()=1 would under (__nsh desc,
-      // id_b asc), for ANY orderable id type, with no rank window and
-      // no heap state. Plan reality (plans/r18/q122_containment_cap1):
-      // the struct buffer is not hash-aggregable, so it plans as a
-      // partial/final SortAggregate pair — still collapses map-side to
-      // one row per (partition, id_a) before its exchange and spills
-      // through the sort machinery, but the partial sort walks the
-      // full pair-count stream. Measured sf10 (100x GenScale,
-      // 99-member deferred families, SCALE_r18): cap 1 794/520 s vs
-      // cap 32's 752/752 vs uncapped 211/344 — at that corpus BOTH
-      // capped shapes are dominated by the pair-count aggregate's
-      // exchange (28.5 GB written vs the uncapped distinct's 4.0 GB on
-      // the same candidate stream; attribution of that 7x is an open
-      // r19 item), so the cap is SURVIVAL insurance (it now completes
-      // deterministically inside the wave model where it used to
-      // ENOSPC), not a speedup where the uncapped verify completes.
-      if (capN == 1) {
-        agg
-          .groupBy("id_a")
-          .agg(min(struct((-col("__nsh")).as("__neg"),
-            col("id_b").as("id_b"))).as("__m"))
-          .select(col("id_a"), col("__m.id_b").as("id_b"))
-      } else {
-      // Per-partition budgeted heap prune BEFORE the rank window (the
-      // bm25Retrieve pattern; r18's first integration ranked with the
-      // window alone and its id_a exchange + sort spilled ~79 GB at the
-      // 100x GenScale decade — sorting the FULL distinct-candidate
-      // stream — where the uncapped verify needs ~7 GB, ENOSPC'ing
-      // outside the wave model). The heap pass is O(n log N) streaming
-      // in the SAME stage as the pair-count aggregate: each partition
-      // keeps at most N candidates per id_a seen there (a superset of
-      // the global top-N by construction), so the window's exchange and
-      // sort see ≤ shufflePartitions·N rows per contained doc instead
-      // of the full stream — an upper bound that only CUTS when a key's
-      // per-partition candidate count exceeds N (measured honesty,
-      // SCALE_r18: GenScale's 99-member families spread ~3 candidates
-      // per key per partition, so at N=32 the prune passes everything
-      // and the win over the first integration is completing at all —
-      // 752 s bounded vs ENOSPC — not the sort volume). Heap order
-      // mirrors the window exactly (__nsh desc, id_b asc); the
-      // live-entry budget bounds the unspillable heap map — past it the
-      // pass flushes every heap downstream (still a superset; the
-      // window re-cuts) and starts fresh. Wave-model note: the capped
-      // path's widest exchange remains the pair-count aggregate, which
-      // carries the SAME raw candidate rows the wave sample already
-      // measures (__sraw); the post-prune rank exchange is strictly
-      // narrower, so the sampled estimates stay upper bounds with the
-      // cap armed.
-      val idbCmp: Option[(Any, Any) => Int] = {
-        import org.apache.spark.sql.types._
-        def cmpNum(f: (Any, Any) => Int): Option[(Any, Any) => Int] =
-          Some { (a, b) =>
-            if (a == null && b == null) 0
-            else if (a == null) -1 else if (b == null) 1 else f(a, b)
-          }
-        agg.schema("id_b").dataType match {
-          case LongType => cmpNum((a, b) => java.lang.Long.compare(
-            a.asInstanceOf[Long], b.asInstanceOf[Long]))
-          case IntegerType => cmpNum((a, b) => java.lang.Integer.compare(
-            a.asInstanceOf[Int], b.asInstanceOf[Int]))
-          case ShortType => cmpNum((a, b) => java.lang.Short.compare(
-            a.asInstanceOf[Short], b.asInstanceOf[Short]))
-          case ByteType => cmpNum((a, b) => java.lang.Byte.compare(
-            a.asInstanceOf[Byte], b.asInstanceOf[Byte]))
-          case StringType => cmpNum((a, b) =>
-            org.apache.spark.unsafe.types.UTF8String
-              .fromString(a.asInstanceOf[String]).compareTo(
-                org.apache.spark.unsafe.types.UTF8String
-                  .fromString(b.asInstanceOf[String])))
-          case _ => None // exotic id types keep the plain window
-        }
-      }
-      val heapBudget = math.max(1L, docs.sparkSession.conf
-        .get(ContainmentCapHeapBudgetConf,
-          ContainmentCapHeapBudgetEntries.toString).toLong)
-      val prunedAgg = idbCmp match {
-        case Some(cmp) =>
-          // max of this ordering = the WORST kept candidate (evicted
-          // first): worse = fewer shared probe hashes, then larger id_b
-          val worstFirst = new Ordering[(Long, Any)] {
-            def compare(a: (Long, Any), b: (Long, Any)): Int = {
-              val c = java.lang.Long.compare(b._1, a._1)
-              if (c != 0) c else cmp(a._2, b._2)
-            }
-          }
-          val schema = agg.schema
-          agg.mapPartitions { it =>
-            new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
-              private val heaps = scala.collection.mutable.HashMap.empty[
-                Any,
-                scala.collection.mutable.PriorityQueue[(Long, Any)]]
-              private var live = 0L
-              private val out = scala.collection.mutable.Queue
-                .empty[org.apache.spark.sql.Row]
-              private def drain(): Unit = {
-                heaps.foreach { case (ida, h) =>
-                  h.foreach { case (nsh, idb) =>
-                    out.enqueue(org.apache.spark.sql.Row(ida, idb, nsh))
-                  }
-                }
-                heaps.clear(); live = 0L
-              }
-              private def pump(): Unit = {
-                while (out.isEmpty && it.hasNext) {
-                  val r = it.next()
-                  val h = heaps.getOrElseUpdate(r.get(0),
-                    scala.collection.mutable.PriorityQueue
-                      .empty(worstFirst))
-                  h.enqueue((r.getLong(2), r.get(1)))
-                  if (h.size > capN) h.dequeue() else live += 1
-                  if (live > heapBudget) drain()
-                }
-                if (out.isEmpty && !it.hasNext && heaps.nonEmpty) drain()
-              }
-              def hasNext: Boolean = { pump(); out.nonEmpty }
-              def next(): org.apache.spark.sql.Row = {
-                pump(); out.dequeue()
-              }
-            }
-          }(org.apache.spark.sql.Encoders.row(schema))
-        case None => agg
-      }
-      prunedAgg
-        .withColumn("__rk", row_number().over(w))
-        .where(col("__rk") <= capN)
-        .select("id_a", "id_b")
-      }
-    }
     // broadcast gate off the checkpoint's exact sizes (one tiny job):
     // the array frame costs ~8 B/shingle + ~24 B/doc
     val stats = sh.agg(count(lit(1)), sum(size(col("sh")))).head()
@@ -1844,27 +1697,20 @@ object Dedup {
       (if (stats.isNullAt(1)) 0L else stats.getLong(1)) * 8L
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    def verified(pairs: DataFrame, bcast: Boolean): DataFrame = {
-      val a = if (bcast) broadcast(shA) else shA
-      val b = if (bcast) broadcast(shB) else shB
-      pairs.join(a, "id_a").join(b, "id_b")
+    def verified(pairs: DataFrame): DataFrame =
+      pairs.join(broadcast(shA), "id_a").join(broadcast(shB), "id_b")
         .select(col("id_a").as("id_contained"),
           col("id_b").as("id_container"),
           round(sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double") /
             size(col("sh_a")).cast("double"), 6).as("containment"))
         .where(col("containment") >= threshold)
-    }
     val bcastGate = docs.sparkSession.conf
       .get(ContainmentBroadcastMaxBytesConf,
         ContainmentBroadcastMaxBytes.toString).toLong
     if (estBytes <= bcastGate)
       // candidates stream map-side through two broadcast lookups and
-      // the compiled merge; only the survivors are deduplicated. An
-      // armed candidate cap adds this tier's only wide exchange (the
-      // cap's rank aggregate) — the exact default keeps the
-      // zero-exchange stream
-      (if (capN > 0) verified(capPairs(cands), bcast = true)
-       else verified(cands, bcast = true)).distinct()
+      // the compiled merge; only the survivors are deduplicated
+      verified(cands).distinct()
     else {
       // Over the gate, NEVER attach arrays through an exchange — the
       // retired shuffle-join fallback shipped BOTH ~KB shingle arrays
@@ -2015,7 +1861,7 @@ object Dedup {
       val invB = if (invResident) broadcast(inv) else inv
       val invAB = if (invResident) broadcast(invA) else invA
       def countVerified(pairs: DataFrame): DataFrame =
-        (if (capN > 0) capPairs(pairs) else pairs.distinct())
+        pairs.distinct()
           .join(invAB, Seq("id_a"))
           .join(invB, Seq("id_b", "h"))
           .groupBy("id_a", "id_b")
@@ -2068,44 +1914,6 @@ object Dedup {
     * typically high enough that k stays 1). */
   val ContainmentScratchBytesConf =
     "spark.graft.dedup.containmentScratchBytes"
-
-  /** Per-contained-doc candidate ceiling for [[containmentDupPairs]]
-    * (0 = off, the exact default path). When armed, each contained-side
-    * doc keeps only its N strongest candidate containers — ranked by
-    * shared-PROBE-hash count (how many of the doc's bottom-`probeK`
-    * sketch hashes the candidate matched; the candidate generator's own
-    * evidence), ties broken by lower container id — BEFORE the exact
-    * verify attaches arrays or counts index rows. This bounds the
-    * verify's per-doc work the way `maxShingleDf` bounds per-KEY
-    * fan-out one level down: inside a mutually-containing family of m
-    * docs every member probes every other (m−1 candidates each, all at
-    * the max probe-hash count), and the capped verify stream shrinks
-    * from m² to m·N while any N of the family's members is a true
-    * container — the loser decision [[graft.operators.Curation]]
-    * consumes is unchanged. The cap's aggregate rides the SAME
-    * (id_a, id_b) exchange layout as the uncapped path's candidate
-    * distinct (plus one id_a-keyed rank exchange of distinct-pair-sized
-    * rows), and it applies inside each bounded-scratch batch — batches
-    * split on hash(id_a), so every candidate of a doc lands in one
-    * batch and per-batch capping equals global capping. Recall caveat,
-    * deterministic: a true container is missed only when N other
-    * candidates tie-or-beat its shared-probe count AND none of those N
-    * verifies — on dup-dense corpora (where the cap matters) the
-    * high-count candidates are the family itself. Measured r18 at the
-    * 100x GenScale decade (SCALE_r18): the capped-curation containment
-    * stage's 31 GB spill is exactly this uncapped m² stream. */
-  val ContainmentMaxCandidatesConf =
-    "spark.graft.dedup.containmentMaxCandidates"
-
-  /** Conf: live-entry ceiling for the candidate cap's per-partition
-    * top-N heap map (the [[graft.operators.TextStats.bm25Retrieve]]
-    * budget pattern). Each live entry is one boxed (count, id_b) tuple
-    * held un-spillably; past the budget the pass flushes every heap
-    * downstream (correct supersets — the rank window re-cuts) and
-    * starts fresh. Default 1M entries ≈ tens of MB per task. */
-  val ContainmentCapHeapBudgetConf =
-    "spark.graft.dedup.containmentCapHeapBudgetEntries"
-  private val ContainmentCapHeapBudgetEntries: Long = 1L << 20
 
   private def defaultScratchBytes(
       spark: org.apache.spark.sql.SparkSession): Long = {

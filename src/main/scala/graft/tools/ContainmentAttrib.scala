@@ -3,18 +3,20 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-exchange attribution of the containment candidate cap's shuffle
-  * premium (r18 handoff: with the cap armed the containment stage
-  * writes 28.5-32 GB of shuffle at the 100x GenScale decade where the
-  * uncapped verify writes 4.0 GB on the SAME candidate stream — "same
-  * rows, ~1.5x wider" explains ~1.5x of the 7x; the rest was
-  * unattributed). This tool decomposes the capped chain into its
-  * individual exchanges and times each as its own job with per-JOB
-  * task metrics (bytes AND records, so row-count inflation separates
-  * from row-width inflation) plus a per-STAGE metric log.
+/** Per-exchange attribution of the exact containment verify
+  * ([[graft.operators.Dedup.containmentDupPairs]]): decomposes its
+  * candidate chain into the individual exchanges — the raw probe-join
+  * stream, the candidate distinct, and the (id_a, id_b) pair-count
+  * aggregate a shared-hash count would ride on — and times each as its
+  * own job with per-JOB task metrics (bytes AND records, so row-count
+  * inflation separates from row-width inflation) plus a per-STAGE
+  * metric log, next to one full verify call on the same corpus.
   *
   * Usage: runMain graft.tools.ContainmentAttrib <sfDir> [steps...]
-  *   steps default: raw distinct cnt cap1 cap32 full0 full32
+  *   steps default: raw distinct cnt full0
+  *   opt-in: plans (prints the formatted plans of the candidate
+  *   stream, its distinct and the pair-count aggregate, plus the raw
+  *   candidate row count)
   * Corpus: the q138-shaped survivors (capped-LSH pipeline) — the same
   * derivation as CurationColdProbe, checkpointed once untimed.
   */
@@ -22,7 +24,7 @@ object ContainmentAttrib {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/sf1")
     val steps = if (args.length > 1) args.drop(1).toSet
-      else Set("raw", "distinct", "cnt", "cap1", "cap32", "full0", "full32")
+      else Set("raw", "distinct", "cnt", "full0")
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -152,43 +154,12 @@ object ContainmentAttrib {
       val agg = cands.groupBy("id_a", "id_b").agg(count(lit(1)).as("__nsh"))
       timed("pair_count_agg")(noop(agg))
     }
-    if (steps("cap1")) {
-      val agg = cands.groupBy("id_a", "id_b").agg(count(lit(1)).as("__nsh"))
-      val argmin = agg.groupBy("id_a")
-        .agg(min(struct((-col("__nsh")).as("__neg"),
-          col("id_b").as("id_b"))).as("__m"))
-        .select(col("id_a"), col("__m.id_b").as("id_b"))
-      timed("cap1_argmin")(noop(argmin))
-    }
-    if (steps("cap32")) {
-      val conf = Dedup.ContainmentMaxCandidatesConf
-      spark.conf.set(conf, "32")
-      try {
-        // full containment call so the private capPairs/heap path runs
-        timed("full_verify_cap32") {
-          println("ATTRIB cont_pairs_cap32=" +
-            Dedup.containmentDupPairs(survivors, "doc_id", "text", 0.9)
-              .count())
-        }
-      } finally spark.conf.unset(conf)
-    }
     if (steps("full0")) {
-      timed("full_verify_uncapped") {
-        println("ATTRIB cont_pairs_uncapped=" +
+      timed("full_verify") {
+        println("ATTRIB cont_pairs=" +
           Dedup.containmentDupPairs(survivors, "doc_id", "text", 0.9)
             .count())
       }
-    }
-    if (steps("full32")) {
-      val conf = Dedup.ContainmentMaxCandidatesConf
-      spark.conf.set(conf, "1")
-      try {
-        timed("full_verify_cap1") {
-          println("ATTRIB cont_pairs_cap1=" +
-            Dedup.containmentDupPairs(survivors, "doc_id", "text", 0.9)
-              .count())
-        }
-      } finally spark.conf.unset(conf)
     }
     spark.stop()
   }

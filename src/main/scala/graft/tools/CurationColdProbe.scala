@@ -28,11 +28,6 @@ object CurationColdProbe {
     // 188.9 s vs q127 72.4 — WHERE the deferred-family cost lands is
     // the question this mode answers)
     val capped = args.length > 2 && args(2) == "capped"
-    // optional candidate cap for the containment stage (args(3), docs
-    // per contained-side doc; 0 = off): the r18 lever measured against
-    // the 177 s / 31 GB-spill containment stage the capped pipeline
-    // pays on the deferred families
-    val candCap = if (args.length > 3) args(3).toInt else 0
     def loadavg: String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString(",")
@@ -47,9 +42,6 @@ object CurationColdProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftSession.install(spark)
-    if (candCap > 0) spark.conf.set(
-      graft.operators.Dedup.ContainmentMaxCandidatesConf,
-      candCap.toString)
     val shim = org.apache.spark.sql.GraftSqlShim
     import graft.operators.{Dedup, TextStats}
     // task-metric accumulator: per-stage deltas of executor run/GC
@@ -189,9 +181,6 @@ object CurationColdProbe {
               .when(col("cont_loser"), "contained")
               .as("dropped"))
           .count()
-        // A/B evidence for the candidate cap: the capped run's pair
-        // volume collapses while the contained-loser SET should not
-        // (one true container per loser suffices for the rule)
         println(s"CURCOLD pass=$p cont_pairs=${contPairs.count()} " +
           s"cont_losers=${contLosers.count()}")
       }
@@ -204,7 +193,7 @@ object CurationColdProbe {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     allPasses.zipWithIndex.foreach { case (s, i) =>
-      println(s"""{"metric":"curation_cold","pass":${i + 1},"capped":$capped,"cand_cap":$candCap,"stages":${js(s)},"total":${fmt(s.map(_._2).sum)},"dir":"$dir","loadavg_start":"$loadStart","loadavg_now":"$loadavg"}""")
+      println(s"""{"metric":"curation_cold","pass":${i + 1},"capped":$capped,"stages":${js(s)},"total":${fmt(s.map(_._2).sum)},"dir":"$dir","loadavg_start":"$loadStart","loadavg_now":"$loadavg"}""")
     }
     if (allPasses.size >= 2) {
       val cold = allPasses.head.toMap

@@ -290,78 +290,6 @@ class TextModelSpec extends SparkTestBase {
     } finally spark.conf.unset(Dedup.ContainmentBroadcastMaxBytesConf)
   }
 
-  test("containmentDupPairs: candidate cap semantics (r18)") {
-    // family of 6 mutually-containing docs (suffix-perturbed copies of
-    // one base — the GenScale shape the curation cap defers) plus one
-    // genuine subset doc and one unrelated doc
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val docs = ((0 until 6).map(i => (i.toLong, s"$base v$i")) ++
-      Seq((100L, "alpha beta gamma delta epsilon"),
-        (200L, "totally unrelated words about engines and turbines")))
-      .toDF("doc_id", "text")
-    def run() = Dedup.containmentDupPairs(docs, "doc_id", "text", 0.6)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncapped = run()
-    // a roomy cap is exact: every doc has < 8 candidates here
-    spark.conf.set(Dedup.ContainmentMaxCandidatesConf, "64")
-    val roomy = try run()
-      finally spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
-    assert(roomy == uncapped && uncapped.nonEmpty)
-    // cap 1: each contained doc keeps exactly its ONE strongest
-    // candidate (ties by lowest container id), so every doc that HAD a
-    // container still has one — the loser DECISION (is this doc
-    // contained in anything?) is preserved while the pair volume drops
-    // to one per doc
-    spark.conf.set(Dedup.ContainmentMaxCandidatesConf, "1")
-    val capped1 = try run()
-      finally spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
-    val containedUncapped = uncapped.map(_._1)
-    val containedCapped = capped1.map(_._1)
-    assert(containedCapped == containedUncapped,
-      s"capped contained set $containedCapped vs $containedUncapped")
-    assert(capped1.groupBy(_._1).forall(_._2.size == 1))
-    assert(capped1.subsetOf(uncapped))
-    // deterministic tie-break: family members share all probe hashes,
-    // so each keeps its lowest-id other member (0 keeps 1, others keep 0)
-    val famKept = capped1.filter(p => p._1 < 6 && p._2 < 6)
-    assert(famKept == Set((0L, 1L), (1L, 0L), (2L, 0L), (3L, 0L),
-      (4L, 0L), (5L, 0L)), s"famKept $famKept")
-    // cap applies identically on the over-gate tier
-    spark.conf.set(Dedup.ContainmentBroadcastMaxBytesConf, "0")
-    spark.conf.set(Dedup.ContainmentMaxCandidatesConf, "1")
-    val overGate = try run() finally {
-      spark.conf.unset(Dedup.ContainmentBroadcastMaxBytesConf)
-      spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
-    }
-    assert(overGate == capped1, s"over-gate capped $overGate vs $capped1")
-    // heap-budget flush identity (r18: for N >= 2 the cap's top-N runs
-    // as a per-partition budgeted heap prune before the rank window —
-    // the fix for the sf10 window-sort ENOSPC). Cap 2 keeps the heap
-    // path engaged (cap 1 routes to the declarative argmin aggregate);
-    // a 1-entry budget flushes after every row, so every heap state is
-    // exercised; flushed supersets must re-cut to the identical result
-    spark.conf.set(Dedup.ContainmentMaxCandidatesConf, "2")
-    val capped2 = try run()
-      finally spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
-    assert(capped2.subsetOf(uncapped) && capped2.map(_._1) == containedUncapped)
-    spark.conf.set(Dedup.ContainmentMaxCandidatesConf, "2")
-    spark.conf.set(Dedup.ContainmentCapHeapBudgetConf, "1")
-    val flushed = try run() finally {
-      spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
-      spark.conf.unset(Dedup.ContainmentCapHeapBudgetConf)
-    }
-    assert(flushed == capped2, s"budget-flushed capped $flushed vs $capped2")
-    // cap-1 declarative path under a tiny budget conf too: the budget
-    // must be a no-op there (no heap in that plan), same results
-    spark.conf.set(Dedup.ContainmentMaxCandidatesConf, "1")
-    spark.conf.set(Dedup.ContainmentCapHeapBudgetConf, "1")
-    val flushed1 = try run() finally {
-      spark.conf.unset(Dedup.ContainmentMaxCandidatesConf)
-      spark.conf.unset(Dedup.ContainmentCapHeapBudgetConf)
-    }
-    assert(flushed1 == capped1, s"cap-1 under tiny budget $flushed1 vs $capped1")
-  }
-
   test("containmentDupPairs: randomized ≡ brute force (seeded)") {
     // corpus where every qualifying pair sits inside the recall
     // guarantee: contained docs are contiguous slices (diff = 0);
@@ -380,7 +308,15 @@ class TextModelSpec extends SparkTestBase {
       val len = 5 + rnd.nextInt(ws.length - start - 5)
       (1000L + i, ws.slice(start, start + len).mkString(" "))
     }
-    val all = bases ++ slices
+    // plus a family of 6 suffix-perturbed copies of one base (each pair
+    // shares 8 of 9 shingles: just under tau), one doc contained in
+    // all 6 copies, and one unrelated doc — a contained doc with many
+    // containers
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val family = (0 until 6).map(i => (2000L + i, s"$base v$i")) ++
+      Seq((2100L, "alpha beta gamma delta epsilon"),
+        (2200L, "totally unrelated words about engines and turbines"))
+    val all = bases ++ slices ++ family
     val docs = all.toDF("doc_id", "text")
     def shingles(t: String): Set[String] = {
       val ws = t.split("\\s+").filter(_.nonEmpty).map(_.toLowerCase)
@@ -400,10 +336,26 @@ class TextModelSpec extends SparkTestBase {
       val sb = shingles(all.find(_._1 == ib).get._2)
       (sa -- sb).size < 8
     })
-    val got = Dedup.containmentDupPairs(docs, "doc_id", "text", 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(got == brute, s"got ${got.size} pairs, brute ${brute.size}")
     assert(brute.nonEmpty) // the fixture actually exercises the path
+    assert(brute.count(_._1 == 2100L) == 6)
+    def check(shape: String, confs: (String, String)*): Unit = {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val got = Dedup.containmentDupPairs(docs, "doc_id", "text", 0.9)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        assert(got == brute,
+          s"$shape: got ${got.size} pairs, brute ${brute.size}")
+      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    // all four verify shapes: broadcast arrays, resident index,
+    // bounded-scratch batches, shuffled index
+    val overGate = Dedup.ContainmentBroadcastMaxBytesConf -> "0"
+    check("broadcast")
+    check("resident", overGate)
+    check("batched", overGate, Dedup.ContainmentScratchBytesConf -> "1")
+    check("shuffled", overGate,
+      Dedup.ContainmentIndexBroadcastMaxBytesConf -> "0")
   }
 
   test("removeContained: strict losers drop, mutual classes keep low id") {
