@@ -5,13 +5,10 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    // args of the form set:key=value become session confs. Each query
-    // fn calls prep() -> resetGraftConfs(), which unsets the graft
-    // scale knobs — exactly the conf-gated variants this tool exists
-    // to dump — so the overrides are installed in SparkEntry's
-    // post-reset hook (re-applied after every reset), not set once
-    // here, where the reset would wipe them. The rest of the args are
-    // query names.
+    // args of the form set:key=value become confs of the base session;
+    // each query plans in a clone of it, so the overrides reach every
+    // query (after which the query's own pins apply). The rest of the
+    // args are query names.
     val (confArgs, nameArgs) = args.drop(1).toSeq.partition(_.startsWith("set:"))
     val confs = confArgs.map { a =>
       val kv = a.stripPrefix("set:").split("=", 2)
@@ -21,7 +18,6 @@ object Explain {
                 else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.confOverrides = confs
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.{Dedup, Sampling, Similarity, TextStats}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -335,12 +335,6 @@ object SparkEntry {
       .select(col("id1"), col("id2"))
   }
 
-  private def prep(spark: SparkSession, sfDir: String): Unit = {
-    Tables.registerAll(spark, sfDir)
-    GraftSession.install(spark)
-    resetGraftConfs(spark)
-  }
-
   /** Execute a Structured-Streaming frame to completion over its
     * bounded file source (Trigger.AvailableNow) into a memory sink and
     * return the sink's table — how the streaming operators run under
@@ -360,15 +354,10 @@ object SparkEntry {
     // profile: 2.8 s addBatch on a ZERO-row finalization batch). Pin 8
     // partitions for the replay; Spark records the value in the
     // checkpoint metadata at query start and re-applies it per batch,
-    // so the value is pinned for the query's whole life. The conf is
-    // restored only after awaitTermination (batch 0's capture happens
-    // asynchronously after start(), so an earlier restore would race).
-    // A production deployment sizes this to state volume / throughput.
-    // NOTE: the set/restore mutates SESSION conf — single-threaded
-    // harness code only. Library-ified, this would need a dedicated
-    // session (spark.newSession()) so concurrent queries on the shared
-    // session never observe the pinned width.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    // so the value is pinned for the query's whole life. The pin lands
+    // on the entry's own cloned session (see [[queries]]), so nothing
+    // needs restoring. A production deployment sizes this to state
+    // volume / throughput.
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode(mode)
@@ -377,7 +366,6 @@ object SparkEntry {
       .start()
     try q.awaitTermination()
     finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // the checkpoint only matters while the (run-to-completion)
       // query lives; repeated bench/verify invocations would otherwise
       // leak state-store files per run
@@ -388,49 +376,6 @@ object SparkEntry {
     }
     spark.table(name)
   }
-
-  /** Every query fn MUST be self-contained under ANY execution order
-    * (Verify iterates an unordered Map): without this reset, a
-    * conf-pinning entry like q14 (algorithm=nearest) or q42
-    * (autoBin=force) would leak its setting into whichever prep()-based
-    * query happens to iterate next and silently change its executed
-    * plan — or its SEMANTICS (nearest vs overlap). */
-  private def resetGraftConfs(spark: SparkSession): Unit = {
-    spark.conf.set(GraftSession.PreferIntervalJoin, "true")
-    spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
-    spark.conf.set(GraftSession.AutoBin, "auto")
-    // unset (not default-set): auto-bin treats an EXPLICIT binSize as the
-    // user vouching for its coordinate scale (Long-bound joins skip
-    // rebinning otherwise)
-    spark.conf.unset(GraftSession.BinSize)
-    spark.conf.unset(GraftSession.MaxBuildBytes)
-    // the SPARK confs query entries are allowed to pin (q105 lowers
-    // both to demonstrate runtime bloom-filter injection at test-data
-    // scale) — reset to their defaults so a pin cannot leak into
-    // whichever entry an unordered iteration runs next
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    spark.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "10GB")
-    spark.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-    // scale-run knob; unset so a raised gate never leaks between
-    // entries
-    spark.conf.unset(Dedup.ContainmentBroadcastMaxBytesConf)
-    // debug-tool hook (graft.Explain `set:k=v` args): overrides applied
-    // LAST so they survive the resets above — previously Explain set
-    // them once before the query loop and this reset silently wiped
-    // exactly the conf-gated variants the tool advertises dumping
-    // (r18 ADVICE). Empty in every driver path (Verify/Bench never
-    // populate it), so declared-query behavior is unchanged.
-    confOverrides.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
-  /** Conf overrides re-applied after every [[resetGraftConfs]] — set
-    * ONLY by debug tools (graft.Explain). Never populated by
-    * Verify/Bench. */
-  @volatile private[graft] var confOverrides: Seq[(String, String)] = Nil
 
   /** The q57/q68 12-node path graph: consecutive documents chained
     * pairwise (diameter 11 — deep iteration for whichever CC path runs). */
@@ -653,10 +598,27 @@ object SparkEntry {
   }
 
   private def run(sql: String, confs: (String, String)*)
-      : (SparkSession, String) => DataFrame = { (spark, sfDir) =>
-    prep(spark, sfDir) // incl. the self-containment conf reset
+      : (SparkSession, String) => DataFrame = { (spark, _) =>
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark.sql(sql)
+  }
+
+  /** The one conf scope rule: register the tables and install the
+    * planner rules on the caller's session, then run the entry in a
+    * CLONE of it. Whatever the entry pins (an interval algorithm, a
+    * broadcast threshold, a streaming replay's partition count) stays
+    * in that clone, so entries are self-contained under any execution
+    * order — Verify iterates an unordered Map — and entries running
+    * concurrently on one session never see each other's pins. The
+    * clone inherits the caller's confs, so `set:` overrides on the
+    * caller (graft.Explain) reach every entry. Never register tables on
+    * a clone: [[Tables.registerAll]] caches per session, so each clone
+    * would re-read the footers and stay reachable for the JVM's life. */
+  private def scoped(fn: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = { (base, sfDir) =>
+    Tables.registerAll(base, sfDir)
+    GraftSession.install(base)
+    fn(GraftSqlShim.cloneSession(base), sfDir)
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -664,8 +626,9 @@ object SparkEntry {
     queries("q10_interval_join")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2 (+ LLM-pipeline
-    * operators). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    * operators), each run in its own session clone ([[scoped]]). */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     "q1_agg" -> run(sharedSql("q1_agg")),
     "q2_filter" -> run(sharedSql("q2_filter")),
     "q3_join_agg" -> run(sharedSql("q3_join_agg")),
@@ -692,7 +655,7 @@ object SparkEntry {
       GraftSession.IntervalJoinAlgorithm -> "intervaltree"),
     // chained (3-way) interval join: BOTH hops must claim the indexed
     // operator — composability of the strategy, not a one-join rewrite
-    "q125_interval_chain" -> ((s, dir) => { prep(s, dir)
+    "q125_interval_chain" -> ((s, dir) => {
       val df = s.sql(sharedSql("q125_interval_chain"))
       val plan = df.queryExecution.executedPlan.toString
       val hops = "IntervalJoin".r.findAllIn(plan).size
@@ -705,7 +668,7 @@ object SparkEntry {
     "q45_interval_mark" -> run(sharedSql("q45_interval_mark")),
     // semi-structured surface: JSON extraction from the events.props
     // payload (codegen'd get_json_object — stays in whole-stage codegen)
-    "q46_json" -> ((s, dir) => { prep(s, dir)
+    "q46_json" -> ((s, dir) => {
       Tables.load(s, dir, "events")
         .select(get_json_object(col("props"), "$.k").cast("long").as("k"))
         .groupBy((col("k") % 10).as("k_mod"))
@@ -715,7 +678,7 @@ object SparkEntry {
     // detour), map_concat with a computed entry, and the map-explode
     // generator back to rows. Covers the type surface q46's scalar
     // json-path extraction doesn't.
-    "q116_map_explode" -> ((s, dir) => { prep(s, dir)
+    "q116_map_explode" -> ((s, dir) => {
       Tables.load(s, dir, "events")
         .select(col("event_type"),
           map_concat(from_json(col("props"),
@@ -740,7 +703,7 @@ object SparkEntry {
     // overlapping intervals per contig, report per-contig region count,
     // merged-interval stats and covered bases — the IntervalOps API
     // (windowed running-max grouping, no self-join).
-    "q53_interval_merge" -> ((s, dir) => { prep(s, dir)
+    "q53_interval_merge" -> ((s, dir) => {
       val a = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM a")
       graft.operators.IntervalOps
         .coverageStats(a, Seq("contig"), "pos_start", "pos_end")
@@ -749,7 +712,7 @@ object SparkEntry {
           col("n_intervals")) }),
     // per-depth coverage histogram (bedtools genomecov): boundary-event
     // sweep as relational ops — IntervalOps.depthHistogram
-    "q54_coverage_hist" -> ((s, dir) => { prep(s, dir)
+    "q54_coverage_hist" -> ((s, dir) => {
       val a = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM a")
       graft.operators.IntervalOps
         .depthHistogram(a, Seq("contig"), "pos_start", "pos_end") }),
@@ -757,7 +720,7 @@ object SparkEntry {
     // by b, per contig — merge(b) + LEFT OUTER IntervalJoinExec + gap
     // windows. Aggregated (the raw fragment set is order-free already,
     // but per-contig stats keep the output compact).
-    "q55_interval_subtract" -> ((s, dir) => { prep(s, dir)
+    "q55_interval_subtract" -> ((s, dir) => {
       val a = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM a")
       val b = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM b")
       graft.operators.IntervalOps
@@ -770,7 +733,7 @@ object SparkEntry {
     // overlap clusters from ONE windowed sweep (no iteration — coverage
     // is contiguous along the sorted order, unlike general graph CC).
     // Aggregated per cluster to keep the output compact and order-free.
-    "q66_interval_cluster" -> ((s, dir) => { prep(s, dir)
+    "q66_interval_cluster" -> ((s, dir) => {
       val a = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM a")
       graft.operators.IntervalOps
         .clusterIntervals(a, Seq("contig"), "pos_start", "pos_end")
@@ -781,7 +744,7 @@ object SparkEntry {
     // interval-set jaccard (bedtools jaccard): per-contig base-level
     // intersection/union between the a and b interval sets — merged
     // sweeps + the indexed interval join of the merged runs.
-    "q67_interval_jaccard" -> ((s, dir) => { prep(s, dir)
+    "q67_interval_jaccard" -> ((s, dir) => {
       val a = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM a")
       val b = s.sql(cteAB + "\nSELECT contig, pos_start, pos_end FROM b")
       graft.operators.IntervalOps
@@ -793,7 +756,7 @@ object SparkEntry {
     // engines tie-break equal (user_id, ts) build rows arbitrarily, but
     // the driver's events tables have zero duplicate (user_id, ts) pairs
     // at every SF (verified), so the comparison is exact.
-    "q50_asof" -> ((s, dir) => { prep(s, dir)
+    "q50_asof" -> ((s, dir) => {
       val ev = Tables.load(s, dir, "events")
       val clicks = ev.where(col("event_type") === "click")
         .select(col("user_id").as("b_user"),
@@ -809,17 +772,17 @@ object SparkEntry {
         .select(col("purchase_id"), col("purchase_t"),
           col("click_id"), col("click_t")) }),
     // ---- LLM-pipeline operators ----------------------------------------
-    "q20_dedup_exact" -> ((s, dir) => { prep(s, dir)
+    "q20_dedup_exact" -> ((s, dir) => {
       Dedup.exactDupPairs(dupCorpus(s, dir, near = false), "doc_id", "text") }),
-    "q21_dedup_minhash" -> ((s, dir) => { prep(s, dir)
+    "q21_dedup_minhash" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = false)
       verifyByEquality(Dedup.lshCandidatePairs(c, "doc_id", "text"), c) }),
-    "q22_dedup_simhash" -> ((s, dir) => { prep(s, dir)
+    "q22_dedup_simhash" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = false)
       verifyByEquality(
         Dedup.simhashDupPairs(c, "doc_id", "text", maxHamming = 0)
           .select(col("id1"), col("id2")), c) }),
-    "q23_dedup_jaccard" -> ((s, dir) => { prep(s, dir)
+    "q23_dedup_jaccard" -> ((s, dir) => {
       Dedup.minhashDupPairs(dupCorpus(s, dir, near = true), "doc_id", "text",
         threshold = 0.8) }),
     // duplicate-GROUP resolution: the LSH pairs are only pairwise hits;
@@ -829,7 +792,7 @@ object SparkEntry {
     // path; larger graphs contract first or run alternating star rounds.
     // Oracle: DuckDB recursive-CTE transitive closure over the SAME
     // (oracle-recomputed) pair set.
-    "q56_dedup_groups" -> ((s, dir) => { prep(s, dir)
+    "q56_dedup_groups" -> ((s, dir) => {
       val pairs = Dedup.minhashDupPairs(dupCorpus(s, dir, near = true),
           "doc_id", "text", threshold = 0.8)
         .select(col("id1"), col("id2"))
@@ -839,7 +802,7 @@ object SparkEntry {
     // groups, keep exactly one document per group (the lowest id),
     // pass untouched documents through. Oracle: drop every member of a
     // recursive-CTE closure group except its minimum.
-    "q58_dedup_canonical" -> ((s, dir) => { prep(s, dir)
+    "q58_dedup_canonical" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = true)
       val pairs = Dedup.minhashDupPairs(c, "doc_id", "text", threshold = 0.8)
         .select(col("id1"), col("id2"))
@@ -849,7 +812,7 @@ object SparkEntry {
     // closure oracle — resolved by the default (micro-graph union-find)
     // path here; q68 runs the IDENTICAL graph through the distributed
     // star engine so both execution paths sit under the oracle.
-    "q57_dedup_chain" -> ((s, dir) => { prep(s, dir)
+    "q57_dedup_chain" -> ((s, dir) => {
       Dedup.connectedComponents(chainPairs(s, dir))
         .select(col("id").as("doc_id"), col("group_id")) }),
     // the DISTRIBUTED path on the same deep chain, same oracle:
@@ -858,12 +821,12 @@ object SparkEntry {
     // post-contraction gate) resolves through alternating star rounds
     // — genuine iteration under the oracle's hash check, not just in
     // unit tests. The require() pins the engine like q77's.
-    "q68_dedup_chain_loop" -> ((s, dir) => { prep(s, dir)
-      val cc = Dedup.connectedComponents(chainPairs(s, dir),
+    "q68_dedup_chain_loop" -> ((s, dir) => {
+      val cc = Dedup.connectedComponentsRun(chainPairs(s, dir),
         microGraphMaxEdges = 0L)
-      require(Dedup.lastEngine == "star",
-        s"q68 pins the alternating-star engine, got '${Dedup.lastEngine}'")
-      cc.select(col("id").as("doc_id"), col("group_id")) }),
+      require(cc.engine == "star",
+        s"q68 pins the alternating-star engine, got '${cc.engine}'")
+      cc.labels.select(col("id").as("doc_id"), col("group_id")) }),
     // distributed CC at REAL size, UN-pinned: a synthetic graph
     // derived from events — every event e owns a 64-node block
     // [64e, 64e+63]; blocks with e % 10 == 0 are stars (the shallow
@@ -880,7 +843,7 @@ object SparkEntry {
     // millions of rows; the per-group rollup (count + sum + max over
     // every node label) breaks on any merged, split, or wrong-min
     // labeling.
-    "q69_dedup_groups_large" -> ((s, dir) => { prep(s, dir)
+    "q69_dedup_groups_large" -> ((s, dir) => {
       val J = 64
       val pairs = Tables.load(s, dir, "events")
         .select(col("event_id").cast("long").as("e"))
@@ -904,7 +867,7 @@ object SparkEntry {
     // 63 000 symmetric edges, held above the (lowered) micro gate so the
     // distributed path is engaged by the planner gate; at-scale star
     // timing lives in the cc_star_2m5_scrambled bench entry.
-    "q70_dedup_groups_star" -> ((s, dir) => { prep(s, dir)
+    "q70_dedup_groups_star" -> ((s, dir) => {
       val J = 64
       def mix(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         (c * 7919L % 32768L) * 65536L + c
@@ -928,7 +891,7 @@ object SparkEntry {
     // only keeps smaller sfs on the same engine). The require() makes
     // the ledger entry itself pin the engine: a silent fallback to any
     // other engine fails the query, not just a scaladoc claim.
-    "q77_dedup_star_scale" -> ((s, dir) => { prep(s, dir)
+    "q77_dedup_star_scale" -> ((s, dir) => {
       val J = 64
       def mix(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         (c * 7919L % 32768L) * 65536L + c
@@ -938,11 +901,11 @@ object SparkEntry {
         .select(col("e"), explode(sequence(lit(1), lit(J - 1))).as("j"))
         .select(mix(col("e") * J + col("j") - 1).as("id1"),
           mix(col("e") * J + col("j")).as("id2"))
-      val cc = Dedup.connectedComponents(pairs, maxIterations = 30,
+      val cc = Dedup.connectedComponentsRun(pairs, maxIterations = 30,
         microGraphMaxEdges = 100000L)
-      require(Dedup.lastEngine == "star",
-        s"q77 pins the alternating-star engine, got '${Dedup.lastEngine}'")
-      cc.groupBy("group_id")
+      require(cc.engine == "star",
+        s"q77 pins the alternating-star engine, got '${cc.engine}'")
+      cc.labels.groupBy("group_id")
         .agg(count(lit(1)).as("n_members"), sum(col("id")).as("sum_id"),
           max(col("id")).as("max_id")) }),
     // TIMESTAMP_NTZ interval bounds end-to-end under the driver oracle:
@@ -955,7 +918,7 @@ object SparkEntry {
     // recognizer regression that silently fell back to a stock join
     // would still produce right answers — at the hash-join/NLJ cost
     // cliff the engine exists to avoid — so the plan IS the assertion.
-    "q78_interval_ntz" -> ((s, dir) => { prep(s, dir)
+    "q78_interval_ntz" -> ((s, dir) => {
       def side(t: String) = Tables.load(s, dir, "events")
         .where(col("event_type") === t)
         .select(col("user_id"),
@@ -979,7 +942,7 @@ object SparkEntry {
     // aggregation regardless of how the trigger batches the files
     // (append mode would hold back every window the final watermark
     // has not passed).
-    "q71_streaming_window" -> ((s, dir) => { prep(s, dir)
+    "q71_streaming_window" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val agg = graft.streaming.StreamingOps.windowedCounts(
         stream, "ts", "event_type",
@@ -994,7 +957,7 @@ object SparkEntry {
     // trigger batches — dropDuplicatesWithinWatermark only guarantees
     // dedup within the watermark, and an eviction mid-replay would
     // re-emit a key and break exactness against SELECT DISTINCT.
-    "q72_streaming_dedup" -> ((s, dir) => { prep(s, dir)
+    "q72_streaming_dedup" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val dd = graft.streaming.StreamingOps.dedupStream(
         stream, "user_id", "ts", watermark = "3650 days")
@@ -1009,7 +972,7 @@ object SparkEntry {
     // pinned past the data span for exactness (at real ingest rates a
     // user sets it to lateness tolerance, and the range condition bounds
     // state, the 100-TB posture documented on streamStreamRangeJoin).
-    "q79_streaming_join" -> ((s, dir) => { prep(s, dir)
+    "q79_streaming_join" -> ((s, dir) => {
       val l = Tables.loadStream(s, dir, "events")
         .where(col("event_type") === "click")
         .select(col("user_id").as("u"), col("ts").as("l_ts"),
@@ -1029,7 +992,7 @@ object SparkEntry {
     // replay emit exactly the final merged sessions (append would hold
     // back every session the final watermark has not passed, i.e. all
     // of them under the pinned-wide watermark).
-    "q80_streaming_sessions" -> ((s, dir) => { prep(s, dir)
+    "q80_streaming_sessions" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val sess = graft.streaming.StreamingOps.sessionize(
         stream, "ts", "user_id", gap = "30 minutes", watermark = "2 hours")
@@ -1043,7 +1006,7 @@ object SparkEntry {
     // (map-side, stateless), then a complete-mode aggregation makes the
     // bounded replay exactly the batch join+group regardless of trigger
     // batching.
-    "q86_streaming_enrich" -> ((s, dir) => { prep(s, dir)
+    "q86_streaming_enrich" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val dim = Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"))
@@ -1059,7 +1022,7 @@ object SparkEntry {
     // equals the q10-shaped batch oracle; StreamingSpec asserts the
     // micro-batch plan actually carries IntervalJoin (the strategy
     // claims joins in IncrementalExecution exactly as in batch)
-    "q126_streaming_interval" -> ((s, dir) => { prep(s, dir)
+    "q126_streaming_interval" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
         .where(col("event_id") < 2000)
         .select(col("event_id").as("a_id"),
@@ -1085,7 +1048,7 @@ object SparkEntry {
     // oracle: emit each user once when their lifetime event count first
     // reaches 50. Counts are arrival-order-independent, so the bounded
     // replay equals the batch HAVING regardless of trigger batching.
-    "q92_streaming_milestones" -> ((s, dir) => { prep(s, dir)
+    "q92_streaming_milestones" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val hits = graft.streaming.StreamingOps.countMilestones(
         stream, "user_id", milestone = 50L)
@@ -1095,7 +1058,7 @@ object SparkEntry {
     // watermark by the 60-minute gap is emitted once and their state
     // removed. Oracle: the equivalent batch HAVING over the bounded
     // replay (final watermark = global max ts − 30 min).
-    "q107_streaming_inactive" -> ((s, dir) => { prep(s, dir)
+    "q107_streaming_inactive" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val quiet = graft.streaming.StreamingOps.inactiveUsers(
         stream, "ts", "user_id", gapMinutes = 60, watermark = "30 minutes")
@@ -1109,7 +1072,7 @@ object SparkEntry {
     // associative, so the final store equals the batch aggregation
     // however the trigger batched the files. round() at READ time (the
     // store keeps exact doubles; rounding is presentation).
-    "q109_streaming_upsert" -> ((s, dir) => { prep(s, dir)
+    "q109_streaming_upsert" -> ((s, dir) => {
       val stream = Tables.loadStream(s, dir, "events")
       val storeDir = java.nio.file.Files
         .createTempDirectory("graft_q109_store").toString
@@ -1125,7 +1088,7 @@ object SparkEntry {
     // real scrubbing work the oracle string-compares. Regexes are
     // dialect-portable by construction (TextStats scaladoc); pure
     // map-side, zero shuffles.
-    "q81_pii_redaction" -> ((s, dir) => { prep(s, dir)
+    "q81_pii_redaction" -> ((s, dir) => {
       import graft.operators.TextStats
       val aug = Tables.load(s, dir, "documents")
         .select(col("doc_id"),
@@ -1146,35 +1109,35 @@ object SparkEntry {
     // corpus vocabulary (term / corpus-frequency / doc-frequency) — the
     // tokenizer-training prep aggregation, exploded tokens rolled up
     // with map-side partial aggregation before the term-key shuffle
-    "q82_vocab_stats" -> ((s, dir) => { prep(s, dir)
+    "q82_vocab_stats" -> ((s, dir) => {
       graft.operators.TextStats.vocab(
         Tables.load(s, dir, "documents"), "doc_id", "text") }),
     // batched exact k-NN join (many queries at once): 20 query vectors
     // against the whole corpus, heap-bounded partial top-k per
     // partition — the shuffle carries survivors, never the full score
     // matrix. Rank-exact like q30 (ints only; no float compare).
-    "q73_knn_join" -> ((s, dir) => { prep(s, dir)
+    "q73_knn_join" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       Similarity.knnJoin(emb.where(col("vec_id") < 20), emb,
         "vec_id", "embedding", k = 5) }),
     // substring dedup at span granularity over the near-dup corpus:
     // exact + near duplicates plant long shared token runs inside
     // otherwise-distinct neighbors
-    "q74_repeated_spans" -> ((s, dir) => { prep(s, dir)
+    "q74_repeated_spans" -> ((s, dir) => {
       Dedup.repeatedSpans(dupCorpus(s, dir, near = true),
         "doc_id", "text", n = 8) }),
     // the removal half: all-but-one span cutting (owner = min doc id
     // per gram keeps its copy); string-exact compare of every
     // resulting document
-    "q75_span_removal" -> ((s, dir) => { prep(s, dir)
+    "q75_span_removal" -> ((s, dir) => {
       Dedup.cutRepeatedSpans(dupCorpus(s, dir, near = true),
         "doc_id", "text", n = 8) }),
     // fixed-size token chunking with overlap (embedding/RAG prep):
     // pure map-side, string-exact per chunk
-    "q76_chunking" -> ((s, dir) => { prep(s, dir)
+    "q76_chunking" -> ((s, dir) => {
       TextStats.chunkTokens(Tables.load(s, dir, "documents"),
         "doc_id", "text", size = 64, overlap = 16) }),
-    "q24_text_stats" -> ((s, dir) => { prep(s, dir)
+    "q24_text_stats" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       d.select(col("doc_id"),
         TextStats.tokenCount(col("text")).as("n_tokens"),
@@ -1182,10 +1145,10 @@ object SparkEntry {
         TextStats.digitRatio(col("text")).as("digit_ratio"),
         TextStats.stopwordRatio(col("text")).as("stopword_ratio"),
         TextStats.qualityScore(col("text")).as("quality")) }),
-    "q25_langid" -> ((s, dir) => { prep(s, dir)
+    "q25_langid" -> ((s, dir) => {
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), TextStats.langId(col("text")).as("lang_pred")) }),
-    "q26_curation" -> ((s, dir) => { prep(s, dir)
+    "q26_curation" -> ((s, dir) => {
       // end-to-end curation: dedup (keep lowest id per text) + language
       // + quality gate — the composed training-data pipeline
       import org.apache.spark.sql.expressions.Window
@@ -1202,7 +1165,7 @@ object SparkEntry {
         .where(TextStats.langId(col("text")) === "en")
         .where(TextStats.qualityScore(col("text")) >= 0.5)
         .select(col("doc_id")) }),
-    "q27_fingerprint" -> ((s, dir) => { prep(s, dir)
+    "q27_fingerprint" -> ((s, dir) => {
       // fingerprint-based exact dedup: pair documents via equality of the
       // 8-byte content fingerprint (never shuffling text) — on the
       // constructed corpus the result must equal the text-equality pairs,
@@ -1215,7 +1178,7 @@ object SparkEntry {
       fp.as("a").join(fp.as("b"),
           col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2")) }),
-    "q48_dedup_embedding" -> ((s, dir) => { prep(s, dir)
+    "q48_dedup_embedding" -> ((s, dir) => {
       // embedding-cosine near-dup: corpus = embeddings + exact copies
       // (+1M, precision + guaranteed-recall plumbing) + near copies with
       // the last element HALVED (+2M — exponent decrement, bit-exact in
@@ -1233,7 +1196,7 @@ object SparkEntry {
       Dedup.embeddingDupPairs(
           emb.union(exactCopies).union(nearCopies), "vec_id", "embedding", 0.9)
         .select(col("id1"), col("id2"), col("cosine")) }),
-    "q30_ann_topk" -> ((s, dir) => { prep(s, dir)
+    "q30_ann_topk" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val q = emb.orderBy("vec_id").select("embedding").head()
         .getSeq[Float](0).toArray
@@ -1242,7 +1205,7 @@ object SparkEntry {
       top.withColumn("rank", row_number().over(
           Window.orderBy(col("score").desc, col("vec_id"))))
         .select(col("vec_id"), col("rank")) }),
-    "q40_multimodal" -> ((s, dir) => { prep(s, dir)
+    "q40_multimodal" -> ((s, dir) => {
       // binary-column plumbing: documents text bytes as the opaque payload
       val media = Tables.load(s, dir, "documents")
         .select(col("doc_id"), col("text").cast("binary").as("media"))
@@ -1251,7 +1214,7 @@ object SparkEntry {
         graft.operators.Multimodal.frameCount(col("media"), 256).as("n_frames"),
         size(graft.operators.Multimodal.frameSample(col("media"), 256, 2))
           .as("n_sampled")) }),
-    "q41_media_decode" -> ((s, dir) => { prep(s, dir)
+    "q41_media_decode" -> ((s, dir) => {
       // real-codec round-trip, oracle-verifiable BY CONSTRUCTION: each doc
       // id deterministically defines a solid-color PNG (size + color are
       // arithmetic on the id); executors encode it with javax.imageio,
@@ -1278,7 +1241,7 @@ object SparkEntry {
         round(element_at(col("features"), 1).cast("double"), 4).as("mean_r"),
         round(element_at(col("features"), 2).cast("double"), 4).as("mean_g"),
         round(element_at(col("features"), 3).cast("double"), 4).as("mean_b")) }),
-    "q31_ann_ivf" -> ((s, dir) => { prep(s, dir)
+    "q31_ann_ivf" -> ((s, dir) => {
       // persisted-layout ANN: train IVF centroids, write the corpus
       // parquet PARTITIONED BY cell, then answer the query reading only
       // the 32 nearest of 64 cells (partition-pruned scan — asserted in
@@ -1305,7 +1268,7 @@ object SparkEntry {
     // train never shuffles). Test set = marker variants of every 7th
     // doc, so each has a known near-match in train. Oracle: DuckDB
     // all-pairs CROSS Jaccard — proves recall AND precision.
-    "q59_contamination" -> ((s, dir) => { prep(s, dir)
+    "q59_contamination" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val train = d.select(col("doc_id"), col("text"))
       val test = d.where(col("doc_id") % 7 === 0)
@@ -1317,17 +1280,17 @@ object SparkEntry {
     // selected on every run, cluster size, and engine (rand(seed) is
     // partition-order-dependent) — DuckDB recomputes each selection
     // exactly from the same hashes.
-    "q60_sample_stratified" -> ((s, dir) => { prep(s, dir)
+    "q60_sample_stratified" -> ((s, dir) => {
       Sampling.stratifiedSample(
         Tables.load(s, dir, "documents").select("doc_id", "lang"),
         "lang", "doc_id", k = 5) }),
-    "q61_sample_mixture" -> ((s, dir) => { prep(s, dir)
+    "q61_sample_mixture" -> ((s, dir) => {
       Sampling.mixtureSample(
         Tables.load(s, dir, "documents").select("doc_id", "source"),
         "source", "doc_id",
         rates = Map("src0" -> 0.25, "src1" -> 0.5, "src2" -> 0.0),
         defaultRate = 0.75) }),
-    "q62_hash_split" -> ((s, dir) => { prep(s, dir)
+    "q62_hash_split" -> ((s, dir) => {
       Sampling.hashSplit(
         Tables.load(s, dir, "documents").select("doc_id"),
         "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)) }),
@@ -1336,7 +1299,7 @@ object SparkEntry {
     // pasted chunk whole-doc Jaccard scores near 0. Test = marker
     // variants (near-verbatim, many hits) + clean synthetic docs (zero
     // hits, excluded). Oracle: DuckDB unnest + distinct-gram join.
-    "q63_ngram_hits" -> ((s, dir) => { prep(s, dir)
+    "q63_ngram_hits" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val train = d.select(col("doc_id"), col("text"))
       val test = d.where(col("doc_id") % 7 === 0)
@@ -1349,7 +1312,7 @@ object SparkEntry {
     // train gram scan map-side, and the exact verify join removes the
     // ~0.3% false positives — result is EXACTLY the exact-join answer
     // (no false negatives), which is what the DuckDB oracle computes.
-    "q83_bloom_decontamination" -> ((s, dir) => { prep(s, dir)
+    "q83_bloom_decontamination" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val train = d.select(col("doc_id"), col("text"))
       val test = d.where(col("doc_id") % 7 === 0)
@@ -1361,7 +1324,7 @@ object SparkEntry {
     // QUANTIZED integer dot product, so assignment + tie-break are
     // bit-identical across engines — DuckDB recomputes every dot and
     // the winner exactly (no float compare anywhere).
-    "q84_cluster_assign" -> ((s, dir) => { prep(s, dir)
+    "q84_cluster_assign" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       Similarity.centroidAssign(emb, "vec_id", "embedding",
         emb.where(col("vec_id") < 8), "vec_id", "embedding") }),
@@ -1369,7 +1332,7 @@ object SparkEntry {
     // inside the row (no explode), one single-row global stats agg
     // broadcasts back into the map-side scoring pass — the corpus never
     // shuffles. Oracle recomputes the identical Okapi/Lucene formula.
-    "q85_bm25" -> ((s, dir) => { prep(s, dir)
+    "q85_bm25" -> ((s, dir) => {
       TextStats.bm25(Tables.load(s, dir, "documents"), "doc_id", "text",
         terms = Seq("spark", "merge", "vector")) }),
     // incremental ingest dedup: today's batch vs the persisted
@@ -1377,7 +1340,7 @@ object SparkEntry {
     // short-circuit past any join, survivors probe the store with ONE
     // map-side semi-join. Oracle: text NOT IN the seen set (fingerprint
     // equality ≡ text equality, the q27-established posture).
-    "q87_incremental_dedup" -> ((s, dir) => { prep(s, dir)
+    "q87_incremental_dedup" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val seen = d.where(col("doc_id") % 3 === 0)
         .select(TextStats.contentFingerprint(col("text")).as("fp"))
@@ -1387,14 +1350,14 @@ object SparkEntry {
     // keeps each map task's local top-k per source before the shuffle;
     // quality is the round-6 ratio score both engines compute
     // identically (q24), ties break on doc_id.
-    "q88_quality_topk" -> ((s, dir) => { prep(s, dir)
+    "q88_quality_topk" -> ((s, dir) => {
       TextStats.topKByQuality(Tables.load(s, dir, "documents"),
         "doc_id", "text", "source", k = 10) }),
     // token-budget-capped mixture sampling: each source keeps its
     // md5-ordered prefix of docs whose cumulative chars fit 4000 —
     // quotas as budgets, not counts. Same md5 determinism contract as
     // q60/q61/q64; DuckDB recomputes the identical prefix.
-    "q89_budget_sample" -> ((s, dir) => { prep(s, dir)
+    "q89_budget_sample" -> ((s, dir) => {
       Sampling.budgetSample(
         Tables.load(s, dir, "documents")
           .select("doc_id", "source", "n_chars"),
@@ -1402,7 +1365,7 @@ object SparkEntry {
     // exact per-source length percentiles off the count histogram —
     // integer percentile-disc arithmetic end to end (no float), only
     // the histogram rides the shuffle
-    "q90_length_percentiles" -> ((s, dir) => { prep(s, dir)
+    "q90_length_percentiles" -> ((s, dir) => {
       TextStats.lengthPercentiles(
         Tables.load(s, dir, "documents").select("source", "n_chars"),
         "source", "n_chars", percents = Seq(50, 95, 99)) }),
@@ -1410,7 +1373,7 @@ object SparkEntry {
     // layout (write-once read-many, like the IVF layout), scanned back
     // through Spark's ORC reader (same pushdown/pruning machinery as
     // parquet) and aggregated — oracle reads the original parquet.
-    "q91_orc_roundtrip" -> ((s, dir) => { prep(s, dir)
+    "q91_orc_roundtrip" -> ((s, dir) => {
       val path = orcLayoutFor(s, dir)
       s.read.orc(path).groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars")) }),
@@ -1418,7 +1381,7 @@ object SparkEntry {
     // plans against ONE day directory (PartitionFilters prune at
     // planning time — require()d on the scan's selected partitions),
     // the 100-TB events-lake layout. Oracle filters the flat table.
-    "q95_partitioned_sink" -> ((s, dir) => { prep(s, dir)
+    "q95_partitioned_sink" -> ((s, dir) => {
       val path = dayLayoutFor(s, dir)
       val out = s.read.parquet(path)
         .where(col("day") === lit(java.sql.Date.valueOf("2024-01-15")))
@@ -1436,7 +1399,7 @@ object SparkEntry {
     // levenshtein; unrelated neighbor-id control pairs must be cut
     // (threshold form early-exits at -1). Both engines compute the
     // identical classic Levenshtein over the same constructed corpus.
-    "q94_edit_distance" -> ((s, dir) => { prep(s, dir)
+    "q94_edit_distance" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents").select("doc_id", "text")
       val mut = d.where(col("doc_id") % 11 === 0)
         .select((col("doc_id") + 5000000).as("doc_id"),
@@ -1455,7 +1418,7 @@ object SparkEntry {
     // Long sums are order-independent, so the result is hash-exact on
     // any engine/partitioning; exploded to (label, dim) rows for the
     // oracle compare.
-    "q93_vecsum_agg" -> ((s, dir) => { prep(s, dir)
+    "q93_vecsum_agg" -> ((s, dir) => {
       Tables.load(s, dir, "embeddings")
         .groupBy("label")
         .agg(Similarity.quantizedVecSum(col("embedding")).as("sum_q_vec"),
@@ -1470,7 +1433,7 @@ object SparkEntry {
     // scale-out knob); pack_id = the 4096-char chunk of the bucket's
     // md5-ordered stream the doc's start falls in. Oracle: identical
     // running-sum window in DuckDB.
-    "q64_seq_packing" -> ((s, dir) => { prep(s, dir)
+    "q64_seq_packing" -> ((s, dir) => {
       Sampling.packSequences(
         Tables.load(s, dir, "documents").select("doc_id", "n_chars"),
         "doc_id", "n_chars", capacity = 4096L, bucketChars = 1)
@@ -1478,7 +1441,7 @@ object SparkEntry {
     // within-document repetition (Gopher-style duplicate-bigram filter);
     // corpus = documents plus synthetic degenerate-loop docs (each 3rd
     // doc's first 3 words repeated 10x) that must score high
-    "q65_repetition" -> ((s, dir) => { prep(s, dir)
+    "q65_repetition" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents")
       val looped = d.where(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 3000000).as("doc_id"),
@@ -1495,7 +1458,7 @@ object SparkEntry {
     // lower-id cluster-mate; the oracle replays assignment (integer
     // argmax) + within-cluster pairs + prune, so green proves BOTH the
     // sharding and the prune decision end to end.
-    "q96_semantic_dedup" -> ((s, dir) => { prep(s, dir)
+    "q96_semantic_dedup" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
         .select("vec_id", "embedding")
       val nearCopies = emb.where(col("vec_id") % 4 === 0)
@@ -1509,21 +1472,21 @@ object SparkEntry {
     // corpus-unigram-LM doc scoring (CCNet-style cheap perplexity
     // proxy): mean ln p(term) over each doc's token instances, the
     // unigram table broadcast map-side — token instances never shuffle
-    "q97_unigram_logprob" -> ((s, dir) => { prep(s, dir)
+    "q97_unigram_logprob" -> ((s, dir) => {
       TextStats.unigramLogProb(
         Tables.load(s, dir, "documents").select("doc_id", "text"),
         "doc_id", "text") }),
     // one BPE merge round's pair statistic: adjacent char-pair counts
     // weighted by word frequency, top-20 — pairs explode from the
     // VOCAB, not the corpus
-    "q98_bpe_pairs" -> ((s, dir) => { prep(s, dir)
+    "q98_bpe_pairs" -> ((s, dir) => {
       TextStats.bpePairCounts(
         Tables.load(s, dir, "documents").select("text"), "text", k = 20) }),
     // sketch-based distinct counting under an accuracy gate: HLL++
     // (the 100-TB cardinality path — no expand, constant memory) vs the
     // exact count; the oracle pins exact counts AND within_5pct=TRUE,
     // so a sketch drifting past 5% breaks the hash
-    "q99_approx_distinct" -> ((s, dir) => { prep(s, dir)
+    "q99_approx_distinct" -> ((s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy("event_type")
         .agg(countDistinct(col("user_id")).as("exact_cnt"),
@@ -1538,7 +1501,7 @@ object SparkEntry {
     // only the EXACT value and the gate boolean are output — the
     // sketch's merge order varies with shuffle arrival, so its raw
     // value is not hash-stable, but the 2% gate is.
-    "q110_approx_percentile" -> ((s, dir) => { prep(s, dir)
+    "q110_approx_percentile" -> ((s, dir) => {
       Tables.load(s, dir, "events")
         .groupBy("event_type")
         .agg(expr("percentile(value, 0.5D)").as("__exact"),
@@ -1552,7 +1515,7 @@ object SparkEntry {
     // a distinct-scan first to discover values, a full extra pass at
     // 100 TB. Absent combinations coalesce to 0 (pivot yields null).
     // dow normalized to DuckDB's 0=Sunday convention.
-    "q111_pivot" -> ((s, dir) => { prep(s, dir)
+    "q111_pivot" -> ((s, dir) => {
       val p = Tables.load(s, dir, "events")
         .withColumn("dow", dayofweek(col("ts")) - 1)
         .groupBy("event_type")
@@ -1567,7 +1530,7 @@ object SparkEntry {
     // interact or overlap, so tokens = chars − Σ pair occurrences);
     // the spec exercises the multi-level ranked path the oracle can't
     // express. Pure map-side — the 100-TB token-budget pass.
-    "q112_bpe_tokens" -> ((s, dir) => { prep(s, dir)
+    "q112_bpe_tokens" -> ((s, dir) => {
       Tables.load(s, dir, "documents").select(col("doc_id"),
         TextStats.bpeTokenCount(col("text"),
           Seq("t" -> "h", "e" -> "r", "i" -> "n")).as("n_tokens")) }),
@@ -1576,7 +1539,7 @@ object SparkEntry {
     // — per-check scans would multiply the 100-TB read — plus one
     // anti-join for referential integrity, unpivoted to a per-check
     // report. A violated gate flips `pass` and breaks the hash.
-    "q113_quality_gates" -> ((s, dir) => { prep(s, dir)
+    "q113_quality_gates" -> ((s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
       val ord = Tables.load(s, dir, "orders")
       val rowChecks = li.agg(
@@ -1603,7 +1566,7 @@ object SparkEntry {
     // counts) need only the user's partition sorted once; state is the
     // frame, not the history. Micros arithmetic keeps the frame
     // boundary exact and engine-portable.
-    "q115_rolling_window" -> ((s, dir) => { prep(s, dir)
+    "q115_rolling_window" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("t_us"))
@@ -1619,7 +1582,7 @@ object SparkEntry {
     // aggregate), mean_q = round(sum_q/n) — bit-identical updated
     // centroids on any engine/partitioning. The oracle replays the
     // whole step.
-    "q100_kmeans_iter" -> ((s, dir) => { prep(s, dir)
+    "q100_kmeans_iter" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       Similarity.kmeansIterate(emb, "vec_id", "embedding",
         emb.where(col("vec_id") < 8), "vec_id", "embedding") }),
@@ -1629,7 +1592,7 @@ object SparkEntry {
     // would double-scan at 100 TB) and aggregated with a quality
     // filter, proving text survives the JSON string escaping round
     // trip byte-exactly. Oracle reads the original parquet.
-    "q101_jsonl_roundtrip" -> ((s, dir) => { prep(s, dir)
+    "q101_jsonl_roundtrip" -> ((s, dir) => {
       val path = jsonlLayoutFor(s, dir)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
@@ -1648,7 +1611,7 @@ object SparkEntry {
     // pins SMJ (a broadcast plan would also be shuffle-free here but
     // wouldn't exercise the bucketed path that matters when BOTH sides
     // are 100-TB-large). Oracle joins the flat parquet tables.
-    "q102_bucketed_join" -> ((s, dir) => { prep(s, dir)
+    "q102_bucketed_join" -> ((s, dir) => {
       val (tOrders, tCust) = bucketedTablesFor(s, dir)
       val joined = s.table(tOrders).hint("merge")
         .join(s.table(tCust), col("o_custkey") === col("c_custkey"))
@@ -1669,7 +1632,7 @@ object SparkEntry {
     // DynamicPruningExpression in the scan's partition filters). The
     // 100-TB shape: "scan only the days the dimension selects" without
     // hand-propagating the date predicate to the fact table.
-    "q103_dpp" -> ((s, dir) => { prep(s, dir)
+    "q103_dpp" -> ((s, dir) => {
       val path = dayLayoutFor(s, dir)
       val fact = s.read.parquet(path)
       val dim = Tables.load(s, dir, "events")
@@ -1690,7 +1653,7 @@ object SparkEntry {
     // table. All quantized-integer arithmetic, so the oracle replays
     // codes AND distances exactly — a hash-green proves the whole
     // compression + ranking path, not just row counts.
-    "q104_pq_adc" -> ((s, dir) => { prep(s, dir)
+    "q104_pq_adc" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
         .select("vec_id", "embedding")
       val cb = Similarity.pqCodebook(emb.where(col("vec_id") < 16),
@@ -1706,9 +1669,10 @@ object SparkEntry {
     // lever at 100 TB (most lineitems die before the wire). Both
     // thresholds are pinned down only because test data is small: at
     // real scale the 10 GB application-side default is what makes the
-    // rule fire exactly when the shuffle is worth saving. prep() resets
-    // both pins, so the demonstration cannot leak into other entries.
-    "q105_runtime_filter" -> ((s, dir) => { prep(s, dir)
+    // rule fire exactly when the shuffle is worth saving. The pins land
+    // on the entry's own session clone, so they cannot leak into other
+    // entries.
+    "q105_runtime_filter" -> ((s, dir) => {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
       s.conf.set("spark.sql.optimizer.runtime.bloomFilter." +
         "applicationSideScanSizeThreshold", "1KB")
@@ -1735,7 +1699,7 @@ object SparkEntry {
     // table size and fails if the layout stopped skipping (an unsorted
     // write passes every row through the same query). Oracle filters
     // the flat table.
-    "q106_sorted_layout" -> ((s, dir) => { prep(s, dir)
+    "q106_sorted_layout" -> ((s, dir) => {
       val path = sortedLayoutFor(s, dir)
       val probe = s.read.parquet(path)
         .where(col("n_chars").between(100, 160))
@@ -1762,7 +1726,7 @@ object SparkEntry {
     // count actually collapsed, and aggregates the compacted lake —
     // proving compaction moved, not dropped, rows. Oracle aggregates
     // the flat table.
-    "q117_compaction" -> ((s, dir) => { prep(s, dir)
+    "q117_compaction" -> ((s, dir) => {
       val base = fragmentedLayoutFor(s, dir)
       val compacted = s"$base.compacted"
       if (!new java.io.File(compacted).exists()) {
@@ -1796,7 +1760,7 @@ object SparkEntry {
     // sources) over the background LM, add-one smoothed over the shared
     // vocabulary; top-50 by (importance DESC, doc_id) via
     // TakeOrderedAndProject, ranked after the cut.
-    "q119_importance" -> ((s, dir) => { prep(s, dir)
+    "q119_importance" -> ((s, dir) => {
       TextStats.importanceTopK(
         Tables.load(s, dir, "documents")
           .select("doc_id", "text", "source"),
@@ -1805,7 +1769,7 @@ object SparkEntry {
     // CCNet-style interpolated-bigram LM score (perplexity filter):
     // lambda*p(w_i|w_{i-1}) + (1-lambda)*p(w_i), both MLE from the
     // corpus itself, mean-log per document
-    "q120_bigram_logprob" -> ((s, dir) => { prep(s, dir)
+    "q120_bigram_logprob" -> ((s, dir) => {
       TextStats.bigramLogProb(
         Tables.load(s, dir, "documents").select("doc_id", "text"),
         "doc_id", "text", lambda = 0.5) }),
@@ -1813,7 +1777,7 @@ object SparkEntry {
     // groups, keep each group's HIGHEST-quality member (q58 keeps the
     // lowest id) — ties broken by doc_id; the recursive-CTE closure +
     // per-group argmax oracle replays the same choice
-    "q121_dedup_best" -> ((s, dir) => { prep(s, dir)
+    "q121_dedup_best" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = true)
       val pairs = Dedup.minhashDupPairs(c, "doc_id", "text", threshold = 0.8)
         .select(col("id1"), col("id2"))
@@ -1823,14 +1787,14 @@ object SparkEntry {
     // asymmetric containment dedup: shingle-subset pairs (the quote-
     // inside-a-page duplicate class Jaccard misses) — bottom-k sketch
     // probes vs the linear inverted index, exact verify at >= 0.9
-    "q122_containment" -> ((s, dir) => { prep(s, dir)
+    "q122_containment" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = true)
       Dedup.containmentDupPairs(c, "doc_id", "text", threshold = 0.9) }),
     // incremental NEAR-dedup: the batch screened against a seen store
     // by exact n-gram Jaccard (LSH candidates, seen side never
     // shuffles) — q87's near-dup sibling; seen = every 3rd doc,
     // slightly edited, so the drop decision is genuinely fuzzy
-    "q124_near_dedup_seen" -> ((s, dir) => { prep(s, dir)
+    "q124_near_dedup_seen" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents").select("doc_id", "text")
       val seen = d.where(col("doc_id") % 3 === 0)
         .select(col("doc_id").as("sid"),
@@ -1846,7 +1810,7 @@ object SparkEntry {
     // then the leakage matrix (q134) on the split label. The number an
     // eval designer must check: near-dup pairs crossing train/test are
     // soft contamination a doc-level split cannot see.
-    "q136_split_leakage" -> ((s, dir) => { prep(s, dir)
+    "q136_split_leakage" -> ((s, dir) => {
       val c = Sampling.hashSplit(dupCorpus(s, dir, near = true),
         "doc_id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
       Dedup.sourceLeakage(c, "doc_id", "text", "split",
@@ -1858,7 +1822,7 @@ object SparkEntry {
     // identical to q21's and the exact-dup oracle pins that the guard
     // armed does not cost recall here; DedupSpec proves the cap FIRES
     // on an oversized synthetic family.
-    "q137_dedup_minhash_capped" -> ((s, dir) => { prep(s, dir)
+    "q137_dedup_minhash_capped" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = false)
       verifyByEquality(Dedup.lshCandidatePairs(c, "doc_id", "text",
         maxBucketSize = 64), c) }),
@@ -1872,7 +1836,7 @@ object SparkEntry {
     // armed guard changes nothing — while at the 100x GenScale point
     // the same budget collapses the report's dominant near-dup term
     // from the family quadratic back to corpus-linear (SCALE_r13).
-    "q138_curation_capped" -> ((s, dir) => { prep(s, dir)
+    "q138_curation_capped" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = true)
       graft.operators.Curation.curationReport(c, "doc_id", "text",
         langs = Seq("en"), minQuality = 0.55,
@@ -1882,7 +1846,7 @@ object SparkEntry {
     // shingles with corpus df = 1 (singleton ownership via min(doc_id)
     // — no join back to the exploded rows); the diversity-weighting
     // signal, inverse of the dup family
-    "q133_shingle_novelty" -> ((s, dir) => { prep(s, dir)
+    "q133_shingle_novelty" -> ((s, dir) => {
       TextStats.shingleNovelty(
         Tables.load(s, dir, "documents").select("doc_id", "text"),
         "doc_id", "text") }),
@@ -1892,7 +1856,7 @@ object SparkEntry {
     // joined back to each side's source, counted per unordered source
     // pair — the mixture-design evidence a curator reads before
     // weighting sources
-    "q134_source_leakage" -> ((s, dir) => { prep(s, dir)
+    "q134_source_leakage" -> ((s, dir) => {
       val docs = Tables.load(s, dir, "documents")
         .select("doc_id", "text", "source")
       val mirror = docs.where(col("doc_id") % 5 === 0)
@@ -1907,7 +1871,7 @@ object SparkEntry {
     // vocabulary coverage curve: smallest frequency-ranked vocab head
     // reaching 50/90/95/99% of corpus token mass — exact integer
     // cumsum over the vocab-bounded ranking window
-    "q135_vocab_coverage" -> ((s, dir) => { prep(s, dir)
+    "q135_vocab_coverage" -> ((s, dir) => {
       TextStats.vocabCoverage(
         Tables.load(s, dir, "documents").select("doc_id", "text"),
         "doc_id", "text")
@@ -1916,14 +1880,14 @@ object SparkEntry {
     // ln(p(w1,w2)/(p(w1)p(w2))) for bigrams seen >= 5 times, computed
     // as ONE division expression so both engines replay the identical
     // double arithmetic left to right
-    "q139_pmi_bigrams" -> ((s, dir) => { prep(s, dir)
+    "q139_pmi_bigrams" -> ((s, dir) => {
       TextStats.pmiBigrams(
         Tables.load(s, dir, "documents").select("text"),
         "text", minCount = 5L) }),
     // Zipf-law least-squares fit over the top-1000 vocab head — the
     // corpus-naturalness one-glance check (natural prose slope ~ -1);
     // closed-form regression over vocab-bounded sums
-    "q140_zipf_fit" -> ((s, dir) => { prep(s, dir)
+    "q140_zipf_fit" -> ((s, dir) => {
       TextStats.zipfFit(
         Tables.load(s, dir, "documents").select("text"),
         "text", topN = 1000) }),
@@ -1932,7 +1896,7 @@ object SparkEntry {
     // the template/mirror first cut before any pairwise similarity
     // (the near docs append their marker at the END, so every dup
     // family shares its prefix fingerprint)
-    "q141_prefix_clusters" -> ((s, dir) => { prep(s, dir)
+    "q141_prefix_clusters" -> ((s, dir) => {
       TextStats.prefixClusters(dupCorpus(s, dir, near = true),
         "doc_id", "text", k = 16) }),
     // token-budget mixture plan (the pretraining "data recipe" table):
@@ -1940,7 +1904,7 @@ object SparkEntry {
     // 100k-token budget (tau = 0.5, the q131 knob), and the epochs the
     // share implies — quantized-integer weights keep the arithmetic
     // bit-replayable
-    "q142_token_budget_plan" -> ((s, dir) => { prep(s, dir)
+    "q142_token_budget_plan" -> ((s, dir) => {
       Sampling.tokenBudgetPlan(
         Tables.load(s, dir, "documents").select("text", "source"),
         "text", "source", budgetTokens = 100000L, tau = 0.5) }),
@@ -1950,7 +1914,7 @@ object SparkEntry {
     // per-(query, doc) SUM is order-independent and engine-exact —
     // corpus prunes against the broadcast query vocabulary before its
     // one narrow shuffle; the per-query cut is a WindowGroupLimit
-    "q143_bm25_retrieve" -> ((s, dir) => { prep(s, dir)
+    "q143_bm25_retrieve" -> ((s, dir) => {
       import s.implicits._
       val qs = Seq((1L, "spark table join scan"),
         (2L, "slow query merge vector"),
@@ -1962,12 +1926,12 @@ object SparkEntry {
     // documents of each source (df ties broken by gram) — the
     // boilerplate-inventory table removal rules are written from;
     // grams dedup in-row, the one exchange is gram-vocabulary-bounded
-    "q144_template_ngrams" -> ((s, dir) => { prep(s, dir)
+    "q144_template_ngrams" -> ((s, dir) => {
       TextStats.templateNgrams(
         Tables.load(s, dir, "documents").select("doc_id", "text", "source"),
         "doc_id", "text", "source", n = 3, k = 5) }),
     // spikes exactly as a production skew would
-    "q132_streaming_drift" -> ((s, dir) => { prep(s, dir)
+    "q132_streaming_drift" -> ((s, dir) => {
       val ref = Tables.load(s, dir, "events")
         .where(col("event_id") % 2 === 0)
         .groupBy(col("event_type").as("bucket"))
@@ -1981,7 +1945,7 @@ object SparkEntry {
     // temperature-flattened mixture (mT5/UniMax): p_g ∝ n_g^0.5 at
     // half the corpus budget — head sources flatten toward the tail;
     // quantized integer weights keep the rates bit-replayable
-    "q131_temperature_mixture" -> ((s, dir) => { prep(s, dir)
+    "q131_temperature_mixture" -> ((s, dir) => {
       Sampling.temperatureMixture(
         Tables.load(s, dir, "documents").select("doc_id", "source"),
         "source", "doc_id", tau = 0.5, targetFraction = 0.5)
@@ -1990,7 +1954,7 @@ object SparkEntry {
     // the centroid cells (every cell yields its best before any cell
     // yields its second) — score = quantized self-dot (vector energy),
     // so the oracle replays routing, scoring and pick order exactly
-    "q130_diverse_topk" -> ((s, dir) => { prep(s, dir)
+    "q130_diverse_topk" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
         .select("vec_id", "embedding")
       val cents = emb.where(col("vec_id") < 8)
@@ -2003,7 +1967,7 @@ object SparkEntry {
     // numeric-score drift: quality-distribution PSI between the even
     // snapshot and the odd snapshot with injected punct/digit damage
     // (lowers the quality score) — 10 fixed bins on [0,1)
-    "q129_quality_drift" -> ((s, dir) => { prep(s, dir)
+    "q129_quality_drift" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents").select("doc_id", "text")
       val a = d.where(col("doc_id") % 2 === 0)
         .select(TextStats.qualityScore(col("text")).as("quality"))
@@ -2014,7 +1978,7 @@ object SparkEntry {
     // corpus drift monitor: PSI between the even-id snapshot and the
     // odd-id snapshot with drift-injected texts (appended tokens shift
     // bucket mass) — per-bucket add-one-smoothed PSI terms
-    "q128_term_drift" -> ((s, dir) => { prep(s, dir)
+    "q128_term_drift" -> ((s, dir) => {
       val d = Tables.load(s, dir, "documents").select("doc_id", "text")
       val a = d.where(col("doc_id") % 2 === 0).select("text")
       val b = d.where(col("doc_id") % 2 === 1)
@@ -2026,21 +1990,21 @@ object SparkEntry {
     // contained). nearThreshold 0.95 deliberately lets ~0.94-Jaccard
     // near copies through to the containment stage, so all four
     // reasons fire on this corpus.
-    "q127_curation_report" -> ((s, dir) => { prep(s, dir)
+    "q127_curation_report" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = true)
       graft.operators.Curation.curationReport(c, "doc_id", "text",
         langs = Seq("en"), minQuality = 0.55,
         nearThreshold = 0.95, containThreshold = 0.9) }),
     // the consuming end: drop contained docs (mutual classes keep the
     // lowest id) — q122's pairs resolved to the surviving corpus
-    "q123_containment_dedup" -> ((s, dir) => { prep(s, dir)
+    "q123_containment_dedup" -> ((s, dir) => {
       val c = dupCorpus(s, dir, near = true)
       val pairs = Dedup.containmentDupPairs(c, "doc_id", "text",
         threshold = 0.9)
       Dedup.removeContained(c, "doc_id", pairs).select(col("doc_id")) }),
     // difference between reading a stripe and reading everything when
     // queries filter two dims.
-    "q118_zorder" -> ((s, dir) => { prep(s, dir)
+    "q118_zorder" -> ((s, dir) => {
       val path = zLayoutFor(s, dir)
       val pred = col("ux").between(100, 160) && col("dom").between(5, 9)
       val probe = s.read.parquet(path).where(pred)
@@ -2064,7 +2028,7 @@ object SparkEntry {
     // the cell filter is the in-memory form of that prune. Exact
     // integer arithmetic end to end — the oracle replays routing,
     // codes, probe choice, and ranking.
-    "q108_ivfpq" -> ((s, dir) => { prep(s, dir)
+    "q108_ivfpq" -> ((s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
         .select("vec_id", "embedding")
       val cents = emb.where(col("vec_id") < 8)
@@ -2086,7 +2050,7 @@ object SparkEntry {
       val lut = Similarity.pqLut(emb.where(col("vec_id") === 0),
         "vec_id", "embedding", cb, m = 8)
       Similarity.pqAdcTopK(candidates, "vec_id", "codes", lut, k = 10) })
-  )
+  ).map { case (name, fn) => name -> scoped(fn) }
 
   /** All-pairs word-trigram Jaccard over the near corpus, as CTEs ending
     * in `jp(id1, id2, jaccard)` — shared by the q23 pair oracle and the

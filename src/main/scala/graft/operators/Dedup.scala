@@ -943,20 +943,6 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Dedup")
 
-  /** Rounds the last [[connectedComponents]] call on this JVM ran: 0 for
-    * the union-find paths, else the star round count. Observability
-    * hook for specs and perf notes (the O(log d) claim is asserted
-    * against it); racy under concurrent calls, so nothing but
-    * diagnostics may read it. */
-  @volatile private[graft] var lastIterations: Int = -1
-
-  /** Bounded-scratch batch count of the last [[containmentDupPairs]]
-    * over-gate verify on this JVM (1 = single wave; only set when the
-    * over-gate path runs). Diagnostics only, like [[lastIterations]] —
-    * the scale harness stamps it next to the containment walls so the
-    * artifact records WHICH path a measurement exercised. */
-  @volatile private[graft] var lastContainmentBatches: Int = -1
-
   /** Default [[connectedComponents]] `microGraphMaxEdges`: a 1 M-edge
     * graph is ~2 M union-find operations and ≤ ~200 MB of boxed hash map
     * on ONE task (2 M entries × ~96 B) — well inside any executor and
@@ -1228,15 +1214,14 @@ object Dedup {
     * comfortably absorbs a few times [[MicroGraphMaxEdgesDefault]]. */
   private val PostContractionMicroFactor = 4L
 
-  /** Spanning-forest row count of the last [[connectedComponents]]
-    * contraction pass on this JVM, -1 when the pass did not run
-    * (micro-graph path). Diagnostics only, like [[lastIterations]]. */
-  @volatile private[graft] var lastForestEdges: Long = -1L
-
-  /** Which engine resolved the last [[connectedComponents]] call:
-    * "micro", "contract-micro" or "star". Diagnostics only, like
-    * [[lastIterations]]. */
-  @volatile private[graft] var lastEngine: String = ""
+  /** One [[connectedComponentsRun]]: the labels plus how they were
+    * resolved — `engine` is "micro", "contract-micro" or "star",
+    * `rounds` the star round count (0 on the union-find paths) and
+    * `forestEdges` the contraction pass's forest rows (-1 when the pass
+    * did not run). Returned per call, so concurrent calls never see
+    * each other's figures. */
+  private[graft] final case class CcRun(labels: DataFrame, engine: String,
+      rounds: Int, forestEdges: Long)
 
   /** @param microGraphMaxEdges symmetric-edge-count threshold at or below
     *   which components are resolved by the single-task union-find fast
@@ -1252,7 +1237,15 @@ object Dedup {
     *   edges. */
   def connectedComponents(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", maxIterations: Int = 50,
-      microGraphMaxEdges: Long = MicroGraphMaxEdgesDefault): DataFrame = {
+      microGraphMaxEdges: Long = MicroGraphMaxEdgesDefault): DataFrame =
+    connectedComponentsRun(pairs, id1, id2, maxIterations,
+      microGraphMaxEdges).labels
+
+  /** [[connectedComponents]] with its engine, round and forest figures
+    * ([[CcRun]]). */
+  private[graft] def connectedComponentsRun(pairs: DataFrame,
+      id1: String = "id1", id2: String = "id2", maxIterations: Int = 50,
+      microGraphMaxEdges: Long = MicroGraphMaxEdgesDefault): CcRun = {
     require(maxIterations > 0,
       s"maxIterations must be positive (got $maxIterations)")
     val e = pairs.select(col(id1).as("src"), col(id2).as("dst"))
@@ -1267,11 +1260,9 @@ object Dedup {
       // immediately without leaving the returned plan depending on them.
       val labels = unionFindLabels(edges).localCheckpoint()
       org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(edges)
-      lastIterations = 0
-      lastForestEdges = -1L
-      lastEngine = "micro"
       log.info(s"connectedComponents: micro-graph path, $edgeCount edges")
-      return labels.select(col("id"), col("lbl").as("group_id"))
+      return CcRun(labels.select(col("id"), col("lbl").as("group_id")),
+        "micro", 0, -1L)
     }
     // predictive stall probe: on a clearly non-id-local graph the
     // contraction pass below cannot merge anything — route straight to
@@ -1280,9 +1271,8 @@ object Dedup {
       log.info(s"connectedComponents: stall probe predicts no id " +
         s"locality ($edgeCount edges), running alternating star " +
         "rounds on the original edges")
-      lastForestEdges = -1L
-      lastEngine = "star"
-      return starLoop(edges, edgeCount, maxIterations)
+      val (labels, rounds) = starLoop(edges, edgeCount, maxIterations)
+      return CcRun(labels, "star", rounds, -1L)
     }
     // local-contraction pre-pass: solve each range partition with a
     // single union-find pass and keep only the spanning forest. On the
@@ -1291,25 +1281,23 @@ object Dedup {
     // then resolves on the micro path — replacing O(log d) join rounds
     // with one shuffle + one map pass.
     val (forest, forestCount) = spanningForest(edges)
-    lastForestEdges = forestCount
     if (forestCount >= edgeCount * ContractionStallFraction) {
       // no id locality — the pass bought nothing
       log.info(s"connectedComponents: contraction stalled " +
         s"($edgeCount edges -> $forestCount forest rows), " +
         "running alternating star rounds on the original edges")
       org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(forest)
-      lastEngine = "star"
-      return starLoop(edges, edgeCount, maxIterations)
+      val (labels, rounds) = starLoop(edges, edgeCount, maxIterations)
+      return CcRun(labels, "star", rounds, forestCount)
     }
     org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(edges)
     if (forestCount <= microGraphMaxEdges * PostContractionMicroFactor) {
       val labels = unionFindLabels(forest).localCheckpoint()
       org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(forest)
-      lastIterations = 0
-      lastEngine = "contract-micro"
       log.info(s"connectedComponents: contracted $edgeCount edges to " +
         s"$forestCount forest rows, resolved on the micro path")
-      return labels.select(col("id"), col("lbl").as("group_id"))
+      return CcRun(labels.select(col("id"), col("lbl").as("group_id")),
+        "contract-micro", 0, forestCount)
     }
     // still huge after contraction: star rounds over the (smaller)
     // contracted graph — its node set is exactly the original node set,
@@ -1320,8 +1308,8 @@ object Dedup {
     val (fEdges, fCount) = org.apache.spark.sql.GraftSqlShim
       .checkpointHashPartitionedCounted(symmetrize(forest), "src")
     org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(forest)
-    lastEngine = "star"
-    starLoop(fEdges, fCount, maxIterations)
+    val (labels, rounds) = starLoop(fEdges, fCount, maxIterations)
+    CcRun(labels, "star", rounds, forestCount)
   }
 
   /** Alternating large-star/small-star contraction over a checkpointed
@@ -1353,49 +1341,11 @@ object Dedup {
     * contraction pre-pass gets the first try on id-local graphs. Ids of
     * any orderable type work; comparisons and `min` are Spark SQL
     * semantics (strings collate like SQL `min`).
-    * Unpersists `edges` when done. */
+    * Unpersists `edges` when done. Returns the labels, bound to
+    * `edges`' session, and the round count. */
   private[graft] def starLoop(edges: DataFrame, edgeCount: Long,
-      maxIterations: Int): DataFrame = {
+      maxIterations: Int): (DataFrame, Int) = {
     val shim = org.apache.spark.sql.GraftSqlShim
-    // node inventory for the final labeling — needed ONLY when the input
-    // carries self-loops: (u, u) canonicalizes away below (hi > lo is
-    // strict), so a node with ONLY self-loop edges would otherwise
-    // vanish from the round state entirely. Every OTHER node survives
-    // every round (large-star rewrites a row's lo, never drops its hi;
-    // small-star re-emits every group member as hi or lo), so at the
-    // fixed point the star forest itself is a complete inventory:
-    // non-roots appear exactly once as hi, roots as lo — the final
-    // labeling is then the forest plus its distinct roots, skipping
-    // both this edge-sized distinct+materialize+count and the final
-    // edge-sized left join. The probe is one early-exit scan of the
-    // already-materialized edges checkpoint. When the inventory IS
-    // built it is forced eagerly — edges' checkpoint blocks are freed
-    // before labels are consumed, and a lazy plan would then read a
-    // severed lineage.
-    val nodes = if (edges.where(col("src") === col("dst")).isEmpty) null
-      else {
-        val n = shim.lazyCheckpointNoStats(
-          edges.select(col("src").as("id")).distinct())
-        n.count()
-        n
-      }
-    // canonical orientation (hi > lo): each undirected edge once;
-    // self-loops drop out (their nodes live on in `nodes`)
-    // canonical orientation rides the edges checkpoint's hash(src)
-    // layout: filter/project are alias-aware partition-preserving, so
-    // hash(src)=hash(hi) already satisfies the dedup's (hi, lo)
-    // clustering — the canonicalization adds ZERO exchanges and the
-    // captured layout feeds round 1's exchange-free min-aggregate.
-    // (A round-1 VIEW over the symmetrize checkpoint — skipping this
-    // materialization — was tried in round 14 and reverted: measured
-    // NEUTRAL on warm walls, and the compact round-1 checkpoint keeps
-    // the loop's inputs eviction-cheap, so the simpler claim stays.)
-    val confParts =
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    var c: DataFrame = shim.lazyCheckpointAssumeHashPartitioned(
-      edges.where(col("src") > col("dst"))
-        .select(col("src").as("hi"), col("dst").as("lo"))
-        .dropDuplicates("hi", "lo"), "hi", confParts)
     // round partition count sized to the edge volume: an explicit-N
     // repartition is exempt from AQE coalescing (that is what lets the
     // checkpoint RECORD its layout), so a small graph must not be
@@ -1403,6 +1353,8 @@ object Dedup {
     // 32 near-empty tasks is pure scheduler overhead (the q70 63 k-edge
     // entry ran ~1.7x slower that way). ~100 k canonical rows per
     // partition, capped at the session conf for big graphs.
+    val spark = edges.sparkSession
+    val confParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val nStar = math.max(1, math.min(confParts,
       (edgeCount / 200000L).toInt + 1))
     // node count is bounded by the symmetric edge count; ~300 k nodes
@@ -1419,36 +1371,71 @@ object Dedup {
     // this scale the 20 MB hash exchanges are not where round wall
     // goes — the per-round broadcast rebuild costs what the exchanges
     // saved. Round wall is stage-barrier + window-sort bound.)
-    // AQE pinned OFF for the big-graph loop (saved + restored below):
-    // inside these rounds AQE has nothing left to decide — every
-    // exchange is an explicit-N repartition (exempt from coalescing)
-    // and the join strategy is hint-pinned — but it still costs a
-    // re-optimization fence per query stage, measured at ~15% of round
-    // wall at 1.26 M edges. Small graphs keep AQE: its runtime
-    // broadcast conversion of the node-sized min frame is the win
-    // there. Conf mutation is session-scoped, so this (like the
-    // bench replay's partition pin) assumes no CONCURRENT queries on
-    // the same session during the loop; the restore is try/finally.
-    val spark = edges.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeSaved = spark.conf.get(aqeKey)
-    if (bigGraph) spark.conf.set(aqeKey, "false")
-    // shuffle-partition pin for the big-graph loop (same try/finally
-    // restore as the AQE pin): the round repartitions are sized to the
-    // edge volume (nStar ~ 200 k rows/partition), but the round's JOIN
-    // and WINDOW exchanges ride the session conf — with conf wider than
-    // nStar every round's exchanges also REPARTITION across widths
-    // (hash(k, nStar) checkpoint layouts never satisfy a hash(k, conf)
-    // requirement), so the recorded layouts only save exchanges when
-    // everything inside the loop agrees on ONE width. Measured on the
-    // bench graphs: 1.26 M edges 13.7 -> 10.5 s warm, 600 k edges
-    // 6.8 -> 5.0 s (same-harness A/B). Once the edge volume saturates
-    // the session conf (nStar == confParts — any real-cluster scale),
-    // the pin is a no-op.
-    val partsKey = "spark.sql.shuffle.partitions"
-    val partsSaved = spark.conf.get(partsKey)
-    val pinParts = bigGraph && nStar < confParts
-    if (pinParts) spark.conf.set(partsKey, nStar.toString)
+    // The big-graph rounds plan in their own LOOP SESSION, a clone of
+    // the caller's with two pins that never reach the caller:
+    //  - AQE off: inside these rounds AQE has nothing left to decide —
+    //    every exchange is an explicit-N repartition (exempt from
+    //    coalescing) and the join strategy is hint-pinned — but it
+    //    still costs a re-optimization fence per query stage, measured
+    //    at ~15% of round wall at 1.26 M edges. Small graphs keep AQE
+    //    (and the caller's session): its runtime broadcast conversion
+    //    of the node-sized min frame is the win there.
+    //  - shuffle partitions = nStar: the round repartitions are sized
+    //    to the edge volume, but the round's JOIN and WINDOW exchanges
+    //    ride the session conf — with conf wider than nStar every
+    //    round's exchanges also REPARTITION across widths (hash(k,
+    //    nStar) checkpoint layouts never satisfy a hash(k, conf)
+    //    requirement), so the recorded layouts only save exchanges when
+    //    everything inside the loop agrees on ONE width. Measured on
+    //    the bench graphs: 1.26 M edges 13.7 -> 10.5 s warm, 600 k
+    //    edges 6.8 -> 5.0 s (same-harness A/B). Once the edge volume
+    //    saturates the session conf (nStar == confParts), the pin is a
+    //    no-op.
+    // The input checkpoint is rebound to the loop session, so every
+    // round frame derives from it; the labels are rebound back to the
+    // caller's session at the end.
+    val loop = if (!bigGraph) spark
+      else shim.cloneSession(spark, "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> nStar.toString)
+    val e = if (loop eq spark) edges
+      else shim.ofRows(loop, edges.queryExecution.analyzed)
+    // node inventory for the final labeling — needed ONLY when the input
+    // carries self-loops: (u, u) canonicalizes away below (hi > lo is
+    // strict), so a node with ONLY self-loop edges would otherwise
+    // vanish from the round state entirely. Every OTHER node survives
+    // every round (large-star rewrites a row's lo, never drops its hi;
+    // small-star re-emits every group member as hi or lo), so at the
+    // fixed point the star forest itself is a complete inventory:
+    // non-roots appear exactly once as hi, roots as lo — the final
+    // labeling is then the forest plus its distinct roots, skipping
+    // both this edge-sized distinct+materialize+count and the final
+    // edge-sized left join. The probe is one early-exit scan of the
+    // already-materialized edges checkpoint. When the inventory IS
+    // built it is forced eagerly — edges' checkpoint blocks are freed
+    // before labels are consumed, and a lazy plan would then read a
+    // severed lineage.
+    val nodes = if (e.where(col("src") === col("dst")).isEmpty) null
+      else {
+        val n = shim.lazyCheckpointNoStats(
+          e.select(col("src").as("id")).distinct())
+        n.count()
+        n
+      }
+    // canonical orientation (hi > lo): each undirected edge once;
+    // self-loops drop out (their nodes live on in `nodes`)
+    // canonical orientation rides the edges checkpoint's hash(src)
+    // layout: filter/project are alias-aware partition-preserving, so
+    // hash(src)=hash(hi) already satisfies the dedup's (hi, lo)
+    // clustering — the canonicalization adds ZERO exchanges and the
+    // captured layout feeds round 1's exchange-free min-aggregate.
+    // (A round-1 VIEW over the symmetrize checkpoint — skipping this
+    // materialization — was tried in round 14 and reverted: measured
+    // NEUTRAL on warm walls, and the compact round-1 checkpoint keeps
+    // the loop's inputs eviction-cheap, so the simpler claim stays.)
+    var c: DataFrame = shim.lazyCheckpointAssumeHashPartitioned(
+      e.where(col("src") > col("dst"))
+        .select(col("src").as("hi"), col("dst").as("lo"))
+        .dropDuplicates("hi", "lo"), "hi", confParts)
     var it = 0
     var converged = false
     // carried (hi, min(lo), deg) aggregate: the convergence-stats job of
@@ -1456,7 +1443,7 @@ object Dedup {
     // it is checkpointed (node-sized rows) and reused instead of paying
     // a fresh groupBy pass over the edge list every round
     var prevP: DataFrame = null
-    try while (!converged && it < maxIterations) {
+    while (!converged && it < maxIterations) {
       val roundT0 = System.nanoTime()
       // large-star without symmetrizing: m(u) = min(Γ(u) ∪ {u}) can only
       // be u or a SMALLER neighbor, and the canonical rows already group
@@ -1558,13 +1545,8 @@ object Dedup {
       log.info(f"connectedComponents: star round $it edges=$edgeRows " +
         f"multiParent=$multiParent converged=$converged wall=$wallSec%.2f s")
     }
-    finally {
-      if (bigGraph) spark.conf.set(aqeKey, aqeSaved)
-      if (pinParts) spark.conf.set(partsKey, partsSaved)
-    }
     shim.unpersistCheckpoint(edges)
     if (prevP != null) shim.unpersistCheckpoint(prevP)
-    lastIterations = it
     if (!converged) {
       shim.unpersistCheckpoint(c)
       if (nodes != null) shim.unpersistCheckpoint(nodes)
@@ -1576,14 +1558,17 @@ object Dedup {
     // minimum; roots and self-loop singletons label themselves. Without
     // self-loops the forest is its own node inventory (see the probe
     // above) — no nodes checkpoint, no edge-sized left join.
-    if (nodes != null)
-      nodes.join(c.select(col("hi").as("id"), col("lo").as("lbl")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("lbl"), col("id")).as("group_id"))
-    else
-      c.select(col("hi").as("id"), col("lo").as("group_id"))
-        .unionByName(
-          c.select(col("lo").as("id"), col("lo").as("group_id")).distinct())
+    val labels =
+      if (nodes != null)
+        nodes.join(c.select(col("hi").as("id"), col("lo").as("lbl")),
+            Seq("id"), "left")
+          .select(col("id"), coalesce(col("lbl"), col("id")).as("group_id"))
+      else
+        c.select(col("hi").as("id"), col("lo").as("group_id"))
+          .unionByName(
+            c.select(col("lo").as("id"), col("lo").as("group_id")).distinct())
+    (if (loop eq spark) labels
+      else shim.ofRows(spark, labels.queryExecution.analyzed), it)
   }
 
   /** Per-group rollup of [[connectedComponents]]: group id (= canonical
@@ -1666,7 +1651,20 @@ object Dedup {
    * rows — arrays never ride an exchange on either path. */
   def containmentDupPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3, probeK: Int = 8,
-      maxShingleDf: Long = 16384L): DataFrame = {
+      maxShingleDf: Long = 16384L): DataFrame =
+    containmentDupPairsRun(docs, idCol, textCol, threshold, shingleSize,
+      probeK, maxShingleDf).pairs
+
+  /** One [[containmentDupPairsRun]]: the pairs plus the over-gate
+    * verify's bounded-scratch batch count (1 = one wave; -1 when the
+    * broadcast tier ran) — which path a measurement exercised. */
+  private[graft] final case class ContainmentRun(pairs: DataFrame,
+      batches: Int)
+
+  /** [[containmentDupPairs]] with its batch count ([[ContainmentRun]]). */
+  private[graft] def containmentDupPairsRun(docs: DataFrame, idCol: String,
+      textCol: String, threshold: Double, shingleSize: Int = 3,
+      probeK: Int = 8, maxShingleDf: Long = 16384L): ContainmentRun = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1] (got $threshold)")
     require(probeK > 0, s"probeK must be positive (got $probeK)")
@@ -1710,7 +1708,7 @@ object Dedup {
     if (estBytes <= bcastGate)
       // candidates stream map-side through two broadcast lookups and
       // the compiled merge; only the survivors are deduplicated
-      verified(cands).distinct()
+      ContainmentRun(verified(cands).distinct(), -1)
     else {
       // Over the gate, NEVER attach arrays through an exchange — the
       // retired shuffle-join fallback shipped BOTH ~KB shingle arrays
@@ -1873,8 +1871,7 @@ object Dedup {
               col("__n_a").cast("double"), 6).as("containment"))
           .where(col("containment") >= threshold)
       val estWide = if (invResident) estResident else estShuffled
-      lastContainmentBatches = k
-      if (k <= 1) countVerified(cands)
+      if (k <= 1) ContainmentRun(countVerified(cands), k)
       else {
         log.info(s"containmentDupPairs: over-gate verify in $k " +
           s"bounded-scratch batches (sampled wave estimate " +
@@ -1900,7 +1897,7 @@ object Dedup {
           shimSql.cleanupShuffles(spark, ownedShuffles)
           part
         }
-        parts.reduce(_.unionByName(_))
+        ContainmentRun(parts.reduce(_.unionByName(_)), k)
       }
     }
   }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
@@ -32,11 +31,14 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
  * shape [[IntervalJoinStrategy]] claims, so it runs as a partitioned
  * `IntervalJoinExec` (whole-stage-codegen'd; the residual is compiled into
  * the match loop).
+ *
+ * Stateless: conf reads go to `conf` (`SQLConf.get`, the planning
+ * session's conf), so one instance serves every session.
  */
-case class AutoBinIntervalJoin(session: SparkSession) extends Rule[LogicalPlan] {
+object AutoBinIntervalJoin extends Rule[LogicalPlan] {
 
   private def confStr(key: String, default: String): String =
-    session.conf.get(key, default)
+    conf.getConfString(key, default)
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val mode = confStr(graft.GraftSession.AutoBin, "auto").toLowerCase
@@ -56,8 +58,7 @@ case class AutoBinIntervalJoin(session: SparkSession) extends Rule[LogicalPlan] 
     // thousands of such bins, and the rewrite explodes each interval to
     // every bin it spans — so in auto mode, Long-bound joins are only
     // rebinned when the user set a coordinate-scale binSize explicitly.
-    val binSizeExplicit = session.conf.getOption(graft.GraftSession.BinSize)
-      .isDefined
+    val binSizeExplicit = conf.contains(graft.GraftSession.BinSize)
 
     plan.transform {
       case j @ Join(l, r, Inner, Some(cond), _) =>
@@ -81,13 +82,13 @@ case class AutoBinIntervalJoin(session: SparkSession) extends Rule[LogicalPlan] 
   private def shouldBin(mode: String, build: LogicalPlan,
       ic: IntervalCondition): Boolean = {
     if (mode == "force") return true
-    val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+    val threshold = conf.autoBroadcastJoinThreshold
     val fitsBroadcast = threshold > 0 && build.stats.sizeInBytes <= threshold
     if (fitsBroadcast) return false // broadcast mode is already skew-proof
     if (ic.leftKeys.isEmpty) return true // keyless: the only scalable plan
     // keyed: bin only when column stats say the key space is narrower than
     // the shuffle parallelism (a hot-key ceiling); no stats → stay unbinned
-    val parallelism = session.sessionState.conf.numShufflePartitions
+    val parallelism = conf.numShufflePartitions
     val stats = build.stats.attributeStats
     val ndvs = ic.leftKeys.map {
       case a: Attribute => stats.get(a).flatMap(_.distinctCount)
@@ -124,7 +125,7 @@ case class AutoBinIntervalJoin(session: SparkSession) extends Rule[LogicalPlan] 
       val be = floorBin(end)
       // Sequence is TimeZoneAwareExpression — resolved only with a zone set
       val seq = Sequence(Least(Seq(bs, be)), Greatest(Seq(bs, be)), None,
-        Some(session.sessionState.conf.sessionLocalTimeZone))
+        Some(conf.sessionLocalTimeZone))
       val attr = AttributeReference(name, LongType, nullable = false)()
       (Generate(Explode(seq), unrequiredChildIndex = Nil, outer = false,
         qualifier = None, generatorOutput = Seq(attr), child = child), attr)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -50,8 +49,10 @@ case class IntervalCountPlan(
  * [[IntervalCountPlan]]. Aggregate exprIds are preserved so references
  * above stay valid. Grouped semantics match the inner join exactly: a key
  * with zero overlapping pairs emits no partial row (instead of a 0 row).
+ * Stateless: conf reads go to `conf` (`SQLConf.get`, the planning
+ * session's conf).
  */
-case class IntervalCountRewrite(session: SparkSession) extends Rule[LogicalPlan] {
+object IntervalCountRewrite extends Rule[LogicalPlan] {
 
   private def isCountStar(e: Expression): Boolean = e match {
     case AggregateExpression(Count(Seq(Literal(_, _))), Complete, false, None, _) => true
@@ -70,9 +71,9 @@ case class IntervalCountRewrite(session: SparkSession) extends Rule[LogicalPlan]
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = session.conf.get(graft.GraftSession.PreferIntervalJoin,
+    val enabled = conf.getConfString(graft.GraftSession.PreferIntervalJoin,
       "true").toBoolean
-    val alg = session.conf.get(graft.GraftSession.IntervalJoinAlgorithm,
+    val alg = conf.getConfString(graft.GraftSession.IntervalJoinAlgorithm,
       "superintervals").toLowerCase
     // fire only under the DEFAULT algorithm: IntervalCountExec has no
     // per-algorithm dispatch (its sorted-array counting IS the
@@ -110,10 +111,9 @@ case class IntervalCountRewrite(session: SparkSession) extends Rule[LogicalPlan]
               // correct (BNLJ) instead of collecting an oversized build
               // side to the driver
               (ic.leftKeys.nonEmpty || {
-                val threshold =
-                  session.sessionState.conf.autoBroadcastJoinThreshold
+                val threshold = conf.autoBroadcastJoinThreshold
                 (threshold > 0 && l.stats.sizeInBytes <= threshold) ||
-                  session.conf.get(graft.GraftSession.IntervalJoinForceMode,
+                  conf.getConfString(graft.GraftSession.IntervalJoinForceMode,
                     "").equalsIgnoreCase("broadcast")
               }) =>
             val cnt = IntervalCountPlan(l, r, cond, groupAttrs)

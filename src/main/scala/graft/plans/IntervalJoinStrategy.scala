@@ -1,9 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.internal.SQLConf
 
 /**
  * Planner strategy: claim Inner `Join` nodes whose condition is an interval
@@ -24,11 +24,15 @@ import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
  * nothing to partition on — it always broadcasts, mirroring the reference's
  * NestedLoopJoin conversion that injects the dummy key `lit(1) = lit(1)`
  * (sequila_physical_planner.rs:127-148).
+ *
+ * Stateless: every conf read goes to `SQLConf.get`, the conf of the
+ * session planning the query, so one instance serves every session and
+ * a cloned session's own pins take effect.
  */
-case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
+object IntervalJoinStrategy extends SparkStrategy {
 
   private def conf(key: String, default: String): String =
-    session.conf.get(key, default)
+    SQLConf.get.getConfString(key, default)
 
   private def enabled: Boolean =
     conf(graft.GraftSession.PreferIntervalJoin, "true").toBoolean
@@ -36,7 +40,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
   /** Shared mode selection for probe-side variants (build side given). */
   private def pickMode(build: LogicalPlan, hasKeys: Boolean)
       : Option[IntervalJoinMode] = {
-    val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+    val threshold = SQLConf.get.autoBroadcastJoinThreshold
     val fitsBroadcast = threshold > 0 && build.stats.sizeInBytes <= threshold
     conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
       case "broadcast" => Some(BroadcastMode)
@@ -53,7 +57,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
     case IntervalCountPlan(l, r, cond, groupAttrs, countAttr) =>
       IntervalCondition.extract(cond, l, r) match {
         case Some(ic) if ic.residual.isEmpty =>
-          val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+          val threshold = SQLConf.get.autoBroadcastJoinThreshold
           val fitsBroadcast = threshold > 0 && l.stats.sizeInBytes <= threshold
           val mode =
             conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
@@ -74,7 +78,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
     case NearestIntervalJoin(l, r, cond) =>
       IntervalCondition.extract(cond, l, r) match {
         case Some(ic) if ic.residual.isEmpty =>
-          val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+          val threshold = SQLConf.get.autoBroadcastJoinThreshold
           val fitsBroadcast = threshold > 0 && l.stats.sizeInBytes <= threshold
           // forceMode applies here like on every sibling node type, so
           // tests can pin the partitioned nearest path deterministically
@@ -99,7 +103,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
     case AsofIntervalJoin(l, r, cond) =>
       AsofCondition.extract(cond, l, r) match {
         case Some(x) =>
-          val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+          val threshold = SQLConf.get.autoBroadcastJoinThreshold
           val fitsBroadcast = threshold > 0 && l.stats.sizeInBytes <= threshold
           val mode =
             conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
@@ -218,7 +222,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
                 s"(${ic.residual.get.sql}); use graft.operators.NearestJoin " +
                 "with the bare overlap condition, or unset the algorithm")
           } else {
-            val threshold = session.sessionState.conf.autoBroadcastJoinThreshold
+            val threshold = SQLConf.get.autoBroadcastJoinThreshold
             val leftSize = l.stats.sizeInBytes
             val fitsBroadcast = threshold > 0 && leftSize <= threshold
             // user join hints steer mode selection (same vocabulary as

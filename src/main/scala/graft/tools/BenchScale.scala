@@ -153,9 +153,8 @@ object BenchScale {
       }
       // gated containment point: the q122 pipeline (same near corpus,
       // same 0.9 threshold) with the broadcast gate RAISED via
-      // SPARK_GRAFT_CONTAINMENT_BCAST (bytes) — the ledger entry can't
-      // carry the conf (prep() resets graft confs), so the operator is
-      // driven directly. This is the knob's measured claim: a resident
+      // SPARK_GRAFT_CONTAINMENT_BCAST (bytes), with the operator driven
+      // directly. This is the knob's measured claim: a resident
       // array broadcast keeps the verify map-side where the over-gate
       // shuffle fallback ships arrays per pair (output-pairs x
       // array-bytes of exchange — ~350 GB at the 100x point).
@@ -234,17 +233,19 @@ object BenchScale {
         sampler.setDaemon(true)
         try {
           var rows = 0L
+          var batches = -1
           val usable0 = scratchDir.getUsableSpace
           sampler.start()
           val secs = (1 to reps).map { _ =>
             val t0 = System.nanoTime()
-            rows = graft.operators.Dedup
-              .containmentDupPairs(corpus, "doc_id", "text", 0.9).count()
+            val run = graft.operators.Dedup
+              .containmentDupPairsRun(corpus, "doc_id", "text", 0.9)
+            rows = run.pairs.count()
+            batches = run.batches
             (System.nanoTime() - t0) / 1e9
           }
           sampling = false
           val peak = math.max(0L, usable0 - minUsable)
-          val batches = graft.operators.Dedup.lastContainmentBatches
           entries += s""""containment_batched":[${secs.map(fmt).mkString(",")}]"""
           entries += s""""containment_batched_rows":$rows"""
           entries += s""""containment_batched_k":$batches"""
@@ -388,10 +389,11 @@ object BenchScale {
       // engine (at sf0.1 the default 1 M gate would solve this graph on
       // the single-task micro path and the curve would compare engines,
       // not scales)
-      nodes = graft.operators.Dedup
-        .connectedComponents(pairs, maxIterations = 30,
-          microGraphMaxEdges = 1000L).count()
-      rounds = graft.operators.Dedup.lastIterations
+      val cc = graft.operators.Dedup
+        .connectedComponentsRun(pairs, maxIterations = 30,
+          microGraphMaxEdges = 1000L)
+      nodes = cc.labels.count()
+      rounds = cc.rounds
       (System.nanoTime() - t0) / 1e9
     }
     // symmetric edge count = 2 * pairs = 2 * 3/4 * nodes

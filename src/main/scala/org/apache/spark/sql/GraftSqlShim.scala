@@ -11,6 +11,18 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 
+  /** A new session sharing `spark`'s SparkContext and cached data, with
+    * a COPY of its confs, temp views, functions and planner rules
+    * (`cloneSession` is `private[sql]`), then `pins` set on the copy: a
+    * private conf scope, so conf pins on the clone never reach `spark`
+    * or a concurrent query. */
+  def cloneSession(spark: SparkSession,
+      pins: (String, String)*): SparkSession = {
+    val clone = spark.asInstanceOf[CSparkSession].cloneSession()
+    pins.foreach { case (k, v) => clone.sessionState.conf.setConfString(k, v) }
+    clone
+  }
+
   /** Eagerly convert a Column to a Catalyst Expression via the session's
     * converter (ExpressionUtils.expression returns a lazy placeholder that
     * only resolves during analysis). */

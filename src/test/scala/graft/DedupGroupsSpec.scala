@@ -80,9 +80,9 @@ class DedupGroupsSpec extends SparkTestBase {
           maxIterations = 1, microGraphMaxEdges = 10L)
         .collect()
     }
-    assert(ex.getMessage.contains("did not converge"))
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
+    // only the star engine has a round budget, and it names itself
+    assert(ex.getMessage.contains("star rounds did not converge"),
+      ex.getMessage)
   }
 
   test("checkpointed edge list keeps its src partitioning (no re-shuffle)") {
@@ -184,31 +184,32 @@ class DedupGroupsSpec extends SparkTestBase {
     // phases engage; the contraction forest (~one row per node, ~4000)
     // clears the stall guard AND the post-contraction micro threshold
     // (4x1500), so zero star rounds run
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         localChains.toDF("id1", "id2"), microGraphMaxEdges = 1500L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for (k <- 0L until 80L; i <- 0L to 49L)
       yield (k * 1000 + i) -> (k * 1000)).toMap
     assert(labels == expected)
-    assert(Dedup.lastIterations == 0,
-      s"expected micro resolution, ran ${Dedup.lastIterations} rounds")
-    assert(Dedup.lastForestEdges > 0 && Dedup.lastForestEdges < 7840 * 0.7,
-      s"forest ${Dedup.lastForestEdges} rows did not contract")
+    assert(run.rounds == 0,
+      s"expected micro resolution, ran ${run.rounds} rounds")
+    assert(run.forestEdges > 0 && run.forestEdges < 7840 * 0.7,
+      s"forest ${run.forestEdges} rows did not contract")
   }
 
   test("contracted graph above the micro threshold still loops correctly") {
     // microGraphMaxEdges=0 disables the micro path entirely (both gates):
     // star rounds run over the contracted forest and must agree
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         localChains.toDF("id1", "id2"), microGraphMaxEdges = 0L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for (k <- 0L until 80L; i <- 0L to 49L)
       yield (k * 1000 + i) -> (k * 1000)).toMap
     assert(labels == expected)
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
-    assert(Dedup.lastIterations > 0, "star rounds did not run")
-    assert(Dedup.lastForestEdges > 0, "contraction pass did not run")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
+    assert(run.rounds > 0, "star rounds did not run")
+    assert(run.forestEdges > 0, "contraction pass did not run")
   }
 
   test("non-id-local graph falls back to star rounds and stays correct") {
@@ -227,30 +228,30 @@ class DedupGroupsSpec extends SparkTestBase {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = parent.keys.map(k => k -> find(k)).toMap
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         pairs.toDF("id1", "id2"), microGraphMaxEdges = 100L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == expected)
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
-    assert(Dedup.lastIterations > 0, "star rounds did not run")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
+    assert(run.rounds > 0, "star rounds did not run")
   }
 
   test("stall probe: clearly non-local numeric graph skips the " +
        "contraction pass entirely") {
     // every edge spans half the id range (median diff = 2x the
     // 4-partition width) — the probe must route to star WITHOUT
-    // running contraction (lastForestEdges stays -1)
+    // running contraction (forestEdges stays -1)
     val pairs = (0L until 2000L).map(i => (i, i + 1000000L))
-    val labels = Dedup.connectedComponents(pairs.toDF("id1", "id2"),
+    val run = Dedup.connectedComponentsRun(pairs.toDF("id1", "id2"),
         microGraphMaxEdges = 100L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == pairs.flatMap { case (a, b) =>
       Seq(a -> a, b -> a) }.toMap)
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
-    assert(Dedup.lastForestEdges == -1L,
-      s"contraction ran (forest=${Dedup.lastForestEdges}) despite the probe")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
+    assert(run.forestEdges == -1L,
+      s"contraction ran (forest=${run.forestEdges}) despite the probe")
   }
 
   test("stall probe: id-local graph still takes the contraction path") {
@@ -258,13 +259,14 @@ class DedupGroupsSpec extends SparkTestBase {
     // contraction pass runs and its forest resolves downstream
     val chains = for (k <- 0L until 40L; i <- 0L until 49L)
       yield (k * 1000 + i, k * 1000 + i + 1)
-    val labels = Dedup.connectedComponents(chains.toDF("id1", "id2"),
+    val run = Dedup.connectedComponentsRun(chains.toDF("id1", "id2"),
         microGraphMaxEdges = 100L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for (k <- 0L until 40L; i <- 0L to 49L)
       yield (k * 1000 + i) -> (k * 1000)).toMap
     assert(labels == expected)
-    assert(Dedup.lastForestEdges > 0,
+    assert(run.forestEdges > 0,
       "contraction pass did not run on an id-local graph")
   }
 
@@ -309,18 +311,18 @@ class DedupGroupsSpec extends SparkTestBase {
     // loop would need on these ids.
     val pairs = for (k <- 0L until 8L; i <- 0L until 49L)
       yield (mix(k * 50 + i), mix(k * 50 + i + 1))
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         pairs.toDF("id1", "id2"), microGraphMaxEdges = 100L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expected = (for (k <- 0L until 8L) yield {
       val ids = (0L to 49L).map(i => mix(k * 50 + i))
       ids.map(_ -> ids.min)
     }).flatten.toMap
     assert(labels == expected)
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
-    assert(Dedup.lastIterations > 0 && Dedup.lastIterations <= 12,
-      s"star rounds not O(log d): ${Dedup.lastIterations} rounds for diameter 49")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
+    assert(run.rounds > 0 && run.rounds <= 12,
+      s"star rounds not O(log d): ${run.rounds} rounds for diameter 49")
   }
 
   test("string ids survive the star engine with SQL min semantics") {
@@ -328,12 +330,12 @@ class DedupGroupsSpec extends SparkTestBase {
     // run over a non-primitive type; group id = lexicographic min
     val ids = (0 until 80).map(i => f"${mix(i.toLong)}%016x")
     val pairs = (0 until 79).map(i => (ids(i), ids(i + 1)))
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         pairs.toDF("id1", "id2"), microGraphMaxEdges = 10L)
+    val labels = run.labels
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels == ids.map(_ -> ids.min).toMap)
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
     // the micro path agrees on the identical input
     val micro = Dedup.connectedComponents(pairs.toDF("id1", "id2"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
@@ -346,11 +348,11 @@ class DedupGroupsSpec extends SparkTestBase {
     val chain = (0 until 40).map(i => (mix(i.toLong), mix(i.toLong + 1)))
     val lone = mix(9999L)
     val pairs = chain :+ (lone, lone)
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         pairs.toDF("id1", "id2"), microGraphMaxEdges = 10L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
     assert(labels(lone) == lone)
     val chainIds = (0L to 40L).map(mix)
     assert(chainIds.forall(id => labels(id) == chainIds.min))
@@ -359,19 +361,20 @@ class DedupGroupsSpec extends SparkTestBase {
   test("star loop restores spark.sql.adaptive.enabled after big-graph rounds") {
     val before = spark.conf.get("spark.sql.adaptive.enabled")
     val partsBefore = spark.conf.get("spark.sql.shuffle.partitions")
-    // 640k symmetric edges: over the big-graph gate, so the loop pins
-    // AQE off (and the shuffle-partition width down to the round's
-    // explicit-N density) for its rounds and must restore both on exit.
+    // 640k symmetric edges: over the big-graph gate, so the rounds run
+    // in a loop session with AQE off (and the shuffle-partition width
+    // down to the round's explicit-N density); the caller's session
+    // must not see either pin, and the labels come back on it.
     // Scrambled disjoint 2-chains — stall probe routes to star,
     // converges fast.
     val pairs = spark.range(0, 320000)
       .select(xxhash64(col("id") * 2).as("id1"),
         xxhash64(col("id") * 2 + 1).as("id2"))
-    val n = Dedup.connectedComponents(pairs, microGraphMaxEdges = 1000L)
-      .count()
-    assert(n == 640000L)
-    assert(Dedup.lastEngine == "star",
-      s"expected the star engine, got ${Dedup.lastEngine}")
+    val run = Dedup.connectedComponentsRun(pairs, microGraphMaxEdges = 1000L)
+    assert(run.labels.sparkSession eq spark,
+      "star loop returned labels bound to its loop session")
+    assert(run.labels.count() == 640000L)
+    assert(run.engine == "star", s"expected the star engine, got ${run.engine}")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == before,
       "star loop leaked its AQE pin")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == partsBefore,
@@ -409,11 +412,11 @@ class DedupGroupsSpec extends SparkTestBase {
     spark.conf.set("graft.debug.assertLayout", "true")
     try {
       val pairs = (0 until 500).map(i => (mix(i.toLong), mix(i.toLong + 1)))
-      val labels = Dedup.connectedComponents(
+      val run = Dedup.connectedComponentsRun(
           pairs.toDF("id1", "id2"), microGraphMaxEdges = 10L)
+      val labels = run.labels
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Dedup.lastEngine == "star",
-        s"expected star engine, got ${Dedup.lastEngine}")
+      assert(run.engine == "star", s"expected star engine, got ${run.engine}")
       val ids = (0L to 500L).map(mix)
       assert(labels == ids.map(_ -> ids.min).toMap)
     } finally spark.conf.unset("graft.debug.assertLayout")
@@ -437,15 +440,15 @@ class DedupGroupsSpec extends SparkTestBase {
       val pairs = nodes.where(col("j") > 0)
         .select(xxhash64(col("e") * L + col("j") - 1).as("id1"),
           col("node").as("id2"))
-      val labels = Dedup.connectedComponents(pairs,
+      val run = Dedup.connectedComponentsRun(pairs,
         microGraphMaxEdges = 10L)
+      val labels = run.labels
       val expected = nodes.groupBy("e").agg(min("node").as("exp"))
       val bad = labels.join(
           nodes.join(expected, "e")
             .select(col("node").as("id"), col("exp")), "id")
         .where(col("group_id") =!= col("exp")).count()
-      assert(Dedup.lastEngine == "star",
-        s"expected star engine, got ${Dedup.lastEngine}")
+      assert(run.engine == "star", s"expected star engine, got ${run.engine}")
       assert(bad == 0L, s"$bad nodes labeled off the chain minimum")
       assert(labels.count() == 420000L)
     } finally spark.conf.unset("graft.debug.assertLayout")
@@ -467,11 +470,11 @@ class DedupGroupsSpec extends SparkTestBase {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expected = parent.keys.map(k => k -> find(k)).toMap
-    val labels = Dedup.connectedComponents(
+    val run = Dedup.connectedComponentsRun(
         pairs.toDF("id1", "id2"), microGraphMaxEdges = 10L)
+    val labels = run.labels
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Dedup.lastEngine == "star",
-      s"expected star engine, got ${Dedup.lastEngine}")
+    assert(run.engine == "star", s"expected star engine, got ${run.engine}")
     assert(labels == expected)
   }
 }
