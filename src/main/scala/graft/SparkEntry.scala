@@ -397,66 +397,57 @@ object SparkEntry {
   private val ivfLayouts = new java.util.concurrent.ConcurrentHashMap[
     String, (String, Array[Array[Float]])]()
 
-  /** Write-once ORC copy of `documents` per (app, sfDir) — the ORC
-    * source/sink coverage twin of the parquet surface (Spark's ORC
-    * reader carries the same pushdown/pruning machinery; the q91 scan
-    * is asserted to read only the two projected columns). */
-  private val orcLayouts =
+  /** Write-once path layouts, one per (kind, app, sfDir): `write`
+    * fills `graft_<kind>_<app>_<hash>` under java.io.tmpdir the first
+    * time a kind is asked for in this JVM, and a shutdown hook deletes
+    * it at exit. The path stays applicationId-keyed so concurrent runs
+    * against the same sfDir never overwrite each other's layout
+    * mid-scan. */
+  private val pathLayouts =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[graft] def orcLayoutFor(s: SparkSession, dir: String): String =
-    orcLayouts.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
+  private def pathLayoutFor(kind: String, s: SparkSession, dir: String)(
+      write: String => Unit): String = {
+    val app = s.sparkContext.applicationId
+    pathLayouts.computeIfAbsent(s"$kind|$app|$dir", _ => {
       val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orc_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(dir.hashCode)).getPath
-      Tables.load(s, dir, "documents")
-        .select("doc_id", "source", "n_chars")
-        .write.mode("overwrite").orc(path)
+        s"graft_${kind}_${app}_" + Integer.toHexString(dir.hashCode)).getPath
+      write(path)
       sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
       path
     })
+  }
+
+  /** Write-once ORC copy of `documents` — the ORC source/sink coverage
+    * twin of the parquet surface (Spark's ORC reader carries the same
+    * pushdown/pruning machinery; the q91 scan is asserted to read only
+    * the two projected columns). */
+  private[graft] def orcLayoutFor(s: SparkSession, dir: String): String =
+    pathLayoutFor("orc", s, dir)(path => Tables.load(s, dir, "documents")
+      .select("doc_id", "source", "n_chars")
+      .write.mode("overwrite").orc(path))
 
   /** Write-once JSONL (newline-delimited JSON text) layout of
-    * `documents` per (app, sfDir) — the interchange format LLM corpora
-    * actually ship in (one JSON object per line). Spark's json source
-    * reads it splittable-parallel; the q101 scan passes an EXPLICIT
-    * schema so the read is single-pass (schema inference would scan
-    * the data twice at 100 TB). */
-  private val jsonlLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * `documents` — the interchange format LLM corpora actually ship in
+    * (one JSON object per line). Spark's json source reads it
+    * splittable-parallel; the q101 scan passes an EXPLICIT schema so
+    * the read is single-pass (schema inference would scan the data
+    * twice at 100 TB). */
   private[graft] def jsonlLayoutFor(s: SparkSession, dir: String): String =
-    jsonlLayouts.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_jsonl_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(dir.hashCode)).getPath
-      Tables.load(s, dir, "documents")
-        .select("doc_id", "text", "lang", "source", "n_chars")
-        .write.mode("overwrite").json(path)
-      sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
-      path
-    })
+    pathLayoutFor("jsonl", s, dir)(path => Tables.load(s, dir, "documents")
+      .select("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").json(path))
 
-  /** Write-once DAY-partitioned parquet layout of `events` per (app,
-    * sfDir) — the standard time-partitioned lake layout at ingest
-    * scale: `.partitionBy(day)` makes the day a directory key, so a
+  /** Write-once DAY-partitioned parquet layout of `events` — the
+    * standard time-partitioned lake layout at ingest scale:
+    * `.partitionBy(day)` makes the day a directory key, so a
     * day-bounded query prunes to that directory's files at PLANNING
     * time (PartitionFilters, before any file is opened) instead of
     * scanning the full history. */
-  private val dayLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def dayLayoutFor(s: SparkSession, dir: String): String =
-    dayLayouts.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_day_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(dir.hashCode)).getPath
-      Tables.load(s, dir, "events")
-        .withColumn("day", to_date(col("ts")))
-        .write.mode("overwrite").partitionBy("day").parquet(path)
-      sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
-      path
-    })
+    pathLayoutFor("day", s, dir)(path => Tables.load(s, dir, "events")
+      .withColumn("day", to_date(col("ts")))
+      .write.mode("overwrite").partitionBy("day").parquet(path))
 
   /** Write-once BUCKETED orders/customer tables per (app, sfDir) — the
     * co-located-join layout: both sides hash-bucketed (and sorted) on
@@ -499,24 +490,16 @@ object SparkEntry {
     * post-ingest shape q117's compaction repairs: 8 small files per
     * day directory (a streaming sink writes one file per
     * trigger × partition; the fragmentation is the realistic input,
-    * not an artifact). */
-  private val fragmentedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * not an artifact). q117 writes its compacted copy next to it. */
   private[graft] def fragmentedLayoutFor(s: SparkSession, dir: String): String =
-    fragmentedLayouts.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_frag_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(dir.hashCode)).getPath
+    pathLayoutFor("frag", s, dir) { path =>
       Tables.load(s, dir, "events")
         .withColumn("day", to_date(col("ts")))
         .repartition(8)
         .write.mode("overwrite").partitionBy("day").parquet(path)
-      sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
       sys.addShutdownHook(
         deleteRecursively(new java.io.File(s"$path.compacted")))
-      path
-    })
+    }
 
   /** Write-once Z-ORDERED layout of `events`: rows clustered by the
     * bit-interleave of (user_id % 1024, day-of-month), so row-group
@@ -524,14 +507,8 @@ object SparkEntry {
     * prunes groups — what the q106 1-D sort cannot give a second
     * dimension. The clustering key is write-time only; the stored
     * columns the query filters are the raw `ux`/`dom`. */
-  private val zLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def zLayoutFor(s: SparkSession, dir: String): String =
-    zLayouts.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_z_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(dir.hashCode)).getPath
+    pathLayoutFor("z", s, dir) { path =>
       val ev = Tables.load(s, dir, "events")
         .withColumn("ux", (col("user_id") % 1024).cast("int"))
         .withColumn("dom", dayofmonth(col("ts")))
@@ -543,9 +520,7 @@ object SparkEntry {
         .write.mode("overwrite")
         .option("parquet.block.size", (64 * 1024).toString)
         .parquet(path)
-      sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
-      path
-    })
+    }
 
   /** Write-once SORTED parquet layout of `documents` (globally ordered
     * by `n_chars`, small row groups): the data-clustering layout that
@@ -560,23 +535,13 @@ object SparkEntry {
     * `repartitionByRange(1, ...)` globally orders the single test file;
     * at scale use N range partitions — ordering stays global across
     * files and file-level stats prune whole files the same way. */
-  private val sortedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def sortedLayoutFor(s: SparkSession, dir: String): String =
-    sortedLayouts.computeIfAbsent(s.sparkContext.applicationId + "|" + dir, _ => {
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_sorted_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(dir.hashCode)).getPath
-      Tables.load(s, dir, "documents")
-        .repartitionByRange(1, col("n_chars"))
-        .sortWithinPartitions("n_chars")
-        .write.mode("overwrite")
-        .option("parquet.block.size", (64 * 1024).toString)
-        .parquet(path)
-      sys.addShutdownHook(deleteRecursively(new java.io.File(path)))
-      path
-    })
+    pathLayoutFor("sorted", s, dir)(path => Tables.load(s, dir, "documents")
+      .repartitionByRange(1, col("n_chars"))
+      .sortWithinPartitions("n_chars")
+      .write.mode("overwrite")
+      .option("parquet.block.size", (64 * 1024).toString)
+      .parquet(path))
 
   private[graft] def ivfLayoutFor(s: SparkSession,
       dir: String): (String, Array[Array[Float]]) =
@@ -1826,22 +1791,6 @@ object SparkEntry {
       val c = dupCorpus(s, dir, near = false)
       verifyByEquality(Dedup.lshCandidatePairs(c, "doc_id", "text",
         maxBucketSize = 64), c) }),
-    // q127's composed curation report with the near-dup stage's
-    // oversized-bucket guard armed in AUTO-CAP mode: the cap comes
-    // from the measured bucket profile (largest size whose cumulative
-    // candidate volume fits a 1 M-candidate budget, floored by the
-    // 64 constant) instead of a caller guess. On this corpus every
-    // dup bucket sits far under both bounds, so the report is
-    // identical to q127's and the full replay oracle pins that the
-    // armed guard changes nothing — while at the 100x GenScale point
-    // the same budget collapses the report's dominant near-dup term
-    // from the family quadratic back to corpus-linear (SCALE_r13).
-    "q138_curation_capped" -> ((s, dir) => {
-      val c = dupCorpus(s, dir, near = true)
-      graft.operators.Curation.curationReport(c, "doc_id", "text",
-        langs = Seq("en"), minQuality = 0.55,
-        nearThreshold = 0.95, containThreshold = 0.9,
-        lshMaxBucketSize = 64, lshCandidateBudget = 1000000L) }),
     // per-doc shingle novelty: fraction of a doc's distinct 3-gram
     // shingles with corpus df = 1 (singleton ownership via min(doc_id)
     // — no join back to the exploded rows); the diversity-weighting
@@ -3482,7 +3431,6 @@ object SparkEntry {
       "q122_containment" -> containmentOracle,
       "q123_containment_dedup" -> containmentDedupOracle,
       "q127_curation_report" -> curationReportOracle,
-      "q138_curation_capped" -> curationReportOracle,
       // q136: q62's split CASE over the near corpus + q134's unordered
       // pair counts on the split label — same LSH recall precondition
       "q136_split_leakage" ->

@@ -19,7 +19,13 @@ import org.apache.spark.sql.functions._
  *   2. `quality`   — composite quality score below `minQuality`
  *   3. `near_dup`  — non-canonical member of a >= `nearThreshold`
  *                    Jaccard duplicate group (lowest id survives),
- *                    groups computed among stage-1/2 survivors only
+ *                    groups computed among stage-1/2 survivors only:
+ *                    [[Dedup.minhashDupPairs]] (uncapped MinHash-LSH
+ *                    candidates, exact Jaccard verify) feeding
+ *                    [[Dedup.connectedComponents]]. Byte-equal texts
+ *                    share a signature, so they collide in every band
+ *                    and verify at 1.0 (empty texts too: ∅ vs ∅ is
+ *                    1.0) — every byte-equal family collapses here
  *   4. `contained` — shingle-subset of another stage-3 survivor
  *                    ([[Dedup.removeContained]] rule: mutual classes
  *                    keep the lower id)
@@ -31,53 +37,24 @@ import org.apache.spark.sql.functions._
  *                    masks as an eval hit
  *
  * Scale shape: each stage reuses the already-proven operator (compiled
- * text kernels map-side; LSH-bucketed near-dup; bottom-k-sketch
+ * text kernels map-side; one LSH-bucketed near-dup pass; bottom-k-sketch
  * containment); the dedup stages run on the gate SURVIVORS only, so
  * low-quality bulk never reaches a shuffle; the report join brings
  * back only 9-to-17-byte loser rows.
  */
 object Curation {
 
-  /** `lshMaxBucketSize` arms [[Dedup.lshCandidatePairs]]'s
-    * oversized-bucket guard inside the near-dup stage. The composed
-    * pipeline inherits LSH's one quadratic term: a corpus whose largest
-    * dup family has m members emits C(m,2) candidates per band, and
-    * each candidate then pays the Jaccard-verify join — measured at the
-    * 100x GenScale point (100-member families), the UNCAPPED near-dup
-    * stage dominates the whole report's wall. Capped runs skip buckets
-    * over the limit — but BYTE-EQUAL family members still collapse,
-    * because exact-duplicate star edges ([[Dedup.exactDupStars]],
-    * corpus-linear) always ride along with the LSH pairs; the recall
-    * cost falls only on NON-exact near-dup pairs hidden inside
-    * oversized buckets in every band. Every other stage is unchanged.
-    * Default off.
-    *
-    * `lshCandidateBudget` is the AUTO-CAP mode: when > 0, the cap is
-    * picked from the measured bucket profile of the gated corpus
-    * ([[Dedup.lshAutoCap]] — the largest size whose cumulative
-    * candidate volume fits the budget) instead of requiring the caller
-    * to know the family-size distribution in advance; the effective
-    * cap is `min(lshMaxBucketSize, autoCap)`. Costs one extra profile
-    * aggregation over the gate survivors. Default off.
-    *
-    * When to arm it: for SURVIVAL, not small-decade speed. In the
-    * composed report, families the cap skips that are NOT byte-equal
-    * (the exact-star edges collapse byte-equal ones linearly) defer to
-    * the containment stage, whose guarded per-family work can cost
-    * more than the skipped LSH verify at decades where the uncapped
-    * verify still completes (measured r16 at 100x GenScale, whose
-    * copies are deliberately suffix-perturbed: capped 496-546 s vs
-    * uncapped 344 s cold). The cap's value is at the decades where
-    * C(m,2) makes the uncapped stage not complete at all. */
+  /** One row per input document: `doc_id`, `reason` (the first failing
+    * stage, NULL for a keeper) and `keep`. A `nearThreshold` (or, with
+    * an eval corpus, a `decontaminationThreshold`) outside (0,1] is
+    * rejected with an IllegalArgumentException. */
   def curationReport(docs: DataFrame, idCol: String, textCol: String,
       langs: Seq[String] = Seq("en"), minQuality: Double = 0.5,
       nearThreshold: Double = 0.8,
       containThreshold: Double = 0.9,
       evalDocs: Option[DataFrame] = None,
       evalIdCol: String = "doc_id", evalTextCol: String = "text",
-      decontaminationThreshold: Double = 0.8,
-      lshMaxBucketSize: Int = Int.MaxValue,
-      lshCandidateBudget: Long = 0L): DataFrame = {
+      decontaminationThreshold: Double = 0.8): DataFrame = {
     require(langs.nonEmpty, "curationReport needs a language allow-list")
     // materialization rule (same as the containment shingle frame):
     // `base` feeds the near-dup pipeline, the containment pipeline and
@@ -97,45 +74,8 @@ object Curation {
       .localCheckpoint()
     val gated = base.where(col("lang_ok") && col("quality_ok"))
       .select("doc_id", "text")
-    // auto-cap mode rides ONE banding pass ([[Dedup
-    // .minhashDupPairsBudgeted]]): lshAutoCap-then-minhashDupPairs ran
-    // the shingle+MinHash+banding pipeline twice over the gate
-    // survivors, and at the 100x GenScale decade the second pass cost
-    // more than the cap saved (q138 393.5 s vs q127 345.9 s, r15
-    // SCALE). The effective cap and emitted pairs are identical.
-    // exact-duplicate STAR edges ride along at corpus-LINEAR cost
-    // ([[Dedup.exactDupStars]]): byte-equal copies are Jaccard 1 —
-    // members of a >= nearThreshold dup group BY DEFINITION — and at
-    // scale they are exactly what oversized LSH buckets are made of.
-    // Under an armed cap the LSH stage skips those buckets, and
-    // without this union the pipeline paid the saved quadratic back
-    // downstream: measured at the 100x GenScale decade (r16 probe),
-    // the capped report left 2.6x survivors into the containment
-    // stage, which then found 12x the pairs and cost MORE than the
-    // uncapped report (q138 531 s vs q127 344 s). With the stars, the
-    // cap's documented recall cost falls ONLY on non-exact near-dups
-    // hidden in skipped buckets. Uncapped runs are BIT-identical to
-    // the pre-star pipeline INCLUDING the zero-shingle corner (r16
-    // ADVICE asked whether empty/whitespace byte-equal docs — shingle
-    // set ∅ — were newly linked by the stars): they are near-dups in
-    // BOTH pipelines, because [[Dedup.jaccard]] defines the
-    // empty-union Jaccard as 1.0 (∅ = ∅ exactly) and empty docs share
-    // the all-sentinel MinHash signature, so the uncapped LSH stage
-    // already buckets and verifies them. The stars therefore PRESERVE
-    // that semantics under an armed cap (where the shared-signature
-    // bucket is exactly the kind the cap skips) — filtering
-    // zero-shingle texts out of the stars would create the divergence
-    // it was meant to prevent. Pinned by the zero-shingle parity spec.
-    val exactStars = Dedup.exactDupStars(gated, "doc_id", "text")
-    val nearPairs = (if (lshCandidateBudget <= 0L)
-        Dedup.minhashDupPairs(gated, "doc_id", "text", nearThreshold,
-          maxBucketSize = lshMaxBucketSize)
-      else
-        Dedup.minhashDupPairsBudgeted(gated, "doc_id", "text",
-          nearThreshold, maxBucketSize = lshMaxBucketSize,
-          candidateBudget = lshCandidateBudget))
-      .select(col("id1"), col("id2"))
-      .unionByName(exactStars)
+    val nearPairs = Dedup.minhashDupPairs(gated, "doc_id", "text",
+      nearThreshold).select(col("id1"), col("id2"))
     val nearLosers = Dedup.connectedComponents(nearPairs)
       .where(col("id") =!= col("group_id"))
       .select(col("id").as("doc_id"), lit(true).as("near_loser"))
@@ -185,12 +125,10 @@ object Curation {
       containThreshold: Double = 0.9,
       evalDocs: Option[DataFrame] = None,
       evalIdCol: String = "doc_id", evalTextCol: String = "text",
-      decontaminationThreshold: Double = 0.8,
-      lshMaxBucketSize: Int = Int.MaxValue,
-      lshCandidateBudget: Long = 0L): DataFrame = {
+      decontaminationThreshold: Double = 0.8): DataFrame = {
     val keepers = curationReport(docs, idCol, textCol, langs, minQuality,
       nearThreshold, containThreshold, evalDocs, evalIdCol, evalTextCol,
-      decontaminationThreshold, lshMaxBucketSize, lshCandidateBudget)
+      decontaminationThreshold)
       .where(col("keep")).select(col("doc_id").as("graft_keep_id"))
     docs.join(keepers, docs(idCol) === col("graft_keep_id"), "left_semi")
   }

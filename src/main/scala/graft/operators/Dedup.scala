@@ -104,132 +104,25 @@ object Dedup {
    * argument for suffix-cluster expansion). The filter runs on the
    * already-aggregated bucket rows, so it adds ZERO exchanges; default
    * Int.MaxValue = off.
+   *
+   * NULL texts are dropped before banding: they all share one
+   * signature, so a corpus with many NULL rows would put them ALL in
+   * the same bucket per band and detonate the quadratic within-bucket
+   * expansion.
    */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = Int.MaxValue): DataFrame =
-    bucketPairs(lshBucketsFrame(docs, idCol, textCol, shingleSize,
-      numHashes, bands).where(size(col("ids")) <= maxBucketSize))
-
-  /** The shared banding pass: one multi-member bucket row per (band,
-    * bucket) with its id list. NULL texts out before banding: they all
-    * share one signature, so a corpus with many NULL rows would put
-    * them ALL in the same bucket per band and detonate the quadratic
-    * within-bucket expansion. */
-  private def lshBucketsFrame(docs: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int, numHashes: Int,
-      bands: Int): DataFrame = {
+      maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val sig = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
         minhashSignatureFromHashes(shingleHashes(col(textCol), shingleSize),
           numHashes).as("sig"))
-    sig.select(col("id"),
+    bucketPairs(sig.select(col("id"),
         explode(lshBands(col("sig"), numHashes, bands)).as("b"))
       .select(col("id"), col("b.band").as("band"), col("b.bucket").as("bucket"))
       .groupBy("band", "bucket")
       .agg(collect_list("id").as("ids"))
-      .where(size(col("ids")) > 1)
-  }
-
-  /** Bucket-size profile of the MinHash-LSH banding over `docs`: one row
-    * per bucket size with the bucket count at that size — the sizing
-    * input for [[lshCandidatePairs]]'s `maxBucketSize` guard (pick the
-    * cap just above the knee; candidate volume is Σ count·C(size,2)).
-    * Same banding pipeline as the candidate path up to the bucket
-    * aggregate, then collapses to ≤ |distinct sizes| rows map-side —
-    * the profile never materializes a single candidate pair. */
-  def lshBucketProfile(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, numHashes: Int = 64,
-      bands: Int = 16): DataFrame = {
-    val sig = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        minhashSignatureFromHashes(shingleHashes(col(textCol), shingleSize),
-          numHashes).as("sig"))
-    sig.select(col("id"),
-        explode(lshBands(col("sig"), numHashes, bands)).as("b"))
-      .groupBy(col("b.band").as("band"), col("b.bucket").as("bucket"))
-      .agg(count(lit(1)).as("sz"))
-      .groupBy(col("sz").as("bucket_size"))
-      .agg(count(lit(1)).as("buckets"))
-  }
-
-  /** Pick [[lshCandidatePairs]]'s `maxBucketSize` from the measured
-    * bucket profile instead of a caller constant: the largest bucket
-    * size whose CUMULATIVE candidate volume (Σ buckets·C(size,2) over
-    * all sizes up to it, ascending) stays within `candidateBudget`.
-    * Buckets above the returned cap are exactly the ones past the
-    * profile's knee — the quadratic dup-family tail — so the armed
-    * guard bounds verify-join input at the budget while keeping every
-    * bucket the budget can afford. Returns 1 (skip every multi-doc
-    * bucket) when even the size-2 buckets exceed the budget, and
-    * caps at Int.MaxValue. Cost: one extra profile aggregation; the
-    * collect is ≤ |distinct bucket sizes| rows (a few dozen), the same
-    * driver-side footprint class as the documented centroid sample.
-    * Deterministic — the profile is a pure function of the corpus. */
-  def lshAutoCap(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      candidateBudget: Long = 10L * 1000 * 1000): Int = {
-    require(candidateBudget > 0,
-      s"candidateBudget must be positive (got $candidateBudget)")
-    val prof = lshBucketProfile(docs, idCol, textCol, shingleSize,
-        numHashes, bands)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    capFromProfile(prof, candidateBudget)
-  }
-
-  /** The prefix-budget cap rule shared by [[lshAutoCap]] and the
-    * single-pass [[minhashDupPairsBudgeted]]: stop at the FIRST size
-    * past the budget — the cap is a prefix rule (every bucket ≤ cap is
-    * admitted), so a later size fitting the leftover budget could not
-    * be admitted without the blown one. */
-  private def capFromProfile(prof: Array[(Long, Long)],
-      candidateBudget: Long): Int = {
-    var cum = 0L
-    var cap = 1L
-    val it = prof.iterator
-    var stopped = false
-    while (it.hasNext && !stopped) {
-      val (size, buckets) = it.next()
-      val vol = buckets * (size * (size - 1) / 2)
-      if (vol < 0 || cum + vol < 0 || cum + vol > candidateBudget)
-        stopped = true
-      else { cum += vol; cap = size }
-    }
-    math.min(cap, Int.MaxValue.toLong).toInt
-  }
-
-  /** [[minhashDupPairs]] with the cap picked by [[lshAutoCap]]'s budget
-    * rule from the SAME banding pass — the capped-curation fix (r15
-    * verdict #4): calling `lshAutoCap` then `minhashDupPairs` runs the
-    * shingle+MinHash+banding pipeline TWICE over the corpus, and at the
-    * 100x GenScale decade that second pass cost MORE than the cap saved
-    * (q138 393.5 s vs q127 uncapped 345.9 s — the cap's insurance
-    * premium inverted). Here the multi-member bucket frame is built
-    * once and checkpointed (its rows are (band, bucket, ids) — ~bands
-    * id entries per doc, no text), the profile collapses from it
-    * (≤ |distinct sizes| driver rows, the lshAutoCap footprint class),
-    * and the candidate expansion reads the same checkpointed frame with
-    * the cap applied. The effective cap and the emitted pairs are
-    * EXACTLY what the two-pass form produces — same profile, same
-    * prefix rule, same bucket filter — so oracles are unchanged. */
-  def minhashDupPairsBudgeted(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double, shingleSize: Int = 3,
-      numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = Int.MaxValue,
-      candidateBudget: Long): DataFrame = {
-    require(candidateBudget > 0,
-      s"candidateBudget must be positive (got $candidateBudget)")
-    val buckets = lshBucketsFrame(docs, idCol, textCol, shingleSize,
-      numHashes, bands).localCheckpoint()
-    val prof = buckets
-      .groupBy(size(col("ids")).cast("long").as("bucket_size"))
-      .agg(count(lit(1)).as("buckets"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1)
-    val cap = math.min(maxBucketSize, capFromProfile(prof, candidateBudget))
-    val cands = bucketPairs(buckets.where(size(col("ids")) <= cap))
-    verifyJaccardPairs(docs, idCol, textCol, threshold, shingleSize, cands)
+      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucketSize))
   }
 
   /** Within-bucket candidate expansion shared by the MinHash and SRP
@@ -263,10 +156,12 @@ object Dedup {
    */
   def minhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3, numHashes: Int = 64,
-      bands: Int = 16, maxBucketSize: Int = Int.MaxValue): DataFrame =
+      bands: Int = 16): DataFrame = {
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must be in (0,1] (got $threshold)")
     verifyJaccardPairs(docs, idCol, textCol, threshold, shingleSize,
-      lshCandidatePairs(docs, idCol, textCol, shingleSize,
-        numHashes, bands, maxBucketSize))
+      lshCandidatePairs(docs, idCol, textCol, shingleSize, numHashes, bands))
+  }
 
   /** Exact-Jaccard verification of candidate `(id1, id2)` pairs.
     * Jaccard over shingle-hash sets == Jaccard over shingle-string sets
@@ -380,6 +275,8 @@ object Dedup {
   def crossCorpusDupPairs(train: DataFrame, test: DataFrame, idCol: String,
       textCol: String, threshold: Double, shingleSize: Int = 3,
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must be in (0,1] (got $threshold)")
     def banded(docs: DataFrame, side: String): DataFrame =
       docs.where(col(textCol).isNotNull)
         .select(col(idCol).as(side),

@@ -46,10 +46,10 @@ object BenchScale {
     // replay of the stream-static interval join, and the bucketed
     // upsert store driven by the dir's full events table
     "q79_streaming_join", "q109_streaming_upsert",
-    // round-13: the oversized-bucket guard pair — same pipelines as
-    // q21/q127 with the cap armed; the 100x point is where the two
-    // curves separate (quadratic family candidates vs corpus-linear)
-    "q137_dedup_minhash_capped", "q138_curation_capped")
+    // round-13: the oversized-bucket guard — q21's candidate pipeline
+    // with the cap armed; the 100x point is where the two curves
+    // separate (quadratic family candidates vs corpus-linear)
+    "q137_dedup_minhash_capped")
 
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq

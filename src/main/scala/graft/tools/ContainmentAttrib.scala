@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *   opt-in: plans (prints the formatted plans of the candidate
   *   stream, its distinct and the pair-count aggregate, plus the raw
   *   candidate row count)
-  * Corpus: the q138-shaped survivors (capped-LSH pipeline) — the same
-  * derivation as CurationColdProbe, checkpointed once untimed.
+  * Corpus: the q127-shaped survivors (uncapped LSH near-dup stage) —
+  * the same derivation as CurationColdProbe, checkpointed once untimed.
   */
 object ContainmentAttrib {
   def main(args: Array[String]): Unit = {
@@ -96,8 +96,8 @@ object ContainmentAttrib {
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    // q138-shaped survivors (CurationColdProbe's capped-mode stages
-    // 1-5), checkpointed untimed
+    // q127-shaped survivors (CurationColdProbe's stages 1-4),
+    // checkpointed untimed
     val docs = graft.Tables.load(spark, dir, "documents")
       .select("doc_id", "text")
     val exact = docs.where(col("doc_id") % 5 === 0)
@@ -112,11 +112,9 @@ object ContainmentAttrib {
       .localCheckpoint()
     val gated = base.where(col("lang_ok") && col("quality_ok"))
       .select("doc_id", "text")
-    val stars = Dedup.exactDupStars(gated, "doc_id", "text")
-    val near = Dedup.minhashDupPairsBudgeted(gated, "doc_id", "text", 0.95,
-      maxBucketSize = 64, candidateBudget = 1000000L)
+    val near = Dedup.minhashDupPairs(gated, "doc_id", "text", 0.95)
       .select("id1", "id2").localCheckpoint()
-    val losers = Dedup.connectedComponents(near.unionByName(stars))
+    val losers = Dedup.connectedComponents(near)
       .where(col("id") =!= col("group_id"))
       .select(col("id").as("doc_id")).localCheckpoint()
     val survivors = gated.join(losers, Seq("doc_id"), "left_anti")

@@ -21,13 +21,6 @@ object CurationColdProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/sf10")
     val passes = if (args.length > 1) args(1).toInt else 2
-    // "capped" switches stage 3 to q138's exact shape (budgeted
-    // single-pass banding, maxBucketSize=64, 1 M candidate budget) so
-    // the q138-vs-q127 premium gets a per-stage attribution instead of
-    // an end-to-end subtraction (r18: pre-touched sf10 reads q138
-    // 188.9 s vs q127 72.4 — WHERE the deferred-family cost lands is
-    // the question this mode answers)
-    val capped = args.length > 2 && args(2) == "capped"
     def loadavg: String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
         .split("\\s+").take(3).mkString(",")
@@ -121,40 +114,31 @@ object CurationColdProbe {
       }
       val gated = base.where(col("lang_ok") && col("quality_ok"))
         .select("doc_id", "text")
-      // stage 2: exact-dup star edges (fingerprint window)
-      val stars = timed("exact_stars") {
-        val s = ck(Dedup.exactDupStars(gated, "doc_id", "text"))
-        s.count(); s
-      }
-      // stage 3: MinHash banding + Jaccard verify — uncapped (q127) or
-      // q138's budgeted capped shape
+      // stage 2: MinHash banding + Jaccard verify (uncapped, as q127)
       val near = timed("lsh_verify") {
-        val pairs = if (capped)
-          Dedup.minhashDupPairsBudgeted(gated, "doc_id", "text", 0.95,
-            maxBucketSize = 64, candidateBudget = 1000000L)
-        else Dedup.minhashDupPairs(gated, "doc_id", "text", 0.95)
-        val n = ck(pairs.select("id1", "id2"))
+        val n = ck(Dedup.minhashDupPairs(gated, "doc_id", "text", 0.95)
+          .select("id1", "id2"))
         n.count(); n
       }
-      // stage 4: connected components over the near-dup graph
+      // stage 3: connected components over the near-dup graph
       val nearLosers = timed("cc") {
-        val l = ck(Dedup.connectedComponents(near.unionByName(stars))
+        val l = ck(Dedup.connectedComponents(near)
           .where(col("id") =!= col("group_id"))
           .select(col("id").as("doc_id")))
         l.count(); l
       }
-      // stage 5: survivor anti-join
+      // stage 4: survivor anti-join
       val survivors = timed("survivors") {
         val s = ck(gated.join(nearLosers, Seq("doc_id"), "left_anti"))
         s.count(); s
       }
-      // stage 6: containment (3-tier verify)
+      // stage 5: containment (3-tier verify)
       val contPairs = timed("containment") {
         val c = ck(Dedup.containmentDupPairs(survivors, "doc_id", "text",
           0.9))
         c.count(); c
       }
-      // stage 7: loser resolution + final report joins
+      // stage 6: loser resolution + final report joins
       // (containmentLosers is private[operators]; same rule inlined —
       // a (contained, container) row eliminates `contained` unless the
       // reverse row exists and contained has the lower id)
@@ -193,7 +177,7 @@ object CurationColdProbe {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     allPasses.zipWithIndex.foreach { case (s, i) =>
-      println(s"""{"metric":"curation_cold","pass":${i + 1},"capped":$capped,"stages":${js(s)},"total":${fmt(s.map(_._2).sum)},"dir":"$dir","loadavg_start":"$loadStart","loadavg_now":"$loadavg"}""")
+      println(s"""{"metric":"curation_cold","pass":${i + 1},"stages":${js(s)},"total":${fmt(s.map(_._2).sum)},"dir":"$dir","loadavg_start":"$loadStart","loadavg_now":"$loadavg"}""")
     }
     if (allPasses.size >= 2) {
       val cold = allPasses.head.toMap

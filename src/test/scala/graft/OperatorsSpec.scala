@@ -99,47 +99,6 @@ class OperatorsSpec extends SparkTestBase {
     val unbounded = Dedup.lshCandidatePairs(corpus, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(unbounded.size == 40 * 39 / 2 + 1)
-    // the profile the cap is sized from: bucket_size 40 and 2 present
-    val prof = Dedup.lshBucketProfile(corpus, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(prof.keySet == Set(40L, 2L), s"profile $prof")
-  }
-
-  test("lshAutoCap picks the cap at the profile knee") {
-    // planted distribution (same corpus as the capped test): 16 bands
-    // → 16 size-40 buckets (volume 16·C(40,2) = 12480 candidates) and
-    // 16 size-2 buckets (volume 16). The cap is the largest size whose
-    // cumulative volume fits the budget, walked ascending.
-    val family = spark.range(100, 140)
-      .select(col("id").as("doc_id"),
-        lit("the same boilerplate licence header text " +
-          "repeated across a mirrored corpus").as("text"))
-    val pairDocs = Seq(
-      (900L, "an unrelated document that appears exactly twice only"),
-      (901L, "an unrelated document that appears exactly twice only"))
-      .toDF("doc_id", "text")
-    val corpus = family.union(pairDocs)
-    // budget admits the size-2 tier (16) but not the size-40 tier
-    assert(Dedup.lshAutoCap(corpus, "doc_id", "text",
-      candidateBudget = 1000L) == 2)
-    // budget admits everything: cap rises to the max observed size
-    assert(Dedup.lshAutoCap(corpus, "doc_id", "text",
-      candidateBudget = 16L + 12480L) == 40)
-    // budget below even the size-2 tier: every multi-doc bucket skipped
-    assert(Dedup.lshAutoCap(corpus, "doc_id", "text",
-      candidateBudget = 5L) == 1)
-    intercept[IllegalArgumentException] {
-      Dedup.lshAutoCap(corpus, "doc_id", "text", candidateBudget = 0L)
-    }
-    // curationReport's autoCap wiring: a budget that lands the cap at
-    // 2 must produce the exact report an explicit cap-2 run produces
-    def report(cap: Int, budget: Long) =
-      graft.operators.Curation.curationReport(corpus, "doc_id", "text",
-          langs = Seq("en"), minQuality = 0.0, nearThreshold = 0.9,
-          lshMaxBucketSize = cap, lshCandidateBudget = budget)
-        .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) "keep"
-          else r.getString(1))).toSet
-    assert(report(Int.MaxValue, 1000L) == report(2, 0L))
   }
 
   test("minhashDupPairs: exact dup has jaccard 1.0, near dup found high") {
@@ -149,6 +108,16 @@ class OperatorsSpec extends SparkTestBase {
     // docs 1/4 differ in the last word: jaccard just below 1
     assert(pairs.contains((1L, 4L)) && pairs((1L, 4L)) > 0.6 && pairs((1L, 4L)) < 1.0)
     assert(!pairs.keys.exists { case (a, b) => a == 3L || b == 3L })
+    // outside (0,1] a threshold silently keeps every candidate (<= 0)
+    // or links nothing (> 1): both Jaccard-verified LSH joins reject it
+    for (t <- Seq(0.0, -0.5, 1.5)) {
+      intercept[IllegalArgumentException] {
+        Dedup.minhashDupPairs(docs, "doc_id", "text", threshold = t)
+      }
+      intercept[IllegalArgumentException] {
+        Dedup.crossCorpusDupPairs(docs, docs, "doc_id", "text", threshold = t)
+      }
+    }
   }
 
   test("simhash: identical texts → hamming 0; near dup within 3 bits") {

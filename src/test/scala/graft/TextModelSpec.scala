@@ -517,44 +517,40 @@ class TextModelSpec extends SparkTestBase {
     assert(kept == Set(5L))
   }
 
-  test("curationReport: lshMaxBucketSize guards the near-dup stage") {
+  test("curationReport: byte-equal families collapse without star edges") {
     import graft.operators.Curation
     val prose = "the quick brown fox jumps over the lazy dog and it " +
       "was seen by the river bank at dawn with a friend of the miller"
-    // a 30-member exact-dup family (one oversized LSH bucket per band)
-    // plus one small dup pair of a DIFFERENT text
+    // a 30-member exact-dup family (one oversized LSH bucket per band),
+    // one small dup pair of a DIFFERENT text and three empty texts
+    // (shingle set ∅); langId("") = "und" walks the empties through
+    // the gate, so every doc reaches the near-dup stage
     val family = spark.range(0, 30)
       .select(col("id").as("doc_id"), lit(prose).as("text"))
     val other = "an entirely different english sentence that the lazy " +
       "dog did not expect to see printed twice in this test corpus"
-    val docs = family.union(
-      Seq((100L, other), (101L, other)).toDF("doc_id", "text"))
-    // cap below the family: the near-dup stage's LSH skips the
-    // oversized bucket, but BYTE-EQUAL members still collapse at
-    // stage 3 via the corpus-linear exact-dup star edges
-    // (Dedup.exactDupStars rides along with the LSH pairs in every
-    // curationReport run — r16: without it the capped report paid the
-    // saved LSH quadratic back as containment work on the
-    // uncollapsed families). The guard's skip itself is pinned by
-    // OperatorsSpec's capped lshCandidatePairs count; here the pin is
-    // that the cap's recall cost falls only on NON-exact near-dups.
-    val capped = Curation.curationReport(docs, "doc_id", "text",
-        langs = Seq("en"), minQuality = 0.2,
-        nearThreshold = 0.95, containThreshold = 0.9,
-        lshMaxBucketSize = 8)
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) "KEEP" else r.getString(1))).toMap
-    assert(capped(0L) == "KEEP" &&
-      (1L until 30L).forall(capped(_) == "near_dup"), s"got $capped")
-    assert(capped(100L) == "KEEP" && capped(101L) == "near_dup")
-    // default (unbounded): the family collapses to its min id
-    val full = Curation.curationReport(docs, "doc_id", "text",
-        langs = Seq("en"), minQuality = 0.2,
-        nearThreshold = 0.95, containThreshold = 0.9)
-      .collect().map(r => r.getLong(0) ->
-        (if (r.isNullAt(1)) "KEEP" else r.getString(1))).toMap
-    assert(full(0L) == "KEEP" &&
-      (1L until 30L).forall(full(_) == "near_dup"), s"got $full")
+    val docs = family.union(Seq((100L, other), (101L, other),
+      (200L, ""), (201L, ""), (202L, "")).toDF("doc_id", "text"))
+    def report(nearThreshold: Double) =
+      Curation.curationReport(docs, "doc_id", "text",
+        langs = Seq("en", "und"), minQuality = 0.2,
+        nearThreshold = nearThreshold, containThreshold = 0.9)
+    val rep = report(0.95).collect().map(r => r.getLong(0) ->
+      (if (r.isNullAt(1)) "KEEP" else r.getString(1))).toMap
+    val nearDup = rep.collect { case (id, "near_dup") => id }.toSet
+    // byte-equal texts share a MinHash signature (every band collides)
+    // and verify at Jaccard 1.0 (∅ vs ∅ too), so the LSH-only stage
+    // drops exactly what exact-dup star edges would add to it
+    val withStars = Dedup.connectedComponents(
+        Dedup.minhashDupPairs(docs, "doc_id", "text", 0.95)
+          .select("id1", "id2")
+          .unionByName(Dedup.exactDupStars(docs, "doc_id", "text")))
+      .where(col("id") =!= col("group_id"))
+      .select("id").as[Long].collect().toSet
+    assert(nearDup == withStars, s"got $rep")
+    assert(nearDup == (1L until 30L).toSet ++ Set(101L, 201L, 202L))
+    assert(rep(0L) == "KEEP" && rep(100L) == "KEEP" && rep(200L) == "KEEP")
+    intercept[IllegalArgumentException] { report(1.5) }
   }
 
   test("curationReport: eval-set stage tags contaminated LAST") {
@@ -1057,35 +1053,29 @@ class TextModelSpec extends SparkTestBase {
       scratch) == ((false, 256)))
   }
 
-  test("curationReport: zero-shingle byte-equal docs — capped ≡ uncapped") {
+  test("curationReport: zero-shingle byte-equal docs collapse as near-dups") {
     import graft.operators.Curation
     val prose = "the quick brown fox jumps over the lazy dog and it " +
       "was seen by the river bank at dawn with a friend of the miller"
-    // the zero-shingle corner (r16 ADVICE): only EMPTY/whitespace text
-    // has shingle set ∅ (short docs collapse to a whole-doc shingle).
-    // Byte-equal empty docs are near-dups in BOTH pipelines — jaccard
-    // defines the empty-union case as 1.0 and empty docs share the
-    // all-sentinel MinHash signature, so the uncapped LSH stage links
-    // them itself; under an armed cap (their shared-signature bucket
-    // is exactly what a cap skips) the exact-dup star edges preserve
-    // the same outcome. This parity is the invariant — NOT "empty docs
-    // stay KEEP". langId("") = "und", qualityScore("") ≈ 0.333, so the
-    // "und" allow-list entry walks the empty docs through the gate.
+    // the zero-shingle corner: only EMPTY/whitespace text has shingle
+    // set ∅ (short docs collapse to a whole-doc shingle). Byte-equal
+    // empty docs are near-dups — jaccard defines the empty-union case
+    // as 1.0 and empty docs share the all-sentinel MinHash signature,
+    // so the LSH stage buckets and verifies them. The invariant is
+    // NOT "empty docs stay KEEP". langId("") = "und", qualityScore("")
+    // ≈ 0.333, so the "und" allow-list entry walks the empty docs
+    // through the gate.
     val docs = Seq(
       (1L, ""), (2L, ""), (3L, ""),
       (10L, prose), (11L, prose)
     ).toDF("doc_id", "text")
-    for (cap <- Seq(Int.MaxValue, 2)) {
-      val rep = Curation.curationReport(docs, "doc_id", "text",
-          langs = Seq("en", "und"), minQuality = 0.2,
-          nearThreshold = 0.9, containThreshold = 0.9,
-          lshMaxBucketSize = cap)
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) "KEEP" else r.getString(1))).toMap
-      assert(rep(1L) == "KEEP" && rep(2L) == "near_dup" &&
-        rep(3L) == "near_dup", s"cap=$cap got $rep")
-      assert(rep(10L) == "KEEP" && rep(11L) == "near_dup",
-        s"cap=$cap got $rep")
-    }
+    val rep = Curation.curationReport(docs, "doc_id", "text",
+        langs = Seq("en", "und"), minQuality = 0.2,
+        nearThreshold = 0.9, containThreshold = 0.9)
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) "KEEP" else r.getString(1))).toMap
+    assert(rep(1L) == "KEEP" && rep(2L) == "near_dup" &&
+      rep(3L) == "near_dup", s"got $rep")
+    assert(rep(10L) == "KEEP" && rep(11L) == "near_dup", s"got $rep")
   }
 }

@@ -11,6 +11,7 @@ def norm(df):
     df = df[sorted(df.columns)]
     df = df.round(6) if any(df.dtypes == 'float64') else df
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+equal = 0
 for name, sql in sorted(oracle.items()):
     files = glob.glob(f'{out}/{name}/*.parquet')
     if not files:
@@ -31,7 +32,12 @@ for name, sql in sorted(oracle.items()):
             match = ga == ea
         except Exception as ex: match = f'cmp err {ex}'
     print(f'{name}: rows={len(g)}/{len(e)} rows_match={rows} cols_match={cols} values_match={match}')
-    if not (rows and cols and match is True):
+    if rows and cols and match is True:
+        equal += 1
+    else:
         print('  got cols:', list(g.columns), 'exp cols:', list(e.columns))
         print('  got head:', g.head(3).values.tolist())
         print('  exp head:', e.head(3).values.tolist())
+# a NO RESULT / ORACLE ERROR / mismatched row fails the run
+print(f'{equal}/{len(oracle)} values-equal')
+sys.exit(0 if equal == len(oracle) else 1)
