@@ -2031,7 +2031,10 @@ object SparkEntry {
     "\nSELECT id1, id2, jaccard FROM jp WHERE jaccard >= 0.8"
 
   /** nodes/edges/reach transitive-closure CTEs over a `pp(id1, id2)` pair
-    * set — the ONE copy shared by the q56/q57/q58/q68 oracles. */
+    * set — the ONE copy shared by the q56/q57/q58/q68 oracles. Callers
+    * declare `pp AS MATERIALIZED`: DuckDB inlines a plain CTE once per
+    * reference, and these read `pp` four times (the all-pairs Jaccard
+    * behind it is most of an oracle's time). */
   private val closureCtes: String =
     """,
       |nodes AS (SELECT id1 AS id FROM pp UNION SELECT id2 AS id FROM pp),
@@ -2049,7 +2052,7 @@ object SparkEntry {
   private val dupGroupsOracle: String =
     "WITH RECURSIVE " + corpusNearBody + jaccardPairsCtes +
     """,
-      |pp AS (SELECT id1, id2 FROM jp WHERE jaccard >= 0.8)""".stripMargin +
+      |pp AS MATERIALIZED (SELECT id1, id2 FROM jp WHERE jaccard >= 0.8)""".stripMargin +
     closureCtes +
     "\nSELECT id AS doc_id, MIN(lbl) AS group_id FROM reach GROUP BY id"
 
@@ -2058,7 +2061,7 @@ object SparkEntry {
   private val dupCanonicalOracle: String =
     "WITH RECURSIVE " + corpusNearBody + jaccardPairsCtes +
     """,
-      |pp AS (SELECT id1, id2 FROM jp WHERE jaccard >= 0.8)""".stripMargin +
+      |pp AS MATERIALIZED (SELECT id1, id2 FROM jp WHERE jaccard >= 0.8)""".stripMargin +
     closureCtes +
     """,
       |g AS (SELECT id, MIN(lbl) AS group_id FROM reach GROUP BY id)
@@ -2091,7 +2094,7 @@ object SparkEntry {
     * reverse pair exists and it has the lower id. */
   private val containmentDedupOracle: String = corpusNearCte + shingleCtes +
     """,
-      |cp AS (
+      |cp AS MATERIALIZED (
       |  SELECT * FROM (
       |    SELECT a.doc_id AS id_contained, b.doc_id AS id_container,
       |           round(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 6) AS containment
@@ -2155,7 +2158,7 @@ object SparkEntry {
   private val dupBestOracle: String =
     "WITH RECURSIVE " + corpusNearBody + jaccardPairsCtes +
     """,
-      |pp AS (SELECT id1, id2 FROM jp WHERE jaccard >= 0.8)""".stripMargin +
+      |pp AS MATERIALIZED (SELECT id1, id2 FROM jp WHERE jaccard >= 0.8)""".stripMargin +
     closureCtes +
     """,
       |g AS (SELECT id, MIN(lbl) AS group_id FROM reach GROUP BY id)""".stripMargin +
@@ -2192,15 +2195,15 @@ object SparkEntry {
       |         round(len(list_intersect(a.sh, b.sh)) * 1.0 /
       |               len(list_distinct(list_concat(a.sh, b.sh))), 6) AS jaccard
       |       FROM gs a JOIN gs b ON a.doc_id < b.doc_id),
-      |pp AS (SELECT id1, id2 FROM jp WHERE jaccard >= 0.95)""".stripMargin +
+      |pp AS MATERIALIZED (SELECT id1, id2 FROM jp WHERE jaccard >= 0.95)""".stripMargin +
     closureCtes +
     """,
-      |nl AS (SELECT id FROM (SELECT id, MIN(lbl) AS group_id
+      |nl AS MATERIALIZED (SELECT id FROM (SELECT id, MIN(lbl) AS group_id
       |                       FROM reach GROUP BY id)
       |       WHERE id <> group_id),
       |surv AS (SELECT doc_id FROM gated
       |         WHERE doc_id NOT IN (SELECT id FROM nl)),
-      |cp AS (SELECT * FROM (
+      |cp AS MATERIALIZED (SELECT * FROM (
       |    SELECT a.doc_id AS id_contained, b.doc_id AS id_container,
       |           round(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 6) AS containment
       |    FROM gs a JOIN gs b ON a.doc_id <> b.doc_id
@@ -2229,7 +2232,7 @@ object SparkEntry {
     * (q57) and through the contraction pass plus star rounds (q68). */
   private val dupChainOracle: String =
     """WITH RECURSIVE ch AS (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 12),
-      |pp AS (SELECT id1, id2 FROM (
+      |pp AS MATERIALIZED (SELECT id1, id2 FROM (
       |         SELECT doc_id AS id1,
       |                lead(doc_id) OVER (ORDER BY doc_id) AS id2 FROM ch)
       |       WHERE id2 IS NOT NULL)""".stripMargin +

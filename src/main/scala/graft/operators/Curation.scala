@@ -40,7 +40,8 @@ import org.apache.spark.sql.functions._
  * text kernels map-side; one LSH-bucketed near-dup pass; bottom-k-sketch
  * containment); the dedup stages run on the gate SURVIVORS only, so
  * low-quality bulk never reaches a shuffle; the report join brings
- * back only 9-to-17-byte loser rows.
+ * back only 9-to-17-byte loser rows. Gate survivors are shingle-hashed
+ * once, in the gate kernels' checkpoint; both dedup stages read that.
  */
 object Curation {
 
@@ -56,33 +57,38 @@ object Curation {
       evalIdCol: String = "doc_id", evalTextCol: String = "text",
       decontaminationThreshold: Double = 0.8): DataFrame = {
     require(langs.nonEmpty, "curationReport needs a language allow-list")
-    // materialization rule (same as the containment shingle frame):
-    // `base` feeds the near-dup pipeline, the containment pipeline and
-    // the final report join — three subtree references, each of which
-    // would re-run the langId/quality kernels over the full corpus.
-    // One eager localCheckpoint computes them once; blocks are
-    // ContextCleaner-freed when the report is GC'd. (At extreme scale
-    // a deployment may prefer recomputing two zero-shuffle map kernels
-    // over storing corpus-sized blocks — that trade is a policy knob,
-    // not a correctness one.)
+    Dedup.requireThreshold(nearThreshold)
+    Dedup.requireThreshold(containThreshold)
+    // materialization rule ([[Dedup.shingleFrame]]): `base` feeds the
+    // near-dup pipeline, the containment pipeline and the final report
+    // join — subtree references each of which would re-run the
+    // langId/quality kernels, and the shingle kernel, over the full
+    // corpus. One eager localCheckpoint computes them once; `sh` is
+    // NULL outside the gate, so only gate survivors are hashed. Blocks
+    // are ContextCleaner-freed when the report is GC'd.
     val base = docs
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .withColumn("lang_ok",
         TextStats.langId(col("text")).isin(langs: _*))
       .withColumn("quality_ok",
         TextStats.qualityScore(col("text")) >= minQuality)
+      .withColumn("sh", when(col("lang_ok") && col("quality_ok"),
+        Dedup.shingleHashes(col("text"), 3)))
       .localCheckpoint()
-    val gated = base.where(col("lang_ok") && col("quality_ok"))
-      .select("doc_id", "text")
-    val nearPairs = Dedup.minhashDupPairs(gated, "doc_id", "text",
-      nearThreshold).select(col("id1"), col("id2"))
+    val gatedSh = base.where(col("sh").isNotNull)
+      .select(col("doc_id").as("id"), col("sh"))
+    val nearPairs = Dedup.minhashDupPairsFromHashes(gatedSh, nearThreshold)
+      .select(col("id1"), col("id2"))
     val nearLosers = Dedup.connectedComponents(nearPairs)
       .where(col("id") =!= col("group_id"))
       .select(col("id").as("doc_id"), lit(true).as("near_loser"))
-    val survivors = gated
-      .join(nearLosers.select("doc_id"), Seq("doc_id"), "left_anti")
-    val contPairs = Dedup.containmentDupPairs(survivors, "doc_id", "text",
-      containThreshold)
+    // containment reads its frame from four subtrees: checkpoint the
+    // survivors' slice (an array copy, no kernel)
+    val survivorSh = gatedSh
+      .join(nearLosers.select(col("doc_id").as("id")), Seq("id"), "left_anti")
+      .localCheckpoint()
+    val contPairs = Dedup.containmentDupPairsRun(survivorSh,
+      containThreshold).pairs
     val contLosers = Dedup.containmentLosers(contPairs)
       .select(col("loser").as("doc_id"), lit(true).as("cont_loser"))
     // decontamination runs over the stage-4 survivors (train side —
@@ -90,7 +96,9 @@ object Curation {
     val contamLosers = evalDocs match {
       case None => None
       case Some(ev) =>
-        val s4 = survivors
+        val s4 = base.select("doc_id", "text")
+          .join(survivorSh.select(col("id").as("doc_id")), Seq("doc_id"),
+            "left_semi")
           .join(contLosers.select("doc_id"), Seq("doc_id"), "left_anti")
         Some(Dedup.crossCorpusDupPairs(
             s4, ev.select(col(evalIdCol).as("doc_id"),

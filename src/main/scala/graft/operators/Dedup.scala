@@ -84,10 +84,50 @@ object Dedup {
         xxhash64(cast_str(slice(signature, b * rows + 1, lit(rows)))).as("bucket")))
   }
 
+  /** `(id, sh)`: the sorted shingle hashes of every non-NULL `textCol`,
+    * un-materialized (the train side of [[crossCorpusDupPairs]] must
+    * never be stored). NULL texts all share one signature: kept, they
+    * would fill one bucket per band and detonate the quadratic
+    * within-bucket expansion. */
+  private def shingles(docs: DataFrame, idCol: String, textCol: String,
+      n: Int): DataFrame =
+    docs.where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh"))
+
+  /** [[shingles]], eagerly localCheckpointed: the one `(id, sh)` frame a
+    * near-dup or containment pipeline reads. Materialization rule (the
+    * bm25 re-tokenization trap, commit 6ec36cd): `sh` feeds several
+    * subtrees (LSH, both verify lookups, the inverted index, the
+    * probes), each of which would re-run the shingle kernel; the
+    * checkpoint runs it once and stores (id, sorted-hash-array) rows. */
+  private[graft] def shingleFrame(docs: DataFrame, idCol: String,
+      textCol: String, n: Int): DataFrame =
+    shingles(docs, idCol, textCol, n).localCheckpoint()
+
+  /** `(id, band, bucket)` of an `(id, sh)` frame. The signature is its
+    * own projection: lambdas skip subexpression elimination, and the
+    * band lambda reads it once per band. */
+  private def lshBuckets(sh: DataFrame, numHashes: Int,
+      bands: Int): DataFrame =
+    sh.select(col("id"),
+        minhashSignatureFromHashes(col("sh"), numHashes).as("sig"))
+      .select(col("id"), explode(lshBands(col("sig"), numHashes, bands)).as("b"))
+      .select(col("id"), col("b.band").as("band"), col("b.bucket").as("bucket"))
+
+  /** Within-bucket candidate pairs of an `(id, sh)` frame's LSH buckets
+    * of at most `maxBucketSize` members. */
+  private def lshPairs(sh: DataFrame, numHashes: Int, bands: Int,
+      maxBucketSize: Int = Int.MaxValue): DataFrame =
+    bucketPairs(lshBuckets(sh, numHashes, bands)
+      .groupBy("band", "bucket")
+      .agg(collect_list("id").as("ids"))
+      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucketSize))
+
   /**
    * Candidate duplicate pairs (id1 < id2) via MinHash-LSH banding.
    * Shuffle shape: explode bands → groupBy(band, bucket) → within-bucket
-   * pair expansion → distinct. No crossJoin anywhere.
+   * pair expansion → distinct. No crossJoin anywhere. NULL texts are
+   * dropped before banding ([[shingles]]).
    *
    * `maxBucketSize` is the production guard against the one quadratic
    * term this shape has: within-bucket pair expansion. A bucket of m
@@ -104,26 +144,12 @@ object Dedup {
    * argument for suffix-cluster expansion). The filter runs on the
    * already-aggregated bucket rows, so it adds ZERO exchanges; default
    * Int.MaxValue = off.
-   *
-   * NULL texts are dropped before banding: they all share one
-   * signature, so a corpus with many NULL rows would put them ALL in
-   * the same bucket per band and detonate the quadratic within-bucket
-   * expansion.
    */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val sig = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        minhashSignatureFromHashes(shingleHashes(col(textCol), shingleSize),
-          numHashes).as("sig"))
-    bucketPairs(sig.select(col("id"),
-        explode(lshBands(col("sig"), numHashes, bands)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.bucket").as("bucket"))
-      .groupBy("band", "bucket")
-      .agg(collect_list("id").as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucketSize))
-  }
+      maxBucketSize: Int = Int.MaxValue): DataFrame =
+    lshPairs(shingles(docs, idCol, textCol, shingleSize), numHashes, bands,
+      maxBucketSize)
 
   /** Within-bucket candidate expansion shared by the MinHash and SRP
     * paths: explode each bucket's id list twice, keep ordered pairs,
@@ -141,11 +167,16 @@ object Dedup {
       .otherwise(size(array_intersect(a, b)).cast("double") /
         size(array_union(a, b)).cast("double"))
 
+  /** The similarity-threshold check every near-dup operator shares. */
+  private[graft] def requireThreshold(threshold: Double): Unit =
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must be in (0,1] (got $threshold)")
+
   /**
    * MinHash-LSH near-duplicate pairs, verified with exact n-gram Jaccard
-   * >= `threshold`. The verification join re-derives shingles from the
-   * original docs (2 hash-joins on id — broadcastable when docs is small,
-   * shuffle-on-id at scale).
+   * >= `threshold`. One [[shingleFrame]] feeds both the LSH signatures
+   * and the verification join (2 hash-joins on id — broadcastable when
+   * docs is small, shuffle-on-id at scale).
    *
    * The threshold is DELIBERATELY applied to the 6-dp-rounded similarity
    * (here and in the cross-corpus/cosine variants): cross-engine float
@@ -157,32 +188,31 @@ object Dedup {
   def minhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3, numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1] (got $threshold)")
-    verifyJaccardPairs(docs, idCol, textCol, threshold, shingleSize,
-      lshCandidatePairs(docs, idCol, textCol, shingleSize, numHashes, bands))
+    requireThreshold(threshold)
+    minhashDupPairsFromHashes(
+      shingleFrame(docs, idCol, textCol, shingleSize), threshold,
+      numHashes, bands)
   }
 
-  /** Exact-Jaccard verification of candidate `(id1, id2)` pairs.
+  /** [[minhashDupPairs]] over an already-materialized `(id, sh)` frame
+    * (the caller checks the threshold). */
+  private[graft] def minhashDupPairsFromHashes(sh: DataFrame,
+      threshold: Double, numHashes: Int = 64,
+      bands: Int = 16): DataFrame =
+    verifyJaccardPairs(sh, lshPairs(sh, numHashes, bands), threshold)
+
+  /** Exact-Jaccard verification of candidate `(id1, id2)` pairs against
+    * an `(id, sh)` frame, which both pair sides look up.
     * Jaccard over shingle-hash sets == Jaccard over shingle-string sets
-    * (64-bit hashing is injective modulo negligible collisions).
-    * Materialization rule: the verify joins reference the shingle frame
-    * for BOTH pair sides — without the checkpoint the shingle kernel
-    * runs over the full corpus twice here (on top of the LSH pass's
-    * own). */
-  private def verifyJaccardPairs(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double, shingleSize: Int,
-      cands: DataFrame): DataFrame = {
-    val sh = docs.select(col(idCol).as("id"),
-      shingleHashes(col(textCol), shingleSize).as("sh"))
-      .localCheckpoint()
+    * (64-bit hashing is injective modulo negligible collisions). */
+  private def verifyJaccardPairs(sh: DataFrame, cands: DataFrame,
+      threshold: Double): DataFrame =
     cands
       .join(sh.withColumnRenamed("id", "id1").withColumnRenamed("sh", "sh1"), "id1")
       .join(sh.withColumnRenamed("id", "id2").withColumnRenamed("sh", "sh2"), "id2")
       .select(col("id1"), col("id2"),
         round(jaccard(col("sh1"), col("sh2")), 6).as("jaccard"))
       .where(col("jaccard") >= threshold)
-  }
 
   /**
    * Train/test contamination detection: pairs `(train_id, test_id,
@@ -275,15 +305,11 @@ object Dedup {
   def crossCorpusDupPairs(train: DataFrame, test: DataFrame, idCol: String,
       textCol: String, threshold: Double, shingleSize: Int = 3,
       numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1] (got $threshold)")
-    def banded(docs: DataFrame, side: String): DataFrame =
-      docs.where(col(textCol).isNotNull)
-        .select(col(idCol).as(side),
-        minhashSignatureFromHashes(shingleHashes(col(textCol), shingleSize),
-          numHashes).as("sig"))
-        .select(col(side), explode(lshBands(col("sig"), numHashes, bands)).as("b"))
-        .select(col(side), col("b.band").as("band"), col("b.bucket").as("bucket"))
+    requireThreshold(threshold)
+    // one projection per side, never checkpointed: the train side must
+    // never be materialized
+    val trainSh = shingles(train, idCol, textCol, shingleSize)
+    val testSh = shingles(test, idCol, textCol, shingleSize)
     // the broadcasts are explicit, not stats-inferred: eval sets arrive
     // as derived plans (filters/renames) whose sizes the optimizer
     // cannot estimate well, and a fallback sort-merge join here would
@@ -298,17 +324,17 @@ object Dedup {
     val bcSmall = smallEnoughToBroadcast(
       test.select(col(idCol), col(textCol)))
     def bc(df: DataFrame): DataFrame = if (bcSmall) broadcast(df) else df
-    val cands = banded(train, "train_id")
-      .join(bc(banded(test, "test_id")), Seq("band", "bucket"))
+    val cands = lshBuckets(trainSh, numHashes, bands)
+      .withColumnRenamed("id", "train_id")
+      .join(bc(lshBuckets(testSh, numHashes, bands)
+        .withColumnRenamed("id", "test_id")), Seq("band", "bucket"))
       .select("train_id", "test_id").distinct()
-    def sh(docs: DataFrame, side: String, shName: String): DataFrame =
-      docs.select(col(idCol).as(side),
-        shingleHashes(col(textCol), shingleSize).as(shName))
     // candidates are bounded by the test side, so they broadcast into
     // the train shingle scan (train still never shuffles)
-    sh(train, "train_id", "sh1")
+    trainSh.select(col("id").as("train_id"), col("sh").as("sh1"))
       .join(bc(cands), "train_id")
-      .join(bc(sh(test, "test_id", "sh2")), "test_id")
+      .join(bc(testSh.select(col("id").as("test_id"), col("sh").as("sh2"))),
+        "test_id")
       .select(col("train_id"), col("test_id"),
         round(jaccard(col("sh1"), col("sh2")), 6).as("jaccard"))
       .where(col("jaccard") >= threshold)
@@ -1494,6 +1520,8 @@ object Dedup {
    * inside a much larger page has tiny Jaccard but containment ~1, and
    * near-dup pipelines that stop at Jaccard keep both copies.
    *
+   * Every stage reads one materialized `(id, sh)` frame
+   * ([[shingleFrame]]), so the shingle kernel runs once per call.
    * Candidates come from a bottom-`probeK` sketch against a full
    * inverted index: each document probes with its `probeK` SMALLEST
    * shingle hashes ([[shingleHashes]] returns sorted distinct hashes,
@@ -1548,9 +1576,12 @@ object Dedup {
    * rows — arrays never ride an exchange on either path. */
   def containmentDupPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3, probeK: Int = 8,
-      maxShingleDf: Long = 16384L): DataFrame =
-    containmentDupPairsRun(docs, idCol, textCol, threshold, shingleSize,
-      probeK, maxShingleDf).pairs
+      maxShingleDf: Long = 16384L): DataFrame = {
+    requireThreshold(threshold)
+    require(probeK > 0, s"probeK must be positive (got $probeK)")
+    containmentDupPairsRun(shingleFrame(docs, idCol, textCol, shingleSize),
+      threshold, probeK, maxShingleDf).pairs
+  }
 
   /** One [[containmentDupPairsRun]]: the pairs plus the over-gate
     * verify's bounded-scratch batch count (1 = one wave; -1 when the
@@ -1558,22 +1589,12 @@ object Dedup {
   private[graft] final case class ContainmentRun(pairs: DataFrame,
       batches: Int)
 
-  /** [[containmentDupPairs]] with its batch count ([[ContainmentRun]]). */
-  private[graft] def containmentDupPairsRun(docs: DataFrame, idCol: String,
-      textCol: String, threshold: Double, shingleSize: Int = 3,
-      probeK: Int = 8, maxShingleDf: Long = 16384L): ContainmentRun = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1] (got $threshold)")
-    require(probeK > 0, s"probeK must be positive (got $probeK)")
-    // Materialization rule (the bm25/bigramLogProb re-tokenization trap,
-    // commit 6ec36cd): `sh` feeds four subtrees (inverted index, probes,
-    // both verify lookups) and each would re-run the shingle kernel over
-    // the full corpus. Eager localCheckpoint computes it once; the
-    // checkpointed rows are (id, sorted-hash-array) — never text.
-    val sh = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleSize).as("sh"))
-      .localCheckpoint()
+  /** [[containmentDupPairs]] over an already-materialized `(id, sh)`
+    * frame ([[shingleFrame]]), with its batch count ([[ContainmentRun]]);
+    * the caller checks the arguments. */
+  private[graft] def containmentDupPairsRun(sh: DataFrame,
+      threshold: Double, probeK: Int = 8,
+      maxShingleDf: Long = 16384L): ContainmentRun = {
     val inv = sh.select(col("id").as("id_b"), explode(col("sh")).as("h"))
     val hot = inv.groupBy("h").agg(count(lit(1)).as("df"))
       .where(col("df") > maxShingleDf).select("h")
@@ -1599,7 +1620,7 @@ object Dedup {
           round(sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double") /
             size(col("sh_a")).cast("double"), 6).as("containment"))
         .where(col("containment") >= threshold)
-    val bcastGate = docs.sparkSession.conf
+    val bcastGate = sh.sparkSession.conf
       .get(ContainmentBroadcastMaxBytesConf,
         ContainmentBroadcastMaxBytes.toString).toLong
     if (estBytes <= bcastGate)
@@ -1656,7 +1677,7 @@ object Dedup {
       // collected — on the resident tier).
       val invBytes =
         (if (stats.isNullAt(1)) 0L else stats.getLong(1)) * 24L
-      val confGate = docs.sparkSession.conf
+      val confGate = sh.sparkSession.conf
         .get(ContainmentIndexBroadcastMaxBytesConf,
           ContainmentIndexBroadcastMaxBytes.toString).toLong
       // byteStringAsBytes, not byteStringAsMb: a sub-MB setting
@@ -1665,7 +1686,7 @@ object Dedup {
       // deployment most likely to abort the collect (r16 ADVICE).
       // Only the literal '0' setting means unlimited.
       val invGate = broadcastCollectGate(confGate,
-        docs.sparkSession.conf.get("spark.driver.maxResultSize", "1g"))
+        sh.sparkSession.conf.get("spark.driver.maxResultSize", "1g"))
       val invFits = invBytes <= invGate
       // BOUNDED-SCRATCH batching: the verify's widest exchange is still
       // the quadratic-family term, and a run whose aggregate shuffle
@@ -1708,7 +1729,7 @@ object Dedup {
         .join(sizesA, Seq("id_a"))
         .agg(count(lit(1)).as("__sn"), sum("__n_a").as("__ss"),
           sum("__dup").as("__sraw")).head()
-      val spark = docs.sparkSession
+      val spark = sh.sparkSession
       val scratch = spark.conf.get(ContainmentScratchBytesConf,
         defaultScratchBytes(spark).toString).toLong
       val (estResident, estShuffled) =
@@ -2045,11 +2066,10 @@ object Dedup {
     * at least one chunk — then verify `bit_count(xor) <= maxHamming`. */
   def simhashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, shingleSize: Int = 3): DataFrame = {
-    // NULL texts out before chunking: all-NULL simhashes share every
-    // chunk bucket (same quadratic blowup mode as the MinHash path)
-    val sh = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
-        simhash64FromHashes(shingleHashes(col(textCol), shingleSize)).as("sh"))
+    // NULL texts out before chunking ([[shingles]]): all-NULL simhashes
+    // share every chunk bucket (same blowup mode as the MinHash path)
+    val sh = shingles(docs, idCol, textCol, shingleSize)
+      .select(col("id"), simhash64FromHashes(col("sh")).as("sh"))
     val chunked = sh.select(col("id"), col("sh"),
       explode(transform(sequence(lit(0), lit(3)),
         c => struct(c.as("chunk"),

@@ -97,8 +97,6 @@ private[graft] class IntervalCountRunner(
     pairCount: SQLMetric,
     buildMemUsed: SQLMetric) extends Serializable {
 
-  /** Compiled (start, end) extractor — generated projection, no
-    * interpreted Expression.eval and no boxing in the per-row loops. */
   // bounds extraction shares plans.BoundsEval with the join runner
 
   def buildSide(rows: Iterator[InternalRow]): CountBuildSide = {

@@ -261,6 +261,7 @@ private[graft] class IntervalJoinRunner(
     def collectMatches(rrow: InternalRow): Int = {
       if (!bounds.eval(rrow)) return 0
       val key = keyProj(rrow)
+      // NULL probe keys match nothing (null_equals_null=false)
       val idx = if (hasKeys && key.anyNull) null else build.keyed.get(key)
       if (idx == null) return 0
       var n = 0
@@ -285,45 +286,26 @@ private[graft] class IntervalJoinRunner(
       }
     }
 
+    // the n matches collectMatches left in sharedBuf, joined and
+    // projected. The buffer is reused across probe rows — safe because
+    // flatMap drains each returned iterator before pulling the next row
+    def matchedRows(rrow: InternalRow, n: Int): Iterator[InternalRow] =
+      new Iterator[InternalRow] {
+        private var i = 0
+        def hasNext: Boolean = i < n
+        def next(): InternalRow = {
+          rows += 1
+          val j = joined(build.rows(sharedBuf(i)), rrow)
+          i += 1
+          resultProj(j)
+        }
+      }
+
     joinType match {
       case OverlapJoin =>
-        // primitive growable buffer — no Int boxing in the probe hot loop
-        var matchBuf = new Array[Int](64)
-        var matchLen = 0
-        val add: Int => Unit = { pos =>
-          if (matchLen == matchBuf.length)
-            matchBuf = java.util.Arrays.copyOf(matchBuf, matchLen * 2)
-          matchBuf(matchLen) = pos
-          matchLen += 1
-        }
         iter.flatMap { rrow =>
           probeRows += 1
-          if (!bounds.eval(rrow)) Iterator.empty
-          else {
-            val key = keyProj(rrow)
-            // NULL probe keys match nothing (null_equals_null=false).
-            val idx = if (hasKeys && key.anyNull) null else build.keyed.get(key)
-            if (idx == null) Iterator.empty
-            else {
-              matchLen = 0
-              idx.query(bounds.s, bounds.e)(add)
-              // buffer is reused across probe rows — safe because flatMap
-              // drains each returned iterator before pulling the next row
-              val n = matchLen
-              val it = new Iterator[InternalRow] {
-                private var i = 0
-                def hasNext: Boolean = i < n
-                def next(): InternalRow = {
-                  val j = joined(build.rows(matchBuf(i)), rrow)
-                  i += 1
-                  j
-                }
-              }
-              (if (residualPred.isEmpty) it
-               else it.filter(j => residualPred.get.eval(j)))
-                .map { j => rows += 1; resultProj(j) }
-            }
-          }
+          matchedRows(rrow, collectMatches(rrow))
         }
       case RightOuterJoin =>
         iter.flatMap { rrow =>
@@ -332,16 +314,7 @@ private[graft] class IntervalJoinRunner(
           if (n == 0) {
             rows += 1
             Iterator.single(resultProj(joined(nullLeft, rrow)))
-          } else new Iterator[InternalRow] {
-            private var i = 0
-            def hasNext: Boolean = i < n
-            def next(): InternalRow = {
-              rows += 1
-              val j = joined(build.rows(sharedBuf(i)), rrow)
-              i += 1
-              resultProj(j)
-            }
-          }
+          } else matchedRows(rrow, n)
         }
 
       case FullOuterJoin =>
@@ -357,17 +330,10 @@ private[graft] class IntervalJoinRunner(
           if (n == 0) {
             rows += 1
             Iterator.single(resultProj(joined(nullLeft, rrow)))
-          } else new Iterator[InternalRow] {
-            private var i = 0
-            def hasNext: Boolean = i < n
-            def next(): InternalRow = {
-              rows += 1
-              val pos = sharedBuf(i)
-              matched.set(pos)
-              val j = joined(build.rows(pos), rrow)
-              i += 1
-              resultProj(j)
-            }
+          } else {
+            var i = 0
+            while (i < n) { matched.set(sharedBuf(i)); i += 1 }
+            matchedRows(rrow, n)
           }
         }
         // lazy concat: the sweep reads the bitmap only after `pairs` drains

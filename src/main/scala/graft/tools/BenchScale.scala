@@ -238,8 +238,9 @@ object BenchScale {
           sampler.start()
           val secs = (1 to reps).map { _ =>
             val t0 = System.nanoTime()
-            val run = graft.operators.Dedup
-              .containmentDupPairsRun(corpus, "doc_id", "text", 0.9)
+            val run = graft.operators.Dedup.containmentDupPairsRun(
+              graft.operators.Dedup.shingleFrame(corpus, "doc_id", "text", 3),
+              0.9)
             rows = run.pairs.count()
             batches = run.batches
             (System.nanoTime() - t0) / 1e9

@@ -109,25 +109,23 @@ object ContainmentAttrib {
     val base = corpus
       .withColumn("lang_ok", TextStats.langId(col("text")) === "en")
       .withColumn("quality_ok", TextStats.qualityScore(col("text")) >= 0.55)
+      .withColumn("sh", when(col("lang_ok") && col("quality_ok"),
+        Dedup.shingleHashes(col("text"), 3)))
       .localCheckpoint()
-    val gated = base.where(col("lang_ok") && col("quality_ok"))
-      .select("doc_id", "text")
-    val near = Dedup.minhashDupPairs(gated, "doc_id", "text", 0.95)
+    val gatedSh = base.where(col("sh").isNotNull)
+      .select(col("doc_id").as("id"), col("sh"))
+    val near = Dedup.minhashDupPairsFromHashes(gatedSh, 0.95)
       .select("id1", "id2").localCheckpoint()
     val losers = Dedup.connectedComponents(near)
       .where(col("id") =!= col("group_id"))
-      .select(col("id").as("doc_id")).localCheckpoint()
-    val survivors = gated.join(losers, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    println(s"ATTRIB survivors=${survivors.count()}")
+      .select(col("id")).localCheckpoint()
+    // the containment frame: (id, sh) of the near-dup survivors
+    val sh = gatedSh.join(losers, Seq("id"), "left_anti").localCheckpoint()
+    println(s"ATTRIB survivors=${sh.count()}")
 
     // the containment function's own internals, reproduced with the
-    // default parameters (threshold 0.9, shingleSize 3, probeK 8,
-    // maxShingleDf 16384) — same code shapes, measured in isolation
-    val sh = survivors.where(col("text").isNotNull)
-      .select(col("doc_id").as("id"),
-        Dedup.shingleHashes(col("text"), 3).as("sh"))
-      .localCheckpoint()
+    // default parameters (threshold 0.9, probeK 8, maxShingleDf
+    // 16384) — same code shapes, measured in isolation
     val inv = sh.select(col("id").as("id_b"), explode(col("sh")).as("h"))
     val hot = inv.groupBy("h").agg(count(lit(1)).as("df"))
       .where(col("df") > 16384L).select("h")
@@ -155,8 +153,7 @@ object ContainmentAttrib {
     if (steps("full0")) {
       timed("full_verify") {
         println("ATTRIB cont_pairs=" +
-          Dedup.containmentDupPairs(survivors, "doc_id", "text", 0.9)
-            .count())
+          Dedup.containmentDupPairsRun(sh, 0.9).pairs.count())
       }
     }
     spark.stop()

@@ -104,19 +104,22 @@ object CurationColdProbe {
       def ck(df: DataFrame): DataFrame = {
         val c = df.localCheckpoint(); ckpts += c; c
       }
-      // stage 1: corpus scan + langId/quality kernels (q127's `base`)
+      // stage 1: corpus scan + langId/quality kernels + the gated
+      // shingle hashes (q127's `base`)
       val base = timed("base_kernels") {
         val b = ck(corpus
           .withColumn("lang_ok", TextStats.langId(col("text")) === "en")
           .withColumn("quality_ok",
-            TextStats.qualityScore(col("text")) >= 0.55))
+            TextStats.qualityScore(col("text")) >= 0.55)
+          .withColumn("sh", when(col("lang_ok") && col("quality_ok"),
+            Dedup.shingleHashes(col("text"), 3))))
         b.count(); b
       }
-      val gated = base.where(col("lang_ok") && col("quality_ok"))
-        .select("doc_id", "text")
+      val gatedSh = base.where(col("sh").isNotNull)
+        .select(col("doc_id").as("id"), col("sh"))
       // stage 2: MinHash banding + Jaccard verify (uncapped, as q127)
       val near = timed("lsh_verify") {
-        val n = ck(Dedup.minhashDupPairs(gated, "doc_id", "text", 0.95)
+        val n = ck(Dedup.minhashDupPairsFromHashes(gatedSh, 0.95)
           .select("id1", "id2"))
         n.count(); n
       }
@@ -127,15 +130,15 @@ object CurationColdProbe {
           .select(col("id").as("doc_id")))
         l.count(); l
       }
-      // stage 4: survivor anti-join
+      // stage 4: survivor anti-join (the report's containment frame)
       val survivors = timed("survivors") {
-        val s = ck(gated.join(nearLosers, Seq("doc_id"), "left_anti"))
+        val s = ck(gatedSh.join(nearLosers.select(col("doc_id").as("id")),
+          Seq("id"), "left_anti"))
         s.count(); s
       }
       // stage 5: containment (3-tier verify)
       val contPairs = timed("containment") {
-        val c = ck(Dedup.containmentDupPairs(survivors, "doc_id", "text",
-          0.9))
+        val c = ck(Dedup.containmentDupPairsRun(survivors, 0.9).pairs)
         c.count(); c
       }
       // stage 6: loser resolution + final report joins

@@ -214,20 +214,42 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     val a = targets.union(edges)
     val b = reads.union(edges)
     for (mode <- Seq("broadcast", "partitioned");
-         noFallback <- Seq(false, true); strict <- Seq(false, true)) {
+         codegen <- Seq("fallback", "strict", "off");
+         strict <- Seq(false, true)) {
       spark.conf.set(GraftSession.IntervalJoinForceMode, mode)
       // a codegen bug must fail loudly, not silently fall back
-      if (noFallback) spark.conf.set("spark.sql.codegen.fallback", "false")
+      if (codegen == "strict")
+        spark.conf.set("spark.sql.codegen.fallback", "false")
+      // whole-stage codegen off: the interpreted probe runs the join
+      if (codegen == "off")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
       try {
         val df = overlapJoin(a, b, strict = strict)
         assert(df.collect().map(_.toSeq).toSet ==
           stockResult(a, b, withKey = true, strict = strict),
-          s"mode=$mode noFallback=$noFallback strict=$strict")
+          s"mode=$mode codegen=$codegen strict=$strict")
         // read after execution: the AQE plan is final by then
         val plan = planOf(df)
-        assert("""\*\(\d+\) IntervalJoinExec""".r.findFirstIn(plan).isDefined,
+        val fused = """\*\(\d+\) IntervalJoinExec""".r.findFirstIn(plan)
+        if (codegen == "off") {
+          assert(fused.isEmpty && plan.contains("IntervalJoinExec"),
+            s"expected an interpreted IntervalJoinExec:\n$plan")
+          // a cross-side filter (not an equality between the sides,
+          // which would become a join key) is the join's residual
+          val res = df.where(($"a_start".cast("long") + $"b_start") % 2 === 0)
+          assert(planOf(res).linesIterator.exists(l =>
+            l.contains("IntervalJoinExec") && l.contains("% 2")),
+            s"expected the filter as the join's residual:\n${planOf(res)}")
+          assert(res.collect().map(_.toSeq).toSet ==
+            stockResult(a, b, withKey = true, strict = strict).filter(r =>
+              (r(1).asInstanceOf[Int].toLong + r(4).asInstanceOf[Int]) % 2 == 0),
+            s"mode=$mode residual strict=$strict")
+        } else assert(fused.isDefined,
           s"expected IntervalJoinExec inside WholeStageCodegen:\n$plan")
-      } finally spark.conf.unset("spark.sql.codegen.fallback")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.fallback")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
     }
   }
 

@@ -495,13 +495,23 @@ class TextModelSpec extends SparkTestBase {
       (4L, "zzz qqq xxx www"),           // no stopwords -> lang 'und'
       (5L, prose + " extra trailing marker tokens"), // jaccard < .95 vs 1
                                          // -> survives near, contained
-      (6L, prose)                        // another exact dup -> near_dup
+      (6L, prose),                       // another exact dup -> near_dup
+      // gate failures must reach no dedup stage. A low-quality
+      // superset of doc 1 (English, but a 200-digit token zeroes the
+      // noise score) with a LOWER id: past the gate it would make doc
+      // 1 a near_dup (Jaccard 23/24) instead of contained
+      (0L, prose + " " + "1234567890" * 20),
+      // a German-stopword-led superset of doc 5 (an exact copy has
+      // doc 5's language): past the gate doc 5 would be contained
+      (7L, prose + " extra trailing marker tokens der die das und ist " +
+        "von zu den mit nicht ein eine auf fuer")
     ).toDF("doc_id", "text")
     val rep = Curation.curationReport(docs, "doc_id", "text",
-        langs = Seq("en"), minQuality = 0.2,
+        langs = Seq("en"), minQuality = 0.5,
         nearThreshold = 0.95, containThreshold = 0.9)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) "KEEP" else r.getString(1))).toMap
+    assert(rep(0L) == "quality" && rep(7L) == "lang", s"got $rep")
     assert(rep(2L) == "near_dup" && rep(6L) == "near_dup")
     assert(rep(3L) == "lang" && rep(4L) == "lang")
     // doc 1 is STRICTLY contained in doc 5 (all of prose's shingles
@@ -511,7 +521,7 @@ class TextModelSpec extends SparkTestBase {
     assert(rep(5L) == "KEEP")
     // curate() returns exactly the keepers with original columns
     val kept = Curation.curate(docs, "doc_id", "text",
-        langs = Seq("en"), minQuality = 0.2,
+        langs = Seq("en"), minQuality = 0.5,
         nearThreshold = 0.95, containThreshold = 0.9)
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(5L))
