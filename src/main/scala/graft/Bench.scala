@@ -343,10 +343,10 @@ object Bench {
         a("pos_start") <= b("pos_end") && a("pos_end") >= b("pos_start")
       a.join(b, cond).agg(sum(b("pos_start"))).head()
     }
-    val fm = graft.GraftSession.IntervalJoinForceMode
+    val th = "spark.sql.autoBroadcastJoinThreshold"
     val ab = graft.GraftSession.AutoBin
     val bs = graft.GraftSession.BinSize
-    spark.conf.set(fm, "partitioned")
+    spark.conf.set(th, "-1") // partitioned mode: no broadcast by size
     // this workload is compute-heavy but byte-light (sf0.1): AQE would
     // coalesce the spread (key, bin) partitions right back onto one task
     // by its size heuristic. At real scale partitions are byte-heavy and
@@ -360,7 +360,7 @@ object Bench {
       val binned = rep3("flagship_skew_binned")(joined)
       Seq(unbinned, binned)
     } finally {
-      spark.conf.set(fm, ""); spark.conf.set(ab, "auto")
+      spark.conf.unset(th); spark.conf.set(ab, "auto")
       spark.conf.unset(bs)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
       a.unpersist(); b.unpersist()

@@ -36,15 +36,15 @@ class GraftSparkSessionExtension extends (SparkSessionExtensions => Unit) {
 
 object GraftSession {
 
-  /** Conf keys (mirrors the 3 session options of the reference,
-    * sequila/sequila-core/src/session_context.rs:50-60). */
+  /** Conf keys (mirrors the session options of the reference,
+    * sequila/sequila-core/src/session_context.rs:50-60). The distribution
+    * mode has no key of its own: like the reference, which takes it from
+    * the join it rewrites, it follows `spark.sql.autoBroadcastJoinThreshold`
+    * and the build side's join hints (`IntervalJoinStrategy.modeFor`). The
+    * reference's `interval_join_low_memory` is moot here: Spark's
+    * pull-based row iterators never materialize join output per-batch. */
   val PreferIntervalJoin = "spark.graft.intervalJoin.enabled"
   val IntervalJoinAlgorithm = "spark.graft.intervalJoin.algorithm"
-  /** "" (auto) | "broadcast" | "partitioned" — pin the distribution mode;
-    * used by tests and verification entries. (The reference's third option,
-    * `interval_join_low_memory`, is moot here: Spark's pull-based row
-    * iterators never materialize join output per-batch.) */
-  val IntervalJoinForceMode = "spark.graft.intervalJoin.forceMode"
   /** "auto" (default) | "force" | "off" — skew-proof binned rewrite of
     * interval joins (see [[graft.plans.AutoBinIntervalJoin]]). */
   val AutoBin = "spark.graft.intervalJoin.autoBin"

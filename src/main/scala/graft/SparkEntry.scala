@@ -607,8 +607,9 @@ object SparkEntry {
     "q10_interval_join" -> run(sharedSql("q10_interval_join")),
     "q11_interval_strict" -> run(sharedSql("q11_interval_strict")),
     "q12_interval_keyless" -> run(sharedSql("q12_interval_keyless")),
+    // no broadcast by size: the keyed join plans partitioned
     "q13_interval_partitioned" -> run(sharedSql("q13_interval_partitioned"),
-      GraftSession.IntervalJoinForceMode -> "partitioned"),
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"),
     "q14_interval_nearest" -> run(nearestSparkSql,
       GraftSession.IntervalJoinAlgorithm -> "nearest"),
     "q15_interval_ailist" -> run(sharedSql("q15_interval_ailist"),
@@ -653,7 +654,7 @@ object SparkEntry {
         .groupBy("event_type", "key")
         .agg(count(lit(1)).as("n"), sum("val").as("sum_val")) }),
     "q42_interval_skew" -> run(sharedSql("q42_interval_skew"),
-      GraftSession.IntervalJoinForceMode -> "partitioned",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       GraftSession.AutoBin -> "force",
       GraftSession.BinSize -> "5000"),
     // 64-bit coordinates (epoch micros ~1.7e15): time-window overlap

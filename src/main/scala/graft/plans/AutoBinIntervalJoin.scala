@@ -44,12 +44,11 @@ object AutoBinIntervalJoin extends Rule[LogicalPlan] {
     val mode = confStr(graft.GraftSession.AutoBin, "auto").toLowerCase
     val enabled = confStr(graft.GraftSession.PreferIntervalJoin,
       "true").toBoolean
-    val alg = confStr(graft.GraftSession.IntervalJoinAlgorithm,
-      "superintervals").toLowerCase
     // nearest-join semantics are driven off the same Inner-join shape via
     // the algorithm conf — binning would silently change them to overlap
-    if (mode == "off" || !enabled || alg == "nearest" ||
-      alg == "coitreesnearest") return plan
+    val nearest = graft.rangejoin.LongIntervalIndex.canonical(confStr(
+      graft.GraftSession.IntervalJoinAlgorithm, "superintervals")) == "nearest"
+    if (mode == "off" || !enabled || nearest) return plan
     val binSize = confStr(graft.GraftSession.BinSize, "1000000").toLong
     if (binSize <= 0) return plan
 
@@ -82,9 +81,8 @@ object AutoBinIntervalJoin extends Rule[LogicalPlan] {
   private def shouldBin(mode: String, build: LogicalPlan,
       ic: IntervalCondition): Boolean = {
     if (mode == "force") return true
-    val threshold = conf.autoBroadcastJoinThreshold
-    val fitsBroadcast = threshold > 0 && build.stats.sizeInBytes <= threshold
-    if (fitsBroadcast) return false // broadcast mode is already skew-proof
+    // broadcast mode is already skew-proof
+    if (IntervalJoinStrategy.fitsBroadcast(build)) return false
     if (ic.leftKeys.isEmpty) return true // keyless: the only scalable plan
     // keyed: bin only when column stats say the key space is narrower than
     // the shuffle parallelism (a hot-key ceiling); no stats → stay unbinned

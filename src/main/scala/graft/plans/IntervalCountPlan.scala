@@ -73,15 +73,15 @@ object IntervalCountRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val enabled = conf.getConfString(graft.GraftSession.PreferIntervalJoin,
       "true").toBoolean
-    val alg = conf.getConfString(graft.GraftSession.IntervalJoinAlgorithm,
-      "superintervals").toLowerCase
-    // fire only under the DEFAULT algorithm: IntervalCountExec has no
-    // per-algorithm dispatch (its sorted-array counting IS the
-    // superintervals structure), so rewriting under a pinned
-    // lapper/ailist/intervaltree would silently measure and verify the
-    // same shared path instead of the index the user (or an A/B bench)
-    // explicitly asked to exercise
-    val defaultAlg = alg == "superintervals" || alg == "coitrees"
+    // fire only under the DEFAULT algorithm (any of its aliases):
+    // IntervalCountExec has no per-algorithm dispatch (its sorted-array
+    // counting IS the superintervals structure), so rewriting under a
+    // pinned lapper/ailist/intervaltree would silently measure and verify
+    // the same shared path instead of the index the user (or an A/B
+    // bench) explicitly asked to exercise
+    val defaultAlg = graft.rangejoin.LongIntervalIndex.canonical(
+      conf.getConfString(graft.GraftSession.IntervalJoinAlgorithm,
+        "superintervals")) == "superintervals"
     if (!enabled || !defaultAlg) return plan
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs,
@@ -104,18 +104,12 @@ object IntervalCountRewrite extends Rule[LogicalPlan] {
               groupAttrs.forall(ga =>
                 ic.leftKeys.exists(_.semanticEquals(ga)) ||
                 ic.rightKeys.exists(_.semanticEquals(ga))) &&
-              // a keyless count can only execute in BroadcastMode (no key
-              // to partition on): skip the rewrite when the build side
-              // exceeds the broadcast threshold, mirroring the Inner-join
-              // strategy's keyless guard — the unrewritten plan stays
-              // correct (BNLJ) instead of collecting an oversized build
-              // side to the driver
-              (ic.leftKeys.nonEmpty || {
-                val threshold = conf.autoBroadcastJoinThreshold
-                (threshold > 0 && l.stats.sizeInBytes <= threshold) ||
-                  conf.getConfString(graft.GraftSession.IntervalJoinForceMode,
-                    "").equalsIgnoreCase("broadcast")
-              }) =>
+              // skip the rewrite where the Inner join would decline (a
+              // keyless build over the broadcast threshold): the
+              // unrewritten plan stays correct (BNLJ) instead of
+              // collecting an oversized build side to the driver
+              IntervalJoinStrategy.modeFor(l, ic.leftKeys.nonEmpty, None)
+                .isDefined =>
             val cnt = IntervalCountPlan(l, r, cond, groupAttrs)
             // SUM(long) is nullable; COUNT is not — coalesce to 0, keep
             // each original exprId so references above stay valid.

@@ -523,10 +523,6 @@ case class IntervalJoinExec(
     case (PartitionedMode, _) => right.outputPartitioning
   }
 
-  /** Plan line in the reference's EXPLAIN format so its plan assertions
-    * port directly (reference: tests/integration_test.rs:108-112 expects
-    * "IntervalJoinExec: mode=CollectLeft, join_type=Inner, on=[(l, r)],
-    * filter=..., alg=..."). */
   /** Every join type except FULL OUTER emits rows in probe (right) order
     * — per probe row, its matches are contiguous — so the probe side's
     * within-partition ordering survives and downstream sorts on it elide.
@@ -536,6 +532,10 @@ case class IntervalJoinExec(
     case _ => right.outputOrdering
   }
 
+  /** Plan line in the reference's EXPLAIN format so its plan assertions
+    * port directly (reference: tests/integration_test.rs:108-112 expects
+    * "IntervalJoinExec: mode=CollectLeft, join_type=Inner, on=[(l, r)],
+    * filter=..., alg=..."). */
   override def simpleString(maxFields: Int): String = {
     val modeStr = mode match {
       case BroadcastMode => "CollectLeft" // reference's name for broadcast
@@ -676,9 +676,7 @@ case class IntervalJoinExec(
   private def genMatchLoop(ctx: CodegenContext, idxTerm: String,
       rowsTerm: String, bufTerm: String, sL: String, eL: String,
       leftRowTerm: String, matchTail: String): String = {
-    val a = algorithm.toLowerCase
-    val superFamily = a == "superintervals" || a == "coitrees" || a == "default"
-    if (superFamily) {
+    if (LongIntervalIndex.canonical(algorithm) == "superintervals") {
       val siCls = classOf[LongSuperIntervalsIndex].getName
       val si = ctx.freshName("si")
       val sArr = ctx.freshName("siStarts")

@@ -1,7 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import graft.rangejoin.LongIntervalIndex
+import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, LogicalPlan, NO_BROADCAST_HASH, SHUFFLE_HASH}
 import org.apache.spark.sql.execution.{ProjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.internal.SQLConf
 
@@ -18,12 +20,14 @@ import org.apache.spark.sql.internal.SQLConf
  * Join here achieves the same effect without the reference's
  * `join_selection`-removal surgery (session_context.rs:30-32).
  *
- * Mode selection: build (left) side below `spark.sql.autoBroadcastJoinThreshold`
- * → broadcast (reference CollectLeft); else hash-partitioned on the
- * equi-keys (reference Partitioned). A pure range join (no equi-keys) has
- * nothing to partition on — it always broadcasts, mirroring the reference's
- * NestedLoopJoin conversion that injects the dummy key `lit(1) = lit(1)`
- * (sequila_physical_planner.rs:127-148).
+ * Mode selection ([[modeFor]]): build side below
+ * `spark.sql.autoBroadcastJoinThreshold` → broadcast (reference
+ * CollectLeft); else hash-partitioned on the equi-keys (reference
+ * Partitioned); build-side join hints override both. A pure range join (no
+ * equi-keys) has nothing to partition on — it broadcasts, mirroring the
+ * reference's NestedLoopJoin conversion that injects the dummy key
+ * `lit(1) = lit(1)` (sequila_physical_planner.rs:127-148), unless its build
+ * side is over the threshold.
  *
  * Stateless: every conf read goes to `SQLConf.get`, the conf of the
  * session planning the query, so one instance serves every session and
@@ -31,70 +35,87 @@ import org.apache.spark.sql.internal.SQLConf
  */
 object IntervalJoinStrategy extends SparkStrategy {
 
-  private def conf(key: String, default: String): String =
-    SQLConf.get.getConfString(key, default)
+  private def enabled: Boolean = SQLConf.get
+    .getConfString(graft.GraftSession.PreferIntervalJoin, "true").toBoolean
 
-  private def enabled: Boolean =
-    conf(graft.GraftSession.PreferIntervalJoin, "true").toBoolean
-
-  /** Shared mode selection for probe-side variants (build side given). */
-  private def pickMode(build: LogicalPlan, hasKeys: Boolean)
-      : Option[IntervalJoinMode] = {
+  /** The build side is under `spark.sql.autoBroadcastJoinThreshold`; a
+    * threshold of -1 (or 0) never broadcasts by size. */
+  private[plans] def fitsBroadcast(build: LogicalPlan): Boolean = {
     val threshold = SQLConf.get.autoBroadcastJoinThreshold
-    val fitsBroadcast = threshold > 0 && build.stats.sizeInBytes <= threshold
-    conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
-      case "broadcast" => Some(BroadcastMode)
-      case "partitioned" if hasKeys => Some(PartitionedMode)
-      case _ =>
-        if (hasKeys) Some(if (fitsBroadcast) BroadcastMode else PartitionedMode)
-        else if (fitsBroadcast) Some(BroadcastMode)
-        else None
-    }
+    threshold > 0 && build.stats.sizeInBytes <= threshold
   }
+
+  /** The distribution mode of an interval join with this build side.
+    * A build-side hint decides first, in Spark's JoinSelection vocabulary:
+    * BROADCAST broadcasts, SHUFFLE_HASH / NO_BROADCAST_HASH partition a
+    * keyed join. Otherwise a build that fits the broadcast threshold
+    * broadcasts and a keyed one partitions. A keyless build over the
+    * threshold gets None: it cannot be broadcast (driver OOM at scale) and
+    * has no key to partition on. The reference unconditionally converts
+    * NLJ (sequila_physical_planner.rs:127-148); a Join declines here and
+    * lets Spark plan it (BNLJ: correct, just slower). */
+  def modeFor(build: LogicalPlan, hasKeys: Boolean,
+      buildHint: Option[HintInfo]): Option[IntervalJoinMode] =
+    buildHint.flatMap(_.strategy) match {
+      case Some(BROADCAST) => Some(BroadcastMode)
+      case Some(SHUFFLE_HASH | NO_BROADCAST_HASH) if hasKeys => Some(PartitionedMode)
+      case _ if fitsBroadcast(build) => Some(BroadcastMode)
+      case _ if hasKeys => Some(PartitionedMode)
+      case _ => None
+    }
+
+  /** The explicit count / nearest / as-of nodes have no stock plan to
+    * fall back to, so a keyless build broadcasts whatever its size. */
+  private def explicitMode(build: LogicalPlan, hasKeys: Boolean)
+      : IntervalJoinMode = modeFor(build, hasKeys, None).getOrElse(BroadcastMode)
+
+  /** Probe-side variants — all beyond the reference's Inner-only support —
+    * as (build is the left child, exec join type, reorder projection).
+    * RightOuter NULL-pads probe rows with no match; LeftOuter is RightOuter
+    * with sides swapped plus a projection restoring the column order;
+    * LeftSemi / LeftAnti / ExistenceJoin (Mark, what EXISTS compiles to
+    * under a disjunction) preserve the probe side. The reference plumbs
+    * Mark but never executes it (interval_join.rs:280-302). */
+  private val probeSide
+      : PartialFunction[JoinType, (Boolean, IntervalJoinType, Boolean)] = {
+    case RightOuter => (true, RightOuterJoin, false)
+    case LeftOuter => (false, RightOuterJoin, true)
+    case LeftSemi => (false, SemiJoin, false)
+    case LeftAnti => (false, AntiJoin, false)
+    case ExistenceJoin(_) => (false, MarkJoin, false)
+  }
+
+  /** The exec joining `ic`'s left side as build, or (`swap`) its right. */
+  private def joinExec(l: LogicalPlan, r: LogicalPlan, ic: IntervalCondition,
+      swap: Boolean, jt: IntervalJoinType, mode: IntervalJoinMode,
+      algorithm: String, markAttr: Option[Attribute] = None): SparkPlan =
+    if (swap)
+      IntervalJoinExec(planLater(r), planLater(l), ic.rightKeys, ic.leftKeys,
+        ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
+        ic.residual, jt, mode, algorithm, markAttr)
+    else
+      IntervalJoinExec(planLater(l), planLater(r), ic.leftKeys, ic.rightKeys,
+        ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
+        ic.residual, jt, mode, algorithm, markAttr)
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     // overlap-count node (from IntervalCountRewrite's aggregate pushdown)
     case IntervalCountPlan(l, r, cond, groupAttrs, countAttr) =>
       IntervalCondition.extract(cond, l, r) match {
         case Some(ic) if ic.residual.isEmpty =>
-          val threshold = SQLConf.get.autoBroadcastJoinThreshold
-          val fitsBroadcast = threshold > 0 && l.stats.sizeInBytes <= threshold
-          val mode =
-            conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
-              case "broadcast" => BroadcastMode
-              case "partitioned" if ic.leftKeys.nonEmpty => PartitionedMode
-              case _ =>
-                if (ic.leftKeys.isEmpty || fitsBroadcast) BroadcastMode
-                else PartitionedMode
-            }
           IntervalCountExec(
             planLater(l), planLater(r),
             ic.leftKeys, ic.rightKeys,
             ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-            mode, groupAttrs, countAttr) :: Nil
+            explicitMode(l, ic.leftKeys.nonEmpty), groupAttrs, countAttr) :: Nil
         case _ => Nil // unreachable — the rewrite only fires on extractable conditions
       }
     // explicit nearest-join node (graft.operators.NearestJoin API)
     case NearestIntervalJoin(l, r, cond) =>
       IntervalCondition.extract(cond, l, r) match {
         case Some(ic) if ic.residual.isEmpty =>
-          val threshold = SQLConf.get.autoBroadcastJoinThreshold
-          val fitsBroadcast = threshold > 0 && l.stats.sizeInBytes <= threshold
-          // forceMode applies here like on every sibling node type, so
-          // tests can pin the partitioned nearest path deterministically
-          val mode =
-            conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
-              case "broadcast" => BroadcastMode
-              case "partitioned" if ic.leftKeys.nonEmpty => PartitionedMode
-              case _ =>
-                if (ic.leftKeys.isEmpty || fitsBroadcast) BroadcastMode
-                else PartitionedMode
-            }
-          IntervalJoinExec(
-            planLater(l), planLater(r),
-            ic.leftKeys, ic.rightKeys,
-            ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-            None, NearestJoin, mode, "superintervals") :: Nil
+          joinExec(l, r, ic, swap = false, NearestJoin,
+            explicitMode(l, ic.leftKeys.nonEmpty), "superintervals") :: Nil
         case _ => Nil // unreachable — NearestJoin.apply validates eagerly
       }
     // explicit as-of join node (graft.operators.AsofJoin API): times are
@@ -103,52 +124,28 @@ object IntervalJoinStrategy extends SparkStrategy {
     case AsofIntervalJoin(l, r, cond) =>
       AsofCondition.extract(cond, l, r) match {
         case Some(x) =>
-          val threshold = SQLConf.get.autoBroadcastJoinThreshold
-          val fitsBroadcast = threshold > 0 && l.stats.sizeInBytes <= threshold
-          val mode =
-            conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
-              case "broadcast" => BroadcastMode
-              case "partitioned" if x.leftKeys.nonEmpty => PartitionedMode
-              case _ =>
-                if (x.leftKeys.isEmpty || fitsBroadcast) BroadcastMode
-                else PartitionedMode
-            }
           IntervalJoinExec(
             planLater(l), planLater(r),
             x.leftKeys, x.rightKeys,
             x.buildTime, x.buildTime, x.probeTime, x.probeTime,
-            x.residual, AsofJoin(x.forward, x.strict), mode,
-            "superintervals") :: Nil
+            x.residual, AsofJoin(x.forward, x.strict),
+            explicitMode(l, x.leftKeys.nonEmpty), "superintervals") :: Nil
         case _ => Nil // unreachable — AsofJoin.apply validates eagerly
       }
-    // probe-side variants — all beyond the reference's Inner-only support.
-    // RightOuter: build = left, NULL-pad probe rows with no match.
-    case Join(l, r, RightOuter, Some(cond), _) if enabled =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) =>
-          pickMode(l, ic.leftKeys.nonEmpty).map { m =>
-            IntervalJoinExec(planLater(l), planLater(r),
-              ic.leftKeys, ic.rightKeys,
-              ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-              ic.residual, RightOuterJoin, m, "superintervals") :: Nil
-          }.getOrElse(Nil)
-        case None => Nil
-      }
-    // LeftOuter ≡ RightOuter with sides swapped + a reorder projection.
-    case Join(l, r, LeftOuter, Some(cond), _) if enabled =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) =>
-          pickMode(r, ic.leftKeys.nonEmpty).map { m =>
-            val swapped = IntervalJoinExec(planLater(r), planLater(l),
-              ic.rightKeys, ic.leftKeys,
-              ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, RightOuterJoin, m, "superintervals")
-            ProjectExec(
-              (l.output ++ r.output.map(_.withNullability(true)))
-                .map(a => a: org.apache.spark.sql.catalyst.expressions.NamedExpression),
-              swapped) :: Nil
-          }.getOrElse(Nil)
-        case None => Nil
+    case Join(l, r, jt, Some(cond), hint) if enabled && probeSide.isDefinedAt(jt) =>
+      val (buildLeft, ijt, reorder) = probeSide(jt)
+      val (build, buildHint) =
+        if (buildLeft) (l, hint.leftHint) else (r, hint.rightHint)
+      val mark = jt match { case ExistenceJoin(e) => Some(e); case _ => None }
+      for {
+        ic <- IntervalCondition.extract(cond, l, r).toSeq
+        m <- modeFor(build, ic.leftKeys.nonEmpty, buildHint).toSeq
+      } yield {
+        val exec = joinExec(l, r, ic, swap = !buildLeft, ijt, m,
+          "superintervals", mark)
+        if (!reorder) exec
+        else ProjectExec((l.output ++ r.output.map(_.withNullability(true)))
+          .map(a => a: NamedExpression), exec)
       }
     // FullOuter: inner pairs + both-side NULL padding. Needs the
     // per-partition match bitmap, so PartitionedMode only — which needs an
@@ -158,59 +155,16 @@ object IntervalJoinStrategy extends SparkStrategy {
     case Join(l, r, FullOuter, Some(cond), _) if enabled =>
       IntervalCondition.extract(cond, l, r) match {
         case Some(ic) if ic.leftKeys.nonEmpty =>
-          IntervalJoinExec(planLater(l), planLater(r),
-            ic.leftKeys, ic.rightKeys,
-            ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-            ic.residual, FullOuterJoin, PartitionedMode,
+          joinExec(l, r, ic, swap = false, FullOuterJoin, PartitionedMode,
             "superintervals") :: Nil
         case _ => Nil
       }
-    // LeftSemi/LeftAnti: preserved side = probe, filtering side = build.
-    case Join(l, r, LeftSemi, Some(cond), _) if enabled =>
+    case Join(l, r, Inner, Some(cond), hint) if enabled =>
       IntervalCondition.extract(cond, l, r) match {
         case Some(ic) =>
-          pickMode(r, ic.leftKeys.nonEmpty).map { m =>
-            IntervalJoinExec(planLater(r), planLater(l),
-              ic.rightKeys, ic.leftKeys,
-              ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, SemiJoin, m, "superintervals") :: Nil
-          }.getOrElse(Nil)
-        case None => Nil
-      }
-    // ExistenceJoin (Mark): preserved side = probe, appending the exists
-    // boolean — what EXISTS compiles to under a disjunction. The reference
-    // plumbs Mark but never executes it (interval_join.rs:280-302).
-    case Join(l, r, ExistenceJoin(exists), Some(cond), _) if enabled =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) =>
-          pickMode(r, ic.leftKeys.nonEmpty).map { m =>
-            IntervalJoinExec(planLater(r), planLater(l),
-              ic.rightKeys, ic.leftKeys,
-              ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, MarkJoin, m, "superintervals",
-              markAttr = Some(exists)) :: Nil
-          }.getOrElse(Nil)
-        case None => Nil
-      }
-    case Join(l, r, LeftAnti, Some(cond), _) if enabled =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) =>
-          pickMode(r, ic.leftKeys.nonEmpty).map { m =>
-            IntervalJoinExec(planLater(r), planLater(l),
-              ic.rightKeys, ic.leftKeys,
-              ic.rightStart, ic.rightEnd, ic.leftStart, ic.leftEnd,
-              ic.residual, AntiJoin, m, "superintervals") :: Nil
-          }.getOrElse(Nil)
-        case None => Nil
-      }
-    case Join(l, r, Inner, Some(cond), hint)
-        if conf(graft.GraftSession.PreferIntervalJoin, "true").toBoolean =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) =>
-          val algorithm =
-            conf(graft.GraftSession.IntervalJoinAlgorithm, "superintervals")
-          val nearest = algorithm.toLowerCase == "nearest" ||
-            algorithm.toLowerCase == "coitreesnearest" // reference's name
+          val algorithm = SQLConf.get.getConfString(
+            graft.GraftSession.IntervalJoinAlgorithm, "superintervals")
+          val nearest = LongIntervalIndex.canonical(algorithm) == "nearest"
           if (nearest && ic.residual.nonEmpty) {
             // nearest semantics with extra filters is ill-defined, and a
             // silent fallback to Spark's stock join would return OVERLAP
@@ -221,63 +175,23 @@ object IntervalJoinStrategy extends SparkStrategy {
                 "join with residual conjuncts beyond the range pair " +
                 s"(${ic.residual.get.sql}); use graft.operators.NearestJoin " +
                 "with the bare overlap condition, or unset the algorithm")
-          } else {
-            val threshold = SQLConf.get.autoBroadcastJoinThreshold
-            val leftSize = l.stats.sizeInBytes
-            val fitsBroadcast = threshold > 0 && leftSize <= threshold
-            // user join hints steer mode selection (same vocabulary as
-            // Spark's JoinSelection): BROADCAST on the build (left) side
-            // forces broadcast, SHUFFLE_HASH / NO_BROADCAST_HASH on it
-            // forces partitioned
-            def strat(h: Option[org.apache.spark.sql.catalyst.plans.logical.HintInfo]) =
-              h.flatMap(_.strategy)
-            import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, NO_BROADCAST_HASH, SHUFFLE_HASH}
-            val hinted: Option[IntervalJoinMode] = strat(hint.leftHint) match {
-              case Some(BROADCAST) => Some(BroadcastMode)
-              case Some(SHUFFLE_HASH) | Some(NO_BROADCAST_HASH)
-                  if ic.leftKeys.nonEmpty => Some(PartitionedMode)
-              case _ => None
-            }
-            // Mode selection; `forceMode` exists so tests / verification
-            // entries can pin the partitioned code path deterministically.
-            val mode: Option[IntervalJoinMode] =
-              conf(graft.GraftSession.IntervalJoinForceMode, "").toLowerCase match {
-                case "broadcast" => Some(BroadcastMode)
-                case "partitioned" if ic.leftKeys.nonEmpty => Some(PartitionedMode)
-                case _ if hinted.nonEmpty => hinted
-                case _ =>
-                  if (ic.leftKeys.nonEmpty)
-                    Some(if (fitsBroadcast) BroadcastMode else PartitionedMode)
-                  else if (fitsBroadcast) Some(BroadcastMode)
-                  // A keyless range join with a big build side cannot be
-                  // broadcast (driver OOM at scale) and has no key to
-                  // partition on — decline and let Spark plan it (BNLJ):
-                  // correct, just slower. The reference unconditionally
-                  // converts NLJ (sequila_physical_planner.rs:127-148); we
-                  // deliberately guard it.
-                  else None
-              }
-            val joinType = if (nearest) NearestJoin else OverlapJoin
-            mode match {
-              case None if nearest =>
-                // declining under algorithm=nearest would silently run
-                // Spark's stock join with OVERLAP semantics — a
-                // stats-dependent answer flip. Fail loudly instead.
-                throw new IllegalStateException(
-                  "[GRAFT_INTERVAL_JOIN] algorithm=nearest: keyless join " +
-                    "whose build side exceeds the broadcast threshold " +
-                    "cannot plan as a nearest join; raise " +
-                    "spark.sql.autoBroadcastJoinThreshold or add equi-keys")
-              case None => Nil
-              case Some(m) =>
-                IntervalJoinExec(
-                  planLater(l), planLater(r),
-                  ic.leftKeys, ic.rightKeys,
-                  ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-                  ic.residual, joinType, m,
-                  // nearest semantics ride the superintervals structure
-                  if (nearest) "superintervals" else algorithm) :: Nil
-            }
+          }
+          modeFor(l, ic.leftKeys.nonEmpty, hint.leftHint) match {
+            case None if nearest =>
+              // declining under algorithm=nearest would silently run
+              // Spark's stock join with OVERLAP semantics — a
+              // stats-dependent answer flip. Fail loudly instead.
+              throw new IllegalStateException(
+                "[GRAFT_INTERVAL_JOIN] algorithm=nearest: keyless join " +
+                  "whose build side exceeds the broadcast threshold " +
+                  "cannot plan as a nearest join; raise " +
+                  "spark.sql.autoBroadcastJoinThreshold or add equi-keys")
+            case None => Nil
+            case Some(m) =>
+              joinExec(l, r, ic, swap = false,
+                if (nearest) NearestJoin else OverlapJoin, m,
+                // nearest semantics ride the superintervals structure
+                if (nearest) "superintervals" else algorithm) :: Nil
           }
         case None => Nil
       }

@@ -341,32 +341,41 @@ final class LongAugmentedTreeIndex private[rangejoin] (
 }
 
 object LongIntervalIndex {
-  /** Build the index named by `algorithm` (conf
-    * `spark.graft.intervalJoin.algorithm`). Mirrors `Algorithm::from_str`
-    * (reference: sequila/sequila-core/src/session_context.rs:85-104). */
+  /** The canonical name of an interval-join algorithm (conf
+    * `spark.graft.intervalJoin.algorithm`, any case), resolving the
+    * reference's aliases. Mirrors `Algorithm::from_str` (reference:
+    * sequila/sequila-core/src/session_context.rs:85-104). An unknown name
+    * comes back lowercased; [[build]] rejects it. */
+  def canonical(algorithm: String): String = algorithm.toLowerCase match {
+    // the superintervals design serves the Coitrees (default) slot — a
+    // sorted array with branch skips has the same cache-linear profile
+    // the vEB-layout COITree targets (SURVEY §2 #6 allows this)
+    case "superintervals" | "coitrees" | "default" => "superintervals"
+    // real augmented interval tree (reference's IntervalTree /
+    // ArrayIntervalTree slots, rust-bio style — interval_join.rs:816-841)
+    case "intervaltree" | "arrayintervaltree" => "intervaltree"
+    // real Lapper (reference's Lapper slot, interval_join.rs:842-857)
+    case "lapper" | "nclist" => "lapper"
+    case "naive" | "linear" => "naive"
+    // nearest-join semantics, not an index: planned on superintervals
+    case "nearest" | "coitreesnearest" => "nearest"
+    case other => other
+  }
+
+  /** Build the index named by `algorithm` (see [[canonical]]). */
   def build(algorithm: String, starts: Array[Long], ends: Array[Long],
             positions: Array[Int]): LongIntervalIndex =
-    algorithm.toLowerCase match {
-      // the superintervals design serves the Coitrees (default) slot — a
-      // sorted array with branch skips has the same cache-linear profile
-      // the vEB-layout COITree targets (SURVEY §2 #6 allows this)
-      case "superintervals" | "coitrees" | "default" =>
+    canonical(algorithm) match {
+      case "superintervals" =>
         LongSuperIntervalsIndex.build(starts, ends, positions)
-      case "ailist" =>
-        buildAIList(starts, ends, positions)
-      // real augmented interval tree (reference's IntervalTree /
-      // ArrayIntervalTree slots, rust-bio style — interval_join.rs:816-841)
-      case "intervaltree" | "arrayintervaltree" =>
-        buildTree(starts, ends, positions)
-      // real Lapper (reference's Lapper slot, interval_join.rs:842-857)
-      case "lapper" | "nclist" =>
-        buildLapper(starts, ends, positions)
-      case "naive" | "linear" =>
-        new LongNaiveIndex(starts, ends, positions)
-      case other =>
+      case "ailist" => buildAIList(starts, ends, positions)
+      case "intervaltree" => buildTree(starts, ends, positions)
+      case "lapper" => buildLapper(starts, ends, positions)
+      case "naive" => new LongNaiveIndex(starts, ends, positions)
+      case _ =>
         throw new IllegalArgumentException(
-          s"unknown interval-join algorithm: $other (expected " +
-            "superintervals | ailist | intervaltree | lapper | naive)")
+          s"unknown interval-join algorithm: ${algorithm.toLowerCase} " +
+            "(expected superintervals | ailist | intervaltree | lapper | naive)")
     }
 
   private def buildLapper(starts0: Array[Long], ends0: Array[Long],

@@ -309,10 +309,9 @@ object BenchScale {
       // fixed gap that amortizes away as the pair volume grows.
       var pairsPart = 0L
       val fpSecs = timedEntry("flagship_count_partitioned") { () =>
-        spark.conf.set(graft.GraftSession.IntervalJoinForceMode,
-          "partitioned")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try { val (p, s) = flagshipCount(spark, dir); pairsPart = p; s }
-        finally spark.conf.set(graft.GraftSession.IntervalJoinForceMode, "")
+        finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       }
       require(pairsPart == pairs,
         s"partitioned flagship disagrees: $pairsPart vs $pairs")

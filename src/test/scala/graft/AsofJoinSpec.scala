@@ -5,7 +5,6 @@ import graft.operators.AsofJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterEach
 
 /**
  * AS-OF join semantics (pandas merge_asof / DuckDB ASOF JOIN; beyond the
@@ -14,14 +13,14 @@ import org.scalatest.BeforeAndAfterEach
  * per-key event sets with UNIQUE (key, time) build rows (the documented
  * determinism contract).
  */
-class AsofJoinSpec extends SparkTestBase with BeforeAndAfterEach {
+class AsofJoinSpec extends SparkTestBase {
 
   import spark.implicits._
 
   override def beforeEach(): Unit = {
+    super.beforeEach()
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
   }
 
   /** n events with unique (key, t); Long times offset by `base`. */
@@ -100,7 +99,7 @@ class AsofJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     b.count(); p.count()
     val broadcastRes = run(b, p, forward = false, strict = false)
       .collect().map(_.toSeq).toSet
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     val df = run(b, p, forward = false, strict = false)
     assert(planOf(df).contains("mode=Partitioned"), planOf(df))
     assert(df.collect().map(_.toSeq).toSet == broadcastRes)

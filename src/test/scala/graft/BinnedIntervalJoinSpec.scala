@@ -39,19 +39,17 @@ class BinnedIntervalJoinSpec extends SparkTestBase {
   }
 
   test("binned ≡ plain on hot-key data, partitioned mode, binSize=100") {
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
-    try {
-      val a = randomTable(1, 500, hot = true).cache()
-      val b = randomTable(2, 500, hot = true).cache()
-      a.count(); b.count()
-      val exp = plainJoin(a, b, withKey = true)
-        .map { r => Seq(r(0), r(1), r(2), r(3), r(4), r(5)) }
-      val got = binnedJoin(a, b, Seq("contig"), 100)
-      // binned output: k, as_, ae, k, bs, be — same values
-      assert(got.size == exp.size)
-      assert(got == exp)
-      a.unpersist(); b.unpersist()
-    } finally spark.conf.set(GraftSession.IntervalJoinForceMode, "")
+    pinMode("partitioned")
+    val a = randomTable(1, 500, hot = true).cache()
+    val b = randomTable(2, 500, hot = true).cache()
+    a.count(); b.count()
+    val exp = plainJoin(a, b, withKey = true)
+      .map { r => Seq(r(0), r(1), r(2), r(3), r(4), r(5)) }
+    val got = binnedJoin(a, b, Seq("contig"), 100)
+    // binned output: k, as_, ae, k, bs, be — same values
+    assert(got.size == exp.size)
+    assert(got == exp)
+    a.unpersist(); b.unpersist()
   }
 
   test("binned ≡ plain keyless, spanning bins, binSize=64") {
@@ -80,7 +78,7 @@ class BinnedIntervalJoinSpec extends SparkTestBase {
   test("autoBin=force rewrites a plain join to the binned form, same result") {
     spark.conf.set(GraftSession.AutoBin, "force")
     spark.conf.set(GraftSession.BinSize, "100")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     try {
       val a = randomTable(5, 400, hot = true).cache()
       val b = randomTable(6, 400, hot = true).cache()
@@ -94,16 +92,13 @@ class BinnedIntervalJoinSpec extends SparkTestBase {
       val exp = overlapDf(a, b).collect().map(_.toSeq).toSet
       assert(got == exp)
       a.unpersist(); b.unpersist()
-    } finally {
-      spark.conf.set(GraftSession.AutoBin, "auto")
-      spark.conf.set(GraftSession.IntervalJoinForceMode, "")
-    }
+    } finally spark.conf.set(GraftSession.AutoBin, "auto")
   }
 
   test("binned partitioned join spreads ONE hot key over multiple tasks") {
     spark.conf.set(GraftSession.AutoBin, "force")
     spark.conf.set(GraftSession.BinSize, "100")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     // AQE would coalesce this tiny shuffle back to one partition; the
     // assertion is about the partitioning KEY space, so pin it off
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -127,7 +122,6 @@ class BinnedIntervalJoinSpec extends SparkTestBase {
       a.unpersist(); b.unpersist()
     } finally {
       spark.conf.set(GraftSession.AutoBin, "auto")
-      spark.conf.set(GraftSession.IntervalJoinForceMode, "")
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     }
   }

@@ -2,19 +2,18 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterEach
 
 /** Tests of the COUNT(*) aggregate pushdown (IntervalCountRewrite →
   * IntervalCountExec): equivalence with the stock plan, grouped variants,
   * and plan-shape assertions. */
-class IntervalCountSpec extends SparkTestBase with BeforeAndAfterEach {
+class IntervalCountSpec extends SparkTestBase {
 
   import spark.implicits._
 
   override def beforeEach(): Unit = {
+    super.beforeEach()
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
   }
 
   private def randomTable(seed: Int, n: Int): DataFrame = {
@@ -58,7 +57,7 @@ class IntervalCountSpec extends SparkTestBase with BeforeAndAfterEach {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       for (m <- Seq("broadcast", "partitioned")) {
-        spark.conf.set(GraftSession.IntervalJoinForceMode, m)
+        pinMode(m)
         val a = randomTable(7, 400)
         val b = randomTable(8, 400)
         a.cache().count(); b.cache().count()
@@ -72,17 +71,14 @@ class IntervalCountSpec extends SparkTestBase with BeforeAndAfterEach {
           s"mode=$m expected fused IntervalCountExec:\n$plan")
         a.unpersist(); b.unpersist()
       }
-    } finally {
-      spark.conf.unset("spark.sql.codegen.fallback")
-      spark.conf.set(GraftSession.IntervalJoinForceMode, "")
-    }
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
   test("grouped count runs inside whole-stage codegen (both modes)") {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       for (m <- Seq("broadcast", "partitioned")) {
-        spark.conf.set(GraftSession.IntervalJoinForceMode, m)
+        pinMode(m)
         val a = randomTable(25, 400)
         val b = randomTable(26, 400)
         a.cache().count(); b.cache().count()
@@ -98,10 +94,7 @@ class IntervalCountSpec extends SparkTestBase with BeforeAndAfterEach {
           s"mode=$m expected fused grouped IntervalCountExec:\n$plan")
         a.unpersist(); b.unpersist()
       }
-    } finally {
-      spark.conf.unset("spark.sql.codegen.fallback")
-      spark.conf.set(GraftSession.IntervalJoinForceMode, "")
-    }
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
   test("strict-op count matches stock") {
@@ -178,7 +171,7 @@ class IntervalCountSpec extends SparkTestBase with BeforeAndAfterEach {
   }
 
   test("partitioned mode count matches") {
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     val a = randomTable(13, 400)
     val b = randomTable(14, 400)
     a.cache().count(); b.cache().count()
@@ -258,5 +251,20 @@ class IntervalCountSpec extends SparkTestBase with BeforeAndAfterEach {
     val b = randomTable(16, 50)
     val df = joined(a, b).groupBy().count()
     assert(!df.queryExecution.executedPlan.toString.contains("IntervalCountExec"))
+  }
+
+  test("every alias of the default algorithm keeps the count pushdown") {
+    val a = randomTable(27, 300)
+    val b = randomTable(28, 300)
+    a.cache().count(); b.cache().count()
+    val exp = stockCount(joined(a, b))
+    for (alg <- Seq("default", "COITREES")) {
+      spark.conf.set(GraftSession.IntervalJoinAlgorithm, alg)
+      val df = joined(a, b).groupBy().count()
+      assert(df.queryExecution.executedPlan.toString.contains("IntervalCountExec"),
+        s"alg=$alg")
+      assert(df.head().getLong(0) == exp, s"alg=$alg")
+    }
+    a.unpersist(); b.unpersist()
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterEach
 
 /**
  * End-to-end tests of the interval join operator, porting the reference's
@@ -12,14 +11,14 @@ import org.scalatest.BeforeAndAfterEach
  * with NULL padding, NULL equi-keys, Int32 domain edges, plan-shape
  * assertions, and equivalence with the stock Spark join.
  */
-class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
+class IntervalJoinSpec extends SparkTestBase {
 
   import spark.implicits._
 
   override def beforeEach(): Unit = {
+    super.beforeEach()
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -216,7 +215,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     for (mode <- Seq("broadcast", "partitioned");
          codegen <- Seq("fallback", "strict", "off");
          strict <- Seq(false, true)) {
-      spark.conf.set(GraftSession.IntervalJoinForceMode, mode)
+      pinMode(mode)
       // a codegen bug must fail loudly, not silently fall back
       if (codegen == "strict")
         spark.conf.set("spark.sql.codegen.fallback", "false")
@@ -273,7 +272,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
   }
 
   test("partitioned mode: forced, correct, and contains exchanges") {
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     val df = overlapJoin(targets, reads)
     assertUsesIntervalJoin(df)
     assert(df.count() == 16)
@@ -282,7 +281,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
   }
 
   test("partitioned mode joins inside whole-stage codegen") {
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     // a codegen bug must fail loudly, not silently fall back
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
@@ -310,7 +309,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
   test("two equi-keys, partitioned mode: co-partitioning is correct") {
     // guards the zipPartitions alignment assumption: EnsureRequirements
     // must cluster BOTH sides on the full key set (contig, strand)
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     val rnd = new scala.util.Random(21)
     def table(n: Int) = (0 until n).map { _ =>
       val s = rnd.nextInt(500)
@@ -414,7 +413,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       assert(got == exp, s"join type $jt")
     }
     // partitioned mode too
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     for (jt <- Seq("right_outer", "left_semi", "left_anti")) {
       val df = al.join(bl, cond, jt)
       assert(planOf(df).contains("IntervalJoinExec"))
@@ -424,7 +423,6 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       spark.conf.set(GraftSession.PreferIntervalJoin, "true")
       assert(got == exp, s"partitioned join type $jt")
     }
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
     a.unpersist(); b.unpersist()
   }
 
@@ -467,7 +465,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     spark.conf.set(GraftSession.MaxBuildBytes, "1024")
     try {
       for (mode <- Seq("broadcast", "partitioned")) {
-        spark.conf.set(GraftSession.IntervalJoinForceMode, mode)
+        pinMode(mode)
         val df = overlapJoin(reads, targets)
         assertUsesIntervalJoin(df)
         // collect(), not count(): COUNT(*) is rewritten to the count
@@ -479,10 +477,7 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
         assert(messages(ex).exists(_.contains("[GRAFT_INTERVAL_JOIN]")),
           s"mode=$mode got: ${messages(ex).mkString(" | ")}")
       }
-    } finally {
-      spark.conf.set(GraftSession.MaxBuildBytes, "0")
-      spark.conf.set(GraftSession.IntervalJoinForceMode, "")
-    }
+    } finally spark.conf.set(GraftSession.MaxBuildBytes, "0")
   }
 
   test("join metrics report build rows/keys/memory and probe rows") {
@@ -517,11 +512,9 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     assert(got == exp)
     // partitioned mode too
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
-    try {
-      val gotP = spark.sql(sql).collect().map(_.toSeq).toSet
-      assert(gotP == exp, "partitioned mark join")
-    } finally spark.conf.set(GraftSession.IntervalJoinForceMode, "")
+    pinMode("partitioned")
+    val gotP = spark.sql(sql).collect().map(_.toSeq).toSet
+    assert(gotP == exp, "partitioned mark join")
   }
 
   test("non-pushable filter fused above the join (codegen continue safety)") {
@@ -531,9 +524,8 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     val df = overlapJoin(reads, targets).where(rand(7) >= -1.0)
     assertUsesIntervalJoin(df)
     assert(df.count() == 16)
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
-    try assert(overlapJoin(reads, targets).where(rand(7) >= -1.0).count() == 16)
-    finally spark.conf.set(GraftSession.IntervalJoinForceMode, "")
+    pinMode("partitioned")
+    assert(overlapJoin(reads, targets).where(rand(7) >= -1.0).count() == 16)
   }
 
   test("probe-side ordering survives the join: downstream sort elided") {
@@ -586,12 +578,10 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
       s"plan:\n$plan")
     assert(plan.contains("filter="), s"plan:\n$plan")
     assert(plan.contains("alg=superintervals"), s"plan:\n$plan")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
-    try {
-      val p2 = planOf(overlapJoin(targets, reads))
-      assert(p2.contains("IntervalJoinExec: mode=Partitioned, join_type=Inner"),
-        s"plan:\n$p2")
-    } finally spark.conf.set(GraftSession.IntervalJoinForceMode, "")
+    pinMode("partitioned")
+    val p2 = planOf(overlapJoin(targets, reads))
+    assert(p2.contains("IntervalJoinExec: mode=Partitioned, join_type=Inner"),
+      s"plan:\n$p2")
   }
 
   test("projection variants through the join (reference smoke tests)") {

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterEach
 
 /**
  * Interval joins on Long coordinates beyond Int32: domains the
@@ -12,14 +11,14 @@ import org.scalatest.BeforeAndAfterEach
  * same data (join+filter oracle), at epoch-microsecond magnitudes (~1.7e15)
  * where Double arithmetic is also no longer exact.
  */
-class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
+class LongIntervalJoinSpec extends SparkTestBase {
 
   import spark.implicits._
 
   override def beforeEach(): Unit = {
+    super.beforeEach()
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
   }
 
   // epoch-micro-ish base: 2024-01-01T00:00:00Z in micros
@@ -78,7 +77,7 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
   }
 
   test("partitioned mode + whole-stage codegen on the long walk") {
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "partitioned")
+    pinMode("partitioned")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val a = windows(400, 3).cache(); val b = windows(400, 4).cache()
@@ -184,7 +183,7 @@ class LongIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
   test("randomized equivalence sweep at int64 (both modes)") {
     val rnd = new scala.util.Random(11)
     for (mode <- Seq("broadcast", "partitioned")) {
-      spark.conf.set(GraftSession.IntervalJoinForceMode, mode)
+      pinMode(mode)
       val a = windows(200 + rnd.nextInt(100), 12).cache()
       val b = windows(200 + rnd.nextInt(100), 13).cache()
       a.count(); b.count()

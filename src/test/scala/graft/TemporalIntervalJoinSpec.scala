@@ -4,7 +4,6 @@ import graft.operators.AsofJoin
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterEach
 
 import java.sql.{Date, Timestamp}
 
@@ -16,14 +15,14 @@ import java.sql.{Date, Timestamp}
  * its coordinates are Int32-only. Every case compares against the stock
  * Spark join on identical data.
  */
-class TemporalIntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
+class TemporalIntervalJoinSpec extends SparkTestBase {
 
   import spark.implicits._
 
   override def beforeEach(): Unit = {
+    super.beforeEach()
     spark.conf.set(GraftSession.PreferIntervalJoin, "true")
     spark.conf.set(GraftSession.IntervalJoinAlgorithm, "superintervals")
-    spark.conf.set(GraftSession.IntervalJoinForceMode, "")
   }
 
   private val BaseMs = 1704067200000L // 2024-01-01T00:00:00Z
