@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import graft.plans.{AutoBinIntervalJoin, IntervalCondition}
+
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.Join
 
 /**
  * Skew-proof partitioned overlap join via genomic binning — the 100-TB
@@ -16,6 +19,11 @@ import org.apache.spark.sql.functions._
  * bin containing `max(leftStart, rightStart)` (the leftmost bin where both
  * intervals are present) — a per-pair predicate, no dedup shuffle.
  *
+ * The plain overlap join goes through the planner rule's own rewrite
+ * ([[graft.plans.AutoBinIntervalJoin]]), so the two binned forms are one:
+ * the same bins, owner predicate and span guard (an interval spanning more
+ * than 1 M bins fails with a `[GRAFT_INTERVAL_JOIN]` error instead of
+ * exploding), and `__graft_bin` keys the rule never bins a second time.
  * The exploded join is an ordinary Inner join with `(keys, bin)`
  * equi-keys + the overlap pair + a residual — exactly the shape
  * [[graft.plans.IntervalJoinStrategy]] claims, so it executes as a
@@ -36,40 +44,18 @@ object BinnedIntervalJoin {
       rightStart: String, rightEnd: String,
       binSize: Int): DataFrame = {
     require(binSize > 0, "binSize must be positive")
-
-    // least/greatest keeps the span set correct for inverted (start > end)
-    // intervals, which the unbinned join matches via the raw predicate.
-    // The span cap guards the explode: ONE open-ended sentinel row
-    // (end = Long.MaxValue) would otherwise ask sequence() for ~1e13
-    // elements and kill the whole job — same guard the planner-automatic
-    // rewrite applies. Oversized spans fail with the offending width.
-    val maxBinsPerRow = 1000000L
-    def withBins(df: DataFrame, start: String, end: String, binCol: String) = {
-      val bs = floor(col(start).cast("long") / binSize).cast("long")
-      val be = floor(col(end).cast("long") / binSize).cast("long")
-      val span = greatest(bs, be) - least(bs, be) + 1L
-      // span >= 1 also catches Long overflow of the subtraction itself
-      // (binSize=1 with coords spanning the full domain wraps negative)
-      val guarded = when(span >= 1L && span <= maxBinsPerRow,
-        sequence(least(bs, be), greatest(bs, be)))
-        .otherwise(raise_error(concat(
-          lit(s"[GRAFT_INTERVAL_JOIN] binned join: interval spans "),
-          span, lit(s" bins of $binSize — raise binSize or filter " +
-            "open-ended sentinel intervals"))))
-      df.withColumn(binCol, explode(guarded))
+    val overlap = left(leftStart) <= right(rightEnd) &&
+      left(leftEnd) >= right(rightStart)
+    val plain = left.join(right,
+      (keys.map(k => left(k) === right(k)) :+ overlap).reduce(_ && _))
+    val binned = plain.queryExecution.analyzed match {
+      case j @ Join(l, r, Inner, Some(cond), _) =>
+        IntervalCondition.extract(cond, l, r)
+          .map(AutoBinIntervalJoin.rewrite(j, _, binSize))
+      case _ => None
     }
-
-    val l = withBins(left, leftStart, leftEnd, "__bin_l")
-    val r = withBins(right, rightStart, rightEnd, "__bin_r")
-
-    val keyCond = keys.map(k => l(k) === r(k))
-    val overlap = l(leftStart) <= r(rightEnd) && l(leftEnd) >= r(rightStart)
-    // anti-duplication: count the pair only in the bin of the larger start
-    val owner = floor(greatest(l(leftStart), r(rightStart)).cast("long") /
-      binSize).cast("long") === l("__bin_l")
-    val cond = (keyCond :+ (l("__bin_l") === r("__bin_r")) :+ overlap :+ owner)
-      .reduce(_ && _)
-
-    l.join(r, cond).drop("__bin_l", "__bin_r")
+    GraftSqlShim.ofRows(left.sparkSession, binned.getOrElse(
+      throw new IllegalArgumentException("binned join needs bare interval " +
+        s"bounds: $leftStart, $leftEnd, $rightStart, $rightEnd")))
   }
 }

@@ -2,9 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, HintInfo, Join, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{LongType, StringType}
 
 /**
  * Optimizer rule: rewrite a skew-prone interval-overlap Inner join into its
@@ -60,11 +60,12 @@ object AutoBinIntervalJoin extends Rule[LogicalPlan] {
     val binSizeExplicit = conf.contains(graft.GraftSession.BinSize)
 
     plan.transform {
-      case j @ Join(l, r, Inner, Some(cond), _) =>
+      case j @ Join(l, r, Inner, Some(cond), hint) =>
         IntervalCondition.extract(cond, l, r) match {
-          case Some(ic) if !alreadyBinned(ic) && shouldBin(mode, l, ic) &&
+          case Some(ic) if !alreadyBinned(ic) &&
+              shouldBin(mode, l, ic, hint.leftHint) &&
               (mode == "force" || !ic.hasLongBounds || binSizeExplicit) =>
-            rewrite(j, l, r, cond, ic, binSize)
+            rewrite(j, ic, binSize)
           case _ => j
         }
     }
@@ -79,10 +80,11 @@ object AutoBinIntervalJoin extends Rule[LogicalPlan] {
     }
 
   private def shouldBin(mode: String, build: LogicalPlan,
-      ic: IntervalCondition): Boolean = {
+      ic: IntervalCondition, buildHint: Option[HintInfo]): Boolean = {
     if (mode == "force") return true
-    // broadcast mode is already skew-proof
-    if (IntervalJoinStrategy.fitsBroadcast(build)) return false
+    // broadcast mode (by size or by the build's hint) is already skew-proof
+    if (IntervalJoinStrategy.modeFor(build, ic.leftKeys.nonEmpty, buildHint)
+        .contains(BroadcastMode)) return false
     if (ic.leftKeys.isEmpty) return true // keyless: the only scalable plan
     // keyed: bin only when column stats say the key space is narrower than
     // the shuffle parallelism (a hot-key ceiling); no stats → stay unbinned
@@ -106,8 +108,14 @@ object AutoBinIntervalJoin extends Rule[LogicalPlan] {
     }
   }
 
-  private def rewrite(j: Join, l: LogicalPlan, r: LogicalPlan,
-      cond: Expression, ic: IntervalCondition, binSize: Long): LogicalPlan = {
+  /** Spans past this many bins fail instead of exploding: ONE open-ended
+    * sentinel row (end = Long.MaxValue) would otherwise ask sequence() for
+    * ~1e13 elements and kill the whole job. */
+  private val MaxBinsPerRow = 1000000L
+
+  /** The binned form of the Inner join `j`, whose condition is `ic`. */
+  private[graft] def rewrite(j: Join, ic: IntervalCondition,
+      binSize: Long): LogicalPlan = {
     // Integer bin id — `div` truncation (not true floor) is fine: any
     // monotone bucketing partitions the line consistently on both sides
     // and in the owner predicate. Double-based floor would lose exactness
@@ -119,24 +127,36 @@ object AutoBinIntervalJoin extends Rule[LogicalPlan] {
     // span set correct for inverted start>end intervals)
     def binned(child: LogicalPlan, start: Expression, end: Expression,
         name: String): (LogicalPlan, Attribute) = {
-      val bs = floorBin(start)
-      val be = floorBin(end)
+      val lo = Least(Seq(floorBin(start), floorBin(end)))
+      val hi = Greatest(Seq(floorBin(start), floorBin(end)))
       // Sequence is TimeZoneAwareExpression — resolved only with a zone set
-      val seq = Sequence(Least(Seq(bs, be)), Greatest(Seq(bs, be)), None,
-        Some(conf.sessionLocalTimeZone))
+      val seq = Sequence(lo, hi, None, Some(conf.sessionLocalTimeZone))
+      // wrapping arithmetic: span < 1 also catches a Long overflow of the
+      // subtraction (binSize=1 over the full domain); a NULL bound makes
+      // span NULL, takes the sequence branch and explodes to no rows
+      val wrap = NumericEvalContext(EvalMode.LEGACY)
+      val span = Add(Subtract(hi, lo, wrap), Literal(1L), wrap)
+      val tooWide = new RaiseError(Concat(Seq(
+        Literal("[GRAFT_INTERVAL_JOIN] binned join: interval spans "),
+        Cast(span, StringType),
+        Literal(s" bins of $binSize — raise binSize or filter " +
+          "open-ended sentinel intervals"))))
+        .copy(dataType = seq.dataType)
+      val guarded = If(Or(LessThan(span, Literal(1L)),
+        GreaterThan(span, Literal(MaxBinsPerRow))), tooWide, seq)
       val attr = AttributeReference(name, LongType, nullable = false)()
-      (Generate(Explode(seq), unrequiredChildIndex = Nil, outer = false,
+      (Generate(Explode(guarded), unrequiredChildIndex = Nil, outer = false,
         qualifier = None, generatorOutput = Seq(attr), child = child), attr)
     }
 
-    val (lb, binL) = binned(l, ic.leftStart, ic.leftEnd, "__graft_bin_l")
-    val (rb, binR) = binned(r, ic.rightStart, ic.rightEnd, "__graft_bin_r")
+    val (lb, binL) = binned(j.left, ic.leftStart, ic.leftEnd, "__graft_bin_l")
+    val (rb, binR) = binned(j.right, ic.rightStart, ic.rightEnd, "__graft_bin_r")
 
     // count each overlapping pair only in the bin holding the larger start
     val owner = EqualTo(
       floorBin(Greatest(Seq(Cast(ic.leftStart, LongType),
         Cast(ic.rightStart, LongType)))), binL)
-    val newCond = And(And(cond, EqualTo(binL, binR)), owner)
+    val newCond = And(And(j.condition.get, EqualTo(binL, binR)), owner)
     Project(j.output, Join(lb, rb, Inner, Some(newCond), j.hint))
   }
 }

@@ -1,16 +1,11 @@
 package graft.plans
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection, JavaCode}
-import org.apache.spark.sql.catalyst.plans.physical._
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan}
+import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.{DataType, LongType}
-
-import scala.collection.mutable
 
 /**
  * Per-key bound arrays for O(log n) overlap counting.
@@ -78,31 +73,20 @@ private[graft] class CountBuildSide(
     val keyed: java.util.HashMap[UnsafeRow, CountBuildEntry])
   extends Serializable
 
-/**
- * Serializable build/probe kernel for overlap counting — holds only
- * expressions and schemas (never the SparkPlan), so it is safe to capture
- * in RDD closures and broadcast (same pattern as [[IntervalJoinRunner]]).
- */
+/** The overlap count's build/probe kernel, shared by both distribution
+  * modes (the join's is [[IntervalJoinRunner]]). */
 private[graft] class IntervalCountRunner(
-    leftOutput: Seq[Attribute],
-    rightOutput: Seq[Attribute],
-    leftKeys: Seq[Expression],
-    rightKeys: Seq[Expression],
-    leftStart: Expression,
-    leftEnd: Expression,
-    rightStart: Expression,
-    rightEnd: Expression,
+    left: IntervalSide,
+    right: IntervalSide,
     groupAttrs: Seq[Attribute],
     maxBuildBytes: Long,
-    pairCount: SQLMetric,
-    buildMemUsed: SQLMetric) extends Serializable {
+    metrics: Map[String, SQLMetric])
+  extends BuildProbeRunner[CountBuildSide] {
 
-  // bounds extraction shares plans.BoundsEval with the join runner
+  private val pairCount = metrics("pairCount")
 
   def buildSide(rows: Iterator[InternalRow]): CountBuildSide = {
-    val keyProj = UnsafeProjection.create(leftKeys, leftOutput)
-    val bounds = new BoundsEval(leftStart, leftEnd, leftOutput)
-    val hasKeys = leftKeys.nonEmpty
+    val side = new SideEval(left)
     final class Acc {
       // primitive vectors (shared LongVec): boxed ArrayBuffers would make
       // the real build footprint 2-3x the accountant's estimate
@@ -115,8 +99,8 @@ private[graft] class IntervalCountRunner(
     // the count build stores only interval ints (~3 sorted arrays), no rows
     val mem = new BuildMemoryAccountant(maxBuildBytes)
     rows.foreach { row =>
-      if (bounds.eval(row) && !(hasKeys && keyProj(row).anyNull)) {
-        val key = keyProj(row)
+      val key = side.key(row)
+      if (key != null) {
         var acc = groups.get(key)
         if (acc == null) { acc = new Acc; groups.put(key.copy(), acc) }
         // Long bounds verbatim: the count path is coordinate-width-
@@ -125,7 +109,7 @@ private[graft] class IntervalCountRunner(
         // narrowing would fail — and the experimental CountOverlaps it
         // completes (interval_join.rs:750 todo!()) pins no overflow
         // behavior to preserve.
-        val si = bounds.s; val ei = bounds.e
+        val si = side.s; val ei = side.e
         if (si <= ei) { acc.starts += si; acc.ends += ei }
         else { acc.invStarts += si; acc.invEnds += ei }
         mem.add(BuildMemoryAccountant.LongIntervalOverhead)
@@ -144,7 +128,8 @@ private[graft] class IntervalCountRunner(
       keyed.put(k, new CountBuildEntry(st, enByStart, en,
         acc.invStarts.toArray, acc.invEnds.toArray))
     }
-    buildMemUsed += mem.used
+    metrics("buildMemUsed") += mem.used
+    metrics("buildKeys") += keyed.size()
     new CountBuildSide(keyed)
   }
 
@@ -152,55 +137,43 @@ private[graft] class IntervalCountRunner(
     * binds directly; a left-side attr must be an equi-key, whose value
     * equals the corresponding right key on every counted pair. */
   private[graft] def groupExprsOnProbe: Seq[Expression] = {
-    val rightSet = AttributeSet(rightOutput)
+    val rightSet = AttributeSet(right.output)
     groupAttrs.map { ga =>
       if (rightSet.contains(ga)) ga
       else {
-        val j = leftKeys.indexWhere(_.semanticEquals(ga))
+        val j = left.keys.indexWhere(_.semanticEquals(ga))
         require(j >= 0, s"group attr $ga is not an equi-key")
-        rightKeys(j)
+        right.keys(j)
       }
     }
   }
 
-  def probeAndEmit(build: CountBuildSide,
-      iter: Iterator[InternalRow]): Iterator[InternalRow] = {
-    val keyProj = UnsafeProjection.create(rightKeys, rightOutput)
-    val bounds = new BoundsEval(rightStart, rightEnd, rightOutput)
-    val hasKeys = rightKeys.nonEmpty
+  def probe(build: CountBuildSide, iter: Iterator[InternalRow],
+      partitionIndex: Int): Iterator[InternalRow] = {
+    val side = new SideEval(right)
     if (groupAttrs.isEmpty) {
       // created in this branch only — the grouped branch compiles its
       // own projection inside emitGrouped
       val outProj = UnsafeProjection.create(Array[DataType](LongType))
       var total = 0L
       iter.foreach { rrow =>
-        if (bounds.eval(rrow)) {
-          val key = keyProj(rrow)
-          val entry = if (hasKeys && key.anyNull) null else build.keyed.get(key)
-          if (entry != null) {
-            total += entry.count(bounds.s, bounds.e)
-          }
-        }
+        val entry = side.lookup(build.keyed, rrow)
+        if (entry != null) total += entry.count(side.s, side.e)
       }
       pairCount += total
       Iterator.single(outProj(InternalRow(total)).copy())
     } else {
-      val groupProj = UnsafeProjection.create(groupExprsOnProbe, rightOutput)
+      val groupProj = UnsafeProjection.create(groupExprsOnProbe, right.output)
       val acc = new java.util.HashMap[UnsafeRow, Array[Long]]
       iter.foreach { rrow =>
-        if (bounds.eval(rrow)) {
-          val key = keyProj(rrow)
-          val entry = if (hasKeys && key.anyNull) null else build.keyed.get(key)
-          if (entry != null) {
-            val cnt = entry.count(bounds.s, bounds.e)
-            // zero-count probes emit nothing — matches inner-join groups
-            if (cnt > 0) {
-              val g = groupProj(rrow)
-              var slot = acc.get(g)
-              if (slot == null) { slot = new Array[Long](1); acc.put(g.copy(), slot) }
-              slot(0) += cnt
-            }
-          }
+        val entry = side.lookup(build.keyed, rrow)
+        // zero-count probes emit nothing — matches inner-join groups
+        val cnt = if (entry == null) 0L else entry.count(side.s, side.e)
+        if (cnt > 0) {
+          val g = groupProj(rrow)
+          var slot = acc.get(g)
+          if (slot == null) { slot = new Array[Long](1); acc.put(g.copy(), slot) }
+          slot(0) += cnt
         }
       }
       emitGrouped(acc)
@@ -249,7 +222,7 @@ case class IntervalCountExec(
     rightEnd: Expression,
     mode: IntervalJoinMode,
     groupAttrs: Seq[Attribute],
-    countAttr: Attribute) extends BinaryExecNode with CodegenSupport {
+    countAttr: Attribute) extends IntervalBuildProbeExec[CountBuildSide] {
 
   override def output: Seq[Attribute] = groupAttrs :+ countAttr
 
@@ -260,55 +233,18 @@ case class IntervalCountExec(
     "buildKeys" -> SQLMetrics.createMetric(sparkContext, "build keys"),
     "buildMemUsed" -> SQLMetrics.createSizeMetric(sparkContext, "build memory used"))
 
-  override def requiredChildDistribution: Seq[Distribution] = mode match {
-    case BroadcastMode => Seq(UnspecifiedDistribution, UnspecifiedDistribution)
-    case PartitionedMode =>
-      Seq(ClusteredDistribution(leftKeys), ClusteredDistribution(rightKeys))
-  }
-
   /** Same EXPLAIN shape as [[IntervalJoinExec.simpleString]] (reference
     * format, integration_test.rs:108-112), plus the grouping columns. */
   override def simpleString(maxFields: Int): String = {
-    val modeStr = mode match {
-      case BroadcastMode => "CollectLeft"
-      case PartitionedMode => "Partitioned"
-    }
     val on = leftKeys.zip(rightKeys)
       .map { case (a, b) => s"($a, $b)" }.mkString(", ")
-    s"IntervalCountExec: mode=$modeStr, join_type=Inner, on=[$on], " +
+    s"IntervalCountExec: mode=$modeName, join_type=Inner, on=[$on], " +
       s"filter=$leftStart <= $rightEnd AND $leftEnd >= $rightStart, " +
       s"groups=[${groupAttrs.mkString(", ")}]"
   }
 
-  private def runner = new IntervalCountRunner(
-    left.output, right.output, leftKeys, rightKeys,
-    leftStart, leftEnd, rightStart, rightEnd, groupAttrs,
-    conf.getConfString(graft.GraftSession.MaxBuildBytes, "0").toLong,
-    longMetric("pairCount"), longMetric("buildMemUsed"))
-
-  /** Build once, shared by the interpreted and codegen broadcast paths. */
-  @transient private lazy val broadcastBuild: Broadcast[CountBuildSide] = {
-    val built = runner.buildSide(left.executeCollect().iterator)
-    longMetric("buildKeys") += built.keyed.size()
-    sparkContext.broadcast(built)
-  }
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val run = runner
-    mode match {
-      case BroadcastMode =>
-        val bc = broadcastBuild
-        right.execute().mapPartitions(iter => run.probeAndEmit(bc.value, iter),
-          preservesPartitioning = true)
-      case PartitionedMode =>
-        val buildKeys = longMetric("buildKeys")
-        left.execute().zipPartitions(right.execute()) { (liter, riter) =>
-          val built = run.buildSide(liter)
-          buildKeys += built.keyed.size()
-          run.probeAndEmit(built, riter)
-        }
-    }
-  }
+  private[plans] def runner = new IntervalCountRunner(
+    leftSide, rightSide, groupAttrs, maxBuildBytes, metrics)
 
   // ---- whole-stage codegen (global AND grouped) -------------------------
   //
@@ -322,13 +258,6 @@ case class IntervalCountExec(
   // runner (shouldStop-aware re-entry, like doProduceWithKeys).
 
   override def supportCodegen: Boolean = true
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] = mode match {
-    // broadcast: the probe child pipeline FUSES into this stage (scan /
-    // filter / project feed our doConsume directly)
-    case BroadcastMode => right.asInstanceOf[CodegenSupport].inputRDDs()
-    case PartitionedMode => left.execute() :: right.execute() :: Nil
-  }
 
   override def needCopyResult: Boolean = false
 
@@ -359,42 +288,12 @@ case class IntervalCountExec(
       if (grouped) ctx.addMutableState("java.util.HashMap", "countGroups",
         v => s"$v = new java.util.HashMap();", forceInline = true)
       else null
-    // the runner carries the executor-side helpers (partitioned build,
-    // grouped emission); referenced from generated code in both modes
-    val runnerRef = ctx.addReferenceObj("countRunner", runner,
-      classOf[IntervalCountRunner].getName)
-
-    val (buildInit, drain) = mode match {
-      case BroadcastMode =>
-        val bcRef = ctx.addReferenceObj("countBuildBc", broadcastBuild,
-          classOf[Broadcast[CountBuildSide]].getName)
-        val init =
-          s"$buildTerm = ($buildCls) ((${classOf[Broadcast[_]].getName}) $bcRef).value();"
-        // fused child pipeline: every probe row arrives via doConsume
-        (init, right.asInstanceOf[CodegenSupport].produce(ctx, this))
+    val buildInit = genBuild(ctx, buildTerm)
+    val drain = mode match {
+      // fused child pipeline: every probe row arrives via doConsume
+      case BroadcastMode => right.asInstanceOf[CodegenSupport].produce(ctx, this)
       case PartitionedMode =>
-        val leftInput = ctx.addMutableState("scala.collection.Iterator",
-          "countLeftInput", v => s"$v = inputs[0];", forceInline = true)
-        val rightInput = ctx.addMutableState("scala.collection.Iterator",
-          "countRightInput", v => s"$v = inputs[1];", forceInline = true)
-        val buildKeys = metricTerm(ctx, "buildKeys")
-        val init =
-          s"""
-             |$buildTerm = ($buildCls) $runnerRef.buildSide($leftInput);
-             |$buildKeys.add($buildTerm.keyed().size());
-           """.stripMargin
-        val probeRow = ctx.freshName("probeRow")
-        ctx.currentVars = null
-        ctx.INPUT_ROW = probeRow
-        val body = countOneRow(ctx, buildTerm, total)
-        ctx.INPUT_ROW = null
-        (init,
-          s"""
-             |while ($rightInput.hasNext()) {
-             |  InternalRow $probeRow = (InternalRow) $rightInput.next();
-             |  $body
-             |}
-           """.stripMargin)
+        genProbeLoop(ctx)(countOneRow(ctx, buildTerm, total))
     }
 
     if (!grouped) {
@@ -419,6 +318,9 @@ case class IntervalCountExec(
       // runs outside the one-shot build/drain block
       val outIter = ctx.addMutableState("scala.collection.Iterator",
         "countOutIter", forceInline = true)
+      // the runner's grouped emission, referenced from generated code
+      val runnerRef = ctx.addReferenceObj("countRunner", runner,
+        classOf[IntervalCountRunner].getName)
       val outRow = ctx.freshName("countOutRow")
       ctx.INPUT_ROW = outRow
       ctx.currentVars = null
@@ -445,53 +347,36 @@ case class IntervalCountExec(
     * the shared CountBuildEntry.count kernel; the count lands in the
     * local total (global) or the group's map slot (grouped). */
   private def countOneRow(ctx: CodegenContext, buildTerm: String,
-      total: String): String = {
-    val entryCls = classOf[CountBuildEntry].getName
-    val keyEv = GenerateUnsafeProjection.createCode(ctx,
-      rightKeys.map(BindReferences.bindReference(_, right.output)))
-    val sEv = BindReferences.bindReference(
-      Cast(rightStart, LongType), right.output).genCode(ctx)
-    val eEv = BindReferences.bindReference(
-      Cast(rightEnd, LongType), right.output).genCode(ctx)
-    val keyNullCheck =
-      if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
-    val entryTerm = ctx.freshName("countEntry")
-    val cntTerm = ctx.freshName("cnt")
-    val sink = if (groupAttrs.isEmpty) s"$total += $cntTerm;" else {
-      // group key off the SAME probe-row context as the join key; only
-      // cnt > 0 probes create a slot (inner-join group semantics, same
-      // as the interpreted path)
-      val groupEv = GenerateUnsafeProjection.createCode(ctx,
-        runner.groupExprsOnProbe
-          .map(BindReferences.bindReference(_, right.output)))
-      // (the pairCount metric is added during emitGrouped, not here)
-      val slotTerm = ctx.freshName("slot")
+      total: String): String =
+    rightSide.genLookup(ctx, s"$buildTerm.keyed()",
+        classOf[CountBuildEntry].getName) { (entryTerm, s, e) =>
+      val cntTerm = ctx.freshName("cnt")
+      val sink = if (groupAttrs.isEmpty) s"$total += $cntTerm;" else {
+        // group key off the SAME probe-row context as the join key; only
+        // cnt > 0 probes create a slot (inner-join group semantics, same
+        // as the interpreted path)
+        val groupEv = GenerateUnsafeProjection.createCode(ctx,
+          runner.groupExprsOnProbe
+            .map(BindReferences.bindReference(_, right.output)))
+        // (the pairCount metric is added during emitGrouped, not here)
+        val slotTerm = ctx.freshName("slot")
+        s"""
+           |if ($cntTerm > 0) {
+           |  ${groupEv.code}
+           |  long[] $slotTerm = (long[]) $groupMapTerm.get(${groupEv.value});
+           |  if ($slotTerm == null) {
+           |    $slotTerm = new long[1];
+           |    $groupMapTerm.put(${groupEv.value}.copy(), $slotTerm);
+           |  }
+           |  $slotTerm[0] += $cntTerm;
+           |}
+         """.stripMargin
+      }
       s"""
-         |if ($cntTerm > 0) {
-         |  ${groupEv.code}
-         |  long[] $slotTerm = (long[]) $groupMapTerm.get(${groupEv.value});
-         |  if ($slotTerm == null) {
-         |    $slotTerm = new long[1];
-         |    $groupMapTerm.put(${groupEv.value}.copy(), $slotTerm);
-         |  }
-         |  $slotTerm[0] += $cntTerm;
-         |}
+         |long $cntTerm = $entryTerm.count($s, $e);
+         |$sink
        """.stripMargin
     }
-    s"""
-       |${keyEv.code}
-       |${sEv.code}
-       |${eEv.code}
-       |if (!${sEv.isNull} && !${eEv.isNull} $keyNullCheck) {
-       |  $entryCls $entryTerm =
-       |    ($entryCls) $buildTerm.keyed().get(${keyEv.value});
-       |  if ($entryTerm != null) {
-       |    long $cntTerm = $entryTerm.count(${sEv.value}, ${eEv.value});
-       |    $sink
-       |  }
-       |}
-     """.stripMargin
-  }
 
   /** Broadcast mode: called by the fused probe child per row (during
     * this node's own doProduce evaluation, so the shared field names are

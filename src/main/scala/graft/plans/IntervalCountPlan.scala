@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BinaryNode, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BinaryNode, HintInfo, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.LongType
 
@@ -28,6 +28,8 @@ case class IntervalCountPlan(
     right: LogicalPlan,
     condition: Expression,
     groupAttrs: Seq[Attribute],
+    // the join's build-side hint: the count runs in the mode it names
+    buildHint: Option[HintInfo],
     countAttr: AttributeReference =
       AttributeReference("partialOverlapCount", LongType, nullable = false)())
   extends BinaryNode {
@@ -85,7 +87,7 @@ object IntervalCountRewrite extends Rule[LogicalPlan] {
     if (!enabled || !defaultAlg) return plan
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs,
-          JoinBelow(Join(l, r, Inner, Some(cond), _)), _)
+          JoinBelow(Join(l, r, Inner, Some(cond), hint)), _)
           if groupExprs.forall(_.isInstanceOf[AttributeReference]) &&
             aggExprs.nonEmpty && aggExprs.forall {
               case Alias(ae, _) if isCountStar(ae) => true
@@ -108,9 +110,9 @@ object IntervalCountRewrite extends Rule[LogicalPlan] {
               // keyless build over the broadcast threshold): the
               // unrewritten plan stays correct (BNLJ) instead of
               // collecting an oversized build side to the driver
-              IntervalJoinStrategy.modeFor(l, ic.leftKeys.nonEmpty, None)
-                .isDefined =>
-            val cnt = IntervalCountPlan(l, r, cond, groupAttrs)
+              IntervalJoinStrategy.modeFor(l, ic.leftKeys.nonEmpty,
+                hint.leftHint).isDefined =>
+            val cnt = IntervalCountPlan(l, r, cond, groupAttrs, hint.leftHint)
             // SUM(long) is nullable; COUNT is not — coalesce to 0, keep
             // each original exprId so references above stay valid.
             val fixed = agg.aggregateExpressions.map {

@@ -2,28 +2,14 @@ package graft.plans
 
 import graft.rangejoin.{LongIntervalIndex, LongSuperIntervalsIndex}
 
-import org.apache.spark.TaskContext
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.physical._
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan}
+import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.types.LongType
 
 import scala.collection.mutable
-
-/** How the build (left) side reaches the probe tasks. */
-sealed trait IntervalJoinMode extends Serializable
-/** Build side collected once and broadcast — analogue of the reference's
-  * CollectLeft (reference: interval_join.rs:472-487). */
-case object BroadcastMode extends IntervalJoinMode
-/** Both sides hash-partitioned on the equi-keys; per-partition index —
-  * analogue of the reference's Partitioned mode (interval_join.rs:488-503).
-  * This is the 100-TB path: no single node ever sees the whole build side. */
-case object PartitionedMode extends IntervalJoinMode
 
 /** Join semantics. The reference implements Inner only
   * (interval_join.rs plumbs other types but never emits them); the
@@ -99,42 +85,14 @@ private[plans] final class IntVec(initial: Int = 16) {
   def toArray: Array[Int] = java.util.Arrays.copyOf(arr, n)
 }
 
-/** Compiled (start, end) extractor: one generated projection per side,
-  * no interpreted Expression.eval and no boxing in the per-row loops.
-  * Shared by the join and count runners — one place for the NULL-bound
-  * contract. */
-private[plans] final class BoundsEval(start: Expression, end: Expression,
-    schema: Seq[Attribute]) {
-  private val proj = UnsafeProjection.create(
-    Seq(Cast(start, LongType), Cast(end, LongType)), schema)
-  var s: Long = _
-  var e: Long = _
-  /** Returns false (and leaves s/e undefined) when either bound is NULL. */
-  def eval(row: InternalRow): Boolean = {
-    val r = proj(row)
-    if (r.isNullAt(0) || r.isNullAt(1)) false
-    else { s = r.getLong(0); e = r.getLong(1); true }
-  }
-}
-
 private[graft] class IntervalBuildSide(
     val keyed: java.util.HashMap[UnsafeRow, LongIntervalIndex],
     val rows: Array[InternalRow]) extends Serializable
 
-/**
- * Serializable build/probe kernel shared by both distribution modes; holds
- * only expressions, schemas and metrics — never the SparkPlan itself — so
- * it is safe to capture in RDD closures and broadcast.
- */
+/** The join's build/probe kernel, shared by both distribution modes. */
 private[graft] class IntervalJoinRunner(
-    leftOutput: Seq[Attribute],
-    rightOutput: Seq[Attribute],
-    leftKeys: Seq[Expression],
-    rightKeys: Seq[Expression],
-    leftStart: Expression,
-    leftEnd: Expression,
-    rightStart: Expression,
-    rightEnd: Expression,
+    left: IntervalSide,
+    right: IntervalSide,
     residual: Option[Expression],
     joinType: IntervalJoinType,
     markAttr: Option[Attribute],
@@ -143,15 +101,17 @@ private[graft] class IntervalJoinRunner(
     outputAttrs: Seq[Attribute],
     algorithm: String,
     maxBuildBytes: Long,
-    numOutputRows: SQLMetric,
-    probeRows: SQLMetric,
-    buildMemUsed: SQLMetric,
-    probeTime: SQLMetric) extends Serializable {
+    metrics: Map[String, SQLMetric])
+  extends BuildProbeRunner[IntervalBuildSide] {
+
+  private val numOutputRows = metrics("numOutputRows")
+  private val probeRows = metrics("probeRows")
+  private val probeTime = metrics("probeTime")
 
   def buildSide(rows: Iterator[InternalRow]): IntervalBuildSide = {
-    val keyProj = UnsafeProjection.create(leftKeys, leftOutput)
-    val rowProj = UnsafeProjection.create(leftOutput, leftOutput)
-    val bounds = new BoundsEval(leftStart, leftEnd, leftOutput)
+    val t0 = System.nanoTime()
+    val side = new SideEval(left)
+    val rowProj = UnsafeProjection.create(left.output, left.output)
 
     final class Acc {
       val starts = new LongVec
@@ -160,31 +120,25 @@ private[graft] class IntervalJoinRunner(
     }
     val groups = new java.util.HashMap[UnsafeRow, Acc]
     val stored = new mutable.ArrayBuffer[InternalRow]
-    val hasKeys = leftKeys.nonEmpty
     // FULL OUTER must emit every build row, even ones that can never match
     // (NULL bound / NULL equi-key): store them un-indexed so the unmatched
     // sweep NULL-pads them.
     val keepAll = joinType == FullOuterJoin
     val mem = new BuildMemoryAccountant(maxBuildBytes)
     rows.foreach { row =>
-      // Rows with a NULL bound can never overlap; rows with a NULL equi-key
-      // must not match anything (SQL `NULL = NULL` is not true — the
-      // reference constructs the join with null_equals_null=false,
-      // interval_join.rs ctor). Skip both at build time.
-      val indexable =
-        bounds.eval(row) && !(hasKeys && keyProj(row).anyNull)
-      if (indexable || keepAll) {
+      // a row that can never match (SideEval.key is null) is not indexed
+      val key = side.key(row)
+      if (key != null || keepAll) {
         val pos = stored.length
         val copied = rowProj(row).copy()
         stored += copied
         mem.add(copied.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
-        if (indexable) {
+        if (key != null) {
           mem.add(BuildMemoryAccountant.LongIntervalOverhead)
-          val key = keyProj(row)
           var acc = groups.get(key)
           if (acc == null) { acc = new Acc; groups.put(key.copy(), acc) }
-          acc.starts += bounds.s
-          acc.ends += bounds.e
+          acc.starts += side.s
+          acc.ends += side.e
           acc.positions += pos
         }
       }
@@ -199,7 +153,10 @@ private[graft] class IntervalJoinRunner(
       keyed.put(k, LongIntervalIndex.build(alg, acc.starts.toArray,
         acc.ends.toArray, acc.positions.toArray))
     }
-    buildMemUsed += mem.used
+    metrics("buildMemUsed") += mem.used
+    metrics("buildRows") += stored.length
+    metrics("buildKeys") += keyed.size()
+    metrics("buildTime") += (System.nanoTime() - t0) / 1000000
     new IntervalBuildSide(keyed, stored.toArray)
   }
 
@@ -230,8 +187,9 @@ private[graft] class IntervalJoinRunner(
 
   private def probe0(build: IntervalBuildSide, iter: Iterator[InternalRow],
             partitionIndex: Int): Iterator[InternalRow] = {
-    val keyProj = UnsafeProjection.create(rightKeys, rightOutput)
-    val bounds = new BoundsEval(rightStart, rightEnd, rightOutput)
+    val side = new SideEval(right)
+    val leftOutput = left.output
+    val rightOutput = right.output
     val joined = new JoinedRow
     // FULL OUTER also NULL-pads the probe side (unmatched-build sweep), so
     // its projection input schema must be nullable on both sides. MarkJoin
@@ -253,19 +211,14 @@ private[graft] class IntervalJoinRunner(
     val nullLeft = new GenericInternalRow(leftOutput.size)
     val rows = numOutputRows
 
-    val hasKeys = rightKeys.nonEmpty
-
     // shared probe: fill matchBuf with positions whose pair passes the
     // residual; returns match count (0 for NULL bounds/keys)
     var sharedBuf = new Array[Int](64)
     def collectMatches(rrow: InternalRow): Int = {
-      if (!bounds.eval(rrow)) return 0
-      val key = keyProj(rrow)
-      // NULL probe keys match nothing (null_equals_null=false)
-      val idx = if (hasKeys && key.anyNull) null else build.keyed.get(key)
+      val idx = side.lookup(build.keyed, rrow)
       if (idx == null) return 0
       var n = 0
-      idx.query(bounds.s, bounds.e) { pos =>
+      idx.query(side.s, side.e) { pos =>
         if (n == sharedBuf.length)
           sharedBuf = java.util.Arrays.copyOf(sharedBuf, n * 2)
         sharedBuf(n) = pos
@@ -384,14 +337,8 @@ private[graft] class IntervalJoinRunner(
           // A NULL probe key (or bound) matches no build rows → NULL-padded
           // output row, same as an unmatched key (reference pads NULL for
           // key misses, interval_join.rs:1453-1465).
-          val idx0 = if (!bounds.eval(rrow)) null
-                     else {
-                       val key = keyProj(rrow)
-                       if (hasKeys && key.anyNull) null
-                       else build.keyed.get(key)
-                     }
-          val pos = idx0 match {
-            case si: LongSuperIntervalsIndex => si.nearest(bounds.s, bounds.e)
+          val pos = side.lookup(build.keyed, rrow) match {
+            case si: LongSuperIntervalsIndex => si.nearest(side.s, side.e)
             case _ => -1
           }
           rows += 1
@@ -402,23 +349,17 @@ private[graft] class IntervalJoinRunner(
       case AsofJoin(forward, strict) =>
         iter.map { rrow =>
           probeRows += 1
-          val idx0 = if (!bounds.eval(rrow)) null
-                     else {
-                       val key = keyProj(rrow)
-                       if (hasKeys && key.anyNull) null
-                       else build.keyed.get(key)
-                     }
-          val pos = idx0 match {
+          val pos = side.lookup(build.keyed, rrow) match {
             case null => -1
-            case _ if strict && forward && bounds.s == Long.MaxValue => -1
-            case _ if strict && !forward && bounds.s == Long.MinValue => -1
+            case _ if strict && forward && side.s == Long.MaxValue => -1
+            case _ if strict && !forward && side.s == Long.MinValue => -1
             case idx =>
               // strict shifts the cutoff one tick (times are integral);
               // a shift past the Long domain means "no candidate" on the
               // shrinking side (handled above, pre-wrap)
-              val t = if (!strict) bounds.s
-                      else if (forward) bounds.s + 1
-                      else bounds.s - 1
+              val t = if (!strict) side.s
+                      else if (forward) side.s + 1
+                      else side.s - 1
               idx match {
                 case si: LongSuperIntervalsIndex =>
                   if (forward) si.asofForward(t) else si.asofBackward(t)
@@ -468,7 +409,8 @@ case class IntervalJoinExec(
     joinType: IntervalJoinType,
     mode: IntervalJoinMode,
     algorithm: String,
-    markAttr: Option[Attribute] = None) extends BinaryExecNode with CodegenSupport {
+    markAttr: Option[Attribute] = None)
+  extends IntervalBuildProbeExec[IntervalBuildSide] {
 
   // FULL OUTER needs exclusive per-task ownership of the build partition
   // for its match bitmap — broadcast would emit unmatched build rows once
@@ -505,12 +447,6 @@ case class IntervalJoinExec(
     "probeTime" -> SQLMetrics.createTimingMetric(sparkContext,
       "probe time (interpreted path)"))
 
-  override def requiredChildDistribution: Seq[Distribution] = mode match {
-    case BroadcastMode => Seq(UnspecifiedDistribution, UnspecifiedDistribution)
-    case PartitionedMode =>
-      Seq(ClusteredDistribution(leftKeys), ClusteredDistribution(rightKeys))
-  }
-
   override def outputPartitioning: Partitioning = (mode, joinType) match {
     case (BroadcastMode, _) => right.outputPartitioning
     case (PartitionedMode, OverlapJoin) =>
@@ -537,10 +473,6 @@ case class IntervalJoinExec(
     * "IntervalJoinExec: mode=CollectLeft, join_type=Inner, on=[(l, r)],
     * filter=..., alg=..."). */
   override def simpleString(maxFields: Int): String = {
-    val modeStr = mode match {
-      case BroadcastMode => "CollectLeft" // reference's name for broadcast
-      case PartitionedMode => "Partitioned"
-    }
     val jt = joinType match {
       case OverlapJoin => "Inner"
       case RightOuterJoin => "RightOuter"
@@ -556,79 +488,53 @@ case class IntervalJoinExec(
       .map { case (a, b) => s"($a, $b)" }.mkString(", ")
     val filter = s"$leftStart <= $rightEnd AND $leftEnd >= $rightStart" +
       residual.map(r => s" AND $r").getOrElse("")
-    s"IntervalJoinExec: mode=$modeStr, join_type=$jt, on=[$on], " +
+    s"IntervalJoinExec: mode=$modeName, join_type=$jt, on=[$on], " +
       s"filter=$filter, alg=$algorithm"
   }
 
-  private def runner: IntervalJoinRunner = new IntervalJoinRunner(
-    left.output, right.output, leftKeys, rightKeys,
-    leftStart, leftEnd, rightStart, rightEnd,
-    residual, joinType, markAttr, output, algorithm,
-    conf.getConfString(graft.GraftSession.MaxBuildBytes, "0").toLong,
-    longMetric("numOutputRows"),
-    longMetric("probeRows"), longMetric("buildMemUsed"),
-    longMetric("probeTime"))
-
-  /** Build once per query, shared between the interpreted and codegen'd
-    * broadcast paths. */
-  @transient private lazy val broadcastBuild: Broadcast[IntervalBuildSide] = {
-    val t0 = System.nanoTime()
-    val built = runner.buildSide(left.executeCollect().iterator)
-    longMetric("buildTime") += (System.nanoTime() - t0) / 1000000
-    longMetric("buildRows") += built.rows.length
-    longMetric("buildKeys") += built.keyed.size()
-    sparkContext.broadcast(built)
-  }
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val run = runner
-    mode match {
-      case BroadcastMode =>
-        val bc: Broadcast[IntervalBuildSide] = broadcastBuild
-        right.execute().mapPartitionsWithIndex({ (pi, iter) =>
-          run.probe(bc.value, iter, pi)
-        }, preservesPartitioning = true)
-      case PartitionedMode =>
-        val buildTime = longMetric("buildTime")
-        val buildRows = longMetric("buildRows")
-        val buildKeys = longMetric("buildKeys")
-        left.execute().zipPartitions(right.execute()) { (liter, riter) =>
-          val t0 = System.nanoTime()
-          val built = run.buildSide(liter)
-          buildTime += (System.nanoTime() - t0) / 1000000
-          buildRows += built.rows.length
-          buildKeys += built.keyed.size()
-          run.probe(built, riter, TaskContext.getPartitionId())
-        }
-    }
-  }
+  private[plans] def runner: IntervalJoinRunner = new IntervalJoinRunner(
+    leftSide, rightSide, residual, joinType, markAttr, output, algorithm,
+    maxBuildBytes, metrics)
 
   // ---- whole-stage codegen (overlap mode, both distributions) -----------
   //
-  // BroadcastMode is modeled on Spark's BroadcastHashJoinExec: the probe
-  // (right) side streams through generated code; per probe row the
-  // generated Java looks up its key's interval index, fills a reusable
-  // primitive match buffer, and loops the matching build rows as local
-  // variables — no JoinedRow, no per-pair UnsafeProjection, and the parent
-  // operator (filter/agg/project) fuses into the same loop.
-  //
-  // PartitionedMode is modeled on SortMergeJoinExec's two-input-RDD shape:
-  // WholeStageCodegenExec zips the two shuffled inputs; the generated code
-  // drains the build iterator into the per-partition index once, then
-  // streams probe rows through the same fused match loop. The probe-side
-  // child pipeline is not fused below us (it arrives as an exchange
-  // anyway), but everything ABOVE the join — the hot per-pair path — is.
+  // Per probe row the generated Java looks up its key's interval index and
+  // loops the matching build rows as local variables — no JoinedRow, no
+  // per-pair UnsafeProjection, and the parent operator
+  // (filter/agg/project) fuses into the same loop. In PartitionedMode the
+  // probe-side child pipeline is not fused below us (it arrives as an
+  // exchange anyway), but everything ABOVE the join — the hot per-pair
+  // path — is.
 
   override def supportCodegen: Boolean = joinType == OverlapJoin
 
-  override def inputRDDs(): Seq[RDD[InternalRow]] = mode match {
-    case BroadcastMode => right.asInstanceOf[CodegenSupport].inputRDDs()
-    case PartitionedMode => left.execute() :: right.execute() :: Nil
-  }
-
   override protected def doProduce(ctx: CodegenContext): String = mode match {
     case BroadcastMode => right.asInstanceOf[CodegenSupport].produce(ctx, this)
-    case PartitionedMode => doProducePartitioned(ctx)
+    case PartitionedMode =>
+      val buildCls = classOf[IntervalBuildSide].getName
+      val buildTerm = ctx.addMutableState(buildCls, "intervalBuild",
+        forceInline = true)
+      val rowsTerm = ctx.addMutableState("InternalRow[]", "intervalBuildRows",
+        forceInline = true)
+      val buildInit = genBuild(ctx, buildTerm)
+      val loop = genProbeLoop(ctx) {
+        // probe-side columns, read lazily at the consume point (inside the
+        // match loop, where the probe row is still the current row)
+        val rightVars = right.output.zipWithIndex.map { case (a, i) =>
+          BoundReference(i, a.dataType, a.nullable).genCode(ctx)
+        }
+        s"""
+           |${probeRowBody(ctx, buildTerm, rowsTerm, rightVars)}
+           |if (shouldStop()) return;
+         """.stripMargin
+      }
+      s"""
+         |if ($buildTerm == null) {
+         |  $buildInit
+         |  $rowsTerm = $buildTerm.rows();
+         |}
+         |$loop
+       """.stripMargin
   }
 
   /** Generate the per-match tail: evaluate the residual predicate (if any)
@@ -674,7 +580,7 @@ case class IntervalJoinExec(
     * buffer path. The cast is safe: the runner builds every per-key index
     * with this exec's `algorithm`. */
   private def genMatchLoop(ctx: CodegenContext, idxTerm: String,
-      rowsTerm: String, bufTerm: String, sL: String, eL: String,
+      rowsTerm: String, sL: String, eL: String,
       leftRowTerm: String, matchTail: String): String = {
     if (LongIntervalIndex.canonical(algorithm) == "superintervals") {
       val siCls = classOf[LongSuperIntervalsIndex].getName
@@ -712,6 +618,9 @@ case class IntervalJoinExec(
          |}
        """.stripMargin
     } else {
+      val bufCls = classOf[graft.rangejoin.IntMatchBuffer].getName
+      val bufTerm = ctx.addMutableState(bufCls, "intervalMatchBuf",
+        v => s"$v = new $bufCls();", forceInline = true)
       val nTerm = ctx.freshName("nMatches")
       val iTerm = ctx.freshName("im")
       s"""
@@ -724,86 +633,36 @@ case class IntervalJoinExec(
     }
   }
 
-  private def doProducePartitioned(ctx: CodegenContext): String = {
-    // the two zipped per-partition iterators (see WholeStageCodegenExec)
-    val leftInput = ctx.addMutableState("scala.collection.Iterator",
-      "intervalLeftInput", v => s"$v = inputs[0];", forceInline = true)
-    val rightInput = ctx.addMutableState("scala.collection.Iterator",
-      "intervalRightInput", v => s"$v = inputs[1];", forceInline = true)
-    val runnerCls = classOf[IntervalJoinRunner].getName
-    val runnerRef = ctx.addReferenceObj("intervalRunner", runner, runnerCls)
-    val buildCls = classOf[IntervalBuildSide].getName
-    val buildTerm = ctx.addMutableState(buildCls, "intervalBuild",
-      forceInline = true)
-    val rowsTerm = ctx.addMutableState("InternalRow[]", "intervalBuildRows",
-      forceInline = true)
-    val bufTerm = ctx.addMutableState(
-      classOf[graft.rangejoin.IntMatchBuffer].getName, "intervalMatchBuf",
-      v => s"$v = new ${classOf[graft.rangejoin.IntMatchBuffer].getName}();",
-      forceInline = true)
-
-    val probeRow = ctx.freshName("probeRow")
-    ctx.currentVars = null
-    ctx.INPUT_ROW = probeRow
-    val keyEv = GenerateUnsafeProjection.createCode(ctx,
-      rightKeys.map(BindReferences.bindReference(_, right.output)))
-    val sEv = BindReferences.bindReference(
-      Cast(rightStart, LongType), right.output).genCode(ctx)
-    val eEv = BindReferences.bindReference(
-      Cast(rightEnd, LongType), right.output).genCode(ctx)
-    // probe-side columns, read lazily at the consume point (inside the
-    // match loop, where probeRow is still the current row)
-    val rightVars = right.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    val leftRowTerm = ctx.freshName("intervalLeftRow")
-    ctx.INPUT_ROW = leftRowTerm
-    val leftVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    ctx.INPUT_ROW = null
-
-    val buildTime = metricTerm(ctx, "buildTime")
-    val buildRows = metricTerm(ctx, "buildRows")
-    val buildKeys = metricTerm(ctx, "buildKeys")
+  /** One probe row: key/bounds lookup, match walk and fused tail — the
+    * per-probe-row body of both distribution modes. `ctx` points at the
+    * probe row (fused input variables or a row term); `rightVars` are
+    * its columns as read there. */
+  private def probeRowBody(ctx: CodegenContext, buildTerm: String,
+      rowsTerm: String, rightVars: Seq[ExprCode]): String = {
     val numOutput = metricTerm(ctx, "numOutputRows")
-    val probeRowsM = metricTerm(ctx, "probeRows")
-    val idxTerm = ctx.freshName("intervalIdx")
-    val t0 = ctx.freshName("buildT0")
-    val sL = ctx.freshName("sLong")
-    val eL = ctx.freshName("eLong")
-    val idxCls = classOf[LongIntervalIndex].getName
-    val keyNullCheck =
-      if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
-    val matchTail = consumeMatch(ctx, leftVars, rightVars, numOutput)
-    val matchLoop = genMatchLoop(ctx, idxTerm, rowsTerm, bufTerm, sL, eL,
-      leftRowTerm, matchTail)
-
+    val probeRows = metricTerm(ctx, "probeRows")
+    val lookup = rightSide.genLookup(ctx, s"$buildTerm.keyed()",
+        classOf[LongIntervalIndex].getName) { (idxTerm, s, e) =>
+      // build-row column variables, read lazily inside the match loop
+      val leftRowTerm = ctx.freshName("intervalLeftRow")
+      ctx.currentVars = null
+      ctx.INPUT_ROW = leftRowTerm
+      val leftVars = left.output.zipWithIndex.map { case (a, i) =>
+        BoundReference(i, a.dataType, a.nullable).genCode(ctx)
+      }
+      ctx.INPUT_ROW = null
+      val sL = ctx.freshName("sLong")
+      val eL = ctx.freshName("eLong")
+      val matchTail = consumeMatch(ctx, leftVars, rightVars, numOutput)
+      s"""
+         |long $sL = $s;
+         |long $eL = $e;
+         |${genMatchLoop(ctx, idxTerm, rowsTerm, sL, eL, leftRowTerm, matchTail)}
+       """.stripMargin
+    }
     s"""
-       |if ($buildTerm == null) {
-       |  long $t0 = System.nanoTime();
-       |  $buildTerm = ($buildCls) $runnerRef.buildSide($leftInput);
-       |  $buildTime.add((System.nanoTime() - $t0) / 1000000L);
-       |  $rowsTerm = $buildTerm.rows();
-       |  $buildRows.add($rowsTerm.length);
-       |  $buildKeys.add($buildTerm.keyed().size());
-       |}
-       |while ($rightInput.hasNext()) {
-       |  InternalRow $probeRow = (InternalRow) $rightInput.next();
-       |  $probeRowsM.add(1);
-       |  ${keyEv.code}
-       |  ${sEv.code}
-       |  ${eEv.code}
-       |  if (!${sEv.isNull} && !${eEv.isNull} $keyNullCheck) {
-       |    $idxCls $idxTerm = ($idxCls) $buildTerm.keyed().get(${keyEv.value});
-       |    if ($idxTerm != null) {
-       |      long $sL = ${sEv.value};
-       |      long $eL = ${eEv.value};
-       |      $matchLoop
-       |    }
-       |  }
-       |  if (shouldStop()) return;
-       |}
+       |$probeRows.add(1);
+       |$lookup
      """.stripMargin
   }
 
@@ -813,63 +672,13 @@ case class IntervalJoinExec(
 
   override def doConsume(ctx: CodegenContext, input: Seq[ExprCode],
       row: ExprCode): String = {
-    val buildRef = ctx.addReferenceObj("intervalBuildBc", broadcastBuild,
-      classOf[Broadcast[IntervalBuildSide]].getName)
-    val buildTerm = ctx.addMutableState(
-      classOf[IntervalBuildSide].getName, "intervalBuild",
-      v => s"$v = (${classOf[IntervalBuildSide].getName}) $buildRef.value();",
-      forceInline = true)
+    val buildTerm = ctx.addMutableState(classOf[IntervalBuildSide].getName,
+      "intervalBuild", v => genBuild(ctx, v), forceInline = true)
     val rowsTerm = ctx.addMutableState("InternalRow[]", "intervalBuildRows",
       v => s"$v = $buildTerm.rows();", forceInline = true)
-    val bufTerm = ctx.addMutableState(
-      classOf[graft.rangejoin.IntMatchBuffer].getName, "intervalMatchBuf",
-      v => s"$v = new ${classOf[graft.rangejoin.IntMatchBuffer].getName}();",
-      forceInline = true)
-
     // probe-side expressions evaluated from the streamed input variables
     ctx.currentVars = input
-    val keyEv = GenerateUnsafeProjection.createCode(ctx,
-      rightKeys.map(BindReferences.bindReference(_, right.output)))
-    val sEv = BindReferences.bindReference(
-      Cast(rightStart, LongType), right.output).genCode(ctx)
-    val eEv = BindReferences.bindReference(
-      Cast(rightEnd, LongType), right.output).genCode(ctx)
-
-    // build-row column variables, read lazily inside the match loop
-    val leftRowTerm = ctx.freshName("intervalLeftRow")
-    ctx.currentVars = null
-    ctx.INPUT_ROW = leftRowTerm
-    val leftVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    ctx.INPUT_ROW = null
-
-    val numOutput = metricTerm(ctx, "numOutputRows")
-    val probeRows = metricTerm(ctx, "probeRows")
-    val idxTerm = ctx.freshName("intervalIdx")
-    val sL = ctx.freshName("sLong")
-    val eL = ctx.freshName("eLong")
-    val idxCls = classOf[LongIntervalIndex].getName
-    val keyNullCheck =
-      if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
-    val matchTail = consumeMatch(ctx, leftVars, input, numOutput)
-    val matchLoop = genMatchLoop(ctx, idxTerm, rowsTerm, bufTerm, sL, eL,
-      leftRowTerm, matchTail)
-
-    s"""
-       |$probeRows.add(1);
-       |${keyEv.code}
-       |${sEv.code}
-       |${eEv.code}
-       |if (!${sEv.isNull} && !${eEv.isNull} $keyNullCheck) {
-       |  $idxCls $idxTerm = ($idxCls) $buildTerm.keyed().get(${keyEv.value});
-       |  if ($idxTerm != null) {
-       |    long $sL = ${sEv.value};
-       |    long $eL = ${eEv.value};
-       |    $matchLoop
-       |  }
-       |}
-     """.stripMargin
+    probeRowBody(ctx, buildTerm, rowsTerm, input)
   }
 
   override protected def withNewChildrenInternal(

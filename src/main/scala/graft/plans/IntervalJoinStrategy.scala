@@ -40,7 +40,7 @@ object IntervalJoinStrategy extends SparkStrategy {
 
   /** The build side is under `spark.sql.autoBroadcastJoinThreshold`; a
     * threshold of -1 (or 0) never broadcasts by size. */
-  private[plans] def fitsBroadcast(build: LogicalPlan): Boolean = {
+  private def fitsBroadcast(build: LogicalPlan): Boolean = {
     val threshold = SQLConf.get.autoBroadcastJoinThreshold
     threshold > 0 && build.stats.sizeInBytes <= threshold
   }
@@ -66,8 +66,9 @@ object IntervalJoinStrategy extends SparkStrategy {
 
   /** The explicit count / nearest / as-of nodes have no stock plan to
     * fall back to, so a keyless build broadcasts whatever its size. */
-  private def explicitMode(build: LogicalPlan, hasKeys: Boolean)
-      : IntervalJoinMode = modeFor(build, hasKeys, None).getOrElse(BroadcastMode)
+  private def explicitMode(build: LogicalPlan, hasKeys: Boolean,
+      buildHint: Option[HintInfo] = None): IntervalJoinMode =
+    modeFor(build, hasKeys, buildHint).getOrElse(BroadcastMode)
 
   /** Probe-side variants — all beyond the reference's Inner-only support —
     * as (build is the left child, exec join type, reorder projection).
@@ -98,103 +99,107 @@ object IntervalJoinStrategy extends SparkStrategy {
         ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
         ic.residual, jt, mode, algorithm, markAttr)
 
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    // overlap-count node (from IntervalCountRewrite's aggregate pushdown)
-    case IntervalCountPlan(l, r, cond, groupAttrs, countAttr) =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) if ic.residual.isEmpty =>
-          IntervalCountExec(
-            planLater(l), planLater(r),
-            ic.leftKeys, ic.rightKeys,
-            ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
-            explicitMode(l, ic.leftKeys.nonEmpty), groupAttrs, countAttr) :: Nil
-        case _ => Nil // unreachable — the rewrite only fires on extractable conditions
-      }
-    // explicit nearest-join node (graft.operators.NearestJoin API)
-    case NearestIntervalJoin(l, r, cond) =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) if ic.residual.isEmpty =>
-          joinExec(l, r, ic, swap = false, NearestJoin,
-            explicitMode(l, ic.leftKeys.nonEmpty), "superintervals") :: Nil
-        case _ => Nil // unreachable — NearestJoin.apply validates eagerly
-      }
-    // explicit as-of join node (graft.operators.AsofJoin API): times are
-    // indexed as degenerate [t, t] intervals, so it reuses the whole
-    // build/probe machinery incl. both distribution modes
-    case AsofIntervalJoin(l, r, cond) =>
-      AsofCondition.extract(cond, l, r) match {
-        case Some(x) =>
-          IntervalJoinExec(
-            planLater(l), planLater(r),
-            x.leftKeys, x.rightKeys,
-            x.buildTime, x.buildTime, x.probeTime, x.probeTime,
-            x.residual, AsofJoin(x.forward, x.strict),
-            explicitMode(l, x.leftKeys.nonEmpty), "superintervals") :: Nil
-        case _ => Nil // unreachable — AsofJoin.apply validates eagerly
-      }
-    case Join(l, r, jt, Some(cond), hint) if enabled && probeSide.isDefinedAt(jt) =>
-      val (buildLeft, ijt, reorder) = probeSide(jt)
-      val (build, buildHint) =
-        if (buildLeft) (l, hint.leftHint) else (r, hint.rightHint)
-      val mark = jt match { case ExistenceJoin(e) => Some(e); case _ => None }
-      for {
-        ic <- IntervalCondition.extract(cond, l, r).toSeq
-        m <- modeFor(build, ic.leftKeys.nonEmpty, buildHint).toSeq
-      } yield {
-        val exec = joinExec(l, r, ic, swap = !buildLeft, ijt, m,
-          "superintervals", mark)
-        if (!reorder) exec
-        else ProjectExec((l.output ++ r.output.map(_.withNullability(true)))
-          .map(a => a: NamedExpression), exec)
-      }
-    // FullOuter: inner pairs + both-side NULL padding. Needs the
-    // per-partition match bitmap, so PartitionedMode only — which needs an
-    // equi-key to partition on; keyless FULL OUTER falls back to Spark's
-    // BNLJ (correct, slower). Goes beyond the reference, which plumbs Full
-    // but never executes it (interval_join.rs:280-302).
-    case Join(l, r, FullOuter, Some(cond), _) if enabled =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) if ic.leftKeys.nonEmpty =>
-          joinExec(l, r, ic, swap = false, FullOuterJoin, PartitionedMode,
-            "superintervals") :: Nil
-        case _ => Nil
-      }
-    case Join(l, r, Inner, Some(cond), hint) if enabled =>
-      IntervalCondition.extract(cond, l, r) match {
-        case Some(ic) =>
-          val algorithm = SQLConf.get.getConfString(
-            graft.GraftSession.IntervalJoinAlgorithm, "superintervals")
-          val nearest = LongIntervalIndex.canonical(algorithm) == "nearest"
-          if (nearest && ic.residual.nonEmpty) {
-            // nearest semantics with extra filters is ill-defined, and a
-            // silent fallback to Spark's stock join would return OVERLAP
-            // pairs — different row semantics than the conf asked for.
-            // Fail loudly instead of changing answers.
-            throw new IllegalStateException(
-              "[GRAFT_INTERVAL_JOIN] algorithm=nearest cannot apply to a " +
-                "join with residual conjuncts beyond the range pair " +
-                s"(${ic.residual.get.sql}); use graft.operators.NearestJoin " +
-                "with the bare overlap condition, or unset the algorithm")
-          }
-          modeFor(l, ic.leftKeys.nonEmpty, hint.leftHint) match {
-            case None if nearest =>
-              // declining under algorithm=nearest would silently run
-              // Spark's stock join with OVERLAP semantics — a
-              // stats-dependent answer flip. Fail loudly instead.
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+    val algorithm = SQLConf.get.getConfString(
+      graft.GraftSession.IntervalJoinAlgorithm, "superintervals")
+    val nearest = LongIntervalIndex.canonical(algorithm) == "nearest"
+    // nearest semantics are Inner-only and ride the superintervals
+    // structure; every other join type runs the conf's overlap index
+    val overlapAlg = if (nearest) "superintervals" else algorithm
+    plan match {
+      // overlap-count node (from IntervalCountRewrite's aggregate pushdown)
+      case IntervalCountPlan(l, r, cond, groupAttrs, buildHint, countAttr) =>
+        IntervalCondition.extract(cond, l, r) match {
+          case Some(ic) if ic.residual.isEmpty =>
+            IntervalCountExec(
+              planLater(l), planLater(r),
+              ic.leftKeys, ic.rightKeys,
+              ic.leftStart, ic.leftEnd, ic.rightStart, ic.rightEnd,
+              explicitMode(l, ic.leftKeys.nonEmpty, buildHint), groupAttrs,
+              countAttr) :: Nil
+          case _ => Nil // unreachable — the rewrite only fires on extractable conditions
+        }
+      // explicit nearest-join node (graft.operators.NearestJoin API)
+      case NearestIntervalJoin(l, r, cond) =>
+        IntervalCondition.extract(cond, l, r) match {
+          case Some(ic) if ic.residual.isEmpty =>
+            joinExec(l, r, ic, swap = false, NearestJoin,
+              explicitMode(l, ic.leftKeys.nonEmpty), "superintervals") :: Nil
+          case _ => Nil // unreachable — NearestJoin.apply validates eagerly
+        }
+      // explicit as-of join node (graft.operators.AsofJoin API): times are
+      // indexed as degenerate [t, t] intervals, so it reuses the whole
+      // build/probe machinery incl. both distribution modes
+      case AsofIntervalJoin(l, r, cond) =>
+        AsofCondition.extract(cond, l, r) match {
+          case Some(x) =>
+            IntervalJoinExec(
+              planLater(l), planLater(r),
+              x.leftKeys, x.rightKeys,
+              x.buildTime, x.buildTime, x.probeTime, x.probeTime,
+              x.residual, AsofJoin(x.forward, x.strict),
+              explicitMode(l, x.leftKeys.nonEmpty), "superintervals") :: Nil
+          case _ => Nil // unreachable — AsofJoin.apply validates eagerly
+        }
+      case Join(l, r, jt, Some(cond), hint) if enabled && probeSide.isDefinedAt(jt) =>
+        val (buildLeft, ijt, reorder) = probeSide(jt)
+        val (build, buildHint) =
+          if (buildLeft) (l, hint.leftHint) else (r, hint.rightHint)
+        val mark = jt match { case ExistenceJoin(e) => Some(e); case _ => None }
+        for {
+          ic <- IntervalCondition.extract(cond, l, r).toSeq
+          m <- modeFor(build, ic.leftKeys.nonEmpty, buildHint).toSeq
+        } yield {
+          val exec = joinExec(l, r, ic, swap = !buildLeft, ijt, m,
+            overlapAlg, mark)
+          if (!reorder) exec
+          else ProjectExec((l.output ++ r.output.map(_.withNullability(true)))
+            .map(a => a: NamedExpression), exec)
+        }
+      // FullOuter: inner pairs + both-side NULL padding. Needs the
+      // per-partition match bitmap, so PartitionedMode only — which needs an
+      // equi-key to partition on; keyless FULL OUTER falls back to Spark's
+      // BNLJ (correct, slower). Goes beyond the reference, which plumbs Full
+      // but never executes it (interval_join.rs:280-302).
+      case Join(l, r, FullOuter, Some(cond), _) if enabled =>
+        IntervalCondition.extract(cond, l, r) match {
+          case Some(ic) if ic.leftKeys.nonEmpty =>
+            joinExec(l, r, ic, swap = false, FullOuterJoin, PartitionedMode,
+              overlapAlg) :: Nil
+          case _ => Nil
+        }
+      case Join(l, r, Inner, Some(cond), hint) if enabled =>
+        IntervalCondition.extract(cond, l, r) match {
+          case Some(ic) =>
+            if (nearest && ic.residual.nonEmpty) {
+              // nearest semantics with extra filters is ill-defined, and a
+              // silent fallback to Spark's stock join would return OVERLAP
+              // pairs — different row semantics than the conf asked for.
+              // Fail loudly instead of changing answers.
               throw new IllegalStateException(
-                "[GRAFT_INTERVAL_JOIN] algorithm=nearest: keyless join " +
-                  "whose build side exceeds the broadcast threshold " +
-                  "cannot plan as a nearest join; raise " +
-                  "spark.sql.autoBroadcastJoinThreshold or add equi-keys")
-            case None => Nil
-            case Some(m) =>
-              joinExec(l, r, ic, swap = false,
-                if (nearest) NearestJoin else OverlapJoin, m,
-                // nearest semantics ride the superintervals structure
-                if (nearest) "superintervals" else algorithm) :: Nil
-          }
-        case None => Nil
-      }
-    case _ => Nil
+                "[GRAFT_INTERVAL_JOIN] algorithm=nearest cannot apply to a " +
+                  "join with residual conjuncts beyond the range pair " +
+                  s"(${ic.residual.get.sql}); use graft.operators.NearestJoin " +
+                  "with the bare overlap condition, or unset the algorithm")
+            }
+            modeFor(l, ic.leftKeys.nonEmpty, hint.leftHint) match {
+              case None if nearest =>
+                // declining under algorithm=nearest would silently run
+                // Spark's stock join with OVERLAP semantics — a
+                // stats-dependent answer flip. Fail loudly instead.
+                throw new IllegalStateException(
+                  "[GRAFT_INTERVAL_JOIN] algorithm=nearest: keyless join " +
+                    "whose build side exceeds the broadcast threshold " +
+                    "cannot plan as a nearest join; raise " +
+                    "spark.sql.autoBroadcastJoinThreshold or add equi-keys")
+              case None => Nil
+              case Some(m) =>
+                joinExec(l, r, ic, swap = false,
+                  if (nearest) NearestJoin else OverlapJoin, m, overlapAlg) :: Nil
+            }
+          case None => Nil
+        }
+      case _ => Nil
+    }
   }
 }

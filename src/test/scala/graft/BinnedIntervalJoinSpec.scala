@@ -146,6 +146,24 @@ class BinnedIntervalJoinSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("autoBin=auto leaves a BROADCAST-hinted keyless build unbinned") {
+    spark.conf.set(GraftSession.AutoBin, "auto")
+    spark.conf.set(GraftSession.BinSize, "100")
+    val a = randomTable(13, 150, hot = false).cache()
+    val b = randomTable(14, 150, hot = false).cache()
+    a.count(); b.count()
+    val exp = overlapDf(a, b, withKey = false).collect().map(_.toSeq).toSet
+    pinMode("partitioned")
+    val al = a.select($"contig".as("ac"), $"pos_start".as("as_"), $"pos_end".as("ae"))
+    val bl = b.select($"contig".as("bc"), $"pos_start".as("bs"), $"pos_end".as("be"))
+    val df = al.hint("broadcast").join(bl, $"as_" <= $"be" && $"ae" >= $"bs")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("__graft_bin"), plan)
+    assert(plan.contains("IntervalJoinExec: mode=CollectLeft"), plan)
+    assert(df.collect().map(_.toSeq).toSet == exp)
+    a.unpersist(); b.unpersist()
+  }
+
   test("autoBin=auto bins a keyed join when column stats show low key NDV") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set(GraftSession.AutoBin, "auto")
@@ -189,15 +207,20 @@ class BinnedIntervalJoinSpec extends SparkTestBase {
     // ~9e12 bins and kill the job; the guard raises instead
     val a = Seq(("c", 0L, Long.MaxValue)).toDF("contig", "s", "e")
     val b = Seq(("c", 5L, 10L)).toDF("contig", "s", "e")
-    val ex = intercept[Exception] {
-      graft.operators.BinnedIntervalJoin
-        .join(a, b, Seq("contig"), "s", "e", "s", "e", binSize = 1000000)
-        .collect()
-    }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else t.getMessage +: msgs(t.getCause)
-    assert(msgs(ex).exists(m => m != null && m.contains("raise binSize")),
-      s"got: ${msgs(ex)}")
+    def assertGuarded(df: => DataFrame): Unit = {
+      val ex = intercept[Exception](df.collect())
+      assert(msgs(ex).exists(m => m != null && m.contains("raise binSize")),
+        s"got: ${msgs(ex)}")
+    }
+    assertGuarded(graft.operators.BinnedIntervalJoin
+      .join(a, b, Seq("contig"), "s", "e", "s", "e", binSize = 1000000))
+    // the planner rule's explosion carries the same guard
+    spark.conf.set(GraftSession.AutoBin, "force")
+    try assertGuarded(a.join(b, a("contig") === b("contig") &&
+      a("s") <= b("e") && a("e") >= b("s")))
+    finally spark.conf.set(GraftSession.AutoBin, "auto")
   }
 
   test("binned join plans through IntervalJoinExec with bin equi-key") {

@@ -1,12 +1,14 @@
 package graft
 
+import graft.plans.IntervalCountExec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Tests of the COUNT(*) aggregate pushdown (IntervalCountRewrite →
   * IntervalCountExec): equivalence with the stock plan, grouped variants,
   * and plan-shape assertions. */
-class IntervalCountSpec extends SparkTestBase {
+class IntervalCountSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -95,6 +97,47 @@ class IntervalCountSpec extends SparkTestBase {
         a.unpersist(); b.unpersist()
       }
     } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("interpreted count (wholeStage off) ≡ stock, same metrics as codegen") {
+    val a = randomTable(29, 400)
+    val b = randomTable(30, 400)
+    a.cache().count(); b.cache().count()
+    try {
+      for (m <- Seq("broadcast", "partitioned"); grouped <- Seq(false, true)) {
+        pinMode(m)
+        def count(): DataFrame =
+          if (grouped) joined(a, b).groupBy($"ac").count()
+          else joined(a, b).groupBy().count()
+        def rows(df: DataFrame) = df.collect()
+          .map(r => (if (grouped) r.getString(0) else "") -> r.getLong(r.length - 1))
+          .toMap
+        // (answer, pairCount, buildKeys) with whole-stage codegen on or off
+        def run(wholeStage: Boolean) = {
+          spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+          val df = count()
+          val got = rows(df)
+          val plan = df.queryExecution.executedPlan.toString
+          assert("""\*\(\d+\) IntervalCountExec""".r.findFirstIn(plan)
+            .isDefined == wholeStage, s"mode=$m wholeStage=$wholeStage:\n$plan")
+          val node = collectFirst(df.queryExecution.executedPlan) {
+            case c: IntervalCountExec => c
+          }.get
+          (got, node.metrics("pairCount").value, node.metrics("buildKeys").value)
+        }
+        val interpreted = run(wholeStage = false)
+        val generated = run(wholeStage = true)
+        spark.conf.set(GraftSession.PreferIntervalJoin, "false")
+        val exp = rows(count())
+        spark.conf.set(GraftSession.PreferIntervalJoin, "true")
+        val what = s"mode=$m grouped=$grouped"
+        assert(interpreted._1 == exp, what)
+        assert(generated == interpreted, what)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      a.unpersist(); b.unpersist()
+    }
   }
 
   test("strict-op count matches stock") {

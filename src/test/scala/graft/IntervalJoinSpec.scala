@@ -1,6 +1,8 @@
 package graft
 
+import graft.plans.IntervalJoinExec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,7 +13,7 @@ import org.apache.spark.sql.functions._
  * with NULL padding, NULL equi-keys, Int32 domain edges, plan-shape
  * assertions, and equivalence with the stock Spark join.
  */
-class IntervalJoinSpec extends SparkTestBase {
+class IntervalJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -493,6 +495,71 @@ class IntervalJoinSpec extends SparkTestBase {
     assert(node.metrics("probeRows").value == 10)
     assert(node.metrics("numOutputRows").value == 16)
     assert(node.metrics("probeTime").value >= 0)
+  }
+
+  test("interpreted and generated joins report the same metrics, both modes") {
+    for (m <- Seq("broadcast", "partitioned")) {
+      pinMode(m)
+      // (answer, metrics) with whole-stage codegen on or off
+      def run(wholeStage: Boolean) = {
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+        val df = overlapJoin(targets, reads)
+        val got = df.collect().map(_.toSeq).toSet
+        assert("""\*\(\d+\) IntervalJoinExec""".r.findFirstIn(planOf(df))
+          .isDefined == wholeStage, s"mode=$m wholeStage=$wholeStage:\n${planOf(df)}")
+        val node = collectFirst(df.queryExecution.executedPlan) {
+          case j: IntervalJoinExec => j
+        }.get
+        (got, Seq("numOutputRows", "probeRows", "buildRows")
+          .map(k => k -> node.metrics(k).value).toMap)
+      }
+      try {
+        val interpreted = run(wholeStage = false)
+        assert(interpreted._1 == stockResult(targets, reads, withKey = true),
+          s"mode=$m")
+        assert(interpreted._2 ==
+          Map("numOutputRows" -> 16, "probeRows" -> 12, "buildRows" -> 10),
+          s"mode=$m")
+        assert(run(wholeStage = true) == interpreted, s"mode=$m")
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+  }
+
+  test("every join type runs the pinned algorithm and matches stock") {
+    spark.conf.set(GraftSession.IntervalJoinAlgorithm, "lapper")
+    val rnd = new scala.util.Random(29)
+    def table(n: Int) = (0 until n).map { _ =>
+      val s = rnd.nextInt(800)
+      (s"chr${rnd.nextInt(3)}", s, s + rnd.nextInt(80))
+    }.toDF("contig", "pos_start", "pos_end")
+    val al = table(200).select($"contig".as("ac"), $"pos_start".as("as_"),
+      $"pos_end".as("ae")).cache()
+    val bl = table(200).select($"contig".as("bc"), $"pos_start".as("bs"),
+      $"pos_end".as("be")).cache()
+    al.createOrReplaceTempView("alg_a")
+    bl.createOrReplaceTempView("alg_b")
+    val cond = $"ac" === $"bc" && $"as_" <= $"be" && $"ae" >= $"bs"
+    // the OR keeps EXISTS from becoming a semi join → ExistenceJoin (Mark)
+    val markSql =
+      """SELECT ac, as_, ae FROM alg_a WHERE as_ = 0 OR EXISTS (
+        |  SELECT 1 FROM alg_b WHERE bc = ac AND as_ <= be AND ae >= bs)""".stripMargin
+    def multiset(df: DataFrame) =
+      df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    val joins: Seq[(String, () => DataFrame)] =
+      Seq("inner", "right_outer", "left_outer", "left_semi", "left_anti",
+        "full_outer").map(jt => jt -> (() => al.join(bl, cond, jt))) :+
+        ("mark" -> (() => spark.sql(markSql)))
+    for ((jt, df) <- joins) {
+      val plan = planOf(df())
+      assert(plan.contains("IntervalJoinExec") && plan.contains("alg=lapper"),
+        s"$jt plan:\n$plan")
+      val got = multiset(df())
+      spark.conf.set(GraftSession.PreferIntervalJoin, "false")
+      val exp = multiset(df())
+      spark.conf.set(GraftSession.PreferIntervalJoin, "true")
+      assert(got == exp, s"join type $jt")
+    }
+    al.unpersist(); bl.unpersist()
   }
 
   test("existence (mark) join: EXISTS under a disjunction matches stock") {
