@@ -1,7 +1,9 @@
 package graft
 
-/** Debug tool: print the executed plan of a registered query.
-  * Usage: runMain graft.Explain <sfDir> <queryName> */
+/** Debug tool: print the executed plan of a registered query, first
+  * formatted, then as a tree of plan lines (the reference-format
+  * `IntervalJoinExec: mode=…, join_type=…, alg=…` lines appear only in
+  * the tree). Usage: runMain graft.Explain <sfDir> <queryName> */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
@@ -23,6 +25,7 @@ object Explain {
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"==== $name ====")
       df.explain("formatted")
+      println(df.queryExecution.executedPlan.treeString)
     }
     spark.stop()
   }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Shared bits for kernels over `array<long>` shingle hashes. */
@@ -41,8 +41,9 @@ object HashKernels {
   /** MinHash signature body: `sig[i] = min over h of mix64(h + salt_i)`.
     * NULL elements are skipped, not hashed-as-0: containsNull inputs
     * (SQL-built arrays) would otherwise make unrelated documents share
-    * the mix64(salt) signature component. */
-  def minhashSignature(hs: ArrayData, salts: Array[Long]): GenericArrayData = {
+    * the mix64(salt) signature component. Returns the unboxed
+    * [[UnsafeArrayData]] copy of the `long[]`. */
+  def minhashSignature(hs: ArrayData, salts: Array[Long]): ArrayData = {
     val n = hs.numElements()
     val out = Array.fill(salts.length)(Long.MaxValue)
     var j = 0
@@ -58,7 +59,7 @@ object HashKernels {
       }
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** SimHash body: 64-bit per-bit majority vote. NULL elements are

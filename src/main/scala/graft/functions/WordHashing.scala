@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,14 +35,12 @@ private[functions] object WordHashing {
   /** Full [[graft.functions.ShingleHashes]] kernel as one static call —
     * the target of that expression's generated code (and its interpreted
     * eval), so codegen inlines a single static invoke instead of the
-    * CodegenFallback per-row `Expression.eval` dispatch. */
-  def shingleHashes(input: UTF8String, n: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+    * CodegenFallback per-row `Expression.eval` dispatch. The result is
+    * an [[UnsafeArrayData]] copied straight from the `long[]`:
+    * `GenericArrayData(long[])` boxes every element. */
+  def shingleHashes(input: UTF8String, n: Int): ArrayData = {
     val wArr = tokenize(input)
-    if (wArr.isEmpty) {
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Long])
-    }
+    if (wArr.isEmpty) return UnsafeArrayData.fromPrimitiveArray(NoHashes)
     val out =
       if (wArr.length < n) Array(hashWindow(wArr, 0, wArr.length))
       else {
@@ -58,25 +58,22 @@ private[functions] object WordHashing {
       if (k == 0 || out(k) != out(k - 1)) { out(uniq) = out(k); uniq += 1 }
       k += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(out, uniq))
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, uniq))
   }
 
   /** Full [[graft.functions.PositionalGramHashes]] kernel as one static
     * call — same codegen rationale as [[shingleHashes]]. */
-  def positionalGramHashes(input: UTF8String, n: Int)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  def positionalGramHashes(input: UTF8String, n: Int): ArrayData = {
     val wArr = tokenize(input)
-    if (wArr.length < n) {
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Long])
-    }
+    if (wArr.length < n) return UnsafeArrayData.fromPrimitiveArray(NoHashes)
     val m = wArr.length - n + 1
     val hs = new Array[Long](m)
     var j = 0
     while (j < m) { hs(j) = hashWindow(wArr, j, n); j += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(hs)
+    UnsafeArrayData.fromPrimitiveArray(hs)
   }
+
+  private val NoHashes = Array.empty[Long]
 
   /** 64-bit hash of a word range: two independent 32-bit murmur lanes
     * over the same bytes (word-boundary mixed between words). */

@@ -1542,7 +1542,14 @@ object Dedup {
    * hotter than that (boilerplate shingles shared by everything;
    * uninformative for containment) are dropped from the INDEX side
    * only, with the documented recall caveat that a probe whose entire
-   * sketch is boilerplate finds nothing.
+   * sketch is boilerplate finds nothing. Each document lists a hash at
+   * most once, so no key's df exceeds the frame's row count: a frame of
+   * at most `maxShingleDf` documents skips the df aggregate (and its
+   * exchange) outright. The probe sketch is at most `probeK` rows per
+   * document; while that bound (~24 B a row) stays under
+   * [[ContainmentBroadcastMaxBytesConf]] the sketch is the BROADCAST
+   * build of the candidate join and the index streams past it
+   * map-side, so the large side is never the one hashed.
    *
    * The cap is the SINGLE-KEY STRAGGLER guard, and it must be sized
    * from the candidate arithmetic, not from "df that feels big": a key
@@ -1595,22 +1602,37 @@ object Dedup {
   private[graft] def containmentDupPairsRun(sh: DataFrame,
       threshold: Double, probeK: Int = 8,
       maxShingleDf: Long = 16384L): ContainmentRun = {
+    // the checkpoint's exact sizes (one tiny job) bound the hot-key
+    // pass and gate both broadcasts below
+    val stats = sh.agg(count(lit(1)), sum(size(col("sh")))).head()
+    val nDocs = stats.getLong(0)
+    val nSh = if (stats.isNullAt(1)) 0L else stats.getLong(1)
     val inv = sh.select(col("id").as("id_b"), explode(col("sh")).as("h"))
-    val hot = inv.groupBy("h").agg(count(lit(1)).as("df"))
-      .where(col("df") > maxShingleDf).select("h")
-    val invKept = inv.join(hot, Seq("h"), "left_anti")
+    // `sh` rows are sorted DISTINCT hashes, so df(h) <= nDocs: at or
+    // under maxShingleDf no key can be hot, and the aggregate, its
+    // exchange and the anti-join are skipped
+    val invKept = if (nDocs <= maxShingleDf) inv else {
+      val hot = inv.groupBy("h").agg(count(lit(1)).as("df"))
+        .where(col("df") > maxShingleDf).select("h")
+      inv.join(hot, Seq("h"), "left_anti")
+    }
     // shingleHashes returns SORTED distinct hashes: slice(1, k) IS the
     // bottom-k probe sketch
     val probes = sh.select(col("id").as("id_a"),
       explode(slice(col("sh"), 1, probeK)).as("h"))
-    val cands = probes.join(invKept, Seq("h"))
+    val bcastGate = sh.sparkSession.conf
+      .get(ContainmentBroadcastMaxBytesConf,
+        ContainmentBroadcastMaxBytes.toString).toLong
+    // the sketch is at most nDocs x probeK rows of ~24 B: under the gate
+    // it is the broadcast build and the corpus-linear index streams
+    // past it map-side; over it, the planner picks the join
+    val cands = (if (nDocs * probeK * 24L <= bcastGate)
+        invKept.join(broadcast(probes), Seq("h"))
+      else probes.join(invKept, Seq("h")))
       .where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
-    // broadcast gate off the checkpoint's exact sizes (one tiny job):
     // the array frame costs ~8 B/shingle + ~24 B/doc
-    val stats = sh.agg(count(lit(1)), sum(size(col("sh")))).head()
-    val estBytes = stats.getLong(0) * 24L +
-      (if (stats.isNullAt(1)) 0L else stats.getLong(1)) * 8L
+    val estBytes = nDocs * 24L + nSh * 8L
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val shB = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
     def verified(pairs: DataFrame): DataFrame =
@@ -1620,9 +1642,6 @@ object Dedup {
           round(sortedIntersectCount(col("sh_a"), col("sh_b")).cast("double") /
             size(col("sh_a")).cast("double"), 6).as("containment"))
         .where(col("containment") >= threshold)
-    val bcastGate = sh.sparkSession.conf
-      .get(ContainmentBroadcastMaxBytesConf,
-        ContainmentBroadcastMaxBytes.toString).toLong
     if (estBytes <= bcastGate)
       // candidates stream map-side through two broadcast lookups and
       // the compiled merge; only the survivors are deduplicated
@@ -1675,8 +1694,7 @@ object Dedup {
       // (Bench/BenchScale set maxResultSize=4g at session build, which
       // keeps the measured sf10 GenScale index — 35.9 M rows ≈ 861 MB
       // collected — on the resident tier).
-      val invBytes =
-        (if (stats.isNullAt(1)) 0L else stats.getLong(1)) * 24L
+      val invBytes = nSh * 24L
       val confGate = sh.sparkSession.conf
         .get(ContainmentIndexBroadcastMaxBytesConf,
           ContainmentIndexBroadcastMaxBytes.toString).toLong
@@ -1747,10 +1765,7 @@ object Dedup {
           val ubRow = dfp.join(dfi, Seq("h"))
             .agg(sum(col("__np") * col("__ni"))).head()
           val candUB = if (ubRow.isNullAt(0)) 0L else ubRow.getLong(0)
-          val nDocs = stats.getLong(0)
-          val avgSh =
-            if (nDocs == 0L || stats.isNullAt(1)) 0.0
-            else stats.getLong(1).toDouble / nDocs
+          val avgSh = if (nDocs == 0L) 0.0 else nSh.toDouble / nDocs
           val ub = candUB.toDouble * avgSh * 24.0
           (ub, ub)
         }
@@ -1908,7 +1923,9 @@ object Dedup {
     * executors can host the array frame
     * should still RAISE the conf: a resident broadcast moves each
     * array once per executor and verifies with one compiled merge per
-    * pair — cheaper than the count path's exchange when it fits.
+    * pair — cheaper than the count path's exchange when it fits. The
+    * same gate admits the probe sketch (at most docs × probeK rows of
+    * ~24 B) as the candidate join's broadcast build, on every tier.
     * Spark's hard broadcast ceiling (8 GB) still applies. */
   val ContainmentBroadcastMaxBytesConf =
     "spark.graft.dedup.containmentBroadcastMaxBytes"

@@ -1,11 +1,12 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Sampling, TextStats}
 
 /** Corpus-LM scoring operators (DSIR importance, interpolated-bigram
   * perplexity filter) and quality-ranked canonical dedup. */
-class TextModelSpec extends SparkTestBase {
+class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   import spark.implicits._
 
@@ -215,8 +216,8 @@ class TextModelSpec extends SparkTestBase {
   test("containmentDupPairs: hot-key cut is recall-invisible here") {
     // the straggler-guard default (16384) only drops shingles carried
     // by 16 k+ docs; this pins the recall argument at test scale by
-    // cutting at df > 50 in a 120-doc corpus where EVERY doc shares a
-    // boilerplate trailer (df = 120, the hot key the cap exists for):
+    // cutting at df > 50 in an 80-doc corpus where EVERY doc shares a
+    // boilerplate trailer (df = 80, the hot key the cap exists for):
     // every true pair differs by < probeK shingles, so recall rides
     // the pair's own non-hot probe keys and the cut changes nothing
     val base = spark.range(0, 60).select(col("id").as("doc_id"),
@@ -227,13 +228,41 @@ class TextModelSpec extends SparkTestBase {
     val copies = base.where(col("doc_id") % 3 === 0)
       .select((col("doc_id") + 1000).as("doc_id"), col("text"))
     val docs = base.union(copies)
-    def pairs(df: Long) = Dedup
+    def run(df: Long) = Dedup
       .containmentDupPairs(docs, "doc_id", "text", 0.9, maxShingleDf = df)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cut = pairs(50L) // trailer shingles (df 120) dropped from index
-    val unbounded = pairs(1L << 40)
+    def hAggregates(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
+            if a.groupingExpressions.exists(_.references.exists(_.name == "h")) => a
+      }
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cutRun = run(50L) // trailer shingles (df 80) dropped from index
+    assert(hAggregates(cutRun).size == 1, cutRun.queryExecution.optimizedPlan)
+    // no key's df can pass the row count: no df aggregate, and the
+    // probe sketch (explode of the slice) is the h join's broadcast build
+    val unboundedRun = run(1L << 40)
+    assert(hAggregates(unboundedRun).isEmpty,
+      unboundedRun.queryExecution.optimizedPlan)
+    val cut = pairs(cutRun)
+    val unbounded = pairs(unboundedRun)
     assert(cut == unbounded && cut.nonEmpty,
       s"cut=${cut.size} unbounded=${unbounded.size}")
+    val hJoins = collect(unboundedRun.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "h")) => j
+    }
+    assert(hJoins.size == 1, unboundedRun.queryExecution.executedPlan)
+    val j = hJoins.head
+    val sketchBuild = find(j.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+      case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
+    }) {
+      case g: org.apache.spark.sql.execution.GenerateExec =>
+        g.generator.toString.contains("slice")
+      case _ => false
+    }
+    assert(sketchBuild.isDefined, j)
   }
 
   test("containment broadcast gate conf switches path, not results") {
@@ -338,16 +367,21 @@ class TextModelSpec extends SparkTestBase {
     })
     assert(brute.nonEmpty) // the fixture actually exercises the path
     assert(brute.count(_._1 == 2100L) == 6)
-    def check(shape: String, confs: (String, String)*): Unit = {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val got = Dedup.containmentDupPairs(docs, "doc_id", "text", 0.9)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(got == brute,
-          s"$shape: got ${got.size} pairs, brute ${brute.size}")
-      } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
-    }
+    // maxShingleDf above the corpus size skips the df pass; just below
+    // it the pass runs (and finds no key that hot)
+    def check(shape: String, confs: (String, String)*): Unit =
+      Seq(16384L, all.size - 1L).foreach { maxDf =>
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        try {
+          val got = Dedup.containmentDupPairs(docs, "doc_id", "text", 0.9,
+              maxShingleDf = maxDf)
+            .collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+          assert(got == brute,
+            s"$shape, maxShingleDf $maxDf: got ${got.size} pairs, " +
+              s"brute ${brute.size}")
+        } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+      }
     // all four verify shapes: broadcast arrays, resident index,
     // bounded-scratch batches, shuffled index
     val overGate = Dedup.ContainmentBroadcastMaxBytesConf -> "0"
