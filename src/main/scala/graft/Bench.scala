@@ -36,9 +36,9 @@ object Bench {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // roomy driver for the containment resident-tier index broadcast
-      // (the gate self-clamps to 80% of maxResultSize; see
-      // Dedup.ContainmentIndexBroadcastMaxBytesConf)
+      // roomy driver for broadcast collects: the containment and bm25
+      // gates self-clamp to 80% of maxResultSize (see
+      // Dedup.broadcastCollectGate)
       .config("spark.driver.maxResultSize", "4g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -808,62 +808,6 @@ object Dedup {
       .where(col("cosine") >= threshold)
   }
 
-  /**
-   * Connected components over an undirected duplicate-pair graph
-   * `(id1, id2)` — resolves pairwise hits into duplicate GROUPS: every
-   * node is labeled with the minimum id reachable from it (the group id).
-   * This is the step after candidate generation that pair-emitting dedup
-   * (exact/MinHash/SimHash/embedding) needs before "keep one copy":
-   * transitive duplicates A~B, B~C must collapse to ONE group even when
-   * the pair A~C was never emitted.
-   *
-   * Micro-graph fast path: the symmetrize checkpoint (always built — see
-   * below) yields the edge count for free; at or below
-   * `microGraphMaxEdges` the components are resolved by a SINGLE-task
-   * union-find over the checkpointed edges instead of distributed
-   * rounds — identical labels, one job instead of one per round, and
-   * none of the per-round generated-plan compilation. Duplicate-pair
-   * graphs at any scale have TINY edge lists relative to the corpus
-   * (pairs, not documents), so this path covers most real invocations.
-   *
-   * Above the gate there are two distributed paths, chosen from the
-   * input itself: a local-contraction pre-pass ([[spanningForest]])
-   * whose forest — small on the id-local graphs dedup produces —
-   * resolves on the micro path (contract→micro), and the
-   * alternating-star engine ([[starLoop]]) for everything else: a
-   * contracted forest still too large for one task, or a graph with no
-   * id locality (predicted by a one-job stall probe, or detected by the
-   * contraction stall guard). Star rounds converge in O(log²) rounds
-   * worst case on ANY id layout. Lineage is cut with a lazy
-   * checkpoint every round so the plan does not grow with the
-   * iteration count (the classic iterative-DataFrame trap).
-   *
-   * Shuffle hygiene (100 TB): the symmetric edge list is repartitioned by
-   * `src` BEFORE its one-time lineage cut — `localCheckpoint` preserves
-   * `outputPartitioning`, so the star engine's canonical (hi, lo)
-   * orientation rides that layout with no exchange of its own.
-   *
-   * If the star rounds have not converged after `maxIterations` rounds
-   * the labels are WRONG (some component carries several group ids), so
-   * this throws rather than returning a silently-truncated result.
-   *
-   * Each superseded round checkpoint is unpersisted immediately; Spark
-   * logs one WARN per round ("lineage has been truncated and cannot be
-   * recomputed") — expected and harmless, the checkpoint is never read
-   * again.
-   */
-  /** `repartition(key).localCheckpoint()` with the partitioning actually
-    * CAPTURED in the result plan (under AQE `Dataset.localCheckpoint`
-    * records UnknownPartitioning, which would force downstream joins to
-    * re-shuffle the checkpoint on every round). Delegates to
-    * [[org.apache.spark.sql.GraftSqlShim.checkpointHashPartitioned]] —
-    * no conf is touched and the upstream plan keeps AQE's skew
-    * mitigation, so it is safe on a shared session and safe to wrap
-    * around the full candidate pipeline. */
-  private[graft] def checkpointPartitionedBy(df: DataFrame,
-      key: String): DataFrame =
-    org.apache.spark.sql.GraftSqlShim.checkpointHashPartitioned(df, key)
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.Dedup")
 
   /** Default [[connectedComponents]] `microGraphMaxEdges`: a 1 M-edge
@@ -1146,18 +1090,54 @@ object Dedup {
   private[graft] final case class CcRun(labels: DataFrame, engine: String,
       rounds: Int, forestEdges: Long)
 
-  /** @param microGraphMaxEdges symmetric-edge-count threshold at or below
-    *   which components are resolved by the single-task union-find fast
-    *   path instead of the distributed phases (identical result, O(1)
-    *   jobs instead of O(rounds) — and none of the per-round
-    *   generated-plan compilation). The count is read off the (always
-    *   required) symmetrize checkpoint, so the gate costs nothing. Set to
-    *   0 to force the distributed path. Above the threshold a
-    *   local-contraction pre-pass ([[spanningForest]]) runs first: a
-    *   small forest resolves on the micro path, and a large one feeds
-    *   the alternating-star engine ([[starLoop]]), as does a stalled
-    *   contraction (non-id-local graph) — the latter on the original
-    *   edges. */
+  /**
+   * Connected components over an undirected duplicate-pair graph
+   * `(id1, id2)` — resolves pairwise hits into duplicate GROUPS: every
+   * node is labeled with the minimum id reachable from it (the group id).
+   * This is the step after candidate generation that pair-emitting dedup
+   * (exact/MinHash/SimHash/embedding) needs before "keep one copy":
+   * transitive duplicates A~B, B~C must collapse to ONE group even when
+   * the pair A~C was never emitted.
+   *
+   * Micro-graph fast path: the symmetrize checkpoint (always built — see
+   * below) yields the edge count for free; at or below
+   * `microGraphMaxEdges` the components are resolved by a SINGLE-task
+   * union-find over the checkpointed edges instead of distributed
+   * rounds — identical labels, one job instead of one per round, and
+   * none of the per-round generated-plan compilation. Duplicate-pair
+   * graphs at any scale have TINY edge lists relative to the corpus
+   * (pairs, not documents), so this path covers most real invocations.
+   *
+   * Above the gate there are two distributed paths, chosen from the
+   * input itself: a local-contraction pre-pass ([[spanningForest]])
+   * whose forest — small on the id-local graphs dedup produces —
+   * resolves on the micro path (contract→micro), and the
+   * alternating-star engine ([[starLoop]]) for everything else: a
+   * contracted forest still too large for one task, or a graph with no
+   * id locality (predicted by a one-job stall probe, or detected by the
+   * contraction stall guard). Star rounds converge in O(log²) rounds
+   * worst case on ANY id layout. Lineage is cut with a lazy
+   * checkpoint every round so the plan does not grow with the
+   * iteration count (the classic iterative-DataFrame trap).
+   *
+   * Shuffle hygiene (100 TB): the symmetric edge list is repartitioned by
+   * `src` BEFORE its one-time lineage cut — `localCheckpoint` preserves
+   * `outputPartitioning`, so the star engine's canonical (hi, lo)
+   * orientation rides that layout with no exchange of its own.
+   *
+   * If the star rounds have not converged after `maxIterations` rounds
+   * the labels are WRONG (some component carries several group ids), so
+   * this throws rather than returning a silently-truncated result.
+   *
+   * Each superseded round checkpoint is unpersisted immediately; Spark
+   * logs one WARN per round ("lineage has been truncated and cannot be
+   * recomputed") — expected and harmless, the checkpoint is never read
+   * again.
+   *
+   * @param microGraphMaxEdges symmetric-edge-count threshold at or below
+   *   which components are resolved by the single-task union-find fast
+   *   path (see above). Set to 0 to force the distributed path.
+   */
   def connectedComponents(pairs: DataFrame, id1: String = "id1",
       id2: String = "id2", maxIterations: Int = 50,
       microGraphMaxEdges: Long = MicroGraphMaxEdgesDefault): DataFrame =
@@ -1596,17 +1576,19 @@ object Dedup {
   private[graft] final case class ContainmentRun(pairs: DataFrame,
       batches: Int)
 
-  /** [[containmentDupPairs]] over an already-materialized `(id, sh)`
-    * frame ([[shingleFrame]]), with its batch count ([[ContainmentRun]]);
-    * the caller checks the arguments. */
-  private[graft] def containmentDupPairsRun(sh: DataFrame,
-      threshold: Double, probeK: Int = 8,
-      maxShingleDf: Long = 16384L): ContainmentRun = {
-    // the checkpoint's exact sizes (one tiny job) bound the hot-key
-    // pass and gate both broadcasts below
-    val stats = sh.agg(count(lit(1)), sum(size(col("sh")))).head()
-    val nDocs = stats.getLong(0)
-    val nSh = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+  /** The candidate plan of [[containmentDupPairsRun]] over an `(id, sh)`
+    * frame of `nDocs` rows: the full inverted index `inv` (id_b, h), the
+    * same index with its hot keys cut (`invKept`), the bottom-k probe
+    * sketch `probes` (id_a, h) and the raw candidate stream `cands`
+    * (id_a, id_b) — one row per shared probe hash, so a pair repeats. */
+  private[graft] final case class ContainmentCandidates(inv: DataFrame,
+      invKept: DataFrame, probes: DataFrame, cands: DataFrame)
+
+  /** Builds [[ContainmentCandidates]]; `bcastGate` is
+    * [[containmentBroadcastGate]]. */
+  private[graft] def containmentCandidates(sh: DataFrame, nDocs: Long,
+      probeK: Int, maxShingleDf: Long,
+      bcastGate: Long): ContainmentCandidates = {
     val inv = sh.select(col("id").as("id_b"), explode(col("sh")).as("h"))
     // `sh` rows are sorted DISTINCT hashes, so df(h) <= nDocs: at or
     // under maxShingleDf no key can be hot, and the aggregate, its
@@ -1620,9 +1602,6 @@ object Dedup {
     // bottom-k probe sketch
     val probes = sh.select(col("id").as("id_a"),
       explode(slice(col("sh"), 1, probeK)).as("h"))
-    val bcastGate = sh.sparkSession.conf
-      .get(ContainmentBroadcastMaxBytesConf,
-        ContainmentBroadcastMaxBytes.toString).toLong
     // the sketch is at most nDocs x probeK rows of ~24 B: under the gate
     // it is the broadcast build and the corpus-linear index streams
     // past it map-side; over it, the planner picks the join
@@ -1631,6 +1610,36 @@ object Dedup {
       else probes.join(invKept, Seq("h")))
       .where(col("id_a") =!= col("id_b"))
       .select("id_a", "id_b")
+    ContainmentCandidates(inv, invKept, probes, cands)
+  }
+
+  /** [[ContainmentBroadcastMaxBytesConf]] as the session sets it,
+    * self-clamped to 80 % of `spark.driver.maxResultSize`
+    * ([[broadcastCollectGate]]): a broadcast collects its rows to the
+    * driver first, so a gate past that limit would abort the query
+    * mid-broadcast instead of taking the over-gate path. */
+  private[graft] def containmentBroadcastGate(
+      spark: org.apache.spark.sql.SparkSession): Long =
+    broadcastCollectGate(
+      spark.conf.get(ContainmentBroadcastMaxBytesConf,
+        ContainmentBroadcastMaxBytes.toString).toLong,
+      spark.conf.get("spark.driver.maxResultSize", "1g"))
+
+  /** [[containmentDupPairs]] over an already-materialized `(id, sh)`
+    * frame ([[shingleFrame]]), with its batch count ([[ContainmentRun]]);
+    * the caller checks the arguments. */
+  private[graft] def containmentDupPairsRun(sh: DataFrame,
+      threshold: Double, probeK: Int = 8,
+      maxShingleDf: Long = 16384L): ContainmentRun = {
+    val spark = sh.sparkSession
+    // the checkpoint's exact sizes (one tiny job) bound the hot-key
+    // pass and gate both broadcasts below
+    val stats = sh.agg(count(lit(1)), sum(size(col("sh")))).head()
+    val nDocs = stats.getLong(0)
+    val nSh = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+    val bcastGate = containmentBroadcastGate(spark)
+    val ContainmentCandidates(inv, invKept, probes, cands) =
+      containmentCandidates(sh, nDocs, probeK, maxShingleDf, bcastGate)
     // the array frame costs ~8 B/shingle + ~24 B/doc
     val estBytes = nDocs * 24L + nSh * 8L
     val shA = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
@@ -1663,83 +1672,36 @@ object Dedup {
       // sees real input sizes, unlike the array-shape fallback whose
       // blowup was in the join OUTPUT). `sh` arrays are sorted
       // DISTINCT hashes, so index rows are distinct (doc, h) pairs
-      // and the count is exact.
+      // and the count is exact. No side is broadcast-hinted: the
+      // index collects at ~24 B per shingle, heavier than the ~8 B per
+      // shingle array frame that just failed the gate.
       val sizesA = sh.select(col("id").as("id_a"),
         size(col("sh")).as("__n_a"))
       val invA = inv.select(col("id_b").as("id_a"), col("h"))
-      // middle tier — broadcast the 16-byte INDEX rows even though the
-      // array frame is over its gate: the index costs ~invRows x 16 B
-      // (sf10 GenScale: 573 MB for a corpus whose array frame is past
-      // 256 MB), and with BOTH index sides resident the verify's
-      // Σ_cand |sh(a)| explosion never crosses an exchange — it streams
-      // through two broadcast-hash probes and the pair-count aggregate
-      // partial-collapses map-side ONTO the candidate distinct's
-      // (id_a, id_b) layout, so the candidate DISTINCT becomes the one
-      // wide exchange of the whole verify (measured at the 10x
-      // GenScale decade: the distinct is ~16 B x |distinct candidates|
-      // while the exploded join stream is ~50x that — the r14 sf10
-      // single-wave ENOSPC was exactly that stream hitting disk).
-      // Above the index gate (the true 100 TB regime) the shuffled
-      // shape below remains, with executor fleets absorbing the wave.
-      // driver-side cost of making the index resident: a
-      // BroadcastExchange COLLECTS the rows to the driver as
-      // UnsafeRows — a (long, long) row is 24 B (8 B null-bitset word
-      // + 2×8 B fields), not the 16 B logical — and that collect is
-      // subject to spark.driver.maxResultSize (default 1g). Gate on
-      // the COLLECTED bytes and self-clamp the gate to 80% of
-      // maxResultSize, so an index in the former 0.7-1 GiB blind spot
-      // routes to the shuffled tier instead of aborting the whole
-      // query mid-broadcast with a maxResultSize SparkException.
-      // Deployments with roomy drivers raise BOTH knobs
-      // (Bench/BenchScale set maxResultSize=4g at session build, which
-      // keeps the measured sf10 GenScale index — 35.9 M rows ≈ 861 MB
-      // collected — on the resident tier).
-      val invBytes = nSh * 24L
-      val confGate = sh.sparkSession.conf
-        .get(ContainmentIndexBroadcastMaxBytesConf,
-          ContainmentIndexBroadcastMaxBytes.toString).toLong
-      // byteStringAsBytes, not byteStringAsMb: a sub-MB setting
-      // ('512k') truncates to 0 MB, which the unlimited check would
-      // read as "no cap" and skip the self-clamp on exactly the
-      // deployment most likely to abort the collect (r16 ADVICE).
-      // Only the literal '0' setting means unlimited.
-      val invGate = broadcastCollectGate(confGate,
-        sh.sparkSession.conf.get("spark.driver.maxResultSize", "1g"))
-      val invFits = invBytes <= invGate
-      // BOUNDED-SCRATCH batching: the verify's widest exchange is still
-      // the quadratic-family term, and a run whose aggregate shuffle
+      // BOUNDED-SCRATCH batching: the verify's widest exchange is the
+      // quadratic-family term, and a run whose aggregate shuffle
       // scratch can't hold it in one wave must not die mid-exchange
       // (measured on the single-box sf10 capture: one wave filled the
       // disk). Size the wave count from a SAMPLED measurement of what
-      // actually crosses an exchange in the chosen tier: 1/64 of the
-      // id_a hash domain (the filter pushes below the candidate join,
-      // so the sample job exchanges ~1/64 of the raw candidate rows),
-      // distinct'd and joined to the per-doc sizes. With the index
-      // resident the one wide exchange is the candidate distinct
-      // (16 B x |distinct candidates|); in the shuffled tier the
-      // exploded (pair, shingle) stream (24 B x Σ|sh(a)|) rides on top
-      // of it. 1.5x headroom for sampling skew. The r14 pair-free
-      // upper bound (Σ_h probeDf·indexDf x avg|sh|) modeled the
-      // exploded stream even when the index broadcast kept it off
-      // disk entirely — at sf10 it drove k to the 256-batch cap,
-      // turning a handful of waves into a multi-hour crawl of full
-      // index re-scans; sequential batches are only cheap when k is
-      // what the disk actually requires. An empty sample falls back
-      // to that upper bound (conservative, and only reachable when
-      // the candidate set is ~empty anyway). k = 1 (any real cluster:
-      // executor disks aggregate far past this) keeps today's single
-      // lazy plan; each batch is eagerly materialized (16-byte
-      // survivor rows) before the next starts.
-      // one sample job measures BOTH the raw candidate rows (what the
-      // distinct's shuffle WRITE carries: duplicates of a pair arrive
-      // from different shingle-hash partitions, so map-side partial
-      // aggregation cannot collapse them — on dup-dense corpora
-      // raw/distinct approaches probeK) and the distinct pairs + their
-      // Σ|sh(a)| (what the verify stages downstream of the distinct
-      // carry). The wave is sized from the LARGER of the two (r16
-      // ADVICE: the previous distinct-only estimate undersized the
-      // wave by up to probeK× and only matched measured disk because
-      // shuffle compression canceled the multiplier).
+      // crosses an exchange: 1/64 of the id_a hash domain (the filter
+      // pushes below the candidate join, so the sample job exchanges
+      // ~1/64 of the raw candidate rows), distinct'd and joined to the
+      // per-doc sizes. One sample job measures BOTH the raw candidate
+      // rows (what the distinct's shuffle WRITE carries: duplicates of
+      // a pair arrive from different shingle-hash partitions, so
+      // map-side partial aggregation cannot collapse them — on
+      // dup-dense corpora raw/distinct approaches probeK) and the
+      // distinct pairs + their Σ|sh(a)| (the exploded (pair, shingle)
+      // stream downstream of the distinct). The wave is 16 B x the
+      // LARGER of the two pair counts plus 24 B x Σ|sh(a)|, with 1.5x
+      // headroom for sampling skew (r16 ADVICE: a distinct-only
+      // estimate undersized the wave by up to probeK x). An empty
+      // sample falls back to the pair-free upper bound
+      // Σ_h probeDf·indexDf x avg|sh| (conservative, and only
+      // reachable when the candidate set is ~empty anyway). k = 1
+      // (any real cluster: executor disks aggregate far past this)
+      // keeps one lazy plan; each batch is eagerly materialized
+      // (16-byte survivor rows) before the next starts.
       val SampleMod = 64
       val sampleRow = cands
         .where(pmod(xxhash64(col("id_a")), lit(SampleMod)) === 0)
@@ -1747,18 +1709,16 @@ object Dedup {
         .join(sizesA, Seq("id_a"))
         .agg(count(lit(1)).as("__sn"), sum("__n_a").as("__ss"),
           sum("__dup").as("__sraw")).head()
-      val spark = sh.sparkSession
       val scratch = spark.conf.get(ContainmentScratchBytesConf,
         defaultScratchBytes(spark).toString).toLong
-      val (estResident, estShuffled) =
+      val est =
         if (!sampleRow.isNullAt(0) && sampleRow.getLong(0) > 0L) {
           val sPairs = sampleRow.getLong(0).toDouble * SampleMod
           val sRaw = sampleRow.getLong(2).toDouble * SampleMod
           val sShA =
             (if (sampleRow.isNullAt(1)) 0L else sampleRow.getLong(1))
               .toDouble * SampleMod
-          val base = math.max(sPairs, sRaw) * 16.0
-          (base * 1.5, (base + sShA * 24.0) * 1.5)
+          (math.max(sPairs, sRaw) * 16.0 + sShA * 24.0) * 1.5
         } else {
           val dfp = probes.groupBy("h").agg(count(lit(1)).as("__np"))
           val dfi = invKept.groupBy("h").agg(count(lit(1)).as("__ni"))
@@ -1766,35 +1726,13 @@ object Dedup {
             .agg(sum(col("__np") * col("__ni"))).head()
           val candUB = if (ubRow.isNullAt(0)) 0L else ubRow.getLong(0)
           val avgSh = if (nDocs == 0L) 0.0 else nSh.toDouble / nDocs
-          val ub = candUB.toDouble * avgSh * 24.0
-          (ub, ub)
+          candUB.toDouble * avgSh * 24.0
         }
-      // resident-tier batches each REBUILD the inv/invA broadcasts
-      // (broadcast exchanges are not reused across separate actions:
-      // every batch re-collects and re-hashes a relation that can be
-      // several GB in executor memory), so the resident tier admits at
-      // most 32 waves. When the candidate-distinct wave alone wants
-      // MORE than 32 batches while the index still fits its broadcast
-      // gate, the corpus is dup-dense far past what the tier was sized
-      // for — DEMOTE to the shuffled tier (re-sizing the wave with its
-      // +Σ|sh(a)| term) instead of clamping k at 32: a clamped k
-      // carries up to estResident/32 per batch — the unbounded-scratch
-      // ENOSPC risk the batching exists to prevent — while demotion
-      // only pays the exchange the shuffled tier always pays (r16
-      // ADVICE: crash-safety wins over the broadcast-rebuild tax).
-      val (invResident, k) =
-        containmentWavePlan(invFits, estResident, estShuffled, scratch)
-      if (invFits && !invResident)
-        log.info(s"containmentDupPairs: index fits its broadcast gate " +
-          s"(${invBytes / (1L << 20)} MiB) but the sampled wave wants " +
-          s"more than $ResidentBatchCap resident batches — demoting " +
-          s"to the shuffled tier")
-      val invB = if (invResident) broadcast(inv) else inv
-      val invAB = if (invResident) broadcast(invA) else invA
+      val k = containmentWaves(est, scratch)
       def countVerified(pairs: DataFrame): DataFrame =
         pairs.distinct()
-          .join(invAB, Seq("id_a"))
-          .join(invB, Seq("id_b", "h"))
+          .join(invA, Seq("id_a"))
+          .join(inv, Seq("id_b", "h"))
           .groupBy("id_a", "id_b")
           .agg(count(lit(1)).as("__shared"))
           .join(sizesA, Seq("id_a"))
@@ -1803,15 +1741,12 @@ object Dedup {
             round(col("__shared").cast("double") /
               col("__n_a").cast("double"), 6).as("containment"))
           .where(col("containment") >= threshold)
-      val estWide = if (invResident) estResident else estShuffled
       if (k <= 1) ContainmentRun(countVerified(cands), k)
       else {
         log.info(s"containmentDupPairs: over-gate verify in $k " +
           s"bounded-scratch batches (sampled wave estimate " +
-          s"${(estWide / (1L << 20)).toLong} MiB vs scratch " +
-          s"${scratch / (1L << 30)} GiB)" +
-          (if (invResident) s"; resident tier re-broadcasts the " +
-            s"${invBytes / (1L << 20)} MiB index per batch" else ""))
+          s"${(est / (1L << 20)).toLong} MiB vs scratch " +
+          s"${scratch / (1L << 30)} GiB)")
         val shimSql = org.apache.spark.sql.GraftSqlShim
         val parts = (0 until k).map { i =>
           // eager checkpoint: batches run SEQUENTIALLY. The finished
@@ -1838,42 +1773,36 @@ object Dedup {
   /** Scratch budget (bytes) for [[containmentDupPairs]]'s over-gate
     * bounded-scratch batching: the estimated one-wave shuffle volume
     * is divided by this to pick the batch count. Defaults to half the
-    * usable space of the local scratch dir (driver-side measurement —
-    * right for local mode; CLUSTER deployments should set this to the
-    * per-wave volume their executors' aggregate shuffle disks absorb,
-    * typically high enough that k stays 1). */
+    * usable space of the first local dir Spark writes shuffle files to
+    * (driver-side measurement — right for local mode; CLUSTER
+    * deployments should set this to the per-wave volume their
+    * executors' aggregate shuffle disks absorb, typically high enough
+    * that k stays 1). */
   val ContainmentScratchBytesConf =
     "spark.graft.dedup.containmentScratchBytes"
 
   private def defaultScratchBytes(
       spark: org.apache.spark.sql.SparkSession): Long = {
-    val dir = spark.conf.getOption("spark.local.dir")
-      .orElse(sys.props.get("spark.local.dir"))
-      .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
-      .split(",").head
-    val usable = try new java.io.File(dir).getUsableSpace
+    val usable = try org.apache.spark.sql.GraftSqlShim.firstLocalDir(spark)
+        .getUsableSpace
       catch { case _: Exception => 0L }
     math.max(4L << 30, usable / 2)
   }
 
-  /** Resident-tier batch ceiling: each resident batch REBUILDS the
-    * index broadcasts, so past this many waves the rebuild tax says
-    * the tier was mis-sized for the corpus — demote, don't clamp. */
-  private[graft] val ResidentBatchCap = 32
-
-  /** Effective byte ceiling for [[containmentDupPairs]]'s index
-    * broadcast collect: the configured gate, self-clamped to 80% of
-    * `spark.driver.maxResultSize` so a borderline index routes to the
-    * shuffled tier instead of aborting mid-broadcast. Parsed with
-    * byteStringAsBytes, NOT byteStringAsMb — a sub-MB setting ('512k')
-    * truncates to 0 MB under the latter, which the unlimited check
-    * would read as "no cap" and skip the clamp on exactly the
-    * deployment most likely to abort the collect (r16 ADVICE).
-    * Unlimited is anything that PARSES to 0 bytes — Spark's own
-    * semantics: '0', '0k', '0m', '0g' all disable the collect cap
-    * (r17 ADVICE: comparing the trimmed string to "0" demoted every
-    * index to the shuffled tier under '0m'-style settings on a driver
-    * with no cap at all). */
+  /** Effective byte ceiling for a driver-collected relation — the
+    * containment verify's per-doc array frame and probe sketch
+    * ([[containmentBroadcastGate]]), the bm25 query-term table: the
+    * configured gate, self-clamped to 80% of
+    * `spark.driver.maxResultSize` so a borderline relation takes the
+    * caller's other path (or its loud refusal) instead of aborting
+    * mid-collect.
+    * Parsed with byteStringAsBytes, NOT byteStringAsMb — a sub-MB
+    * setting ('512k') truncates to 0 MB under the latter, which the
+    * unlimited check would read as "no cap" and skip the clamp on
+    * exactly the deployment most likely to abort the collect (r16
+    * ADVICE). Unlimited is anything that PARSES to 0 bytes — Spark's
+    * own semantics: '0', '0k', '0m', '0g' all disable the collect cap
+    * (r17 ADVICE). */
   private[graft] def broadcastCollectGate(confGate: Long,
       maxResultSetting: String): Long = {
     val capBytes = org.apache.spark.network.util.JavaUtils
@@ -1882,80 +1811,43 @@ object Dedup {
     else math.min(confGate, capBytes / 5L * 4L)
   }
 
-  /** The over-gate verify's tier + wave-count decision, pure for
-    * testability: given whether the index fits its broadcast gate and
-    * the sampled one-wave shuffle estimates of BOTH tiers, returns
-    * (invResident, k). When the resident tier's own wave estimate
-    * wants more than [[ResidentBatchCap]] batches, the plan DEMOTES to
-    * the shuffled tier — re-sized with its +Σ|sh(a)| term — rather
-    * than clamping k: a clamped k carries up to estResident/cap bytes
-    * per batch, reinstating the unbounded-scratch ENOSPC risk the
-    * batching exists to prevent (r16 ADVICE: crash-safety wins over
-    * the per-batch broadcast-rebuild tax). The shuffled tier keeps its
-    * own 256-batch ceiling — there each batch's volume is bounded by
-    * scratch only through k, but 256 full index re-scans is already
-    * the pathological-corpus backstop, not a sized plan. */
-  private[graft] def containmentWavePlan(invFits: Boolean,
-      estResident: Double, estShuffled: Double,
-      scratch: Long): (Boolean, Int) = {
-    def waves(est: Double): Int = math.max(1,
-      math.ceil(est / math.max(1L, scratch).toDouble).toInt)
-    val invResident = invFits && waves(estResident) <= ResidentBatchCap
-    val k = math.min(256,
-      waves(if (invResident) estResident else estShuffled))
-    (invResident, k)
-  }
+  /** The over-gate verify's wave count, pure for testability: the
+    * sampled one-wave shuffle estimate over the scratch budget, at
+    * least 1 and at most 256 — 256 full index re-scans is already the
+    * pathological-corpus backstop, not a sized plan. */
+  private[graft] def containmentWaves(est: Double, scratch: Long): Int =
+    math.min(256, math.max(1,
+      math.ceil(est / math.max(1L, scratch).toDouble).toInt))
 
-  /** Broadcast gate for [[containmentDupPairs]]'s verify lookups: the
-    * per-doc shingle-array frame is broadcast while its measured size
-    * stays under this (the hashed relation is ~2-3× the raw bytes, so
-    * the 256 MB default keeps the build comfortably inside a modest
-    * executor). Above it, the verify switches to counting shared
-    * hashes per candidate pair from the 16-byte inverted-index rows —
-    * shuffle volume Σ_cand |sh(a)| × ~24 B, spread across executor
-    * disks, instead of the retired array-shipping shuffle join whose
-    * cost was candidate-pairs × array bytes (measured: ~71 M family
-    * pairs × ~5 KB filled 252 GB of disk at the 100x GenScale point
-    * and killed the JVM) — and when even that stream exceeds the
-    * scratch budget ([[ContainmentScratchBytesConf]]), the verify
-    * runs in bounded hash(id_a) batches instead of dying mid-exchange.
-    * All paths compute the SAME containment values. Deployments whose
-    * executors can host the array frame
-    * should still RAISE the conf: a resident broadcast moves each
-    * array once per executor and verifies with one compiled merge per
-    * pair — cheaper than the count path's exchange when it fits. The
-    * same gate admits the probe sketch (at most docs × probeK rows of
-    * ~24 B) as the candidate join's broadcast build, on every tier.
-    * Spark's hard broadcast ceiling (8 GB) still applies. */
+  /** Broadcast gate for [[containmentDupPairs]]: the per-doc
+    * shingle-array frame is broadcast to the verify lookups while its
+    * measured size stays under this (the hashed relation is ~2-3× the
+    * raw bytes, so the 256 MB default keeps the build comfortably
+    * inside a modest executor). Above it, the verify switches to
+    * counting shared hashes per candidate pair from the 16-byte
+    * inverted-index rows — shuffle volume Σ_cand |sh(a)| × ~24 B,
+    * spread across executor disks, instead of the retired
+    * array-shipping shuffle join whose cost was candidate-pairs × array
+    * bytes (measured: ~71 M family pairs × ~5 KB filled 252 GB of disk
+    * at the 100x GenScale point and killed the JVM) — and when even
+    * that stream exceeds the scratch budget
+    * ([[ContainmentScratchBytesConf]]), the verify runs in bounded
+    * hash(id_a) batches instead of dying mid-exchange. Both paths
+    * compute the SAME containment values. Deployments whose executors
+    * can host the array frame should RAISE the conf: a resident
+    * broadcast moves each array once per executor and verifies with
+    * one compiled merge per pair — cheaper than the count path's
+    * exchange when it fits. The same gate admits the probe sketch (at
+    * most docs × probeK rows of ~24 B) as the candidate join's
+    * broadcast build. The effective gate is clamped to 80 % of
+    * `spark.driver.maxResultSize` ([[containmentBroadcastGate]]) — the
+    * array frame and the sketch are both collected to the driver
+    * first — so raising the conf past the driver's collect limit takes
+    * the count path instead of aborting; raise `maxResultSize` with
+    * it. Spark's hard broadcast ceiling (8 GB) still applies. */
   val ContainmentBroadcastMaxBytesConf =
     "spark.graft.dedup.containmentBroadcastMaxBytes"
   val ContainmentBroadcastMaxBytes: Long = 256L << 20
-
-  /** Middle-tier gate for the over-gate verify: broadcast the
-    * inverted-INDEX rows (id, hash) while their measured DRIVER-
-    * COLLECTED bytes (24 B per UnsafeRow — null-bitset word + two
-    * longs, not the 16 B logical) stay under this, even though the
-    * array frame is past [[ContainmentBroadcastMaxBytesConf]] — the
-    * index is ~2-4x smaller than the array frame it indexes, and with
-    * both index sides resident the exploded (pair, shingle) verify
-    * stream never crosses an exchange: the candidate distinct becomes
-    * the verify's ONE wide shuffle and the pair-count aggregate rides
-    * its layout. The effective gate additionally self-clamps to 80%
-    * of `spark.driver.maxResultSize` (the broadcast physically
-    * collects the rows to the driver first — an index over that limit
-    * would abort the query, where the shuffled tier completes; r16
-    * ADVICE). 1 GiB of collected rows hashes to a ~2-3 GB relation —
-    * inside a typical 8-16 GB executor and under Spark's 8 GB
-    * broadcast ceiling (the 100x GenScale decade measures 35.9 M
-    * index rows ≈ 861 MB collected for a corpus whose array frame is
-    * past the 256 MB gate — the regime this tier exists for; the
-    * bench/scale harnesses raise maxResultSize to 4g at session build
-    * to keep that point resident). Above the gate (the true 100 TB
-    * regime) the verify shuffles the index too, and the scratch
-    * batching sizes its waves off the full exploded stream. */
-  val ContainmentIndexBroadcastMaxBytesConf =
-    "spark.graft.dedup.containmentIndexBroadcastMaxBytes"
-  val ContainmentIndexBroadcastMaxBytes: Long = 1024L << 20
 
   /** Compiled two-pointer intersection size over sorted long arrays
     * (see [[graft.functions.SortedIntersectCount]]). */

@@ -325,7 +325,7 @@ object TextStats {
     // cells plus UTF-16 term bytes, generous constants so the gate
     // trips before the heap does — against the configured ceiling,
     // self-clamped to 80% of spark.driver.maxResultSize exactly like
-    // the containment index gate. Refusing cleanly names the remedy;
+    // the containment broadcast gate. Refusing cleanly names the remedy;
     // there is deliberately no silent fallback (a shuffled term-keyed
     // join would also abandon the compiled kernel's zero-exchange
     // fan-out — that switch should be an explicit caller decision).

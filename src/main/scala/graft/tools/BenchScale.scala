@@ -73,9 +73,10 @@ object BenchScale {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // roomy driver for the containment resident-tier index broadcast
-      // (the gate self-clamps to 80% of maxResultSize; see
-      // Dedup.ContainmentIndexBroadcastMaxBytesConf)
+      // roomy driver for broadcast collects: the containment gate
+      // self-clamps to 80% of maxResultSize (see
+      // Dedup.broadcastCollectGate), which caps the
+      // SPARK_GRAFT_CONTAINMENT_BCAST point's gates at 3.2 GB
       .config("spark.driver.maxResultSize", "4g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -217,11 +218,7 @@ object BenchScale {
         spark.conf.set(
           graft.operators.Dedup.ContainmentBroadcastMaxBytesConf,
           (1L << 20).toString)
-        val scratchDir = new java.io.File(
-          spark.conf.getOption("spark.local.dir")
-            .orElse(sys.props.get("spark.local.dir"))
-            .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
-            .split(",").head)
+        val scratchDir = org.apache.spark.sql.GraftSqlShim.firstLocalDir(spark)
         @volatile var minUsable = scratchDir.getUsableSpace
         @volatile var sampling = true
         val sampler = new Thread(() => {

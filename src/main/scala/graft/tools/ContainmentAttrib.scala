@@ -121,20 +121,13 @@ object ContainmentAttrib {
       .select(col("id")).localCheckpoint()
     // the containment frame: (id, sh) of the near-dup survivors
     val sh = gatedSh.join(losers, Seq("id"), "left_anti").localCheckpoint()
-    println(s"ATTRIB survivors=${sh.count()}")
+    val nDocs = sh.count()
+    println(s"ATTRIB survivors=$nDocs")
 
-    // the containment function's own internals, reproduced with the
-    // default parameters (threshold 0.9, probeK 8, maxShingleDf
-    // 16384) — same code shapes, measured in isolation
-    val inv = sh.select(col("id").as("id_b"), explode(col("sh")).as("h"))
-    val hot = inv.groupBy("h").agg(count(lit(1)).as("df"))
-      .where(col("df") > 16384L).select("h")
-    val invKept = inv.join(hot, Seq("h"), "left_anti")
-    val probes = sh.select(col("id").as("id_a"),
-      explode(slice(col("sh"), 1, 8)).as("h"))
-    val cands = probes.join(invKept, Seq("h"))
-      .where(col("id_a") =!= col("id_b"))
-      .select("id_a", "id_b")
+    // the operator's own candidate plan with its default parameters
+    // (probeK 8, maxShingleDf 16384), measured in isolation
+    val cands = Dedup.containmentCandidates(sh, nDocs, 8, 16384L,
+      Dedup.containmentBroadcastGate(spark)).cands
 
     if (steps("plans")) {
       println("==== plan: cands ===="); cands.explain("formatted")

@@ -136,7 +136,7 @@ object CurationColdProbe {
           Seq("id"), "left_anti"))
         s.count(); s
       }
-      // stage 5: containment (3-tier verify)
+      // stage 5: containment (broadcast or bounded-scratch count verify)
       val contPairs = timed("containment") {
         val c = ck(Dedup.containmentDupPairsRun(survivors, 0.9).pairs)
         c.count(); c

@@ -37,12 +37,13 @@ object GraftSqlShim {
   /** Wrap a Catalyst Expression back into a Column. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
-  /** Block until the async listener bus has delivered every queued
-    * event — for tools that read SparkListener-accumulated metrics
-    * right after an action (a fixed sleep under-reports on loaded
-    * boxes; `listenerBus` is `private[spark]`). */
-  def waitListenerBusEmpty(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+  /** The first local dir Spark writes shuffle and spill files to —
+    * `Utils.getConfiguredLocalDirs` (`private[spark]`), which reads
+    * `SPARK_EXECUTOR_DIRS` / `SPARK_LOCAL_DIRS` before `spark.local.dir`
+    * and `java.io.tmpdir`. */
+  def firstLocalDir(spark: SparkSession): java.io.File =
+    new java.io.File(org.apache.spark.util.Utils
+      .getConfiguredLocalDirs(spark.sparkContext.conf).head)
 
   /** Eagerly materialize `df` as a local checkpoint and return it with
     * the shuffle ids OWNED by this execution — collected by walking the
@@ -132,27 +133,6 @@ object GraftSqlShim {
     val count = rdd.count()
     (ofRows(spark, execution.LogicalRDD(output, rdd,
       catalyst.plans.physical.HashPartitioning(Seq(attr), n))(spark)), count)
-  }
-
-  /** Lazy variant of [[checkpointHashPartitioned]]: the result plan
-    * carries `hashpartitioning(key, n)` but the blocks materialize at
-    * the caller's FIRST job instead of an eager count — for iterative
-    * loops whose next job reads the checkpoint immediately anyway (an
-    * eager count there is a whole extra pass over the blocks). Same
-    * explicit-N repartition, so AQE cannot coalesce the layout out from
-    * under the recorded partitioning. Stats are truncated exactly like
-    * [[lazyCheckpointNoStats]] (see that scaladoc for why). */
-  def lazyCheckpointHashPartitioned(df: Dataset[_], key: String): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[CSparkSession]
-    val n = spark.sessionState.conf.numShufflePartitions
-    val qe = df.repartition(n, df(key)).queryExecution
-    val output = qe.analyzed.output
-    val resolver = spark.sessionState.conf.resolver
-    val attr = output.find(a => resolver(a.name, key)).getOrElse(throw
-      new IllegalArgumentException(s"no column named $key in ${output.mkString(",")}"))
-    val rdd = qe.toRdd.map(_.copy()).localCheckpoint()
-    ofRows(spark, execution.LogicalRDD(output, rdd,
-      catalyst.plans.physical.HashPartitioning(Seq(attr), n))(spark))
   }
 
   /** Lazy checkpoint that RECORDS `hashpartitioning(key, n)` without

@@ -93,7 +93,7 @@ class DedupGroupsSpec extends SparkTestBase {
     try {
       // force a shuffle join so partitioning requirements are visible
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val edges = Dedup.checkpointPartitionedBy(
+      val edges = org.apache.spark.sql.GraftSqlShim.checkpointHashPartitioned(
         Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst"), "src")
       val labels = Seq((1L, 1L), (2L, 2L)).toDF("id", "lbl")
       val joined = edges.join(labels, edges("src") === labels("id"))
@@ -109,7 +109,7 @@ class DedupGroupsSpec extends SparkTestBase {
     // the checkpoint build touches no session conf at all — adaptive
     // execution stays on before, during, and after
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
-    val edges = Dedup.checkpointPartitionedBy(
+    val edges = org.apache.spark.sql.GraftSqlShim.checkpointHashPartitioned(
       Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), "src")
     assert(edges.count() == 2)
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")

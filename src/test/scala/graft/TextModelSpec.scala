@@ -293,6 +293,21 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       // candidate join (the retired array-shipping fallback died of
       // exactly that at scale)
       assert(!viaCount.queryExecution.optimizedPlan.toString.contains("sh_a"))
+      // nor may any of its joins carry an explicit broadcast hint: the
+      // index collects heavier than the array frame that failed the
+      // gate (AQE may still convert a tiny join at run time; that is
+      // not a hint and not what this pins)
+      import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join,
+        ResolvedHint}
+      val hinted = viaCount.queryExecution.optimizedPlan.collect {
+        case j: Join
+            if j.hint.leftHint.exists(_.strategy.contains(BROADCAST)) ||
+              j.hint.rightHint.exists(_.strategy.contains(BROADCAST)) =>
+          j.hint
+        case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
+          h.hints
+      }
+      assert(hinted.isEmpty, viaCount.queryExecution.optimizedPlan)
       val got = viaCount.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(got == expected && got.nonEmpty, s"got $got")
@@ -305,17 +320,6 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
           .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(batched == expected, s"batched got $batched")
       } finally spark.conf.unset(Dedup.ContainmentScratchBytesConf)
-      // third tier: the index-broadcast gate at 0 forces the fully
-      // SHUFFLED verify (the 100-TB regime where even the 16-byte
-      // index rows are too big to ship) — same results again
-      spark.conf.set(Dedup.ContainmentIndexBroadcastMaxBytesConf, "0")
-      try {
-        val shuffled = run()
-        assert(dedupsCandidatesFirst(shuffled))
-        val got3 = shuffled.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(got3 == expected, s"shuffled-tier got $got3")
-      } finally spark.conf.unset(Dedup.ContainmentIndexBroadcastMaxBytesConf)
     } finally spark.conf.unset(Dedup.ContainmentBroadcastMaxBytesConf)
   }
 
@@ -382,14 +386,12 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
               s"brute ${brute.size}")
         } finally confs.foreach { case (k, _) => spark.conf.unset(k) }
       }
-    // all four verify shapes: broadcast arrays, resident index,
-    // bounded-scratch batches, shuffled index
+    // all three verify shapes: broadcast arrays, the shared-hash count
+    // in one wave, the same count in bounded-scratch batches
     val overGate = Dedup.ContainmentBroadcastMaxBytesConf -> "0"
     check("broadcast")
-    check("resident", overGate)
+    check("count", overGate)
     check("batched", overGate, Dedup.ContainmentScratchBytesConf -> "1")
-    check("shuffled", overGate,
-      Dedup.ContainmentIndexBroadcastMaxBytesConf -> "0")
   }
 
   test("removeContained: strict losers drop, mutual classes keep low id") {
@@ -1072,29 +1074,20 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(Dedup.broadcastCollectGate(confGate, "4g") == confGate)
   }
 
-  test("containmentWavePlan: over-cap resident wave demotes, not clamps") {
+  test("firstLocalDir: the first SPARK_LOCAL_DIRS entry when set") {
+    // Spark writes shuffle files under SPARK_EXECUTOR_DIRS, then
+    // SPARK_LOCAL_DIRS, before spark.local.dir / java.io.tmpdir
+    val dirs = sys.env.get("SPARK_LOCAL_DIRS")
+    assume(dirs.isDefined && !sys.env.contains("SPARK_EXECUTOR_DIRS"),
+      "SPARK_LOCAL_DIRS is not set")
+    assert(org.apache.spark.sql.GraftSqlShim.firstLocalDir(spark) ==
+      new java.io.File(dirs.get.split(",").head))
+  }
+
+  test("containmentWaves: scratch-sized wave count, 256 backstop") {
     val scratch = 1L << 30
-    // resident wave fits in a handful of batches: stay resident
-    assert(Dedup.containmentWavePlan(invFits = true,
-      estResident = 3.5 * scratch, estShuffled = 9.0 * scratch,
-      scratch) == ((true, 4)))
-    // resident wave alone wants > ResidentBatchCap batches while the
-    // index still fits its gate: DEMOTE to the shuffled tier and size
-    // k from the shuffled estimate (with its +shingle-stream term) —
-    // clamping k at the cap would carry estResident/32 per batch,
-    // reinstating the ENOSPC the batching exists to prevent (r16)
-    val (res, k) = Dedup.containmentWavePlan(invFits = true,
-      estResident = 40.0 * scratch, estShuffled = 90.0 * scratch,
-      scratch)
-    assert(!res && k == 90)
-    // index over its gate: shuffled regardless of wave count
-    assert(Dedup.containmentWavePlan(invFits = false,
-      estResident = 1.0, estShuffled = 2.5 * scratch,
-      scratch) == ((false, 3)))
-    // shuffled tier keeps its own 256 backstop
-    assert(Dedup.containmentWavePlan(invFits = false,
-      estResident = 1.0, estShuffled = 1e6 * scratch,
-      scratch) == ((false, 256)))
+    assert(Dedup.containmentWaves(2.5 * scratch, scratch) == 3)
+    assert(Dedup.containmentWaves(1e6 * scratch, scratch) == 256)
   }
 
   test("curationReport: zero-shingle byte-equal docs collapse as near-dups") {
