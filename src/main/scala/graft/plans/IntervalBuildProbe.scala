@@ -3,11 +3,15 @@ package graft.plans
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.physical._
-import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport}
+import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.QueryStageExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.types.LongType
 
 import scala.reflect.ClassTag
@@ -96,7 +100,9 @@ private[plans] final class SideEval(side: IntervalSide) {
   * records the node's build metrics wherever it runs: on the driver
   * (broadcast) or in the task (partitioned). */
 private[graft] trait BuildProbeRunner[B] extends Serializable {
-  def buildSide(rows: Iterator[InternalRow]): B
+  /** `owned`: every row is a fresh object the build may keep as is (the
+    * broadcast collect's decoded rows), not a reused buffer. */
+  def buildSide(rows: Iterator[InternalRow], owned: Boolean): B
   def probe(build: B, iter: Iterator[InternalRow],
       partitionIndex: Int): Iterator[InternalRow]
 }
@@ -140,12 +146,70 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
     case PartitionedMode => "Partitioned"
   }
 
+  /** The build parameters in this node's [[BuildKey]]; its class names
+    * the kind. */
+  protected def buildParams: Seq[Any]
+
+  /** Build metrics a reused build reports again. This node's broadcast
+    * build is the only writer of its build metrics, so after the build
+    * they hold exactly what it recorded. */
+  private def storedMetrics =
+    Seq("buildRows", "buildKeys", "buildMemUsed").filter(metrics.contains)
+
+  /** The registry key of the broadcast build, when the build may be kept
+    * across queries: every leaf of the build subtree is a cached-table
+    * scan, and the subtree and the build expressions are deterministic and
+    * hold no subquery. AQE query stages are leaves holding their plan
+    * uncanonicalized, so the key reads the subtree with each stage
+    * replaced by its plan. */
+  private def reuseKey: Option[BuildKey] = {
+    def unstaged(p: SparkPlan): SparkPlan =
+      p.transformUp { case q: QueryStageExec => unstaged(q.plan) }
+    val build = unstaged(left)
+    val exprs = leftKeys ++ Seq(leftStart, leftEnd)
+    def pure(e: Expression) = e.deterministic &&
+      !e.exists(_.isInstanceOf[PlanExpression[_]])
+    if (build.collectLeaves().forall(_.isInstanceOf[InMemoryTableScanExec]) &&
+        exprs.forall(pure) && !build.exists(!_.expressions.forall(pure)))
+      Some(BuildKey(getClass.getSimpleName, buildParams, build.canonicalized,
+        exprs.map(QueryPlan.normalizeExpressions(_, build.output)),
+        build.collect { case s: InMemoryTableScanExec =>
+          s.relation.cacheBuilder.cachedColumnBuffers.id }))
+    else None
+  }
+
+  /** Collect the build side and broadcast its build. The collect is lazy,
+    * so it runs inside the timed build, as a partitioned build's upstream
+    * pull does; its decoded rows are fresh objects the build keeps. */
+  private def buildBroadcast(): KeptBuild = {
+    val build = runner.buildSide(
+      Iterator.empty ++ GraftSqlShim.executeCollectIterator(left),
+      owned = true)
+    new KeptBuild(sparkContext.broadcast(build),
+      storedMetrics.map(m => m -> metrics(m).value).toMap)
+  }
+
   /** Build once per query, shared by the interpreted and generated
-    * broadcast paths. The collect is lazy, so it runs inside the timed
-    * build, as a partitioned build's upstream pull does. */
-  @transient private lazy val broadcastBuild: Broadcast[B] =
-    sparkContext.broadcast(
-      runner.buildSide(Iterator.empty ++ left.executeCollect()))
+    * broadcast paths. A build over cached tables is kept in the context's
+    * [[BroadcastBuilds]] while its accounted memory is within
+    * `spark.sql.autoBroadcastJoinThreshold`, and a later query with the
+    * same build reuses it: it reports the kept build's metrics (no build
+    * time) and `buildReused`, and checks its size against
+    * `spark.graft.intervalJoin.maxBuildBytes` again. */
+  @transient private lazy val broadcastBuild: Broadcast[B] = {
+    val (kept, reused) = reuseKey match {
+      case None => (buildBroadcast(), false)
+      case Some(key) =>
+        BroadcastBuilds.of(sparkContext).getOrBuild(key, () => buildBroadcast(),
+          _.memUsed <= conf.autoBroadcastJoinThreshold)
+    }
+    if (reused) {
+      new BuildMemoryAccountant(maxBuildBytes).add(kept.memUsed)
+      kept.stats.foreach { case (m, v) => metrics(m) += v }
+      metrics("buildReused") += 1
+    }
+    kept.bc.asInstanceOf[Broadcast[B]]
+  }
 
   override protected def doExecute(): RDD[InternalRow] = {
     val run = runner
@@ -157,7 +221,8 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
         }, preservesPartitioning = true)
       case PartitionedMode =>
         left.execute().zipPartitions(right.execute()) { (liter, riter) =>
-          run.probe(run.buildSide(liter), riter, TaskContext.getPartitionId())
+          run.probe(run.buildSide(liter, owned = false), riter,
+            TaskContext.getPartitionId())
         }
     }
   }
@@ -190,7 +255,7 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
           "intervalLeftInput", v => s"$v = inputs[0];", forceInline = true)
         val run = ctx.addReferenceObj("intervalRunner", runner,
           classOf[BuildProbeRunner[_]].getName)
-        s"$buildTerm = ($cls) $run.buildSide($leftInput);"
+        s"$buildTerm = ($cls) $run.buildSide($leftInput, false);"
     }
   }
 

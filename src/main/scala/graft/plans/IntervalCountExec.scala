@@ -1,5 +1,7 @@
 package graft.plans
 
+import graft.rangejoin.IndexSort
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection, JavaCode}
@@ -85,7 +87,7 @@ private[graft] class IntervalCountRunner(
 
   private val pairCount = metrics("pairCount")
 
-  def buildSide(rows: Iterator[InternalRow]): CountBuildSide = {
+  def buildSide(rows: Iterator[InternalRow], owned: Boolean): CountBuildSide = {
     val side = new SideEval(left)
     final class Acc {
       // primitive vectors (shared LongVec): boxed ArrayBuffers would make
@@ -121,7 +123,7 @@ private[graft] class IntervalCountRunner(
       // sort (start, end) pairs by start, keep ends co-permuted
       val n = acc.starts.length
       val st0 = acc.starts.toArray; val en0 = acc.ends.toArray
-      val idx = Array.tabulate(n)(identity).sortBy(st0)
+      val idx = IndexSort.order(st0)
       val st = Array.tabulate(n)(i => st0(idx(i)))
       val enByStart = Array.tabulate(n)(i => en0(idx(i)))
       val en = en0.clone(); java.util.Arrays.sort(en)
@@ -231,7 +233,8 @@ case class IntervalCountExec(
   override lazy val metrics = Map(
     "pairCount" -> SQLMetrics.createMetric(sparkContext, "overlap pairs counted"),
     "buildKeys" -> SQLMetrics.createMetric(sparkContext, "build keys"),
-    "buildMemUsed" -> SQLMetrics.createSizeMetric(sparkContext, "build memory used"))
+    "buildMemUsed" -> SQLMetrics.createSizeMetric(sparkContext, "build memory used"),
+    "buildReused" -> SQLMetrics.createMetric(sparkContext, "build reused"))
 
   /** Same EXPLAIN shape as [[IntervalJoinExec.simpleString]] (reference
     * format, integration_test.rs:108-112), plus the grouping columns. */
@@ -242,6 +245,9 @@ case class IntervalCountExec(
       s"filter=$leftStart <= $rightEnd AND $leftEnd >= $rightStart, " +
       s"groups=[${groupAttrs.mkString(", ")}]"
   }
+
+  /** The count build is the same for every join algorithm. */
+  protected def buildParams: Seq[Any] = Nil
 
   private[plans] def runner = new IntervalCountRunner(
     leftSide, rightSide, groupAttrs, maxBuildBytes, metrics)

@@ -108,10 +108,13 @@ private[graft] class IntervalJoinRunner(
   private val probeRows = metrics("probeRows")
   private val probeTime = metrics("probeTime")
 
-  def buildSide(rows: Iterator[InternalRow]): IntervalBuildSide = {
+  def buildSide(rows: Iterator[InternalRow],
+      owned: Boolean): IntervalBuildSide = {
     val t0 = System.nanoTime()
     val side = new SideEval(left)
-    val rowProj = UnsafeProjection.create(left.output, left.output)
+    // a partitioned build's input rows are reused buffers: copy to keep
+    val rowProj =
+      if (owned) null else UnsafeProjection.create(left.output, left.output)
 
     final class Acc {
       val starts = new LongVec
@@ -130,9 +133,10 @@ private[graft] class IntervalJoinRunner(
       val key = side.key(row)
       if (key != null || keepAll) {
         val pos = stored.length
-        val copied = rowProj(row).copy()
-        stored += copied
-        mem.add(copied.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
+        val kept =
+          if (owned) row.asInstanceOf[UnsafeRow] else rowProj(row).copy()
+        stored += kept
+        mem.add(kept.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
         if (key != null) {
           mem.add(BuildMemoryAccountant.LongIntervalOverhead)
           var acc = groups.get(key)
@@ -440,6 +444,7 @@ case class IntervalJoinExec(
     "buildKeys" -> SQLMetrics.createMetric(sparkContext, "build distinct keys"),
     "buildTime" -> SQLMetrics.createTimingMetric(sparkContext, "build time"),
     "buildMemUsed" -> SQLMetrics.createSizeMetric(sparkContext, "build memory used"),
+    "buildReused" -> SQLMetrics.createMetric(sparkContext, "build reused"),
     "probeRows" -> SQLMetrics.createMetric(sparkContext, "probe rows"),
     // "(interpreted)": the codegen'd probe loops do not stamp this metric
     // (a per-row clock inside the generated loop would cost more than it
@@ -491,6 +496,8 @@ case class IntervalJoinExec(
     s"IntervalJoinExec: mode=$modeName, join_type=$jt, on=[$on], " +
       s"filter=$filter, alg=$algorithm"
   }
+
+  protected def buildParams: Seq[Any] = Seq(joinType, algorithm)
 
   private[plans] def runner: IntervalJoinRunner = new IntervalJoinRunner(
     leftSide, rightSide, residual, joinType, markAttr, output, algorithm,
