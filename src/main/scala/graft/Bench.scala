@@ -73,9 +73,11 @@ object Bench {
     // entries (cc_star reps) — merged into the queries_median JSON below
     val ccMedians =
       scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double, Double))]
-    // per flagship entry: did its first (reported) sample build its
-    // broadcast interval build or reuse one kept by an earlier entry
-    val firstBuild = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // per flagship entry, per sample (the reported one first): did it
+    // build its broadcast interval build or reuse one kept by an earlier
+    // sample or entry
+    val sampleBuilds =
+      scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -100,7 +102,7 @@ object Bench {
       // the flagship SETUP (cache materialization) runs outside timed();
       // a failure there must not discard the ~50 per-query timings
       // already gathered — record it and still emit the JSON line
-      try flagship(spark, sfDir, timed, ccMedians, firstBuild)
+      try flagship(spark, sfDir, timed, ccMedians, sampleBuilds)
       catch { case t: Throwable =>
         errors("flagship_setup") =
           Option(t.getMessage).getOrElse(t.getClass.getName).take(200)
@@ -175,7 +177,8 @@ object Bench {
       s"\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
       .mkString("{", ",", "}")
-    val firstBuilds = firstBuild.map { case (k, v) => s"\"$k\":\"$v\"" }
+    val sampleBuildsJson = sampleBuilds.map { case (k, v) =>
+      s"\"$k\":" + v.map("\"" + _ + "\"").mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val (calS1, calM1, calibEnd) = Calib.measured("_end")
@@ -191,7 +194,7 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
     val windowDirty = load1 > 2.0 ||
       drift(calS0, calS1) > 0.15 || drift(calM0, calM1) > 0.15
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":${medJson(_._1)},"queries_min":${medJson(_._2)},"queries_max":${medJson(_._3)},"errors":$errs,"gc_sec":$gcs,"flagship_first_build":$firstBuilds,"loadavg_start":"$loadStart","loadavg_end":"$loadavg",$calibStart,$calibEnd,"window_dirty":$windowDirty,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":${medJson(_._1)},"queries_min":${medJson(_._2)},"queries_max":${medJson(_._3)},"errors":$errs,"gc_sec":$gcs,"flagship_sample_builds":$sampleBuildsJson,"loadavg_start":"$loadStart","loadavg_end":"$loadavg",$calibStart,$calibEnd,"window_dirty":$windowDirty,"sf":"$sfDir"}"""
     // The full ledger line is ~10 KB and the driver's capture keeps
     // only the last 2000 chars — four rounds running it recorded
     // `parsed: null` off a mid-map tail. Bracket the full line with a
@@ -235,22 +238,27 @@ object Bench {
   private def flagship(spark: SparkSession, sfDir: String,
       timed: String => (=> Unit) => (String, Double),
       medianSink: scala.collection.mutable.ArrayBuffer[(String, (Double, Double, Double))],
-      firstBuild: scala.collection.mutable.Map[String, String])
+      sampleBuilds: scala.collection.mutable.Map[String, Seq[String]])
       : Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     val builds = graft.plans.BroadcastBuilds.of(spark.sparkContext)
     // 3-sample medians for the flagship entries too (r11 verdict item
     // #8: the baseline ratio each verdict cites should be a median, not
     // a single draw). First sample goes through timed() and joins the
-    // results/total as before; two raw reps feed queries_median. The
-    // reps reuse the first sample's kept broadcast build, so the first
-    // sample (the reported one) also records whether it built or reused.
+    // results/total as before; two raw reps feed queries_median. A rep
+    // may reuse an earlier sample's kept broadcast build, so each sample
+    // also records whether it built or reused (flagship_sample_builds).
     def rep3(name: String)(body: => Unit): (String, Double) = {
-      val reuses = builds.reuseCount
-      val first = timed(name)(body)
-      firstBuild(name) = if (builds.reuseCount > reuses) "reused" else "built"
+      def labelled[T](sample: => T): T = {
+        val reuses = builds.reuseCount
+        val t = sample
+        sampleBuilds(name) = sampleBuilds.getOrElse(name, Nil) :+
+          (if (builds.reuseCount > reuses) "reused" else "built")
+        t
+      }
+      val first = labelled(timed(name)(body))
       if (first._2 >= 0) {
-        def rep(): Double = {
+        def rep(): Double = labelled {
           val t0 = System.nanoTime(); body
           (System.nanoTime() - t0) / 1e9
         }

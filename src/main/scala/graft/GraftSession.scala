@@ -71,11 +71,8 @@ object GraftSession {
     *
     * The rules are stateless (they read the planning session's conf), so
     * sessions cloned from an installed one inherit them and still plan
-    * under their own confs. It also subscribes the context's registry
-    * of kept broadcast interval builds to unpersist events
-    * ([[graft.plans.BroadcastBuilds]]). */
+    * under their own confs. */
   def install(spark: SparkSession): SparkSession = synchronized {
-    graft.plans.BroadcastBuilds.of(spark.sparkContext)
     if (!spark.experimental.extraStrategies.contains(IntervalJoinStrategy)) {
       spark.conf.set(ArtifactIsolation, "false")
       spark.experimental.extraStrategies =

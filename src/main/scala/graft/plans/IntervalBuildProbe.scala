@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
@@ -100,9 +99,7 @@ private[plans] final class SideEval(side: IntervalSide) {
   * records the node's build metrics wherever it runs: on the driver
   * (broadcast) or in the task (partitioned). */
 private[graft] trait BuildProbeRunner[B] extends Serializable {
-  /** `owned`: every row is a fresh object the build may keep as is (the
-    * broadcast collect's decoded rows), not a reused buffer. */
-  def buildSide(rows: Iterator[InternalRow], owned: Boolean): B
+  def buildSide(rows: Iterator[InternalRow]): B
   def probe(build: B, iter: Iterator[InternalRow],
       partitionIndex: Int): Iterator[InternalRow]
 }
@@ -157,11 +154,11 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
     Seq("buildRows", "buildKeys", "buildMemUsed").filter(metrics.contains)
 
   /** The registry key of the broadcast build, when the build may be kept
-    * across queries: every leaf of the build subtree is a cached-table
-    * scan, and the subtree and the build expressions are deterministic and
-    * hold no subquery. AQE query stages are leaves holding their plan
-    * uncanonicalized, so the key reads the subtree with each stage
-    * replaced by its plan. */
+    * across queries: every leaf of the build subtree is a scan of a table
+    * still cached, and the subtree and the build expressions are
+    * deterministic and hold no subquery. AQE query stages are leaves
+    * holding their plan uncanonicalized, so the key reads the subtree with
+    * each stage replaced by its plan. */
   private def reuseKey: Option[BuildKey] = {
     def unstaged(p: SparkPlan): SparkPlan =
       p.transformUp { case q: QueryStageExec => unstaged(q.plan) }
@@ -170,38 +167,46 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
     def pure(e: Expression) = e.deterministic &&
       !e.exists(_.isInstanceOf[PlanExpression[_]])
     if (build.collectLeaves().forall(_.isInstanceOf[InMemoryTableScanExec]) &&
-        exprs.forall(pure) && !build.exists(!_.expressions.forall(pure)))
-      Some(BuildKey(getClass.getSimpleName, buildParams, build.canonicalized,
-        exprs.map(QueryPlan.normalizeExpressions(_, build.output)),
-        build.collect { case s: InMemoryTableScanExec =>
-          s.relation.cacheBuilder.cachedColumnBuffers.id }))
-    else None
+        exprs.forall(pure) && !build.exists(!_.expressions.forall(pure))) {
+      val caches = build.collect { case s: InMemoryTableScanExec =>
+        s.relation.cacheBuilder }
+      val ids = caches.map(_.cachedColumnBuffers.id)
+      // A plan made before its table was unpersisted still scans the
+      // cleared cache, which makes its RDD afresh: no unpersist would drop
+      // a build keyed on that RDD. Read the ids first, so an unpersist
+      // after this check drops the build by its event.
+      if (session != null && caches.forall(c =>
+          session.sharedState.cacheManager.lookupCachedData(session,
+            c.logicalPlan).exists(_.cachedRepresentation.cacheBuilder eq c)))
+        Some(BuildKey(getClass.getSimpleName, buildParams, build.canonicalized,
+          exprs.map(QueryPlan.normalizeExpressions(_, build.output)), ids))
+      else None
+    } else None
   }
 
   /** Collect the build side and broadcast its build. The collect is lazy,
     * so it runs inside the timed build, as a partitioned build's upstream
-    * pull does; its decoded rows are fresh objects the build keeps. */
+    * pull does. */
   private def buildBroadcast(): KeptBuild = {
-    val build = runner.buildSide(
-      Iterator.empty ++ GraftSqlShim.executeCollectIterator(left),
-      owned = true)
+    val build = runner.buildSide(Iterator.empty ++ left.executeCollect())
     new KeptBuild(sparkContext.broadcast(build),
       storedMetrics.map(m => m -> metrics(m).value).toMap)
   }
 
   /** Build once per query, shared by the interpreted and generated
     * broadcast paths. A build over cached tables is kept in the context's
-    * [[BroadcastBuilds]] while its accounted memory is within
-    * `spark.sql.autoBroadcastJoinThreshold`, and a later query with the
-    * same build reuses it: it reports the kept build's metrics (no build
-    * time) and `buildReused`, and checks its size against
+    * [[BroadcastBuilds]] once a second query has the same build, when its
+    * accounted memory is within `spark.sql.autoBroadcastJoinThreshold`
+    * (and all kept builds' within twice that). Each later query with that
+    * build reuses it: it reports the kept build's metrics (no build time)
+    * and `buildReused`, and checks its size against
     * `spark.graft.intervalJoin.maxBuildBytes` again. */
   @transient private lazy val broadcastBuild: Broadcast[B] = {
     val (kept, reused) = reuseKey match {
       case None => (buildBroadcast(), false)
       case Some(key) =>
         BroadcastBuilds.of(sparkContext).getOrBuild(key, () => buildBroadcast(),
-          _.memUsed <= conf.autoBroadcastJoinThreshold)
+          conf.autoBroadcastJoinThreshold)
     }
     if (reused) {
       new BuildMemoryAccountant(maxBuildBytes).add(kept.memUsed)
@@ -221,8 +226,7 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
         }, preservesPartitioning = true)
       case PartitionedMode =>
         left.execute().zipPartitions(right.execute()) { (liter, riter) =>
-          run.probe(run.buildSide(liter, owned = false), riter,
-            TaskContext.getPartitionId())
+          run.probe(run.buildSide(liter), riter, TaskContext.getPartitionId())
         }
     }
   }
@@ -255,7 +259,7 @@ abstract class IntervalBuildProbeExec[B: ClassTag]
           "intervalLeftInput", v => s"$v = inputs[0];", forceInline = true)
         val run = ctx.addReferenceObj("intervalRunner", runner,
           classOf[BuildProbeRunner[_]].getName)
-        s"$buildTerm = ($cls) $run.buildSide($leftInput, false);"
+        s"$buildTerm = ($cls) $run.buildSide($leftInput);"
     }
   }
 

@@ -1,7 +1,5 @@
 package graft.plans
 
-import graft.rangejoin.IndexSort
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection, JavaCode}
@@ -87,7 +85,7 @@ private[graft] class IntervalCountRunner(
 
   private val pairCount = metrics("pairCount")
 
-  def buildSide(rows: Iterator[InternalRow], owned: Boolean): CountBuildSide = {
+  def buildSide(rows: Iterator[InternalRow]): CountBuildSide = {
     val side = new SideEval(left)
     final class Acc {
       // primitive vectors (shared LongVec): boxed ArrayBuffers would make
@@ -123,7 +121,7 @@ private[graft] class IntervalCountRunner(
       // sort (start, end) pairs by start, keep ends co-permuted
       val n = acc.starts.length
       val st0 = acc.starts.toArray; val en0 = acc.ends.toArray
-      val idx = IndexSort.order(st0)
+      val idx = Array.tabulate(n)(identity).sortBy(st0)
       val st = Array.tabulate(n)(i => st0(idx(i)))
       val enByStart = Array.tabulate(n)(i => en0(idx(i)))
       val en = en0.clone(); java.util.Arrays.sort(en)

@@ -108,13 +108,10 @@ private[graft] class IntervalJoinRunner(
   private val probeRows = metrics("probeRows")
   private val probeTime = metrics("probeTime")
 
-  def buildSide(rows: Iterator[InternalRow],
-      owned: Boolean): IntervalBuildSide = {
+  def buildSide(rows: Iterator[InternalRow]): IntervalBuildSide = {
     val t0 = System.nanoTime()
     val side = new SideEval(left)
-    // a partitioned build's input rows are reused buffers: copy to keep
-    val rowProj =
-      if (owned) null else UnsafeProjection.create(left.output, left.output)
+    val rowProj = UnsafeProjection.create(left.output, left.output)
 
     final class Acc {
       val starts = new LongVec
@@ -133,10 +130,9 @@ private[graft] class IntervalJoinRunner(
       val key = side.key(row)
       if (key != null || keepAll) {
         val pos = stored.length
-        val kept =
-          if (owned) row.asInstanceOf[UnsafeRow] else rowProj(row).copy()
-        stored += kept
-        mem.add(kept.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
+        val copied = rowProj(row).copy()
+        stored += copied
+        mem.add(copied.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
         if (key != null) {
           mem.add(BuildMemoryAccountant.LongIntervalOverhead)
           var acc = groups.get(key)

@@ -56,65 +56,6 @@ final class IntMatchBuffer {
   def get(i: Int): Int = arr(i)
 }
 
-/** Stable index sort over primitive keys: the order of `0 until n` by
-  * `primary` ascending, then `secondary` ascending (descending when
-  * `secondaryDesc`; no secondary when null), equal keys in their original
-  * position. The order `Array.range(0, n).sortWith` gives for the same
-  * comparison, without its boxed comparator: a merge sort over an `Int`
-  * array, insertion-sorted runs of 32. */
-private[graft] object IndexSort {
-  private final val Run = 32
-
-  def order(primary: Array[Long], secondary: Array[Long] = null,
-      secondaryDesc: Boolean = false): Array[Int] = {
-    val n = primary.length
-    var src = Array.range(0, n)
-    // true iff a sorts strictly before b
-    def lt(a: Int, b: Int): Boolean = {
-      val pa = primary(a); val pb = primary(b)
-      if (pa != pb) pa < pb
-      else if (secondary == null) false
-      else if (secondaryDesc) secondary(a) > secondary(b)
-      else secondary(a) < secondary(b)
-    }
-    var lo = 0
-    while (lo < n) {
-      val hi = math.min(lo + Run, n)
-      var i = lo + 1
-      while (i < hi) {
-        val x = src(i)
-        var j = i - 1
-        while (j >= lo && lt(x, src(j))) { src(j + 1) = src(j); j -= 1 }
-        src(j + 1) = x
-        i += 1
-      }
-      lo = hi
-    }
-    var dst = new Array[Int](n)
-    var width = Run
-    while (width < n) {
-      lo = 0
-      while (lo < n) {
-        val mid = math.min(lo + width, n)
-        val hi = math.min(lo + 2 * width, n)
-        var i = lo; var j = mid; var k = lo
-        // the right run's element goes first only when strictly smaller
-        while (i < mid && j < hi) {
-          if (lt(src(j), src(i))) { dst(k) = src(j); j += 1 }
-          else { dst(k) = src(i); i += 1 }
-          k += 1
-        }
-        System.arraycopy(src, i, dst, k, mid - i)
-        System.arraycopy(src, j, dst, k + mid - i, hi - j)
-        lo = hi
-      }
-      val t = src; src = dst; dst = t
-      width *= 2
-    }
-    src
-  }
-}
-
 object IntervalIndex {
   /** Build the index named by `algorithm` over Int bounds, widened to Long
     * (see [[LongIntervalIndex.build]]). */
@@ -440,7 +381,10 @@ object LongIntervalIndex {
   private def buildLapper(starts0: Array[Long], ends0: Array[Long],
       positions0: Array[Int]): LongLapperIndex = {
     val n = starts0.length
-    val order = IndexSort.order(starts0, ends0, secondaryDesc = false)
+    val order = Array.range(0, n).sortWith { (a, b) =>
+      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
+      else ends0(a) < ends0(b)
+    }
     val starts = new Array[Long](n)
     val ends = new Array[Long](n)
     val positions = new Array[Int](n)
@@ -465,7 +409,10 @@ object LongIntervalIndex {
   private def buildTree(starts0: Array[Long], ends0: Array[Long],
       positions0: Array[Int]): LongAugmentedTreeIndex = {
     val n = starts0.length
-    val order = IndexSort.order(starts0, ends0, secondaryDesc = false)
+    val order = Array.range(0, n).sortWith { (a, b) =>
+      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
+      else ends0(a) < ends0(b)
+    }
     val starts = new Array[Long](n)
     val ends = new Array[Long](n)
     val positions = new Array[Int](n)
@@ -493,7 +440,10 @@ object LongIntervalIndex {
     val MinCompLen = 64
     val CovCutoff = 10
     val n = starts0.length
-    val order = IndexSort.order(starts0, ends0, secondaryDesc = true)
+    val order = Array.range(0, n).sortWith { (a, b) =>
+      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
+      else ends0(a) > ends0(b)
+    }
     var curS = order.map(starts0)
     var curE = order.map(ends0)
     var curP = order.map(positions0)
@@ -551,7 +501,10 @@ object LongSuperIntervalsIndex {
   def build(starts0: Array[Long], ends0: Array[Long],
             positions0: Array[Int]): LongSuperIntervalsIndex = {
     val n = starts0.length
-    val order = IndexSort.order(starts0, ends0, secondaryDesc = true)
+    val order = Array.range(0, n).sortWith { (a, b) =>
+      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
+      else ends0(a) > ends0(b)
+    }
     val starts = new Array[Long](n)
     val ends = new Array[Long](n)
     val positions = new Array[Int](n)

@@ -244,11 +244,4 @@ object GraftSqlShim {
       case r: execution.LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** `SparkPlan.executeCollectIterator` (private[spark]): the plan's rows
-    * collected as compressed bytes and decoded one fresh row at a time,
-    * where `executeCollect` decodes them all into an array first. */
-  def executeCollectIterator(plan: execution.SparkPlan)
-      : Iterator[catalyst.InternalRow] =
-    plan.executeCollectIterator()._2
 }

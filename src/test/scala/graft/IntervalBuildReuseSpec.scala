@@ -10,8 +10,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-/** A broadcast interval build over cached tables is kept and reused by
-  * later queries with the same build, and only then: the key follows the
+/** A broadcast interval build over cached tables is kept once a second
+  * query has the same build, and reused by the queries after, and only
+  * then: the key follows the
   * cached RDDs, so unpersisting or re-caching builds again, and builds
   * over uncached, non-deterministic or over-threshold inputs are never
   * kept. */
@@ -84,17 +85,19 @@ class IntervalBuildReuseSpec extends SparkTestBase
     try {
       for ((what, df, want) <- Seq(("count", () => countDf(a, b), pairs),
           ("join", () => joinDf(a, b), sums))) {
+        // the first build only records its key, the second is kept
         val (got1, n1, jobs1) = run(df())
-        val (got2, n2, jobs2) = run(df())
+        val (got2, n2, _) = run(df())
+        val (got3, n3, jobs3) = run(df())
         assert(n1.toString.contains("mode=CollectLeft"), n1.toString)
-        assert(got1 == want && got2 == want, what)
-        assert(reused(n1) == 0 && reused(n2) == 1, what)
-        assert(jobs2 == jobs1 - 1, s"$what: $jobs1 jobs, then $jobs2")
+        assert(Seq(got1, got2, got3).forall(_ == want), what)
+        assert(Seq(n1, n2, n3).map(reused) == Seq(0, 0, 1), what)
+        assert(jobs3 == jobs1 - 1, s"$what: $jobs1 jobs, then $jobs3")
         // the reused build reports the kept build's metrics again
         for (m <- Seq("buildRows", "buildKeys", "buildMemUsed")
-            if n1.metrics.contains(m))
-          assert(n2.metrics(m).value == n1.metrics(m).value, s"$what $m")
-        n2 match {
+            if n2.metrics.contains(m))
+          assert(n3.metrics(m).value == n2.metrics(m).value, s"$what $m")
+        n3 match {
           case j: IntervalJoinExec =>
             assert(j.metrics("buildRows").value == ra.size)
             assert(j.metrics("buildTime").value <= 0)
@@ -115,7 +118,7 @@ class IntervalBuildReuseSpec extends SparkTestBase
     val a1 = cached(build(r1))
     a1.createOrReplaceTempView("reuse_a")
     try {
-      run(spark.sql(sql))
+      run(spark.sql(sql)); run(spark.sql(sql))
       val (got1, n1, _) = run(spark.sql(sql))
       assert(reused(n1) == 1 && got1 == expected(r1, rb)._1)
       // different rows under the same view
@@ -130,6 +133,7 @@ class IntervalBuildReuseSpec extends SparkTestBase
       cached(a2)
       val (got3, n3, _) = run(spark.sql(sql))
       assert(reused(n3) == 0 && got3 == got2)
+      run(spark.sql(sql))
       val (got4, n4, _) = run(spark.sql(sql))
       assert(reused(n4) == 1 && got4 == got2)
       a2.unpersist(true)
@@ -156,21 +160,21 @@ class IntervalBuildReuseSpec extends SparkTestBase
     try {
       for ((what, df) <- cases) {
         val before = registry.keys.size
-        val (got1, n1, _) = run(df())
-        val (got2, n2, _) = run(df())
-        assert(n1.toString.contains("mode=CollectLeft"), s"$what: $n1")
-        if (what.startsWith("rand")) assert(got1 < pairs && got2 < pairs)
-        else assert(got1 == pairs && got2 == pairs, what)
-        assert(reused(n2) == 0, s"$what: ${n2.left}")
+        val runs = Seq.fill(3)(run(df()))
+        val n = runs.last._2
+        assert(n.toString.contains("mode=CollectLeft"), s"$what: $n")
+        if (what.startsWith("rand")) assert(runs.forall(_._1 < pairs))
+        else assert(runs.forall(_._1 == pairs), what)
+        assert(reused(n) == 0, s"$what: ${n.left}")
         assert(registry.keys.size == before, what)
       }
       // a hinted broadcast whose build is over the threshold
       spark.conf.set(SparkTestBase.Threshold, "1000")
-      val (got1, n1, _) = run(countDf(broadcast(a), b))
-      val (got2, n2, _) = run(countDf(broadcast(a), b))
-      assert(n1.toString.contains("mode=CollectLeft"), n1.toString)
-      assert(n1.metrics("buildMemUsed").value > 1000)
-      assert(got1 == pairs && got2 == pairs && reused(n2) == 0)
+      val runs = Seq.fill(3)(run(countDf(broadcast(a), b)))
+      val n = runs.last._2
+      assert(n.toString.contains("mode=CollectLeft"), n.toString)
+      assert(n.metrics("buildMemUsed").value > 1000)
+      assert(runs.forall(_._1 == pairs) && reused(n) == 0)
     } finally { a.unpersist(true); b.unpersist(true) }
   }
 
@@ -207,8 +211,8 @@ class IntervalBuildReuseSpec extends SparkTestBase
     val a = cached(build(rows(10, 200)))
     val b = cached(probe(rows(11, 200)))
     val before = registry.keys.toSet
-    run(countDf(a, b))
-    run(joinDf(a, b))
+    run(countDf(a, b)); run(countDf(a, b))
+    run(joinDf(a, b)); run(joinDf(a, b))
     val added = registry.keys.toSet -- before
     assert(added.size == 2, added)
     val ids = added.flatMap(_.rddIds)
@@ -218,10 +222,56 @@ class IntervalBuildReuseSpec extends SparkTestBase
     b.unpersist(true)
   }
 
+  test("distinct builds over one cached table keep at most twice the threshold") {
+    val (ra, rb) = (rows(14, 200), rows(15, 200))
+    val (a, b) = (cached(build(ra)), cached(probe(rb)))
+    val pairs = expected(ra, rb)._1
+    // six distinct build subtrees over `a`; every row passes each filter
+    def filtered(k: Int) = countDf(broadcast(a.where($"as_" > -k)), b)
+    val before = registry.keys.toSet
+    try {
+      // a build seen once is not kept
+      val (_, n1, _) = run(filtered(1))
+      assert(registry.keys.toSet == before)
+      val size = n1.metrics("buildMemUsed").value
+      spark.conf.set(SparkTestBase.Threshold, (2 * size).toString)
+      for (k <- 1 to 6; _ <- 1 to 2) {
+        val (got, n, _) = run(filtered(k))
+        assert(n.toString.contains("mode=CollectLeft"), n.toString)
+        assert(got == pairs, s"filter $k")
+      }
+      assert((registry.keys.toSet -- before).size == 4)
+      // the newest builds stay, the oldest were dropped
+      assert(reused(run(filtered(6))._2) == 1)
+      assert(reused(run(filtered(1))._2) == 0)
+    } finally { a.unpersist(true); b.unpersist(true) }
+  }
+
+  test("a build planned before its table's unpersist is not kept") {
+    val (ra, rb) = (rows(16, 200), rows(17, 200))
+    val (a, b) = (cached(build(ra)), cached(probe(rb)))
+    try {
+      // two plans made before the unpersist: both scan the one cache
+      // made afresh after it
+      val dfs = Seq.fill(2)(countDf(a, b))
+      dfs.foreach(_.queryExecution.executedPlan)
+      a.unpersist(true)
+      ListenerBusDrain(spark.sparkContext)
+      val before = registry.keys.toSet
+      for (df <- dfs) {
+        val (got, n, _) = run(df)
+        assert(n.toString.contains("mode=CollectLeft"), n.toString)
+        assert(got == expected(ra, rb)._1)
+      }
+      assert(registry.keys.toSet == before)
+    } finally { a.unpersist(true); b.unpersist(true) }
+  }
+
   test("a kept build over a lowered maxBuildBytes still fails the query") {
     val a = cached(build(rows(12, 300)))
     val b = cached(probe(rows(13, 300)))
     try {
+      run(joinDf(a, b))
       val (_, n1, _) = run(joinDf(a, b))
       val size = n1.metrics("buildMemUsed").value
       spark.conf.set(GraftSession.MaxBuildBytes, (size - 1).toString)

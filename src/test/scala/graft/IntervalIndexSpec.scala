@@ -1,6 +1,6 @@
 package graft
 
-import graft.rangejoin.{IndexSort, IntervalIndex, LongIntervalIndex, LongSuperIntervalsIndex}
+import graft.rangejoin.{IntervalIndex, LongIntervalIndex, LongSuperIntervalsIndex}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -45,26 +45,6 @@ class IntervalIndexSpec extends AnyFunSuite {
             s"trial=$trial probe=[$s,$e]")
         }
       }
-    }
-  }
-
-  test("IndexSort gives the boxed sortWith order, ties in place") {
-    val rnd = new scala.util.Random(17)
-    for (n <- Seq(0, 1, 2, 31, 32, 33, 65, 299, 300, 301, 1000, 5000);
-         domain <- Seq(2, 5, 60)) {
-      val p = Array.fill(n)(rnd.nextInt(domain).toLong)
-      val s = Array.fill(n)(rnd.nextInt(domain).toLong)
-      def boxed(desc: Boolean) = Array.range(0, n).sortWith { (a, b) =>
-        if (p(a) != p(b)) p(a) < p(b)
-        else if (desc) s(a) > s(b) else s(a) < s(b)
-      }
-      val what = s"n=$n domain=$domain"
-      assert(IndexSort.order(p, s, secondaryDesc = false)
-        .sameElements(boxed(desc = false)), what)
-      assert(IndexSort.order(p, s, secondaryDesc = true)
-        .sameElements(boxed(desc = true)), what)
-      assert(IndexSort.order(p)
-        .sameElements(Array.tabulate(n)(identity).sortBy(p)), what)
     }
   }
 
