@@ -78,6 +78,10 @@ object Bench {
     // sample or entry
     val sampleBuilds =
       scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
+    // per cc entry, per sample (the reported one first): the route
+    // connectedComponents took, as a JSON object
+    val ccRoutes =
+      scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
     def gcMillis: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -109,7 +113,7 @@ object Bench {
         Seq.empty
       }
     } ++ {
-      try ccLoopFlagship(spark, sfDir, timed, ccMedians)
+      try ccLoopFlagship(spark, sfDir, timed, ccMedians, ccRoutes)
       catch { case t: Throwable =>
         errors("cc_loop_setup") =
           Option(t.getMessage).getOrElse(t.getClass.getName).take(200)
@@ -177,9 +181,11 @@ object Bench {
       s"\"" + k + "\":" +
         String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)) }
       .mkString("{", ",", "}")
-    val sampleBuildsJson = sampleBuilds.map { case (k, v) =>
-      s"\"$k\":" + v.map("\"" + _ + "\"").mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
+    def samplesJson(m: collection.Map[String, Seq[String]]): String =
+      m.map { case (k, v) => s"\"$k\":" + v.mkString("[", ",", "]") }
+        .mkString("{", ",", "}")
+    val sampleBuildsJson =
+      samplesJson(sampleBuilds.map { case (k, v) => k -> v.map("\"" + _ + "\"") })
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val (calS1, calM1, calibEnd) = Calib.measured("_end")
     // machine-visible window health (r16 verdict #5: the judge re-derived
@@ -194,7 +200,7 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toDouble).toOption).getOrElse(0.0)
     val windowDirty = load1 > 2.0 ||
       drift(calS0, calS1) > 0.15 || drift(calM0, calM1) > 0.15
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":${medJson(_._1)},"queries_min":${medJson(_._2)},"queries_max":${medJson(_._3)},"errors":$errs,"gc_sec":$gcs,"flagship_sample_builds":$sampleBuildsJson,"loadavg_start":"$loadStart","loadavg_end":"$loadavg",$calibStart,$calibEnd,"window_dirty":$windowDirty,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_median":${medJson(_._1)},"queries_min":${medJson(_._2)},"queries_max":${medJson(_._3)},"errors":$errs,"gc_sec":$gcs,"flagship_sample_builds":$sampleBuildsJson,"cc_sample_routes":${samplesJson(ccRoutes)},"loadavg_start":"$loadStart","loadavg_end":"$loadavg",$calibStart,$calibEnd,"window_dirty":$windowDirty,"sf":"$sfDir"}"""
     // The full ledger line is ~10 KB and the driver's capture keeps
     // only the last 2000 chars — four rounds running it recorded
     // `parsed: null` off a mid-map tail. Bracket the full line with a
@@ -389,16 +395,16 @@ object Bench {
   /** Distributed-CC evidence at real size. q69 (timed in the main query
     * loop) exercises the DEFAULT path on its 2.5 M-edge id-local graph:
     * contraction + micro resolve, zero star rounds. This entry pins the
-    * OTHER at-scale path: node ids are scrambled, so the one-job stall
-    * probe predicts no id locality, contraction is skipped, and the
-    * alternating-star engine resolves the full 2.5 M-edge list in
-    * O(log d) rounds (6 observed for the 63-hop chains). The timing
-    * includes the probe job — that IS the cost of this path. Row count
+    * OTHER at-scale path: node ids are scrambled, so the contraction
+    * pass stalls and the alternating-star engine resolves the original
+    * 2.5 M-edge list in O(log d) rounds (6 observed for the 63-hop
+    * chains); each sample's route lands in `cc_sample_routes`. Row count
     * (not labels) is asserted trivially by count(); label correctness
     * for both paths is the oracle-checked q69/q77. */
   private def ccLoopFlagship(spark: SparkSession, sfDir: String,
       timed: String => (=> Unit) => (String, Double),
-      medianSink: scala.collection.mutable.ArrayBuffer[(String, (Double, Double, Double))])
+      medianSink: scala.collection.mutable.ArrayBuffer[(String, (Double, Double, Double))],
+      routes: scala.collection.mutable.Map[String, Seq[String]])
       : Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     val J = 64
@@ -416,9 +422,14 @@ object Bench {
       // xorshift mix is near-order-preserving on 21-bit inputs: each
       // step approximates an odd multiply, so locality survives it.)
       .select(xxhash64(col("a")).as("id1"), xxhash64(col("b")).as("id2"))
-    def run(): Long =
-      graft.operators.Dedup.connectedComponents(pairs, maxIterations = 30)
-        .count()
+    def run(): Long = {
+      val r = graft.operators.Dedup.connectedComponentsRun(pairs,
+        maxIterations = 30)
+      routes("cc_star_2m5_scrambled") = routes.getOrElse(
+        "cc_star_2m5_scrambled", Nil) :+ (s"""{"engine":"${r.engine}",""" +
+        s""""rounds":${r.rounds},"forest_edges":${r.forestEdges}}""")
+      r.labels.count()
+    }
     // 3 samples + explicit median, like the gate queries: this entry
     // showed a 2.5× cold-vs-warm spread in r10 (the first invocation
     // bills codegen/JIT for ~8 round plans); the median is the

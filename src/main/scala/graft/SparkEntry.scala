@@ -284,7 +284,7 @@ object SparkEntry {
     * every 7th doc, 3 words appended). The driver's documents table has
     * no duplicates, so dedup queries construct their own — identically in
     * Spark and the DuckDB oracle. */
-  private def dupCorpus(spark: SparkSession, sfDir: String,
+  private[graft] def dupCorpus(spark: SparkSession, sfDir: String,
       near: Boolean): DataFrame = {
     val docs = Tables.load(spark, sfDir, "documents").select("doc_id", "text")
     val exact = docs.where(col("doc_id") % 5 === 0)

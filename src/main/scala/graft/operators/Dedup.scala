@@ -232,7 +232,8 @@ object Dedup {
   /** Conf: largest estimated test-corpus size (bytes, from optimizer
     * stats) the decontamination ops will broadcast. Above it they fall
     * back to plain shuffled equi-joins — identical result, no driver
-    * OOM. Negative disables the gate (always broadcast). */
+    * OOM. Negative lifts the configured cap, not the driver's collect
+    * limit ([[testBroadcastGate]]). */
   val TestBroadcastMaxBytesConf = "spark.graft.dedup.testBroadcastMaxBytes"
   private val TestBroadcastMaxBytesDefault: Long = 256L << 20
 
@@ -261,22 +262,35 @@ object Dedup {
     * decision time. Also used by [[graft.operators.Similarity.knnJoin]]
     * to gate its query-side broadcast. */
   private[graft] def smallEnoughToBroadcast(gateOn: DataFrame): Boolean = {
-    val thr = gateOn.sparkSession.conf
-      .get(TestBroadcastMaxBytesConf, TestBroadcastMaxBytesDefault.toString)
-      .toLong
-    if (thr < 0) true
+    val thr = testBroadcastGate(gateOn.sparkSession)
+    if (thr == Long.MaxValue) true
     else {
       val est = gateOn.queryExecution.optimizedPlan.stats.sizeInBytes
       val small = est <= thr || measuredBytes(gateOn) <= thr
       if (!small) {
-        log.warn(s"graft: gate frame measured over " +
-          s"$TestBroadcastMaxBytesConf=$thr bytes; degrading broadcasts " +
-          "to shuffled equi-joins (same result, the large side will " +
-          "shuffle). Raise the conf (or set it negative) to force " +
-          "broadcasting.")
+        log.warn(s"graft: gate frame measured over the $thr-byte " +
+          s"broadcast gate ($TestBroadcastMaxBytesConf, clamped to 80% " +
+          "of spark.driver.maxResultSize); degrading broadcasts to " +
+          "shuffled equi-joins (same result, the large side will " +
+          "shuffle). Raise the conf (negative: up to the collect " +
+          "limit) and spark.driver.maxResultSize to broadcast.")
       }
       small
     }
+  }
+
+  /** [[TestBroadcastMaxBytesConf]] as the session sets it (negative: no
+    * configured cap), self-clamped to 80 % of
+    * `spark.driver.maxResultSize` ([[broadcastCollectGate]]): a
+    * broadcast collects its rows to the driver first, so a gate past
+    * that limit would abort mid-broadcast instead of degrading to the
+    * shuffled join. `Long.MaxValue` only when neither caps it. */
+  private[graft] def testBroadcastGate(
+      spark: org.apache.spark.sql.SparkSession): Long = {
+    val conf = spark.conf.get(TestBroadcastMaxBytesConf,
+      TestBroadcastMaxBytesDefault.toString).toLong
+    broadcastCollectGate(if (conf < 0) Long.MaxValue else conf,
+      spark.conf.get("spark.driver.maxResultSize", "1g"))
   }
 
   /** Actual (estimated-per-row, exact-per-string) byte size of `df`:
@@ -1035,46 +1049,6 @@ object Dedup {
     * the original edges. */
   private val ContractionStallFraction = 0.7
 
-  /** Rows the predictive stall probe reads (one prefix partition of
-    * the hash-partitioned edge checkpoint — a random subset of src
-    * hash buckets, unbiased for the |src−dst| distribution). */
-  private val StallProbeRows = 50000
-
-  /** Predict a contraction stall BEFORE paying the pass (numeric ids
-    * only): the per-partition union-find can merge an edge only when
-    * both endpoints land in the same RANGE partition, so when the
-    * median |src − dst| of a bounded sample exceeds the per-partition
-    * id width, nearly every edge crosses partitions and the pass is
-    * guaranteed to stall — skip straight to the star engine instead of
-    * spending a full scan+shuffle to learn it. Strictly conservative
-    * (fires only when the median diff exceeds a WHOLE partition
-    * width): borderline-local graphs still try contraction, whose
-    * stall guard remains the ground truth. One small job; non-numeric
-    * ids skip the probe and keep today's try-then-guard behavior. */
-  private def contractionStallPredicted(edges: DataFrame): Boolean =
-    edges.schema("src").dataType match {
-      case _: org.apache.spark.sql.types.NumericType =>
-        val n = edges.sparkSession.conf
-          .get("spark.sql.shuffle.partitions").toInt
-        // diffs in DOUBLE: ANSI long subtraction overflows on ids that
-        // span the Long domain, and a probe needs magnitude, not
-        // exactness
-        val r = edges.limit(StallProbeRows)
-          .agg(percentile_approx(
-              abs(col("src").cast("double") - col("dst").cast("double")),
-              lit(0.5), lit(1000)).as("med"),
-            min(col("src").cast("double")).as("lo"),
-            max(col("src").cast("double")).as("hi"))
-          .head()
-        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) false
-        else {
-          val med = r.getDouble(0)
-          val width = (r.getDouble(2) - r.getDouble(1)) / n
-          med > math.max(width, 1.0)
-        }
-      case _ => false
-    }
-
   /** Post-contraction micro-path relaxation: the forest is bounded by
     * the distinct-NODE count (not the pair count), and the primitive
     * union-find costs ~17 B/node for Long/Int ids, so a single task
@@ -1084,9 +1058,9 @@ object Dedup {
   /** One [[connectedComponentsRun]]: the labels plus how they were
     * resolved — `engine` is "micro", "contract-micro" or "star",
     * `rounds` the star round count (0 on the union-find paths) and
-    * `forestEdges` the contraction pass's forest rows (-1 when the pass
-    * did not run). Returned per call, so concurrent calls never see
-    * each other's figures. */
+    * `forestEdges` the contraction pass's forest rows (-1 on the micro
+    * path, the only one that skips the pass). Returned per call, so
+    * concurrent calls never see each other's figures. */
   private[graft] final case class CcRun(labels: DataFrame, engine: String,
       rounds: Int, forestEdges: Long)
 
@@ -1114,11 +1088,10 @@ object Dedup {
    * resolves on the micro path (contract→micro), and the
    * alternating-star engine ([[starLoop]]) for everything else: a
    * contracted forest still too large for one task, or a graph with no
-   * id locality (predicted by a one-job stall probe, or detected by the
-   * contraction stall guard). Star rounds converge in O(log²) rounds
-   * worst case on ANY id layout. Lineage is cut with a lazy
-   * checkpoint every round so the plan does not grow with the
-   * iteration count (the classic iterative-DataFrame trap).
+   * id locality (detected by the contraction stall guard). Star rounds
+   * converge in O(log²) rounds worst case on ANY id layout. Lineage is
+   * cut with a lazy checkpoint every round so the plan does not grow
+   * with the iteration count (the classic iterative-DataFrame trap).
    *
    * Shuffle hygiene (100 TB): the symmetric edge list is repartitioned by
    * `src` BEFORE its one-time lineage cut — `localCheckpoint` preserves
@@ -1166,16 +1139,6 @@ object Dedup {
       log.info(s"connectedComponents: micro-graph path, $edgeCount edges")
       return CcRun(labels.select(col("id"), col("lbl").as("group_id")),
         "micro", 0, -1L)
-    }
-    // predictive stall probe: on a clearly non-id-local graph the
-    // contraction pass below cannot merge anything — route straight to
-    // the star engine and save its full scan+shuffle
-    if (contractionStallPredicted(edges)) {
-      log.info(s"connectedComponents: stall probe predicts no id " +
-        s"locality ($edgeCount edges), running alternating star " +
-        "rounds on the original edges")
-      val (labels, rounds) = starLoop(edges, edgeCount, maxIterations)
-      return CcRun(labels, "star", rounds, -1L)
     }
     // local-contraction pre-pass: solve each range partition with a
     // single union-find pass and keep only the spanning forest. On the
@@ -1882,9 +1845,10 @@ object Dedup {
   /** The [[removeContained]] elimination rule as a one-column `loser`
     * frame: a (contained, container) row eliminates `contained` unless
     * the reverse row exists and `contained` has the lower id. Shared
-    * with [[Curation.curationReport]], which needs the loser SET (to
-    * tag reasons), not the filtered corpus. */
-  private[operators] def containmentLosers(pairs: DataFrame): DataFrame = {
+    * with [[Curation.curationReport]] and `tools.CurationColdProbe`,
+    * which need the loser SET (to tag reasons), not the filtered
+    * corpus. */
+  private[graft] def containmentLosers(pairs: DataFrame): DataFrame = {
     // materialization rule again, one level up: callers hand us the
     // WHOLE containment pipeline lazily, and `pairs` is referenced
     // twice below (forward + reversed) — without a checkpoint the

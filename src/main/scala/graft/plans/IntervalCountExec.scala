@@ -86,6 +86,7 @@ private[graft] class IntervalCountRunner(
   private val pairCount = metrics("pairCount")
 
   def buildSide(rows: Iterator[InternalRow]): CountBuildSide = {
+    val t0 = System.nanoTime()
     val side = new SideEval(left)
     final class Acc {
       // primitive vectors (shared LongVec): boxed ArrayBuffers would make
@@ -98,9 +99,11 @@ private[graft] class IntervalCountRunner(
     val groups = new java.util.HashMap[UnsafeRow, Acc]
     // the count build stores only interval ints (~3 sorted arrays), no rows
     val mem = new BuildMemoryAccountant(maxBuildBytes)
+    var stored = 0L
     rows.foreach { row =>
       val key = side.key(row)
       if (key != null) {
+        stored += 1
         var acc = groups.get(key)
         if (acc == null) { acc = new Acc; groups.put(key.copy(), acc) }
         // Long bounds verbatim: the count path is coordinate-width-
@@ -129,7 +132,9 @@ private[graft] class IntervalCountRunner(
         acc.invStarts.toArray, acc.invEnds.toArray))
     }
     metrics("buildMemUsed") += mem.used
+    metrics("buildRows") += stored
     metrics("buildKeys") += keyed.size()
+    metrics("buildTime") += (System.nanoTime() - t0) / 1000000
     new CountBuildSide(keyed)
   }
 
@@ -230,7 +235,9 @@ case class IntervalCountExec(
 
   override lazy val metrics = Map(
     "pairCount" -> SQLMetrics.createMetric(sparkContext, "overlap pairs counted"),
+    "buildRows" -> SQLMetrics.createMetric(sparkContext, "build rows"),
     "buildKeys" -> SQLMetrics.createMetric(sparkContext, "build keys"),
+    "buildTime" -> SQLMetrics.createTimingMetric(sparkContext, "build time"),
     "buildMemUsed" -> SQLMetrics.createSizeMetric(sparkContext, "build memory used"),
     "buildReused" -> SQLMetrics.createMetric(sparkContext, "build reused"))
 

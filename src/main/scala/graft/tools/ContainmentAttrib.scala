@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *   opt-in: plans (prints the formatted plans of the candidate
   *   stream, its distinct and the pair-count aggregate, plus the raw
   *   candidate row count)
-  * Corpus: the q127-shaped survivors (uncapped LSH near-dup stage) —
-  * the same derivation as CurationColdProbe, checkpointed once untimed.
+  * Corpus: the q127-shaped survivors (uncapped LSH near-dup stage) over
+  * `SparkEntry.dupCorpus`, as in CurationColdProbe, checkpointed once
+  * untimed.
   */
 object ContainmentAttrib {
   def main(args: Array[String]): Unit = {
@@ -98,15 +99,7 @@ object ContainmentAttrib {
 
     // q127-shaped survivors (CurationColdProbe's stages 1-4),
     // checkpointed untimed
-    val docs = graft.Tables.load(spark, dir, "documents")
-      .select("doc_id", "text")
-    val exact = docs.where(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    val nearDf = docs.where(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        concat(col("text"), lit(" graft dup marker")).as("text"))
-    val corpus = docs.union(exact).union(nearDf)
-    val base = corpus
+    val base = graft.SparkEntry.dupCorpus(spark, dir, near = true)
       .withColumn("lang_ok", TextStats.langId(col("text")) === "en")
       .withColumn("quality_ok", TextStats.qualityScore(col("text")) >= 0.55)
       .withColumn("sh", when(col("lang_ok") && col("quality_ok"),

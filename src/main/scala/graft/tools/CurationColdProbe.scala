@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * measures true warm re-execution (JIT/codegen + page cache + heap
   * sizing), never block reuse. Prints one JSON line per pass plus a
   * delta line. Same session shape as BenchScale (local[32], 32
-  * shuffle partitions, 4g maxResultSize) and the same q127 corpus
-  * derivation (near-dup + exact-dup families over `documents`).
+  * shuffle partitions, 4g maxResultSize) over q127's corpus
+  * (`SparkEntry.dupCorpus`: near-dup + exact-dup families over
+  * `documents`).
   */
 object CurationColdProbe {
   def main(args: Array[String]): Unit = {
@@ -64,17 +65,6 @@ object CurationColdProbe {
         }
       })
 
-    def corpus: DataFrame = {
-      val docs = graft.Tables.load(spark, dir, "documents")
-        .select("doc_id", "text")
-      val exact = docs.where(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      val nearDf = docs.where(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 2000000).as("doc_id"),
-          concat(col("text"), lit(" graft dup marker")).as("text"))
-      docs.union(exact).union(nearDf)
-    }
-
     val allPasses =
       scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
     for (p <- 1 to passes) {
@@ -107,7 +97,7 @@ object CurationColdProbe {
       // stage 1: corpus scan + langId/quality kernels + the gated
       // shingle hashes (q127's `base`)
       val base = timed("base_kernels") {
-        val b = ck(corpus
+        val b = ck(graft.SparkEntry.dupCorpus(spark, dir, near = true)
           .withColumn("lang_ok", TextStats.langId(col("text")) === "en")
           .withColumn("quality_ok",
             TextStats.qualityScore(col("text")) >= 0.55)
@@ -142,20 +132,9 @@ object CurationColdProbe {
         c.count(); c
       }
       // stage 6: loser resolution + final report joins
-      // (containmentLosers is private[operators]; same rule inlined —
-      // a (contained, container) row eliminates `contained` unless the
-      // reverse row exists and contained has the lower id)
       timed("report_joins") {
-        val rev = contPairs.select(
-          col("id_contained").as("r_container"),
-          col("id_container").as("r_contained"))
-        val contLosers = contPairs
-          .join(rev, col("id_contained") === col("r_contained") &&
-            col("id_container") === col("r_container"), "left")
-          .where(col("r_contained").isNull ||
-            col("id_contained") > col("id_container"))
-          .select(col("id_contained").as("doc_id"))
-          .distinct()
+        val contLosers = Dedup.containmentLosers(contPairs)
+          .select(col("loser").as("doc_id"))
           .withColumn("cont_loser", lit(true))
         base
           .join(nearLosers.withColumn("near_loser", lit(true)),

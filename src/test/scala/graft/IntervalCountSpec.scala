@@ -223,6 +223,26 @@ class IntervalCountSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     a.unpersist(); b.unpersist()
   }
 
+  test("count build records buildRows and buildTime (both modes)") {
+    // local rows are never kept across queries, so every run builds; the
+    // NULL-key row is never indexed
+    val a = Seq((Some("c1"), 1, 10), (Some("c1"), 3, 4), (Some("c2"), 1, 2),
+      (None, 1, 10)).toDF("contig", "pos_start", "pos_end")
+    val b = Seq((Some("c1"), 5, 6), (Some("c2"), 2, 3))
+      .toDF("contig", "pos_start", "pos_end")
+    for (m <- Seq("broadcast", "partitioned")) {
+      pinMode(m)
+      val df = joined(a, b).groupBy().count()
+      assert(df.collect().head.getLong(0) == 2L, s"mode=$m")
+      val node = collectFirst(df.queryExecution.executedPlan) {
+        case c: IntervalCountExec => c
+      }.get
+      assert(node.metrics("buildRows").value == 3L, s"mode=$m")
+      assert(!node.metrics("buildTime").isZero,
+        s"mode=$m: the build recorded no build time")
+    }
+  }
+
   /** Like randomTable but ~30% of intervals are INVERTED (start > end) —
     * the count pushdown's two-binary-search identity fails on these, so
     * they exercise the guarded slow paths. */

@@ -1074,6 +1074,27 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(Dedup.broadcastCollectGate(confGate, "4g") == confGate)
   }
 
+  test("testBroadcastGate: negative or oversized settings clamp to the " +
+       "collect limit") {
+    val conf = Dedup.TestBroadcastMaxBytesConf
+    val maxResult = spark.conf.get("spark.driver.maxResultSize", "1g")
+    val limit = Dedup.broadcastCollectGate(Long.MaxValue, maxResult)
+    assert(limit == org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(maxResult) / 5 * 4, s"premise: $maxResult caps")
+    try {
+      // negative lifts the configured cap, not the driver's: the gate
+      // reads "up to the collect limit", never "always broadcast"
+      spark.conf.set(conf, "-1")
+      assert(Dedup.testBroadcastGate(spark) == limit)
+      spark.conf.set(conf, (1L << 40).toString)
+      assert(Dedup.testBroadcastGate(spark) == limit)
+      spark.conf.set(conf, "2048")
+      assert(Dedup.testBroadcastGate(spark) == 2048L)
+    } finally spark.conf.unset(conf)
+    // only an unlimited collect leaves a negative setting uncapped
+    assert(Dedup.broadcastCollectGate(Long.MaxValue, "0") == Long.MaxValue)
+  }
+
   test("firstLocalDir: the first SPARK_LOCAL_DIRS entry when set") {
     // Spark writes shuffle files under SPARK_EXECUTOR_DIRS, then
     // SPARK_LOCAL_DIRS, before spark.local.dir / java.io.tmpdir
