@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line with per-query wall times at
-  * SPARK_GRAFT_SF_DIR (default sf0.1), local[32]. A warmup pass registers
-  * the tables and scans them once so timings measure query execution, not
-  * first-touch parquet footer reads / JIT warmup. */
+  * SPARK_GRAFT_SF_DIR (default sf0.1), local[SPARK_GRAFT_CPUS] (default
+  * the machine's core count). A warmup pass registers the tables and
+  * scans them once so timings measure query execution, not first-touch
+  * parquet footer reads / JIT warmup. */
 object Bench {
   def main(args: Array[String]): Unit = {
     // machine-load stamp, captured at ENTRY: the stamp exists to expose
@@ -30,7 +31,7 @@ object Bench {
     // (see graft.Calib) — an inflated calib marks this run's walls
     val (calS0, calM0, calibStart) = Calib.measured("_start")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.mainCpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -327,9 +328,13 @@ object Bench {
     * forced (the 100-TB path where skew actually bites). Unbinned, the
     * hot key serializes its ~360 M pairs on one task; the auto-bin
     * rewrite spreads them over (key, bin) partitions — measured max-task
-    * load drops 360 M → ~43 M pairs (8×). At sf0.1 the wall-clock ratio
-    * (~1.8×) is capped by fixed costs (explode/shuffle/build of a
-    * byte-light input); the max-task ratio is the number that scales. */
+    * load drops 360 M → ~43 M pairs (8×). The wall clock depends on
+    * the core count: at sf0.1 on 32 cores binned won, 1.33–1.84 s
+    * against 1.81–2.54 s unbinned (~1.8× at best), but on 4 cores
+    * binned LOST, 4.47 s against 2.10 s unbinned, since four task
+    * slots cannot run the spread-out bins in parallel and the
+    * explode/shuffle/build of a byte-light input is fixed cost. The
+    * max-task ratio is the number that scales with cluster size. */
   private def skewFlagship(spark: SparkSession, sfDir: String,
       timed: String => (=> Unit) => (String, Double),
       medianSink: scala.collection.mutable.ArrayBuffer[(String, (Double, Double, Double))])
@@ -454,8 +459,8 @@ object Bench {
     * (thousands of eval prompts against the corpus) — this entry drives
     * [[graft.operators.TextStats.bm25Retrieve]] with ~1 k synthetic
     * queries (every 5th document's first 4 tokens: realistic vocabulary,
-    * deterministic) so the broadcast-vocab prune and the WindowGroupLimit
-    * top-k cut are measured where the qTerms broadcast actually has
+    * deterministic) so the broadcast-vocab prune and the per-partition
+    * top-k heaps are measured where the qTerms broadcast actually has
     * weight (~4 k (query, term) rows; the prune-side qVocab stays ≤ that).
     * Query-count ceiling: qTerms broadcasts |queries|·|distinct terms per
     * query| narrow rows — at ~8 B/term-row plus string bytes, ~10 M query

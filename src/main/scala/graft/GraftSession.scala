@@ -104,6 +104,12 @@ object GraftSession {
     * (and always for clones made after it is set). */
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
+  /** Task slots (and shuffle partitions) for the timing mains:
+    * `SPARK_GRAFT_CPUS`, else the machine's core count, so an unset env
+    * never runs more task slots than the box has cores. */
+  def mainCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   /** Builder for standalone use / tests. */
   def builder(master: String = "local[*]"): SparkSession.Builder =
     SparkSession.builder()

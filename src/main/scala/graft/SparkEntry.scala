@@ -1863,7 +1863,8 @@ object SparkEntry {
     // quantized to integer micro-units at the row level so the
     // per-(query, doc) SUM is order-independent and engine-exact —
     // corpus prunes against the broadcast query vocabulary before its
-    // one narrow shuffle; the per-query cut is a WindowGroupLimit
+    // one narrow shuffle; the per-query cut is TopK.topKPerKey's
+    // per-partition heaps under a row_number window
     "q143_bm25_retrieve" -> ((s, dir) => {
       import s.implicits._
       val qs = Seq((1L, "spark table join scan"),

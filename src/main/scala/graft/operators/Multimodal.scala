@@ -128,14 +128,6 @@ object Multimodal {
     media.mapPartitions(_.flatMap(r => decodeImage(r.id, r.media)))
   }
 
-  /** Pre-release compatibility overload: `batchSize` is ignored — the
-    * per-partition flatMap already streams rows without materializing a
-    * batch, so there is nothing to size. Kept so existing callers that
-    * passed it keep compiling. */
-  @deprecated("batchSize is ignored; use decodeImages(media)", "0.9.0")
-  def decodeImages(media: Dataset[MediaRow], batchSize: Int): Dataset[DecodedMedia] =
-    decodeImages(media)
-
   /** Wrap a DataFrame with id + binary columns into the typed media
     * Dataset. The id column must be integral — a silent lossy cast
     * would surface much later as an encoder NULL failure. */

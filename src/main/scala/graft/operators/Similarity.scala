@@ -242,20 +242,23 @@ object Similarity {
     * Scale shape (many queries × huge corpus): the query set
     * broadcasts into a map-side scoring pass over the corpus — the
     * corpus never shuffles — then each corpus partition keeps only its
-    * local top-k per query in one heap-bounded pass, so the only
-    * shuffle is ≤ |queries|·k rows per partition (the final per-query
-    * window ranks those survivors), never the |queries|·|corpus| score
-    * matrix. Per-task memory is |queries in partition|·k heap entries.
-    * The per-partition heap is genuine per-partition imperative state —
-    * the declarative alternative (collect_list per (partition, query))
-    * would buffer every scored row of a partition in one aggregation
-    * value. Ids are cast to long (integral ids required). */
+    * local top-k per query in the bounded heaps of
+    * [[TopK.topKPerKey]], so the only shuffle is ≤ |queries|·k rows
+    * per partition (the final per-query window ranks those survivors),
+    * never the |queries|·|corpus| score matrix. Per-task heap memory
+    * is at most |queries in partition|·k entries and never more than
+    * the helper's live-entry budget: past it the heaps flush their
+    * supersets downstream. Ids are cast to long (integral ids
+    * required). */
   def knnJoin(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
+      vecCol: String, k: Int): DataFrame =
+    knnJoin(queries, corpus, idCol, vecCol, k, TopK.DefaultBudget)
+
+  /** [[knnJoin]] with the per-task heap budget of [[TopK.topKPerKey]]
+    * set explicitly (specs force flushes with a tiny one). */
+  private[graft] def knnJoin(queries: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, k: Int, budget: Long): DataFrame = {
     require(k > 0, s"k must be positive (got $k)")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // FAIL-LOUD id cast: the heaps key on long ids, and a non-castable
     // id (a string-id corpus, say) silently nulling out would yield an
     // empty result with every guard vacuously green. try_cast + a
@@ -303,35 +306,10 @@ object Similarity {
       .select(col("qid"), col("cid"),
         cosine(col("cv"), col("qv")).as("score"))
       // cosine is NULL on zero-norm / NULL / length-mismatched vectors
-      // and NaN on NaN/Inf components: both are unrankable, and NaN
-      // additionally orders INCONSISTENTLY between the heap's Scala
-      // Double ordering (worst, evicted first) and the final window's
-      // score DESC (largest, rank 1) — exclude both uniformly
+      // and NaN on NaN/Inf components: neither is a meaningful
+      // similarity, so both are excluded rather than ranked
       .where(col("score").isNotNull && !isnan(col("score")))
-      .as[(Long, Long, Double)]
-    // the priority queue's max must be the WORST kept element (it gets
-    // evicted when size exceeds k): worse = lower score, then higher id
-    val worstFirst = Ordering.by[(Double, Long), (Double, Long)] {
-      case (s, id) => (-s, id)
-    }
-    val partial = scored.mapPartitions { it =>
-      val heaps = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
-      it.foreach { case (qid, cid, s) =>
-        val h = heaps.getOrElseUpdate(qid,
-          scala.collection.mutable.PriorityQueue.empty(worstFirst))
-        h.enqueue((s, cid))
-        if (h.size > k) h.dequeue()
-      }
-      heaps.iterator.flatMap { case (qid, h) =>
-        h.iterator.map { case (s, cid) => (qid, cid, s) }
-      }
-    }.toDF("qid", "cid", "score")
-    val w = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("cid"))
-    val result = partial
-      .select(col("qid"), col("cid"), row_number().over(w).as("rank"))
-      .where(col("rank") <= k)
+    val result = TopK.topKPerKey(scored, "qid", "score", "cid", k, budget)
       .select(col("qid").as("query_id"), col("cid").as("vec_id"),
         col("rank"))
       // EAGER final checkpoint (≤ |queries|·k rows — tiny) so the query

@@ -34,10 +34,6 @@ object TextStats {
   /** Whitespace token count (empty/blank text → 0). */
   def tokenCount(text: Column): Column = profile(text).getField("n_tokens")
 
-  /** Rough BPE-ish subword count: word-boundary pieces plus intra-word
-    * 4-char chunks (a cheap proxy for tokenizer budget accounting). */
-  def subwordCount(text: Column): Column = profile(text).getField("n_subwords")
-
   private def ratioOf(text: Column, field: String): Column = {
     val p = profile(text)
     when(p.getField("n_chars") === 0, lit(0.0))
@@ -48,10 +44,6 @@ object TextStats {
   def punctRatio(text: Column): Column = ratioOf(text, "n_punct")
 
   def digitRatio(text: Column): Column = ratioOf(text, "n_digit")
-
-  def upperRatio(text: Column): Column = ratioOf(text, "n_upper")
-
-  def whitespaceRatio(text: Column): Column = ratioOf(text, "n_ws")
 
   /** Fraction of tokens that are (English) stopwords — a classic quality
     * signal: near-zero for word soup / non-prose. */
@@ -274,7 +266,10 @@ object TextStats {
    * corpus-sized shuffle carries only matched-term rows (~|matched
    * docs| × |query terms| narrow rows, not the corpus); df/N/avgdl
    * ride 1-row-to-vocab-bounded broadcasts; the final per-query top-k
-   * is a WindowGroupLimit cut, never a global sort of the scores.
+   * is [[TopK.topKPerKey]]: bounded per-partition heaps in the
+   * scoring stage, then a `row_number() <= k` window over their
+   * survivors, never a global sort of the scores. Any orderable
+   * doc-id type takes that path and ranks as the window would.
    * The Σ_term df·qf score fan-out happens INSIDE
    * [[graft.functions.Bm25ScoreQueries]] — a compiled per-document
    * kernel against the driver-built term → query-ids table — so the
@@ -288,9 +283,18 @@ object TextStats {
    */
   def bm25Retrieve(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qIdCol: String, qTextCol: String, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Retrieve(docs, idCol, textCol, queries, qIdCol, qTextCol, k, k1, b,
+      TopK.DefaultBudget)
+
+  /** [[bm25Retrieve]] with the per-task heap budget of
+    * [[TopK.topKPerKey]] set explicitly (specs force flushes with a
+    * tiny one). */
+  private[graft] def bm25Retrieve(docs: DataFrame, idCol: String,
+      textCol: String, queries: DataFrame, qIdCol: String,
+      qTextCol: String, k: Int, k1: Double, b: Double,
+      budget: Long): DataFrame = {
     require(k > 0, s"k must be positive (got $k)")
-    import org.apache.spark.sql.expressions.Window
     // NULL texts drop out (the q141 pattern): words(NULL) is NULL and
     // size(NULL) = -1 under legacy sizeOfNull, which would silently
     // corrupt avgdl while every SQL oracle's avg() ignores NULLs
@@ -409,113 +413,15 @@ object TextStats {
       .select(col("doc_id"), explode(scoreArr).as("qs"))
       .select(col("qs.query_id").as("query_id"), col("doc_id"),
         col("qs.score_q").as("score_q"))
-    // per-partition heap-bounded partial top-k (the knnJoin pattern,
-    // r16 verdict #3): the rank<=k window alone was over half the
-    // kernel-path wall (r16 stage profile: ~3.8 s of 7.5) because its
-    // partial stage SORTS every (query, matched doc) row; the heaps
-    // cut that to an O(n log k) streaming pass in the SAME stage as
-    // the kernel explode — the fan-out rows still never cross an
-    // exchange, and only ≤ |queries in partition|·k survivors reach
-    // the final window. Heap tie-break mirrors the window order
-    // exactly (score desc, doc_id asc NULLS FIRST), so the cut keeps
-    // precisely the rows the window would rank <= k. Covers every
-    // integral and string doc-id type (r17 verdict #5 — string-id
-    // corpora previously paid the full window sort silently; string
-    // compare is UTF8String binary order, matching the window's sort
-    // of StringType exactly). Exotic id types keep the plain window,
-    // identical semantics. The per-partition state is BUDGETED (r17
-    // ADVICE): unlike the window's UnsafeExternalSorter the heap map
-    // can't spill, so past `bm25HeapBudgetEntries` live entries the
-    // pass flushes every heap downstream and starts fresh — flushed
-    // supersets stay correct because the final window re-cuts
-    // rank<=k; the flush only costs extra survivor rows, never
-    // wrong ones.
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score_q").desc, col("doc_id").asc)
-    val heapBudget = math.max(1L, spark.conf.get(Bm25HeapBudgetConf,
-      Bm25HeapBudgetEntries.toString).toLong)
-    // external-row compare for the doc_id slot, window-order-exact:
-    // asc NULLS FIRST, strings in UTF8String BINARY order (Java
-    // String.compareTo diverges above the BMP — UTF-16 code-unit
-    // order ranks surrogates below U+E000..U+FFFF; the window sorts
-    // UTF8String bytes)
-    val idCmp: Option[(Any, Any) => Int] = {
-      import org.apache.spark.sql.types._
-      def cmpNum(f: (Any, Any) => Int): Option[(Any, Any) => Int] =
-        Some { (a, b) =>
-          if (a == null && b == null) 0
-          else if (a == null) -1 else if (b == null) 1 else f(a, b)
-        }
-      scored.schema("doc_id").dataType match {
-        case LongType => cmpNum((a, b) => java.lang.Long.compare(
-          a.asInstanceOf[Long], b.asInstanceOf[Long]))
-        case IntegerType => cmpNum((a, b) => java.lang.Integer.compare(
-          a.asInstanceOf[Int], b.asInstanceOf[Int]))
-        case ShortType => cmpNum((a, b) => java.lang.Short.compare(
-          a.asInstanceOf[Short], b.asInstanceOf[Short]))
-        case ByteType => cmpNum((a, b) => java.lang.Byte.compare(
-          a.asInstanceOf[Byte], b.asInstanceOf[Byte]))
-        case StringType => cmpNum((a, b) =>
-          org.apache.spark.unsafe.types.UTF8String
-            .fromString(a.asInstanceOf[String]).compareTo(
-              org.apache.spark.unsafe.types.UTF8String
-                .fromString(b.asInstanceOf[String])))
-        case _ => None
-      }
-    }
-    val pruned = idCmp match {
-      case Some(cmp) =>
-        // max of this ordering = the WORST kept row (evicted first):
-        // worse = lower score, then larger doc_id, with NULL doc_id
-        // ranking best (asc_nulls_first, the window's default)
-        val worstFirst = new Ordering[(Long, Any)] {
-          def compare(a: (Long, Any), b: (Long, Any)): Int = {
-            val c = java.lang.Long.compare(b._1, a._1)
-            if (c != 0) c else cmp(a._2, b._2)
-          }
-        }
-        val schema = scored.schema
-        scored.mapPartitions { it =>
-          new scala.collection.AbstractIterator[org.apache.spark.sql.Row] {
-            private val heaps = scala.collection.mutable.HashMap.empty[
-              Long,
-              scala.collection.mutable.PriorityQueue[(Long, Any)]]
-            private var live = 0L
-            private val out =
-              scala.collection.mutable.Queue.empty[org.apache.spark.sql.Row]
-            private def drain(): Unit = {
-              heaps.foreach { case (qid, h) =>
-                h.foreach { case (s, did) =>
-                  out.enqueue(org.apache.spark.sql.Row(qid, did, s))
-                }
-              }
-              heaps.clear(); live = 0L
-            }
-            private def pump(): Unit = {
-              while (out.isEmpty && it.hasNext) {
-                val r = it.next()
-                val h = heaps.getOrElseUpdate(r.getLong(0),
-                  scala.collection.mutable.PriorityQueue.empty(worstFirst))
-                h.enqueue((r.getLong(2), r.get(1)))
-                if (h.size > k) h.dequeue() else live += 1
-                // budget flush: the map's survivors (≤ |qids|·k boxed
-                // tuples) are unspillable heap — emit them all and
-                // reset rather than OOM where the old sort degraded
-                // gracefully; the final window re-cuts the union
-                if (live > heapBudget) drain()
-              }
-              if (out.isEmpty && !it.hasNext && heaps.nonEmpty) drain()
-            }
-            def hasNext: Boolean = { pump(); out.nonEmpty }
-            def next(): org.apache.spark.sql.Row = {
-              pump(); out.dequeue()
-            }
-          }
-        }(org.apache.spark.sql.Encoders.row(schema))
-      case None => scored
-    }
-    pruned.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    // per-partition heap-bounded partial top-k: the rank<=k window
+    // alone was over half the kernel-path wall (r16 stage profile:
+    // ~3.8 s of 7.5) because its partial stage SORTS every (query,
+    // matched doc) row; the heaps cut that to an O(n log k) streaming
+    // pass in the SAME stage as the kernel explode — the fan-out rows
+    // still never cross an exchange, and only ≤ |queries in
+    // partition|·k survivors reach the final window
+    TopK.topKPerKey(scored, "query_id", "score_q", "doc_id", k, budget)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** Conf: byte ceiling for [[bm25Retrieve]]'s driver-built term →
@@ -524,15 +430,6 @@ object TextStats {
     * cleanly instead of OOMing the driver mid-collect. */
   val Bm25QueryTableMaxBytesConf = "spark.graft.text.bm25QueryTableMaxBytes"
   private val Bm25QueryTableMaxBytes: Long = 1L << 30
-
-  /** Conf: live-entry ceiling for [[bm25Retrieve]]'s per-partition
-    * top-k heap map. Each live entry is one boxed (score, doc_id)
-    * tuple the heap pass holds un-spillably; past the budget the pass
-    * flushes all current heaps downstream (correct supersets — the
-    * final window re-cuts rank<=k) and starts fresh. Default 1M
-    * entries ≈ tens of MB per task. */
-  val Bm25HeapBudgetConf = "spark.graft.text.bm25HeapBudgetEntries"
-  private val Bm25HeapBudgetEntries: Long = 1L << 20
 
   /** Conf: corpus-df ceiling per query term in [[bm25Retrieve]]
     * (0 = off). A term whose document frequency exceeds it is dropped
@@ -1174,16 +1071,4 @@ object TextStats {
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("min_doc_id"))
       .where(col("n_docs") > 1)
   }
-
-  /** Convenience: append the full stats column set. */
-  def withStats(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .withColumn("n_tokens", tokenCount(col(textCol)))
-      .withColumn("n_subwords", subwordCount(col(textCol)))
-      .withColumn("punct_ratio", punctRatio(col(textCol)))
-      .withColumn("digit_ratio", digitRatio(col(textCol)))
-      .withColumn("stopword_ratio", stopwordRatio(col(textCol)))
-      .withColumn("lang_pred", langId(col(textCol)))
-      .withColumn("quality", qualityScore(col(textCol)))
-      .withColumn("fingerprint", fingerprint(col(textCol)))
 }

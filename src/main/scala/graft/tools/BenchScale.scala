@@ -59,7 +59,7 @@ object BenchScale {
     val queries = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
       .map(_.split(",").toSeq.filter(_.nonEmpty))
       .getOrElse(ScaleQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.GraftSession.mainCpus
     // rep count per entry (default 2: first-invocation vs steady
     // state). Single-box runs of the scratch-heaviest sf10 entries set
     // 1: one q122-at-sf10 rep shuffles ~40-60 GB and a second rep's

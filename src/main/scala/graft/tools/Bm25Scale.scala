@@ -25,9 +25,10 @@ object Bm25Scale {
       sys.env.get("GRAFT_PREJVM_LOADAVG").filter(_.nonEmpty)
         .getOrElse(loadavg)
     val (calS0, calM0, calibStart) = graft.Calib.measured("_start")
+    val cpus = graft.GraftSession.mainCpus
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "4g")

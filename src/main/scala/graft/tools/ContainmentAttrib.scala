@@ -26,9 +26,10 @@ object ContainmentAttrib {
     val dir = args.headOption.getOrElse("target/sf1")
     val steps = if (args.length > 1) args.drop(1).toSet
       else Set("raw", "distinct", "cnt", "full0")
+    val cpus = graft.GraftSession.mainCpus
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "4g")

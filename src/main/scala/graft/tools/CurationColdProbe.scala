@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * IS the attribution. Checkpoints are freed between passes, so pass 2
   * measures true warm re-execution (JIT/codegen + page cache + heap
   * sizing), never block reuse. Prints one JSON line per pass plus a
-  * delta line. Same session shape as BenchScale (local[32], 32
-  * shuffle partitions, 4g maxResultSize) over q127's corpus
+  * delta line. Same session shape as BenchScale (`SPARK_GRAFT_CPUS`
+  * task slots and shuffle partitions, default the machine's core
+  * count; 4g maxResultSize) over q127's corpus
   * (`SparkEntry.dupCorpus`: near-dup + exact-dup families over
   * `documents`).
   */
@@ -27,9 +28,10 @@ object CurationColdProbe {
         .split("\\s+").take(3).mkString(",")
       catch { case _: Exception => "" }
     val loadStart = loadavg
+    val cpus = graft.GraftSession.mainCpus
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.maxResultSize", "4g")

@@ -238,26 +238,45 @@ class CosineSimilaritySpec extends SparkTestBase {
     assert(math.abs(interp - expected) < 1e-12)
   }
 
-  test("knnJoin matches per-query brute force (randomized, with ties)") {
+  /** A random 60-row corpus with a small vocabulary of component
+    * values, so score TIES actually occur and the (score DESC, id ASC)
+    * tie-break is exercised; its first 7 rows are the queries. */
+  private def knnFixture() = {
     val rnd = new scala.util.Random(17)
-    // small vocabulary of component values so score TIES actually occur
-    // and the (score DESC, id ASC) tie-break is exercised
     val corpus = (0L until 60L).map(i =>
       (i, Seq.fill(8)(rnd.nextInt(3).toFloat - 1f))).toDF("vec_id", "embedding")
-    val queries = corpus.where($"vec_id" < 7)
-    val got = Similarity.knnJoin(queries, corpus, "vec_id", "embedding", k = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // brute force per query through the independently-tested cosineTopK
-    // path (self excluded the same way)
+    (corpus.where($"vec_id" < 7), corpus)
+  }
+
+  /** Per-query brute force through the independently-tested cosineTopK
+    * path (self excluded the same way knnJoin excludes it). */
+  private def knnBruteForce(corpus: org.apache.spark.sql.DataFrame,
+      qids: Seq[Long], k: Int): Set[(Long, Long, Int)] = {
     val rows = corpus.collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val expected = (0L until 7L).flatMap { qid =>
+    qids.flatMap { qid =>
       val c = corpus.where($"vec_id" =!= qid)
-      Similarity.cosineTopK(c, "vec_id", "embedding", rows(qid), 4)
+      Similarity.cosineTopK(c, "vec_id", "embedding", rows(qid), k)
         .collect().zipWithIndex
         .map { case (r, i) => (qid, r.getLong(0), i + 1) }
     }.toSet
-    assert(got == expected)
+  }
+
+  test("knnJoin matches per-query brute force (randomized, with ties)") {
+    val (queries, corpus) = knnFixture()
+    val got = Similarity.knnJoin(queries, corpus, "vec_id", "embedding", k = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got == knnBruteForce(corpus, 0L until 7L, 4))
+  }
+
+  test("knnJoin with a 2-entry heap budget flushes and still matches brute force") {
+    // a budget of 2 live entries flushes the per-partition heaps almost
+    // every row; the flushed supersets must re-cut to the same ranks
+    val (queries, corpus) = knnFixture()
+    val got = Similarity.knnJoin(queries, corpus.repartition(3),
+        "vec_id", "embedding", k = 4, budget = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got == knnBruteForce(corpus, 0L until 7L, 4))
   }
 
   test("knnJoin rejects duplicate query ids instead of pooling heaps") {

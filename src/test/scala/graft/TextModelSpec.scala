@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Sampling, TextStats}
+import graft.operators.{Dedup, Sampling, TextStats, TopK}
 
 /** Corpus-LM scoring operators (DSIR importance, interpolated-bigram
   * perplexity filter) and quality-ranked canonical dedup. */
@@ -851,12 +851,11 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // so the rank<=k cut decides on the doc_id tie-break — exactly
     // where a heap whose ordering diverged from the window's would
     // silently drop the wrong doc. Both the long-id and string-id
-    // twins ride the pruned path (r17 verdict #5 widened the prune to
-    // every integral + string id type), so each is checked against
-    // its own expected cut recomputed from the full k=100 result under
-    // that type's window ordering (string ids are single-digit-unsafe:
-    // "10" < "2" lexicographically — the expectation sorts the same
-    // way).
+    // twins ride the pruned path (every orderable id type does), so
+    // each is checked against its own expected cut recomputed from the
+    // full k=100 result under that type's window ordering (string ids
+    // are single-digit-unsafe: "10" < "2" lexicographically — the
+    // expectation sorts the same way).
     val texts = (1L to 12L).map(i =>
       i -> (if (i % 3 == 0) "alpha beta gamma" else "alpha delta"))
     val docs = texts.toDF("doc_id", "text")
@@ -902,8 +901,8 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(viaHeapStr == expectStr, s"k=$k (string ids)")
     }
     // path pinning: string ids ride the heap prune (MapPartitions in
-    // the plan); an unsupported id type (decimal) keeps the plain
-    // window — identical semantics, no silent mis-route either way
+    // the plan), and so do decimal ids, which rank exactly like the
+    // long ids they were cast from
     def planOf(d: org.apache.spark.sql.DataFrame): String =
       TextStats.bm25Retrieve(d, "doc_id", "text",
         qs, "query_id", "query_text", k = 3)
@@ -911,8 +910,8 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(planOf(docsStr).contains("MapPartitions"))
     val docsDec = docs.select(
       col("doc_id").cast("decimal(20,0)").as("doc_id"), col("text"))
-    assert(!planOf(docsDec).contains("MapPartitions"))
-    val viaWindowDec = TextStats.bm25Retrieve(docsDec, "doc_id", "text",
+    assert(planOf(docsDec).contains("MapPartitions"))
+    val viaHeapDec = TextStats.bm25Retrieve(docsDec, "doc_id", "text",
         qs, "query_id", "query_text", k = 3)
       .collect().map(r => (r.getLong(0), r.getDecimal(1).longValue(),
         r.getLong(2), r.getLong(3))).toSet
@@ -920,7 +919,7 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         qs, "query_id", "query_text", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    assert(viaWindowDec == viaHeap3)
+    assert(viaHeapDec == viaHeap3)
   }
 
   test("bm25Retrieve: heap budget flush keeps results identical") {
@@ -934,15 +933,14 @@ class TextModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val docs = texts.toDF("doc_id", "text")
     val qs = Seq((1L, "alpha"), (2L, "beta gamma"), (3L, "delta alpha"))
       .toDF("query_id", "query_text")
-    def run(k: Int) = TextStats.bm25Retrieve(docs, "doc_id", "text",
-        qs, "query_id", "query_text", k)
+    def run(k: Int, budget: Long) = TextStats.bm25Retrieve(docs,
+        "doc_id", "text", qs, "query_id", "query_text", k, 1.2, 0.75,
+        budget)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
-    val unbudgeted = Seq(1, 3, 5, 100).map(k => k -> run(k)).toMap
-    spark.conf.set(TextStats.Bm25HeapBudgetConf, "2")
-    try Seq(1, 3, 5, 100).foreach { k =>
-      assert(run(k) == unbudgeted(k), s"k=$k")
-    } finally spark.conf.unset(TextStats.Bm25HeapBudgetConf)
+    Seq(1, 3, 5, 100).foreach { k =>
+      assert(run(k, budget = 2) == run(k, TopK.DefaultBudget), s"k=$k")
+    }
   }
 
   test("bm25Retrieve: maxTermDf cap == deleting dense terms from queries") {
